@@ -21,33 +21,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Guide §3.1 + r21 verdict #1: preferSortMergeJoin stays at its
-      // DEFAULT (true). The r21 session-global flip to false made the
-      // STATIC planner convert SMJ→SHJ from stats ESTIMATES with no
-      // runtime fallback (the r21 comment's "falls back the moment a
-      // partition would not fit" was wrong — only the AQE lever below is
-      // runtime-size-gated), and the driver bench regressed 20/36
-      // entries: the AQE-off JOB child sessions inherited the flip
-      // (q_job_compass exec 29.6→91.6 s) and q_typo_join's post-explode
-      // self-join was misestimated into a 10.9 s interpreted hash build.
-      // GRAFT_PREFER_SMJ=0 re-flips it for A/B re-measurement.
-      .config("spark.sql.join.preferSortMergeJoin",
-        (!sys.env.get("GRAFT_PREFER_SMJ").contains("0")).toString)
-      // AQE lever (guide §3.1), kept from r21: AQE rewrites a planned
-      // sort-merge join to shuffled-hash at RUNTIME when every
-      // post-shuffle partition is under this bound (default 0 = off) —
-      // decided from observed sizes, so at 100 TB the big joins are
-      // untouched. This is the only SHJ conversion path left on.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_AQE_SHJ_THRESHOLD", "128m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.LocalSession("graft-bench")
     println(run(spark, sfDir, args.toSet))
     spark.stop()
   }
@@ -224,11 +198,7 @@ object Bench {
     // channel (r19 verdict #2). Full record only.
     val driverPeaks = scala.collection.mutable
       .LinkedHashMap.empty[String, (Long, Long)]
-    // A/B knob for the r20 q_image_decode adjudication: GRAFT_NO_FOOTPRINT=1
-    // runs the lap without the listener/peak-polling so its cost (if any)
-    // is attributable from two laps of the same build.
-    if (!sys.env.get("GRAFT_NO_FOOTPRINT").contains("1"))
-      DriverFootprint.install(spark)
+    DriverFootprint.install(spark)
     selected.foreach { e =>
       // Settle the heap between entries so a 100+-query session's
       // accumulated garbage is not charged to whichever entry GC happens

@@ -27,13 +27,7 @@ object HotUserProbe {
     val base = args(0)
     val work = args(1)
     val hotN = if (args.length > 2) args(2).toInt else 1000000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.LocalSession("graft-hotuser")
     try run(spark, base, work, hotN)
     finally spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round helper: write `.explain("formatted")` of named
@@ -25,19 +24,8 @@ object PlanDump {
     val adaptive = args.contains("--adaptive")
     val names = args.drop(1).filterNot(_ == "--adaptive").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Mirror Bench's join policy so dumped plans match the timed ones.
-      .config("spark.sql.join.preferSortMergeJoin",
-        (!sys.env.get("GRAFT_PREFER_SMJ").contains("0")).toString)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_AQE_SHJ_THRESHOLD", "128m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session policy, so dumped plans match the timed ones.
+    val spark = graft.engine.LocalSession("graft-plandump")
     val outDir = Paths.get(sys.env.getOrElse("GRAFT_PLANS_DIR", "plans/r22"))
     Files.createDirectories(outDir)
     val byName = Queries.all.map(e => e.name -> e).toMap

@@ -36,13 +36,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ScaleGen <srcSfDir> <destDir> <k>")
     val Array(src, dest, kStr) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.LocalSession("graft-scalegen")
     generate(spark, src, dest, kStr.toInt)
     spark.stop()
   }

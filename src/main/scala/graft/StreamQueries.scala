@@ -287,15 +287,19 @@ object StreamQueries {
     val useFile = mode == "append" &&
       sys.env.get("GRAFT_STREAM_SINK").contains("file")
     if (useFile) {
+      // Keyed by pid too: two JVMs draining the same entry never delete
+      // each other's live sink.
       val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp"), "graft_stream_sink", name)
+        System.getProperty("java.io.tmpdir", "/tmp"), "graft_stream_sink",
+        s"$name-${ProcessHandle.current.pid}")
       // Fresh dir per drain: the file sink's _spark_metadata log would
       // otherwise re-serve earlier laps' batches to the read-back.
-      if (java.nio.file.Files.exists(base)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-      }
+      if (java.nio.file.Files.exists(base))
+        scala.util.Using.resource(java.nio.file.Files.walk(base)) { paths =>
+          import scala.jdk.CollectionConverters._
+          paths.iterator().asScala.toSeq.reverse
+            .foreach(p => java.nio.file.Files.deleteIfExists(p): Unit)
+        }
       val data = base.resolve("data")
       val q = df.writeStream.outputMode(mode).format("parquet")
         .option("path", data.toString)

@@ -10,23 +10,9 @@ object Verify {
     // Optional entry-name subset for fast local iteration; the driver
     // always calls with two args → full run.
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same engine join policy as Bench (guide §3.1): the correctness
-      // gate must exercise the plans the bench times. preferSortMergeJoin
-      // back at its default since r22 (the static flip had no runtime
-      // size fallback — r21 verdict #1); only the runtime-size-gated AQE
-      // SHJ threshold stays on. GRAFT_PREFER_SMJ=0 re-flips for A/B.
-      .config("spark.sql.join.preferSortMergeJoin",
-        (!sys.env.get("GRAFT_PREFER_SMJ").contains("0")).toString)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_AQE_SHJ_THRESHOLD", "128m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The same session policy as Bench: the gate checks the plans the
+    // bench times.
+    val spark = graft.engine.LocalSession("graft-verify")
     run(spark, sfDir, outDir, subset)
     spark.stop()
   }

@@ -414,8 +414,10 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
     graft.streaming.EventStream.currentCdcState(spark, stateDir)
 
   /** Release every cache this session pinned: COMPASS push-down caches and
-    * pipeline-operator internals. Returned DataFrames stay correct — they
-    * recompute if re-run.
+    * pipeline-operator internals. A DataFrame backed only by released
+    * persists recomputes if re-run; one backed by a released local
+    * checkpoint is invalid and fails when read (see
+    * [[graft.operators.OpCaches]]).
     */
   def releaseCaches(): Unit = {
     compass.releaseCaches()

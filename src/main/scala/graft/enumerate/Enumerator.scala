@@ -44,18 +44,7 @@ final class Enumerator(
     nodes: IndexedSeq[GraphNode],
     edges: Seq[((Int, String), (Int, String))],
     traversalBound: Int = 100,
-    estimator: String = Enumerator.ModeHybrid,
-    calib: Option[Enumerator.CascadeCalib] = None,
-    // Seed-ensemble search (ESTIMATES §8): when non-empty, every prefix
-    // estimate is the MEDIAN of the member enumerators' estimates (each
-    // built over the same graph with an independent sketch seed-set —
-    // the COMPASS paper's variance story applied to plan CHOICE). The
-    // search structure (complexities, child ordering) comes from THIS
-    // enumerator's nodes; sketch counts are exact survivor counts, so
-    // they are identical across seed-sets and the ordering is
-    // seed-independent. Never on the shipping path unless the §8 A/B
-    // ships it.
-    ensembleOf: Seq[Enumerator] = Nil) {
+    estimator: String = Enumerator.ModeHybrid) {
   require(Enumerator.Modes.contains(estimator),
     s"unknown estimator mode '$estimator' (one of ${Enumerator.Modes})")
 
@@ -97,16 +86,6 @@ final class Enumerator(
   /** Estimated size of joining the given node set (order-insensitive). */
   def estimate(traversal: Seq[Int]): Double = {
     val key = traversal.sorted.mkString(" ")
-    if (ensembleOf.nonEmpty)
-      return memo.getOrElseUpdate(key, {
-        // Median across seed-sets (each member estimate is itself the
-        // row-wise median its sketch math prescribes — median of
-        // medians). Members memoize internally, so the ensemble costs
-        // K× estimate work only on first touch of a prefix.
-        val xs = ensembleOf.map(_.estimate(traversal)).sorted
-        if (xs.size % 2 == 1) xs(xs.size / 2)
-        else (xs(xs.size / 2 - 1) + xs(xs.size / 2)) / 2.0
-      })
     memo.getOrElseUpdate(key, {
       val sk0 = sketchOf(traversal.head)
       if (traversal.size == 2) {
@@ -232,46 +211,17 @@ final class Enumerator(
     */
   private def cascadeEstimate(traversal: Seq[Int]): Double = {
     var est = traversal.map(n => math.max(1.0, sketchOf(n).count.toDouble)).product
-    var nEdges = 0
     var i = 0
     while (i < traversal.size) {
       var j = i + 1
       while (j < traversal.size) {
-        if (joinCols.contains((traversal(i), traversal(j)))) {
+        if (joinCols.contains((traversal(i), traversal(j))))
           est *= edgeSelectivity(traversal(i), traversal(j))
-          nEdges += 1
-        }
         j += 1
       }
       i += 1
     }
-    val raw = math.max(est, 1.0)
-    calib match {
-      case Some(c) =>
-        math.max(raw * c.factor(traversal.size,
-          math.max(0, nEdges - (traversal.size - 1))), 1.0)
-      case None => raw
-    }
-  }
-
-  /** (prefix size, excess internal edges beyond a spanning tree) of a
-    * node set — the cascade-calibration features (ESTIMATES §7). Excess
-    * edges are exactly the independence products the cascade multiplies
-    * beyond what any acyclic join needs, so they index the correlated-
-    * predicate underestimate the calibration models.
-    */
-  def prefixFeatures(traversal: Seq[Int]): (Int, Int) = {
-    var nEdges = 0
-    var i = 0
-    while (i < traversal.size) {
-      var j = i + 1
-      while (j < traversal.size) {
-        if (joinCols.contains((traversal(i), traversal(j)))) nEdges += 1
-        j += 1
-      }
-      i += 1
-    }
-    (traversal.size, math.max(0, nEdges - (traversal.size - 1)))
+    math.max(est, 1.0)
   }
 
   private def edgeSelectivity(a: Int, b: Int): Double = {
@@ -505,20 +455,4 @@ object Enumerator {
   /** A/B mode: the independence cascade for every >2-way traversal. */
   val ModeCascade = "cascade"
   val Modes: Set[String] = Set(ModeHybrid, ModeReference, ModeCascade)
-
-  /** Multiplicative correction to the independence-cascade estimate,
-    * fitted offline against measured per-prefix true rows (r17 verdict
-    * #5; ESTIMATES §7): estimate × exp(base + perExcessEdge·x +
-    * perSize·k) where k = prefix size and x = internal edges beyond a
-    * spanning tree (clamped ≥ 0). `base` alone is rank-neutral under a
-    * pure-cascade search (a uniform multiplier on every prefix); the x
-    * and k terms re-weight cycle-closing prefixes and deep-vs-shallow
-    * prefixes respectively, which is where the independence assumption's
-    * systematic underestimate can mis-rank orders.
-    */
-  final case class CascadeCalib(base: Double, perExcessEdge: Double,
-      perSize: Double) {
-    def factor(size: Int, excessEdges: Int): Double =
-      math.exp(base + perExcessEdge * excessEdges + perSize * size)
-  }
 }

@@ -31,13 +31,7 @@ object ScaleCampaignMain {
     require(args.length >= 2, "usage: ScaleCampaignMain <profiles|compass|skip> <m>")
     val facet = args(0)
     val m = args(1).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.LocalSession("graft-scale-campaign")
     try {
       facet match {
         case "profiles" => profiles(spark, m)

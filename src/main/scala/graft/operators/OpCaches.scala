@@ -21,7 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * abandoned-then-stopped session cannot leak for the JVM's life.
   * Usage: operators wrap `persist()` in [[track]]; harnesses
   * (Verify/Bench/GraftSession) call [[releaseAll]] between queries.
-  * Releasing never breaks a returned DataFrame — it just recomputes.
+  * Release contract, per kind:
+  *  - a [[track]]ed persist is only a cache: a DataFrame that reads it
+  *    stays valid after release and recomputes from its lineage;
+  *  - a [[trackCheckpoint]]ed relation is NOT: its local-checkpoint
+  *    blocks are the only copy of the data, so that DataFrame (and any
+  *    plan built on it) is invalid after release and fails when read.
+  *    Finish with such results before releasing.
   */
 object OpCaches {
   private val tracked = scala.collection.mutable.Map

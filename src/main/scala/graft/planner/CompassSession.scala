@@ -105,16 +105,7 @@ final class CompassSession(
     // exist to exercise the COMPASS path at toy scale where everything
     // is broadcastable; a production session at data scale turns it on
     // to skip the regime where order provably doesn't matter.
-    skipWhenAllBroadcastable: Boolean = false,
-    // Seed-ensemble experiments (ESTIMATES §8) build K sessions with
-    // distinct bases for K independent sketch seed-sets. Non-default
-    // bases must not share a template cache: cache keys carry seed
-    // CLASS names, not seed values, so two bases would collide and
-    // serve wrong-seed sketches.
-    seedBase: Long = CompassSession.DefaultSeedBase) {
-  require(seedBase == CompassSession.DefaultSeedBase || templateCache.isEmpty,
-    "a non-default seedBase cannot share the template cache " +
-      "(keys carry seed classes, not seed values)")
+    skipWhenAllBroadcastable: Boolean = false) {
 
   // Config contract: Catalyst must not re-reorder the spliced spine.
   // Two logical rules could override the enumerator's choice —
@@ -400,7 +391,7 @@ final class CompassSession(
     var warmed = 0
     workload.foreach { df =>
       JoinGraphExtractor.extract(df.queryExecution.analyzed).foreach { case (g, _) =>
-        val reg = new SeedRegistry(sketchRows, seedBase)
+        val reg = new SeedRegistry(sketchRows)
         g.edges.foreach { case ((ia, a), (ib, b)) =>
           reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
         }
@@ -504,7 +495,7 @@ final class CompassSession(
     * resolution stays sequential — SeedRegistry mutates.
     */
   private def buildSketches(g: ExtractedJoinGraph, scope: QueryScope): IndexedSeq[GraphNode] = {
-    val reg = new SeedRegistry(sketchRows, seedBase)
+    val reg = new SeedRegistry(sketchRows)
     g.edges.foreach { case ((ia, a), (ib, b)) =>
       reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
     }
@@ -614,9 +605,6 @@ final class CompassSession(
 }
 
 object CompassSession {
-  /** The shipping SeedRegistry base (its constructor default). */
-  val DefaultSeedBase: Long = 0x5EEDC0DEL
-
   /** The left-deep splice core, shared by rebuildRegion and
     * OptimizerQuality's prefix measurement so the quality harness always
     * measures exactly the plan shape COMPASS executes: each appended

@@ -380,42 +380,6 @@ class EnumeratorSpec extends AnyFunSuite {
       s"triangle estimate $tri far from truth (~1000) — cycle edge dropped?")
   }
 
-  test("cascade calibration: identity when absent, exact exp factor when present, features pinned") {
-    // Same mixed-attribute triangle as above (cascade path on every
-    // >2-way estimate). The §7 calibration was measured and REJECTED
-    // (ESTIMATES.md §7) — the machinery stays for future rounds, so pin
-    // its arithmetic: calib=None is byte-identical to before, and a
-    // CascadeCalib multiplies by exactly exp(base + b·x + c·k) with
-    // x = internal edges beyond a spanning tree, k = prefix size.
-    val reg = new SeedRegistry(rows)
-    val edgeSpec = Seq(
-      ((0, "x"), (1, "x")), ((0, "y"), (2, "y")), ((1, "z"), (2, "z")))
-    edgeSpec.foreach { case ((i, a), (j, b)) =>
-      reg.addPredicate((i.toString, a), (j.toString, b))
-    }
-    val rng = new scala.util.Random(43)
-    val nodes = IndexedSeq(
-      GraphNode(0, mkSketch(reg, "0", Seq("x", "y"),
-        Seq.fill(1000)(Seq(rng.nextInt(100), rng.nextInt(100))))),
-      GraphNode(1, mkSketch(reg, "1", Seq("x", "z"),
-        Seq.fill(1000)(Seq(rng.nextInt(100), rng.nextInt(100))))),
-      GraphNode(2, mkSketch(reg, "2", Seq("y", "z"),
-        Seq.fill(1000)(Seq(rng.nextInt(100), rng.nextInt(100))))))
-    val plain = new Enumerator(nodes, edgeSpec)
-    val calib = Enumerator.CascadeCalib(0.5, 0.25, 0.125)
-    val cal = new Enumerator(nodes, edgeSpec, calib = Some(calib))
-    // Triangle prefix: k=3, 3 edges, spanning tree needs 2 → x=1.
-    assert(plain.prefixFeatures(Seq(0, 1, 2)) == ((3, 1)))
-    assert(plain.prefixFeatures(Seq(0, 1)) == ((2, 0)))
-    val base = plain.estimate(Seq(0, 1, 2))
-    val expected = base * math.exp(0.5 + 0.25 * 1 + 0.125 * 3)
-    assert(math.abs(cal.estimate(Seq(0, 1, 2)) - expected) < 1e-6 * expected,
-      s"calibrated=${cal.estimate(Seq(0, 1, 2))} expected=$expected")
-    // A calibrated enumeration still returns a full valid order.
-    val (order, _) = cal.optimalOrder()
-    assert(order.toSet == Set(0, 1, 2))
-  }
-
   test("traversal bound keeps dense graphs tractable") {
     // complete graph K7 — unbounded enumeration is 7! orders; the 100-step
     // bound per start must cap the work while still returning an order.

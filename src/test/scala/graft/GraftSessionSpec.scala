@@ -1,6 +1,7 @@
 package graft
 
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, LocalSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftSessionSpec extends AnyFunSuite {
@@ -99,5 +100,21 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(gs.pqQuery(Seq(0L, 1L), k = 3).count() == 6)
     assert(gs.ivfPqQuery(Seq(0L, 1L), k = 3).count() == 6)
     graft.operators.OpCaches.releaseAll(spark)
+  }
+
+  test("session policy: the shared builder resolves the values the docs cite") {
+    // OPTIMIZATION_r22.md and SCALE.md cite these; Bench, Verify and the
+    // specs all run on a LocalSession, so a drift turns this red.
+    val conf = spark.sessionState.conf
+    assert(conf.getConf(SQLConf.ADAPTIVE_MAX_SHUFFLE_HASH_JOIN_LOCAL_MAP_THRESHOLD) == 0L)
+    assert(conf.preferSortMergeJoin)
+    val LocalN = """local\[(\d+)\]""".r
+    val cores = spark.sparkContext.master match {
+      case LocalN(n) => n.toInt
+      case m => fail(s"unexpected master $m")
+    }
+    assert(cores == LocalSession.cpus)
+    assert(conf.numShufflePartitions == cores)
+    assert(conf.sessionLocalTimeZone == "UTC")
   }
 }

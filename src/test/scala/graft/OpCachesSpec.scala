@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Queries.checkpointedView` must not outlive its entry — the temp view
   * pins the localCheckpoint RDD's MEMORY_AND_DISK blocks in the session
   * catalog, and before r22 a full Bench/Verify lap accumulated ~14 such
-  * relations for the JVM's life.
+  * relations for the JVM's life. Also pins the release contract
+  * `OpCaches` documents.
   */
 class OpCachesSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -40,5 +41,25 @@ class OpCachesSpec extends AnyFunSuite {
     spark.catalog.dropTempView("graft_opcaches_probe2")
     OpCaches.releaseAll(spark) // must not throw
     assert(OpCaches.trackedCount(spark) == 0)
+  }
+
+  test("release contract: tracked persists recompute, checkpointed views are invalid after release") {
+    OpCaches.releaseAll(spark)
+    val persisted = OpCaches.track(
+      spark.range(50).selectExpr("id", "id * 3 AS y").persist())
+    val rows = persisted.collect().toSeq
+    OpCaches.releaseAll(spark)
+    assert(persisted.collect().toSeq == rows,
+      "a released persist must recompute the same rows")
+
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "checkpointedView takes the local-checkpoint path only without a checkpoint dir")
+    val ck = Queries.checkpointedView(spark, "graft_opcaches_probe3",
+      "SELECT id FROM range(20)")
+    assert(ck.count() == 20)
+    OpCaches.releaseAll(spark)
+    // The local checkpoint's blocks were the only copy of its rows.
+    val e = intercept[org.apache.spark.SparkException](ck.collect())
+    assert(e.getMessage.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"), e.getMessage)
   }
 }

@@ -364,22 +364,25 @@ class PlanAuditSpec extends AnyFunSuite {
     // is invisible), and the session conf is restored afterwards.
     Tables.registerAll(spark, "/root/testdata/sf0.01")
     val before = spark.conf.getOption("spark.sql.join.preferSortMergeJoin")
-    val (_, wedgePlan) = Queries.trianglesAnchors(spark)
-    assert(spark.conf.getOption("spark.sql.join.preferSortMergeJoin") == before,
-      "entry-scoped join policy leaked out of trianglesAnchors")
-    assert(wedgePlan.contains("isFinalPlan=true"),
-      s"wedge plan must be the executed adaptive plan:\n$wedgePlan")
-    // At sf0.01 test scale AQE's accurate sizes admit BROADCAST hash
-    // joins (smaller still than SHJ); at bench scale the same policy
-    // yields ShuffledHashJoin. Either way the Σdeg² wedge stream must
-    // not be sorted: no SortMergeJoin in the final plan.
-    val finalSection = wedgePlan.split("== Initial Plan ==").head
-    assert(finalSection.contains("ShuffledHashJoin") ||
-      finalSection.contains("BroadcastHashJoin"),
-      s"no hash join in the executed wedge enumeration:\n$wedgePlan")
-    assert(!finalSection.contains("SortMergeJoin"),
-      s"wedge enumeration still sort-merges at runtime:\n$wedgePlan")
-    graft.operators.OpCaches.releaseAll(spark)
+    // Release in finally: a failed assertion must not leak the wedge
+    // checkpoints into later suites on the shared session.
+    try {
+      val (_, wedgePlan) = Queries.trianglesAnchors(spark)
+      assert(spark.conf.getOption("spark.sql.join.preferSortMergeJoin") == before,
+        "entry-scoped join policy leaked out of trianglesAnchors")
+      assert(wedgePlan.contains("isFinalPlan=true"),
+        s"wedge plan must be the executed adaptive plan:\n$wedgePlan")
+      // At sf0.01 test scale AQE's accurate sizes admit BROADCAST hash
+      // joins (smaller still than SHJ); at bench scale the same policy
+      // yields ShuffledHashJoin. Either way the Σdeg² wedge stream must
+      // not be sorted: no SortMergeJoin in the final plan.
+      val finalSection = wedgePlan.split("== Initial Plan ==").head
+      assert(finalSection.contains("ShuffledHashJoin") ||
+        finalSection.contains("BroadcastHashJoin"),
+        s"no hash join in the executed wedge enumeration:\n$wedgePlan")
+      assert(!finalSection.contains("SortMergeJoin"),
+        s"wedge enumeration still sort-merges at runtime:\n$wedgePlan")
+    } finally graft.operators.OpCaches.releaseAll(spark)
   }
 
   test("wedge joins plan as hash equi-joins, never a cartesian product") {

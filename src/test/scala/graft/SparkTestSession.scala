@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed specs (JVM-wide — Spark
-  * sessions are expensive; specs must not stop() it).
+  * sessions are expensive; specs must not stop() it). Built by
+  * `LocalSession`, so specs audit the session policy Bench and Verify run.
   *
   * SEQUENTIAL-ONLY contract: several suites mutate JVM-global state of
   * this shared session — OpCaches tracked counts and releaseAll,
@@ -15,15 +16,5 @@ import org.apache.spark.sql.SparkSession
   * session (newSession()) and session-scoped caches.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.engine.LocalSession("graft-test")
 }

@@ -31,11 +31,13 @@ oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 _subset = {t for t in os.environ.get("GRAFT_ORACLE_SUBSET", "")
            .replace(",", " ").split() if t}
 if _subset:
-    unknown = _subset - set(oracle)
-    oracle = {k: v for k, v in oracle.items() if k in _subset}
     # A misspelled subset name must not silently shrink the gate.
+    unknown = _subset - set(oracle)
     if unknown:
-        print(f"WARNING: subset names not in oracle_sql.json: {sorted(unknown)}")
+        print(f"ERROR: GRAFT_ORACLE_SUBSET names not in oracle_sql.json: "
+              f"{sorted(unknown)}")
+        sys.exit(1)
+    oracle = {k: v for k, v in oracle.items() if k in _subset}
 
 # Optional per-entry oracle time budget (seconds), 3rd argv. The scale
 # campaign needs it: some oracles are deliberate brute-force

@@ -65,8 +65,7 @@ esac
 OUT=/tmp/verify_${TAG}_battery
 rm -rf "$OUT"
 echo "== Verify ($TAG) =="
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-  sbt -batch "runMain graft.Verify $DIR $OUT $BATTERY" \
+sbt -batch "runMain graft.Verify $DIR $OUT $BATTERY" \
   > "/tmp/verify_${TAG}.log" 2>&1
 grep "\[verify\]" "/tmp/verify_${TAG}.log" && {
   echo "SPARK-SIDE FAILURES — see /tmp/verify_${TAG}.log"; exit 1; } || true
