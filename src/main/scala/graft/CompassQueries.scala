@@ -12,14 +12,14 @@ import org.apache.spark.sql.SparkSession
 object CompassQueries {
   import Queries._
 
-  // ONE session wrapper per SparkSession, so each optimize() releases the
-  // previous entry's push-down caches (a fresh wrapper per call would pin
-  // them for the life of the SparkSession). NOT weakly keyed: a
-  // CompassSession strongly references its SparkSession, so weak keys
-  // could never be collected (the WeakHashMap self-reference trap the
-  // OpCaches doc spells out); instead, entries whose session has STOPPED
-  // are swept on access. Entries run sequentially (Verify/Bench/driver);
-  // CompassSession documents the one-query-at-a-time contract.
+  // ONE session wrapper per SparkSession, so entries share its
+  // filtered-sketch memo (a fresh wrapper per call would rebuild every
+  // filtered sketch). NOT weakly keyed: a CompassSession strongly
+  // references its SparkSession, so weak keys could never be collected
+  // (the WeakHashMap self-reference trap the OpCaches doc spells out);
+  // instead, entries whose session has STOPPED are swept on access.
+  // Entries run sequentially (Verify/Bench/driver) in the session's
+  // default scope.
   private val sessions =
     scala.collection.mutable.Map.empty[SparkSession, CompassSession]
   private def compass(s: SparkSession): CompassSession = sessions.synchronized {

@@ -86,9 +86,9 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
         TextAnalysis.withTokenCounts(
           TextAnalysis.withLanguageId(table("documents"), "text"), "text"), "text"), "text")
 
-  /** A dedicated cache scope for one concurrent query stream on this
-    * session: interleaved scopes never unpin each other's push-down
-    * caches (see [[CompassSession.QueryScope]]). Use `scope.sql(...)`.
+  /** A dedicated scope for one concurrent query stream on this session:
+    * its `lastPlan` is that stream's own COMPASS trace (see
+    * [[CompassSession.QueryScope]]). Use `scope.sql(...)`.
     */
   def newQueryScope(): CompassSession#QueryScope = compass.newScope()
 
@@ -413,16 +413,13 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
   def cdcState(stateDir: String): Option[DataFrame] =
     graft.streaming.EventStream.currentCdcState(spark, stateDir)
 
-  /** Release every cache this session pinned: COMPASS push-down caches and
-    * pipeline-operator internals. A DataFrame backed only by released
-    * persists recomputes if re-run; one backed by a released local
-    * checkpoint is invalid and fails when read (see
+  /** Release every cache this session pinned: the pipeline operators'
+    * internals (COMPASS persists nothing). A DataFrame backed only by
+    * released persists recomputes if re-run; one backed by a released
+    * local checkpoint is invalid and fails when read (see
     * [[graft.operators.OpCaches]]).
     */
-  def releaseCaches(): Unit = {
-    compass.releaseCaches()
-    graft.operators.OpCaches.releaseAll(spark)
-  }
+  def releaseCaches(): Unit = graft.operators.OpCaches.releaseAll(spark)
 
   def close(): Unit = releaseCaches()
 }

@@ -20,8 +20,11 @@ import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, IntegerType, 
   * mapd-core/QueryEngine/cuda_mapd_rt.cu:730-804). Spark's partial/final
   * aggregation replaces the hand-rolled block reduction: `update` runs
   * map-side on each partition, `merge` adds partial sketches element-wise
-  * (sketches are linear), so the build is one shuffle-free pass over the
-  * (filtered) table regardless of cluster size.
+  * (sketches are linear). The final merge sits behind a single-partition
+  * exchange, so under AQE a build is two jobs plus a shuffle of the
+  * partials. COMPASS therefore builds through
+  * [[graft.planner.CompassSession.buildSketch]] (one job, no exchange),
+  * which is bit-identical to this aggregate over the same keys.
   *
   * Inputs must be LongType (the planner folds/casts/hashes other types);
   * NULL keys are skipped for that column but still counted via plane 0

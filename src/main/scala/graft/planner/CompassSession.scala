@@ -1,9 +1,9 @@
 package graft.planner
 
 import graft.enumerate.{Enumerator, GraphNode}
-import graft.functions.FagmsSketchAgg
 import graft.plans.{ExtractedJoinGraph, JoinGraphExtractor, TableInstance}
-import graft.sketch.{SeedRegistry, SketchGroup}
+import graft.sketch.{ColumnSeeds, SeedRegistry, SketchGroup, Xi}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
@@ -50,9 +50,10 @@ final case class CompassPlan(
   *
   *  1. analyze the query → extract join graph + per-instance filters
   *     ([[JoinGraphExtractor]]);
-  *  2. launch one small Spark job per instance: filtered scan →
-  *     `fagms_sketch` aggregate (map-side partial sketches, linear merge —
-  *     one shuffle-free pass however many executors);
+  *  2. launch one small Spark job per instance ([[CompassSession.buildSketch]]):
+  *     the filtered scan's join keys stream into one sketch per partition,
+  *     and the partials tree-merge (linear add) — one job, no exchange, at
+  *     the partition counts a filtered instance has;
   *  3. enumerate join orders driver-locally over the sketch planes
   *     ([[Enumerator]] — microseconds);
   *  4. splice a reordered left-deep Inner-join tree into the analyzed plan
@@ -68,26 +69,20 @@ final case class CompassPlan(
   * Thresholds match the reference defaults
   * (Catalog/COMPASS_init_variables.txt:1-5).
   *
-  * Concurrency contract: push-down caches are scoped per QUERY HANDLE
-  * ([[QueryScope]]) — optimize() on a scope releases only THAT scope's
-  * previous query's caches, so interleaved queries on one session never
-  * unpin each other's: give each in-flight query stream its own
-  * `newScope()`. The session's own optimize()/sql() run in a default
-  * scope (the one-query-at-a-time convenience surface). Releasing is
-  * never a correctness event — a released query's filtered scans just
-  * recompute. The sketch jobs inside a single optimize() are themselves
-  * parallel.
+  * Concurrency contract: optimize() caches nothing — the spliced plan
+  * reads the base tables like any query — so interleaved queries on one
+  * session share no mutable state except the filtered-sketch memo, which
+  * is safe for concurrent use. Each in-flight query stream takes its own
+  * [[QueryScope]] (`newScope()`) only to read its own `lastPlan`; the
+  * session's own optimize()/sql() run in a default scope (the
+  * one-query-at-a-time convenience surface). The sketch jobs inside a
+  * single optimize() are themselves parallel.
   */
 final class CompassSession(
     val spark: SparkSession,
     sketchRows: Int = 73,
     sketchBuckets: Int = 1021,
     minTableSize: Long = 200, // PUSH_DOWN_MIN_TABLE_SIZE_SK
-    // The reference caps materialization at min(rows·0.05, 10000); the
-    // fractional term needs the base cardinality (a second count), and for
-    // every table past 200k rows the absolute 10k cap binds anyway
-    // (COMPASS_init_variables.txt:4-5) — so only the absolute cap applies.
-    maxPushDownSize: Long = 10000, // PUSH_DOWN_MAX_SIZE
     // Hint threshold is rows-surviving (bytes unknown pre-projection);
     // 100k rows of pruned join columns is comfortably under executor
     // broadcast budgets, while anything larger is left to AQE's own
@@ -144,8 +139,8 @@ final class CompassSession(
     * sketches additionally spill to its capped disk tier
     * (`storeFiltered`) keyed by the same canonical key, and a memory
     * miss consults disk before building — so a COLD session with a warm
-    * cache dir pays file reads, not sketch jobs (the reference persists
-    * its templates across sessions the same way,
+    * cache dir pays file reads, not sketch jobs (the reference keeps
+    * its templates on disk across sessions the same way,
     * Catalog/Catalog.h:579-731; r12 measured the cold filtered path at
     * ~50% of per-query time on the JOB subset).
     *
@@ -213,71 +208,34 @@ final class CompassSession(
   /** `\fpd`-style toggle (reference: mapd-core/SQLFrontend/mapdql.cpp:1313). */
   @volatile var fpdEnabled: Boolean = true
 
-  /** One in-flight optimized query's cache scope. Filtered-instance
-    * push-down caches pin under the scope that ran the optimize(); the
-    * scope's NEXT optimize() (or `release()`/session `close()`) unpins
-    * them — r2 kept selective survivors persisted forever (the reference
-    * frees its temporary push-down tables per query —
-    * RelAlgExecutor.h:121-133), and r6's single session-wide buffer let
-    * any optimize() unpin caches an interleaved query on the same
-    * session was still reading.
+  /** One in-flight query stream's handle: it holds that stream's own
+    * `lastPlan`. A scope pins nothing — the pre-pass caches no
+    * survivors (the main query's own scan used to fill that cache, and
+    * the scope's next optimize() dropped it unread, so it never saved a
+    * scan).
     */
   final class QueryScope private[CompassSession] () {
-    private[CompassSession] val kept = scala.collection.mutable.Buffer.empty[DataFrame]
-
     /** This scope's own last COMPASS plan — unlike the session-level
       * `lastPlan`, safe to read under concurrent scopes (each in-flight
       * query stream sees exactly its own trace).
       */
     @volatile var lastPlan: Option[CompassPlan] = None
 
-    /** Unpersist this scope's pinned caches. A previously returned
-      * DataFrame stays CORRECT afterwards — it just recomputes its
-      * filtered scans if re-run.
-      */
-    def release(): Unit = kept.synchronized {
-      kept.foreach(_.unpersist(false))
-      kept.clear()
-    }
-
     def optimize(df: DataFrame): DataFrame =
       CompassSession.this.optimizeIn(this, df)
 
     def sql(text: String): DataFrame = optimize(spark.sql(text))
-
-    /** Test hook: caches currently pinned by this scope's last query. */
-    private[graft] def pinned: Seq[DataFrame] = kept.synchronized(kept.toSeq)
   }
 
-  private val scopes = scala.collection.mutable.Buffer.empty[QueryScope]
+  /** A fresh scope — one per concurrently in-flight query stream. */
+  def newScope(): QueryScope = new QueryScope
 
-  /** A fresh cache scope — one per concurrently in-flight query stream. */
-  def newScope(): QueryScope = scopes.synchronized {
-    val s = new QueryScope
-    scopes += s
-    s
-  }
-
-  /** Release a scope's caches and forget it — for short-lived per-query
-    * scopes (a long-running session spawning one scope per query would
-    * otherwise grow the scope registry without bound).
-    */
-  def dropScope(s: QueryScope): Unit = {
-    s.release()
-    scopes.synchronized { scopes -= s; () }
-  }
+  /** End a scope: forget its trace. Scopes hold no other state. */
+  def dropScope(s: QueryScope): Unit = s.lastPlan = None
 
   private val defaultScope = newScope()
 
-  /** Unpersist every scope's push-down caches. */
-  def releaseCaches(): Unit =
-    scopes.synchronized(scopes.toSeq).foreach(_.release())
-
-  def close(): Unit = { releaseCaches(); filteredMemo.clear() }
-
-  /** Test hook: push-down caches currently pinned by any scope. */
-  private[graft] def pinnedCaches: Seq[DataFrame] =
-    scopes.synchronized(scopes.toSeq).flatMap(_.pinned)
+  def close(): Unit = filteredMemo.clear()
 
   def sql(text: String): DataFrame = optimize(spark.sql(text))
 
@@ -292,16 +250,14 @@ final class CompassSession(
     * (graph, nodes, edges) so a harness can construct Enumerators under
     * several estimator modes over the SAME nodes — isolating the
     * estimator as the only variable. The sketch groups are driver-local
-    * arrays and stay valid after the build scope is dropped.
+    * arrays, independent of any query.
     */
   private[graft] def sketchGraph(df: DataFrame): (ExtractedJoinGraph,
       IndexedSeq[GraphNode], Seq[((Int, String), (Int, String))]) = {
     val analyzed = df.queryExecution.analyzed
     val (g, _) = JoinGraphExtractor.extract(analyzed)
       .getOrElse(sys.error("sketchGraph: not an optimizable join region"))
-    val scope = newScope()
-    try (g, buildSketches(g, scope), enumeratorEdges(g))
-    finally dropScope(scope)
+    (g, buildSketches(g), enumeratorEdges(g))
   }
 
   /** True when at most ONE instance's UNFILTERED base relation is over
@@ -319,7 +275,6 @@ final class CompassSession(
 
   private def optimizeIn(scope: QueryScope, df: DataFrame): DataFrame = {
     if (!fpdEnabled) return df
-    scope.release()
     scope.lastPlan = None
     try {
       val analyzed = df.queryExecution.analyzed
@@ -335,7 +290,7 @@ final class CompassSession(
           // Timing mirrors the reference's per-phase instrumentation
           // (FilterPushDownSketch.cpp:1564-1569, RelAlgExecutor.cpp:2628).
           val t0 = System.nanoTime()
-          val nodes = buildSketches(g, scope)
+          val nodes = buildSketches(g)
           val t1 = System.nanoTime()
           val en = new Enumerator(nodes, enumeratorEdges(g))
           val (order, _) = en.optimalOrder()
@@ -375,7 +330,7 @@ final class CompassSession(
   /** PRE_PROCESSING analogue (reference: `PRE_PROCESSING`,
     * Catalog/COMPASS_init_variables.txt:6 — pre-build ALL unfiltered
     * (table × join-column-set) sketch templates before the workload runs):
-    * extract each representative query's join graph and build/persist the
+    * extract each representative query's join graph and build and store the
     * template for every unfiltered instance, so the first live query pays
     * zero template builds (`templateCache.misses == 0`, spec-asserted).
     *
@@ -383,8 +338,7 @@ final class CompassSession(
     * cache keys — resolved data identity, join-column order, seed classes —
     * are constructed by exactly the machinery the live path uses. Filtered
     * instances are skipped: templates only ever serve unfiltered scans.
-    * Returns the number of templates now warm. No push-down caches are
-    * pinned.
+    * Returns the number of templates now warm.
     */
   def warmTemplates(workload: Seq[DataFrame]): Int = {
     val cache = templateCache.getOrElse(return 0)
@@ -408,14 +362,8 @@ final class CompassSession(
             val colNames = attrs.map(a => label(g, inst.idx, a))
             val classKeys = attrs.map(a => reg.classKey(seedKey(g, inst.idx, a)))
             Some { () =>
-              cache.getOrBuild(tk.get, colNames, classKeys, sketchRows, sketchBuckets) {
-                val agg = FagmsSketchAgg(
-                  attrs.map(keyExpr), sketchRows, sketchBuckets, colNames, seeds)
-                SketchGroup.deserialize(
-                  Bridge.ofRows(spark, inst.plan)
-                    .agg(Bridge.column(agg.toAggregateExpression()))
-                    .head().getAs[Array[Byte]](0))
-              }
+              cache.getOrBuild(tk.get, colNames, classKeys, sketchRows, sketchBuckets)(
+                sketchOf(inst.plan, attrs, colNames, seeds))
               1
             }
           }
@@ -429,8 +377,8 @@ final class CompassSession(
   /** Column label: plain name — unique within a base-table instance, and
     * STABLE across queries (no exprIds), so seed equivalence classes and
     * template-cache keys agree between any two queries joining the same
-    * columns. This mirrors the reference's workload-global persisted seed
-    * templates (sketch_templates_seeds.txt): same column pair → same
+    * columns. This mirrors the reference's workload-global seed template
+    * files (sketch_templates_seeds.txt): same column pair → same
     * seeds, always.
     *
     * A DERIVED leaf (e.g. a pinned outer join kept opaque) can output two
@@ -459,20 +407,9 @@ final class CompassSession(
       ((ia, label(g, ia, a)), (ib, label(g, ib, b)))
     }
 
-  /** Sketch key expression: integral → long (equality-preserving fold);
-    * anything else — DATE (Spark refuses date→bigint at analysis, so the
-    * r2 date branch silently disabled COMPASS for date keys), TIMESTAMP
-    * (casting to long truncates to SECONDS — sub-second-distinct keys
-    * would collapse to one sketch key and inflate estimates), strings,
-    * decimals → xxhash64 (the reference joins on dictionary-encoded
-    * integer ids — mapd-core/StringDictionary/ — a 64-bit hash preserves
-    * equality semantics the same way, with negligible collision mass).
-    */
-  private def keyExpr(a: Attribute): Expression = a.dataType match {
-    case LongType => a
-    case IntegerType | ShortType | ByteType => Cast(a, LongType)
-    case _ => new XxHash64(Seq(a))
-  }
+  private def sketchOf(plan: LogicalPlan, attrs: Seq[Attribute],
+      colNames: Seq[String], seeds: Seq[ColumnSeeds]): SketchGroup =
+    CompassSession.buildSketch(spark, plan, attrs, sketchRows, sketchBuckets, colNames, seeds)
 
   /** Instance subtree with its own filter conjuncts applied (the "pushed
     * down selection" — reference FilterPushDownSketch.cpp:199-231 splices
@@ -482,8 +419,8 @@ final class CompassSession(
   private def filteredPlan(g: ExtractedJoinGraph, i: Int): LogicalPlan =
     CompassSession.filteredPlan(g, i)
 
-  /** One sketch job per instance: filtered scan → fagms_sketch over its
-    * join columns (reference: executeFilterAndEvaluate,
+  /** One sketch job per instance: filtered scan → [[CompassSession.buildSketch]]
+    * over its join columns (reference: executeFilterAndEvaluate,
     * FilterPushDownSketch.cpp:871-891). Unfiltered instances are served
     * from the template cache when available (reference:
     * findSketchTemplateAndCopy, FilterPushDownSketch.cpp:315-382).
@@ -494,7 +431,7 @@ final class CompassSession(
     * per-job scheduling overhead stops being × nInstances). Seed
     * resolution stays sequential — SeedRegistry mutates.
     */
-  private def buildSketches(g: ExtractedJoinGraph, scope: QueryScope): IndexedSeq[GraphNode] = {
+  private def buildSketches(g: ExtractedJoinGraph): IndexedSeq[GraphNode] = {
     val reg = new SeedRegistry(sketchRows)
     g.edges.foreach { case ((ia, a), (ib, b)) =>
       reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
@@ -530,14 +467,7 @@ final class CompassSession(
             .filter(_.count < minTableSize)))
         else None
 
-      def build(): SketchGroup = {
-        val df = Bridge.ofRows(spark, filteredPlan(g, inst.idx))
-        val agg = FagmsSketchAgg(
-          attrs.map(keyExpr), sketchRows, sketchBuckets, colNames, seeds)
-        val bytes = df.agg(Bridge.column(agg.toAggregateExpression()))
-          .head().getAs[Array[Byte]](0)
-        SketchGroup.deserialize(bytes)
-      }
+      def build(): SketchGroup = sketchOf(filteredPlan(g, inst.idx), attrs, colNames, seeds)
 
       () => {
         val sketch = tinyTemplate.getOrElse((templateCache, hasFilter) match {
@@ -555,22 +485,6 @@ final class CompassSession(
             memoizedFiltered(key)(build())
           case _ => build()
         })
-        // Materialized push-down, decided AFTER the survivor count is
-        // known (fpd_max_count cap — reference: executeFilterAndEvaluate,
-        // FilterPushDownSketch.cpp:871-891): only selective survivors are
-        // persisted, pinned for THIS query and released at the next
-        // optimize()/close(). Deferring the persist (r3 change) keeps the
-        // sketch job's scan projection-pruned to the join columns and
-        // never materializes an unselective filtered fact table into the
-        // block manager just to drop it — at 100 TB that write could be
-        // terabytes. The main query's spliced Filter(instance) matches
-        // the cached plan canonically and materializes it (one extra
-        // small-output pruned scan) on first use.
-        if (hasFilter && tinyTemplate.isEmpty && sketch.count <= maxPushDownSize) {
-          val df = Bridge.ofRows(spark, filteredPlan(g, inst.idx))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          scope.kept.synchronized { scope.kept += df }
-        }
         GraphNode(inst.idx, sketch)
       }
     }
@@ -605,6 +519,74 @@ final class CompassSession(
 }
 
 object CompassSession {
+  /** Sketch key expression: integral → long (equality-preserving fold);
+    * anything else — DATE (Spark refuses date→bigint at analysis, so the
+    * r2 date branch silently disabled COMPASS for date keys), TIMESTAMP
+    * (casting to long truncates to SECONDS — sub-second-distinct keys
+    * would collapse to one sketch key and inflate estimates), strings,
+    * decimals → xxhash64 (the reference joins on dictionary-encoded
+    * integer ids — mapd-core/StringDictionary/ — a 64-bit hash preserves
+    * equality semantics the same way, with negligible collision mass).
+    */
+  private[graft] def keyExpr(a: Attribute): Expression = a.dataType match {
+    case LongType => a
+    case IntegerType | ShortType | ByteType => Cast(a, LongType)
+    case _ => new XxHash64(Seq(a))
+  }
+
+  /** Sketch `plan`'s rows over `attrs` in one Spark job (reference:
+    * executeFilterAndEvaluate, FilterPushDownSketch.cpp:871-891, whose
+    * per-block GPU sketches are reduced on the host,
+    * cuda_mapd_rt.cu:730-804). The keys are projected through [[keyExpr]]
+    * — Catalyst prunes the scan to the join columns — and each partition
+    * folds its rows into one group. The partials merge by `treeReduce`
+    * (`treeAggregate` with an empty `Option` zero, so no zero planes ride
+    * in the task) at depth 2: at a handful of partitions that is one job
+    * with no exchange; at many it adds an executor-side merge level, so
+    * the driver never holds thousands of ~600 KB partials. Bit-identical
+    * to the SQL `fagms_sketch` aggregate over the same keys
+    * (spec-pinned).
+    */
+  private[graft] def buildSketch(
+      spark: SparkSession, plan: LogicalPlan, attrs: Seq[Attribute],
+      rows: Int, buckets: Int, colNames: Seq[String], seeds: Seq[ColumnSeeds]): SketchGroup = {
+    val keys = attrs.zipWithIndex.map { case (a, i) => Alias(keyExpr(a), s"k$i")() }
+    val rdd = Bridge.ofRows(spark, Project(keys, plan)).queryExecution.toRdd
+    val sketchPartition = new SketchPartition(rows, buckets, colNames.toArray, seeds.toArray)
+    // A filter Catalyst folds to an empty relation leaves no partitions.
+    if (rdd.getNumPartitions == 0) sketchPartition.emptyGroup()
+    else rdd.mapPartitions(sketchPartition).treeReduce(MergeSketches, 2)
+  }
+
+  /** One partition's projected key rows → one group. A row with a NULL
+    * key never joins, so it is skipped and not counted — the SQL
+    * `fagms_sketch` aggregate's rule. A named class, not a lambda, so
+    * Spark's closure cleaner has nothing to re-inspect per build.
+    */
+  private final class SketchPartition(
+      rows: Int, buckets: Int, names: Array[String], seeds: Array[ColumnSeeds])
+      extends (Iterator[InternalRow] => Iterator[SketchGroup]) with Serializable {
+    def emptyGroup(): SketchGroup = new SketchGroup(rows, buckets, names, seeds)
+
+    def apply(it: Iterator[InternalRow]): Iterator[SketchGroup] = {
+      val g = emptyGroup()
+      val folded = new Array[Int](names.length)
+      it.foreach { row =>
+        var i = 0
+        while (i < folded.length && !row.isNullAt(i)) {
+          folded(i) = Xi.fold64(row.getLong(i)); i += 1
+        }
+        if (i == folded.length) g.update(folded)
+      }
+      Iterator.single(g)
+    }
+  }
+
+  private object MergeSketches
+      extends ((SketchGroup, SketchGroup) => SketchGroup) with Serializable {
+    def apply(a: SketchGroup, b: SketchGroup): SketchGroup = { a.merge(b); a }
+  }
+
   /** The left-deep splice core, shared by rebuildRegion and
     * OptimizerQuality's prefix measurement so the quality harness always
     * measures exactly the plan shape COMPASS executes: each appended

@@ -138,7 +138,7 @@ object OptimizerQuality {
     require(compassOrder.sorted == g.instances.indices.toList,
       s"$family: COMPASS order ${plan.order} does not cover the graph")
     // The baseline gets TRUE filtered cardinalities — which the sketch
-    // counts already ARE: FagmsSketchAgg counts every surviving row
+    // counts already ARE: the sketch build counts every surviving row
     // exactly (filtered instances) and templates carry the full table
     // count, so re-counting with a separate scan job per instance (the
     // r5-r6 harness) measured the same numbers twice. One deviation: a

@@ -1,6 +1,7 @@
 package graft.sketch
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 /** Per-column seed vector: `rows` independent (CW2B, EH3) pairs.
   * Two sketch columns that appear in the same join equivalence class MUST
@@ -122,8 +123,11 @@ final class SketchGroup(
 }
 
 object SketchGroup {
-  /** Compact binary codec (used by the Spark aggregate buffer). Seeds ride
-    * along so executors can deserialize/merge without a side channel.
+  /** Compact binary codec (the template cache's disk tier). Seeds ride
+    * along so a loaded group is self-describing. Layout: rows, buckets,
+    * nCols (int), count (long), column names (modified UTF-8), seeds, then
+    * every plane as big-endian doubles — written and read in bulk through
+    * a `DoubleBuffer` view, byte-for-byte what `DataOutputStream` writes.
     */
   def serialize(g: SketchGroup): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -137,16 +141,17 @@ object SketchGroup {
         out.writeInt(p.ehS0); out.writeInt(p.ehS1)
       }
     }
-    g.planes.foreach { pl =>
-      var i = 0
-      while (i < pl.length) { out.writeDouble(pl(i)); i += 1 }
-    }
     out.flush()
-    bos.toByteArray
+    val header = bos.size()
+    val bytes = java.util.Arrays.copyOf(bos.toByteArray, header + 8 * g.nCols * g.rows * g.buckets)
+    val doubles = ByteBuffer.wrap(bytes, header, bytes.length - header).asDoubleBuffer()
+    g.planes.foreach(p => doubles.put(p))
+    bytes
   }
 
   def deserialize(bytes: Array[Byte]): SketchGroup = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val bis = new ByteArrayInputStream(bytes)
+    val in = new DataInputStream(bis)
     val rows = in.readInt(); val buckets = in.readInt(); val nCols = in.readInt()
     val count = in.readLong()
     val columns = Array.fill(nCols)(in.readUTF())
@@ -157,13 +162,9 @@ object SketchGroup {
     }
     val g = new SketchGroup(rows, buckets, columns, seeds)
     g.count = count
-    var c = 0
-    while (c < nCols) {
-      val pl = g.planes(c)
-      var i = 0
-      while (i < pl.length) { pl(i) = in.readDouble(); i += 1 }
-      c += 1
-    }
+    val header = bytes.length - bis.available()
+    val doubles = ByteBuffer.wrap(bytes, header, bytes.length - header).asDoubleBuffer()
+    g.planes.foreach(p => doubles.get(p))
     g
   }
 }

@@ -399,7 +399,7 @@ class CompassSessionSpec extends AnyFunSuite {
     Tables.registerAll(spark, dir) // restore
   }
 
-  test("push-down caches are released on the next optimize()/close()") {
+  test("the spliced plan reads base tables, never a push-down cache") {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
     val q =
@@ -408,27 +408,21 @@ class CompassSessionSpec extends AnyFunSuite {
         |JOIN customer ON o_custkey = c_custkey
         |WHERE o_totalprice > 400000""".stripMargin
     val out = cs.sql(q)
-    out.collect()
-    val first = cs.pinnedCaches
-    assert(first.nonEmpty, "the selective orders filter should be pinned")
-    assert(first.forall(_.storageLevel.useMemory))
-    // the spliced plan must actually READ the pinned survivors
-    assert(out.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
-      "main query should scan the materialized push-down cache")
-    // A DIFFERENT second query (CacheManager matches by canonicalized
-    // plan — rerunning the same text would re-cache an equivalent plan and
-    // mask the release).
-    cs.sql(q.replace("400000", "450000")).collect()
-    assert(first.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
-      "previous query's caches must be unpersisted by the next optimize()")
-    val second = cs.pinnedCaches
-    assert(second.nonEmpty)
+    assert(cs.lastPlan.isDefined, "the query should take the COMPASS path")
+    assert(out.head().getLong(0) == spark.sql(q).head().getLong(0))
+    // The pre-pass persists no survivors: the selective orders instance is
+    // read from its scan, not from an in-memory relation.
+    assert(out.queryExecution.optimizedPlan.find(
+      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]).isEmpty,
+      "the spliced plan must not read a cached push-down relation")
+    // A different second query, then close(): the first frame still runs.
+    val q2 = q.replace("400000", "450000")
+    assert(cs.sql(q2).head().getLong(0) == spark.sql(q2).head().getLong(0))
     cs.close()
-    assert(second.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
-    assert(cs.pinnedCaches.isEmpty)
+    assert(out.head().getLong(0) == spark.sql(q).head().getLong(0))
   }
 
-  test("interleaved scopes: two in-flight queries keep their own push-down caches") {
+  test("interleaved scopes keep their own lastPlan and correct results") {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
     val s1 = cs.newScope()
@@ -440,25 +434,23 @@ class CompassSessionSpec extends AnyFunSuite {
         |WHERE o_totalprice > 400000""".stripMargin
     val qb = qa.replace("400000", "430000")
     val outA = s1.sql(qa)
-    val pinnedA = s1.pinned
-    assert(pinnedA.nonEmpty, "scope 1 should pin the selective survivor")
-    // Interleave: scope 2 optimizes BEFORE scope 1's query has run. The
-    // r6 session-wide buffer released scope 1's caches here.
+    val planA = s1.lastPlan
+    assert(planA.isDefined, "scope 1 should take the COMPASS path")
+    // Interleave: scope 2 optimizes BEFORE scope 1's query has run.
     val outB = s2.sql(qb)
-    assert(s2.pinned.nonEmpty, "scope 2 should pin its own survivor")
-    assert(pinnedA.forall(_.storageLevel.useMemory),
-      "scope 2's optimize() must not unpin scope 1's caches")
-    // Both interleaved queries read their OWN caches and agree with SQL.
+    assert(s2.lastPlan.isDefined)
+    assert(s1.lastPlan eq planA, "scope 2's optimize() must not touch scope 1's trace")
+    // Both interleaved queries agree with plain SQL.
     assert(outA.head().getLong(0) == spark.sql(qa).head().getLong(0))
     assert(outB.head().getLong(0) == spark.sql(qb).head().getLong(0))
-    // A scope's next query releases only ITS previous caches.
+    // A scope's next query replaces only ITS trace.
+    val planB = s2.lastPlan
     s1.sql(qa.replace("400000", "450000")).collect()
-    assert(pinnedA.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
-      "scope 1's next optimize() must release its own previous caches")
-    assert(s2.pinned.forall(_.storageLevel.useMemory),
-      "scope 1's release must leave scope 2 pinned")
+    assert(!s1.lastPlan.eq(planA))
+    assert(s2.lastPlan eq planB, "scope 1's next optimize() must leave scope 2's trace")
+    cs.dropScope(s1)
+    assert(s1.lastPlan.isEmpty && (s2.lastPlan eq planB))
     cs.close()
-    assert(cs.pinnedCaches.isEmpty)
   }
 
   test("two THREADS optimizing concurrently on one session both get correct results") {
@@ -474,7 +466,7 @@ class CompassSessionSpec extends AnyFunSuite {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     // Each thread takes its own scope, optimizes, AND executes — overlapping
-    // sketch jobs, cache pinning, and main-query actions on one session.
+    // sketch jobs and main-query actions on one session.
     val fa = Future { cs.newScope().sql(qa).head().getLong(0) }
     val fb = Future { cs.newScope().sql(qb).head().getLong(0) }
     val (na, nb) = (Await.result(fa, 120.seconds), Await.result(fb, 120.seconds))
@@ -483,7 +475,7 @@ class CompassSessionSpec extends AnyFunSuite {
     cs.close()
   }
 
-  test("a failing sketch job falls back AND its push-down caches are releasable") {
+  test("a failing sketch job falls back to the input frame") {
     import org.apache.spark.sql.functions.{col, udf}
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
@@ -499,12 +491,7 @@ class CompassSessionSpec extends AnyFunSuite {
     val out = cs.optimize(df) // sketch job throws inside the UDF → fallback
     assert(cs.lastPlan.isEmpty, "failed sketch build must fall back to vanilla")
     assert(out eq df, "fallback must return the input frame")
-    // Caches persisted before the failure are registered and must release.
-    val pinned = cs.pinnedCaches
     cs.close()
-    assert(cs.pinnedCaches.isEmpty)
-    assert(pinned.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE),
-      "error-path caches must not leak past close()")
   }
 
   test("date-keyed joins go through the sketch pipeline, not silent fallback") {

@@ -1,8 +1,12 @@
 package graft
 
 import graft.functions.SketchFunctions.fagms_sketch
+import graft.planner.CompassSession
 import graft.sketch.{SeedRegistry, SketchGroup, Xi}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Integration test: the fagms_sketch aggregate inside a real SparkSession
@@ -10,6 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * merge (partial aggregation), deserialize, eval. The resulting sketch
   * must be bit-identical to a driver-side sketch of the same rows
   * (sketches are linear, so partition order must not matter).
+  *
+  * COMPASS's own builder ([[CompassSession.buildSketch]]) must produce
+  * exactly what this aggregate produces over the same keys, in one job
+  * with no shuffle.
   */
 class FagmsSketchAggSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -104,5 +112,109 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     }
     val est = sketch.Estimator.pairwise(ga.planes(0), gb.planes(0), rows, buckets)
     assert(math.abs(est - trueSize) / trueSize < 0.15, s"est $est vs true $trueSize")
+  }
+
+  /** The COMPASS builder's group and the `fagms_sketch` aggregate's over
+    * every column of `df`, keys projected through the same `keyExpr`.
+    */
+  private def bothBuilds(df: DataFrame): (SketchGroup, SketchGroup) = {
+    val rows = 11; val buckets = 101
+    val plan = df.queryExecution.analyzed
+    val attrs = plan.output
+    val names = attrs.map(_.name)
+    val reg = new SeedRegistry(rows)
+    val seeds = names.map(n => reg.seedsFor(("t", n)))
+    val built = CompassSession.buildSketch(spark, plan, attrs, rows, buckets, names, seeds)
+    val keys = attrs.map(a => Bridge.column(CompassSession.keyExpr(a)))
+    val aggregated = SketchGroup.deserialize(
+      df.agg(fagms_sketch(rows, buckets, names, seeds, keys: _*)).head().getAs[Array[Byte]](0))
+    (built, aggregated)
+  }
+
+  private def assertSameGroup(built: SketchGroup, aggregated: SketchGroup): Unit = {
+    assert(built.count == aggregated.count)
+    assert(built.columns.sameElements(aggregated.columns))
+    built.planes.indices.foreach { c =>
+      assert(built.planes(c).sameElements(aggregated.planes(c)),
+        s"plane $c differs between the COMPASS builder and fagms_sketch")
+    }
+  }
+
+  test("COMPASS builder equals fagms_sketch: Int/Long keys with NULLs, 1 and 13 partitions") {
+    import spark.implicits._
+    val data = (0 until 3000).map { i =>
+      (i % 97, if (i % 11 == 0) None else Some((i % 400).toLong * 1000003L))
+    }
+    Seq(1, 13).foreach { parts =>
+      val df = data.toDF("ik", "lk").repartition(parts)
+      assert(df.rdd.getNumPartitions == parts)
+      val (built, aggregated) = bothBuilds(df)
+      assert(built.count == data.count(_._2.isDefined), "a NULL-key row must be skipped")
+      assertSameGroup(built, aggregated)
+    }
+  }
+
+  test("COMPASS builder equals fagms_sketch: Date and String keys (hashed)") {
+    import spark.implicits._
+    val data = (0 until 2000).map { i =>
+      (java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i % 150)),
+        if (i % 13 == 0) null else s"name-${i % 230}")
+    }
+    // keyExpr hashes these types, and xxhash64 of a NULL is its seed, not
+    // NULL: both paths sketch such a row rather than skip it.
+    val (built, aggregated) = bothBuilds(data.toDF("dk", "sk").repartition(13))
+    assert(built.count == data.size)
+    assertSameGroup(built, aggregated)
+  }
+
+  test("COMPASS builder on zero survivors: count 0, all-zero planes") {
+    import spark.implicits._
+    val df = (0 until 500).map(i => (i.toLong, i)).toDF("lk", "ik").repartition(4)
+    // A real filter that keeps nothing, and one Catalyst folds to an empty
+    // relation (an RDD with no partitions).
+    Seq(df.filter(col("lk") < 0), df.filter(lit(false))).foreach { empty =>
+      val (built, aggregated) = bothBuilds(empty)
+      assert(built.count == 0L)
+      assert(built.planes.forall(_.forall(_ == 0.0)))
+      assertSameGroup(built, aggregated)
+    }
+  }
+
+  test("COMPASS builder runs one job with no shuffle write at one partition") {
+    val sc = spark.sparkContext
+    val group = s"sketch-shape-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add(e.jobId)
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    // A file scan: one partition, but not SinglePartition-partitioned, so
+    // an aggregate over it would plan an exchange (spark.range(.., 1)
+    // would not).
+    val instance = Tables.load(spark, "/root/testdata/sf0.001", "orders")
+      .filter(col("o_totalprice") > 100000).select("o_orderkey")
+    assert(instance.rdd.getNumPartitions == 1)
+    val survivors = instance.count()
+    val plan = instance.queryExecution.analyzed
+    val seeds = Seq(new SeedRegistry(73).seedsFor(("orders", "o_orderkey")))
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one filtered instance")
+      val g = try CompassSession.buildSketch(
+          spark, plan, plan.output, 73, 1021, Seq("o_orderkey"), seeds)
+        finally sc.clearJobGroup()
+      assert(g.count == survivors && survivors > 0)
+      org.apache.spark.ListenerDrain(sc)
+      assert(jobs.size == 1, s"expected one sketch job, saw ${jobs.size}")
+      assert(shuffleBytes.get == 0L, s"sketch build wrote ${shuffleBytes.get} shuffle bytes")
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -124,6 +124,30 @@ class SketchSpec extends AnyFunSuite {
     (0 until 2).foreach(c => assert(g2.planes(c).sameElements(g.planes(c))))
   }
 
+  test("codec bytes are the DataOutputStream layout: files on disk keep loading") {
+    val seeds = Array(ColumnSeeds.deterministic(3, 5L), ColumnSeeds.deterministic(3, 6L))
+    val g = new SketchGroup(3, 5, Array("a_id", "b_näme"), seeds)
+    (0 until 40).foreach(i => g.update(Array(i * 7, -i)))
+    // The layout as written one value at a time before the bulk codec.
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bos)
+    out.writeInt(3); out.writeInt(5); out.writeInt(2); out.writeLong(40L)
+    out.writeUTF("a_id"); out.writeUTF("b_näme")
+    seeds.foreach(_.pairs.foreach { p =>
+      out.writeLong(p.cwA); out.writeLong(p.cwB); out.writeInt(p.ehS0); out.writeInt(p.ehS1)
+    })
+    g.planes.foreach(_.foreach(out.writeDouble))
+    out.flush()
+    val golden = bos.toByteArray
+    assert(g.planes.exists(_.exists(_ != 0.0)))
+    assert(g.serialize().sameElements(golden))
+    val back = SketchGroup.deserialize(golden)
+    assert(back.count == 40L && back.rows == 3 && back.buckets == 5)
+    assert(back.columns.sameElements(g.columns))
+    assert(back.seeds.map(_.pairs.toSeq).sameElements(seeds.map(_.pairs.toSeq)))
+    (0 until 2).foreach(c => assert(back.planes(c).sameElements(g.planes(c))))
+  }
+
   test("multiway estimate on a 3-table chain is within 2x of truth (dense regime)") {
     // The min-abs plane composition (Sketches.h:95-110 Set_Sketch_With_Max/
     // Choose_Sketch_Min_Val) is a heuristic tuned for the reference's

@@ -153,10 +153,11 @@ for name, sql in sorted(oracle.items()):
         bad.append((name, f"compare failed: {e}")); continue
     ok.append(name)
 
-# queries without oracle: check rows>0
+# queries without oracle: check rows>0 (only those in the subset, if any)
 for pdir in sorted(glob.glob(f"{out_dir}/q_*")):
     name = os.path.basename(pdir)
     if name in oracle or not os.path.isdir(pdir): continue
+    if _subset and name not in _subset: continue
     n = sum(len(pd.read_parquet(f)) for f in glob.glob(f"{pdir}/*.parquet"))
     (ok if n > 0 else bad).append((name + " [rows-only]", f"rows={n}") if n == 0 else name + " [rows-only]")
 
