@@ -13,50 +13,22 @@ object JobEntries {
 
   // One COMPASS session per Spark session: the sketch template cache is
   // the point of the PRE_PROCESSING analogue — rebuilding it per entry
-  // call would benchmark construction, not querying. The value is held
-  // behind a WeakReference: a CompassSession strongly references its
-  // SparkSession, so storing it directly as the WeakHashMap value would
-  // pin its own key forever and defeat the weak-map idiom.
+  // call would benchmark construction, not querying. Same rule as
+  // CompassQueries.compass: a strong map (a CompassSession references its
+  // SparkSession, so weak keys could never be collected) whose entries are
+  // swept once their session has stopped.
+  //
+  // The CompassSession rides a JobCorpus.trimmedSession child: the
+  // COMPASS corpus entries execute at x1 by contract, the regime the trim
+  // profile is measured for. That child is the ENTRY's bench profile, not
+  // a library default.
   private val compassSessions =
-    new java.util.WeakHashMap[SparkSession,
-      java.lang.ref.WeakReference[CompassSession]]()
-  // Cleared entries' sessions would be rebuilt on next use; keep the
-  // most recent alive so the steady-state single-session path never
-  // re-warms the template cache.
-  @volatile private var lastCompass: CompassSession = null
+    scala.collection.mutable.Map.empty[SparkSession, CompassSession]
 
-  private def compassFor(s: SparkSession): CompassSession = synchronized {
-    Option(compassSessions.get(s)).flatMap(r => Option(r.get)).getOrElse {
-      // The COMPASS corpus entries execute at x1 by contract (the scale
-      // where per-query DRIVER work dominates — the same regime the
-      // corpus's interactive profile is gated on, JobCorpus.
-      // interactiveSession), so the CompassSession rides a child with
-      // the same three driver-work trims: AQE re-planning of exchange-
-      // free broadcast trees, whole-stage source generation + Janino
-      // for 113 distinct sub-second shapes, and constraint closure over
-      // JOB's dozens of equality predicates. Measured on the full
-      // corpus (CompassProfileProbe, r17): 14.5 -> 7.7 s cold /
-      // 9.0 -> 7.4 s warm, identical counts on all 113. At data scale
-      // the defaults win — a production CompassSession wraps the user's
-      // session untouched; this child is the ENTRY's bench profile, not
-      // a library default.
-      val c = s.newSession()
-      c.conf.set("spark.sql.adaptive.enabled", "false")
-      c.conf.set("spark.sql.codegen.wholeStage", "false")
-      c.conf.set("spark.sql.constraintPropagation.enabled", "false")
-      // Pinned (r21 verdict #1): this child runs AQE-OFF, so a parent
-      // session's preferSortMergeJoin=false would make the STATIC planner
-      // convert SMJ→SHJ from stats estimates with no runtime fallback —
-      // 32 concurrent interpreted (codegen-off) hash builds thrashed the
-      // heap on the r21 driver (q_job_compass exec_ms 29.6→91.6 s, and
-      // FASTER at 8 cores than 32). Joins here are broadcast-or-SMJ.
-      c.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-      val cs = new CompassSession(c,
-        templateCache = Some(SketchTemplateCache.default()))
-      compassSessions.put(s, new java.lang.ref.WeakReference(cs))
-      lastCompass = cs
-      cs
-    }
+  private[graft] def compassFor(s: SparkSession): CompassSession = compassSessions.synchronized {
+    compassSessions.filterInPlace((sess, _) => !sess.sparkContext.isStopped)
+    compassSessions.getOrElseUpdate(s, new CompassSession(JobCorpus.trimmedSession(s),
+      templateCache = Some(SketchTemplateCache.default())))
   }
 
   /** Untimed PRE_PROCESSING for Bench: dataset + views + unfiltered
@@ -89,8 +61,8 @@ object JobEntries {
     // the same DuckDB twin — the reference's headline experiment is all
     // 113 queries with `\fpd` on (reference README.md:57), and since r17
     // this entry runs exactly that, not the one-per-family sample
-    // (r16 verdict #1). Per-query [sketch, enum, exec] telemetry rides
-    // lastCompassRuns into the bench record.
+    // (r16 verdict #1). Per-query [sketch, enum, exec] telemetry
+    // (`JobCorpus.CompassRun`) rides into the bench record.
     dfq("q_job_compass", JobCorpus.duckOracleSqlFor(JobCorpus.queries.map(_._1))) {
       (s, _) => JobCorpus.runCompassFull(s, compassFor(s))
     },

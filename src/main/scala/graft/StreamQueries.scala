@@ -107,12 +107,8 @@ object StreamQueries {
     n
   }
 
-  /** GRAFT_STREAM_PARTITIONS still overrides everything so campaigns
-    * can measure both sides of the dial on any corpus.
-    */
   private[graft] def streamPartitions(name: String, dir: String): Int =
-    sys.env.get("GRAFT_STREAM_PARTITIONS").flatMap(_.toIntOption)
-      .getOrElse(streamPartitionsFor(name, eventsBytes(dir)))
+    streamPartitionsFor(name, eventsBytes(dir))
 
   private def streamSession(s: SparkSession, partitions: Int = 8): SparkSession = synchronized {
     val children = Option(tunedSessions.get(s)).getOrElse {
@@ -138,11 +134,9 @@ object StreamQueries {
   def warmMachinery(s: SparkSession, dir: String): Unit = {
     // Warm EVERY child the entries will actually route to on THIS
     // corpus (the routing is volume-gated: past HeavyStateVolumeBytes
-    // without an env override, q_stream_dedup rides a 32-partition
-    // child — warming only the 8-partition child would leave that
-    // child's session init inside exactly the cold lap the dial
-    // encodes). The env override collapses routing to one count;
-    // streamPartitions already honors it.
+    // q_stream_dedup rides a 32-partition child — warming only the
+    // 8-partition child would leave that child's session init inside
+    // exactly the cold lap the dial encodes).
     val parts = rawEntries.map(e => streamPartitions(e.name, dir)).distinct.sorted
     parts.foreach { p =>
       val c = streamSession(s, p)
@@ -287,19 +281,15 @@ object StreamQueries {
     val useFile = mode == "append" &&
       sys.env.get("GRAFT_STREAM_SINK").contains("file")
     if (useFile) {
+      val root = java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir", "/tmp"), "graft_stream_sink")
+      sweepDeadSinks(root)
       // Keyed by pid too: two JVMs draining the same entry never delete
       // each other's live sink.
-      val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp"), "graft_stream_sink",
-        s"$name-${ProcessHandle.current.pid}")
+      val base = root.resolve(s"$name-${ProcessHandle.current.pid}")
       // Fresh dir per drain: the file sink's _spark_metadata log would
       // otherwise re-serve earlier laps' batches to the read-back.
-      if (java.nio.file.Files.exists(base))
-        scala.util.Using.resource(java.nio.file.Files.walk(base)) { paths =>
-          import scala.jdk.CollectionConverters._
-          paths.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-        }
+      deleteTree(base)
       val data = base.resolve("data")
       val q = df.writeStream.outputMode(mode).format("parquet")
         .option("path", data.toString)
@@ -318,6 +308,31 @@ object StreamQueries {
       df.sparkSession.table(name)
     }
   }
+
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root))
+      scala.util.Using.resource(java.nio.file.Files.walk(root)) { paths =>
+        import scala.jdk.CollectionConverters._
+        paths.iterator().asScala.toSeq.reverse
+          .foreach(p => java.nio.file.Files.deleteIfExists(p): Unit)
+      }
+
+  /** Delete the `<name>-<pid>` sink dirs under `root` whose JVM has exited;
+    * a failed delete (another JVM sweeping the same dir) is skipped.
+    */
+  private[graft] def sweepDeadSinks(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.isDirectory(root)) {
+      import scala.jdk.CollectionConverters._
+      val dirs = scala.util.Using.resource(java.nio.file.Files.list(root))(
+        _.iterator().asScala.toList)
+      dirs.foreach { d =>
+        val n = d.getFileName.toString
+        val pid = Some(n.lastIndexOf('-')).filter(_ > 0)
+          .flatMap(i => n.substring(i + 1).toLongOption)
+        if (pid.exists(ProcessHandle.of(_).isEmpty))
+          try deleteTree(d) catch { case scala.util.control.NonFatal(_) => () }
+      }
+    }
 
   // Every streaming entry runs end-to-end on the tuned child session —
   // the (s, dir) lambdas below are written against plain `s` and wrapped

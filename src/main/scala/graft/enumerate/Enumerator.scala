@@ -43,7 +43,6 @@ final case class GraphNode(id: Int, sketch: SketchGroup) {
 final class Enumerator(
     nodes: IndexedSeq[GraphNode],
     edges: Seq[((Int, String), (Int, String))],
-    traversalBound: Int = 100,
     estimator: String = Enumerator.ModeHybrid) {
   require(Enumerator.Modes.contains(estimator),
     s"unknown estimator mode '$estimator' (one of ${Enumerator.Modes})")
@@ -328,7 +327,7 @@ final class Enumerator(
     * (reference: RelAlgExecutor.cpp:2282-2307).
     */
   private def dfs(node: Int, allAdjacentIn: Set[Int], accIn: Double, st: SearchState): Set[Int] = {
-    if (st.bound > traversalBound) return Set.empty
+    if (st.bound > Enumerator.TraversalBound) return Set.empty
     st.bound += 1
     var future = Set(node)
     st.path += node
@@ -372,6 +371,11 @@ final class Enumerator(
 }
 
 object Enumerator {
+  /** Recursion steps per start node before the DFS stops — fixed, as the
+    * reference fixes it (variables_details.txt:13-14).
+    */
+  val TraversalBound = 100
+
   /** Behavior-parity port of the reference's left-deep fix-up pass
     * (reference: mapd-core/QueryEngine/RelAlgExecutor.cpp:2327-2395,
     * applied to the winning traversal at :2558). A/B-ONLY — never on the

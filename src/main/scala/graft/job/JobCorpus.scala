@@ -487,19 +487,34 @@ object JobCorpus {
   private val interactiveSessions =
     new java.util.WeakHashMap[SparkSession, (Int, SparkSession)]()
 
-  /** Child session with the INTERACTIVE profile: this workload's plans
-    * are pure broadcast-join trees over at-most-megabytes tables (the
-    * scale cap keeps the largest fact ~30 MB), so per-query DRIVER work
-    * dominates wall time — adaptive re-planning of plans with no
-    * exchanges to adapt, whole-stage source generation + Janino for 113
-    * distinct shapes each executing sub-second, and constraint closure
-    * over JOB's dozens of equality predicates. Turning those off for
-    * THIS workload only (child session: own conf, shared executors)
-    * measured 48 s → ~25 s over the 113 queries at x10 with identical
-    * counts (differentially gated at sf0.01). At real-IMDb scale the
-    * data side grows ~1000× and the defaults win — the profile is gated
-    * on the scaled volume staying interactive, not applied globally.
+  /** The JOB trim profile, defined once: a child of `spark` (own conf,
+    * shared executors) for plans that are broadcast-join trees over
+    * megabyte tables, where per-query DRIVER work dominates. The vanilla
+    * corpus ([[interactiveSession]]) and the `q_job_compass` entry's
+    * CompassSession both run on one. Each setting is measured:
+    *  - AQE off: no re-planning of plans with no exchanges to adapt.
+    *  - Whole-stage codegen off: no Janino for 113 distinct sub-second
+    *    shapes; codegen on lost in r18 and again in r21 (59.1/51.3 s vs
+    *    39.7/34.3 s cold/warm at x10).
+    *  - Constraint propagation off: no closure over JOB's dozens of
+    *    equality predicates.
+    *  - `preferSortMergeJoin=true` (r21 verdict #1): with AQE off, `false`
+    *    converts SMJ→SHJ statically with no runtime fallback; concurrent
+    *    interpreted hash builds sent q_job_compass exec 29.6→91.6 s.
+    * Together: 48 → ~25 s over the corpus at x10, 14.5 → 7.7 s cold on the
+    * COMPASS path (r17), identical counts. At data scale the defaults win,
+    * so the corpus gates the profile on volume ([[executionSession]]) and a
+    * production CompassSession wraps the user's session untouched.
     */
+  private[graft] def trimmedSession(spark: SparkSession): SparkSession = {
+    val c = spark.newSession()
+    c.conf.set("spark.sql.adaptive.enabled", "false")
+    c.conf.set("spark.sql.codegen.wholeStage", "false")
+    c.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    c.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+    c
+  }
+
   /** Measured boundary of the interactive-trim profile (SCALE.md r18
     * facet 1): the trim (AQE/codegen/constraint propagation off) wins
     * while every plan stays in the broadcast regime — ×10/×20 measured
@@ -536,28 +551,15 @@ object JobCorpus {
         }
     }
 
+  /** [[trimmedSession]] with the scale-`m` views registered, memoized per
+    * (parent session, scale).
+    */
   private[graft] def interactiveSession(spark: SparkSession, m: Int): SparkSession =
     synchronized {
       Option(interactiveSessions.get(spark)).filter(_._1 == m).map(_._2)
         .getOrElse {
-          val c = spark.newSession()
-          c.conf.set("spark.sql.adaptive.enabled", "false")
-          // A/B knob (r21): GRAFT_JOB_CODEGEN=1 keeps whole-stage codegen
-          // on inside the trim, to re-measure the r18 "codegen off wins"
-          // call as data scale and hosts drift.
-          if (!sys.env.get("GRAFT_JOB_CODEGEN").contains("1"))
-            c.conf.set("spark.sql.codegen.wholeStage", "false")
-          c.conf.set("spark.sql.constraintPropagation.enabled", "false")
-          // Pinned (r21 verdict #1): AQE is off in this trim, so an
-          // inherited preferSortMergeJoin=false means STATIC stats-based
-          // SMJ→SHJ conversion with no runtime size fallback — the exact
-          // interaction that regressed the r21 driver bench (q_job_corpus
-          // 44.1→55.3 s). The trim's joins stay broadcast-or-SMJ.
-          c.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-          val path = dataPathFor(m)
-          tableNames.foreach { t =>
-            c.read.parquet(s"$path/$t.parquet").createOrReplaceTempView(t)
-          }
+          val c = trimmedSession(spark)
+          registerViews(c, m)
           // Deliberately NOT cacheTable'd: measured at x10, pinning all
           // 21 tables in the columnar cache was ~7% SLOWER over the 113
           // queries (29.9 s vs 27.8 s cold) — per-query driver planning
@@ -568,25 +570,30 @@ object JobCorpus {
         }
     }
 
-  /** Submission concurrency for the corpus and compass-subset runs.
-    * Default 4: the 16-thread shape (fastest on a quiescent machine) is
-    * also a contention AMPLIFIER — the r10-r12 driver windows recorded
-    * the 16-way entries at 5-9x their quiesced numbers while ordinary
-    * entries drifted 1.08x, because 16 concurrent jobs each fanning to
-    * 32 cores multiply whatever else the host is doing into this
-    * entry's wall time. 4 threads still overlap planning with
-    * execution (~3x over sequential) with a far smaller contention
-    * cross-section; override via GRAFT_JOB_THREADS to reproduce the
-    * wide shape.
+  /** Submission concurrency for the corpus and compass-subset runs and
+    * the scale campaign's capped laps. The 16-thread shape (fastest on a
+    * quiescent machine) is also a contention AMPLIFIER — the r10-r12
+    * driver windows recorded the 16-way entries at 5-9x their quiesced
+    * numbers while ordinary entries drifted 1.08x, because 16 concurrent
+    * jobs each fanning to 32 cores multiply whatever else the host is
+    * doing into this entry's wall time — and r21 measured 6 threads
+    * worse on the cold lap (per-query median 870 → 2625 ms). 4 threads
+    * still overlap planning with execution (~3x over sequential).
     */
-  private def submitThreads: Int =
-    // Clamp: a zero/negative override would throw out of
-    // Executors.newFixedThreadPool and kill the corpus entry.
-    math.max(1, sys.env.get("GRAFT_JOB_THREADS").flatMap(_.toIntOption).getOrElse(4))
+  private[graft] val SubmitThreads = 4
+
+  /** Whole-lap timeout (minutes) for [[runAllOn]] and [[runCompassSubset]].
+    * 15 covers every bench/verify shape; `GRAFT_CORPUS_TIMEOUT_MIN`
+    * overrides it because the scale campaign's ×100 default-profile lap
+    * legitimately runs longer (data-dominated shuffle joins).
+    */
+  private[graft] val CorpusTimeoutMin: Int =
+    sys.env.get("GRAFT_CORPUS_TIMEOUT_MIN").flatMap(_.toIntOption).getOrElse(15)
 
   /** Per-query wall-clock latencies (ms) of the most recent [[runAll]] —
     * read by Bench so the official record carries a contention-robust
     * per-query median beside the contention-sensitive total wall.
+    * Telemetry only: nothing reads it to order a lap.
     */
   @volatile var lastCorpusLatencies: Map[String, Long] = Map.empty
   import scala.jdk.CollectionConverters._
@@ -609,30 +616,15 @@ object JobCorpus {
     // overlap planning with execution (Spark SQL is thread-safe across
     // jobs on one session; local[32] has the cores idle). ~4x wall-clock
     // over sequential submission at this scale. Thread count: see
-    // [[submitThreads]] — 16 is ~20% faster warm when the machine is
-    // quiescent (22.1 -> 17.8 s at x10), but three rounds of driver
-    // benches showed 16-way submission amplifying AMBIENT load 5-9x
-    // into this entry's wall time while ordinary entries drifted 1.08x,
-    // so the official number now runs narrower.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(submitThreads)
-    // LPT (longest-processing-time-first) submission: with a 4-slot pool,
-    // FIFO order can strand a deep 28a-33a chain (p90/median = 4.8 at x10)
-    // as the LAST job, serializing ~9 s of tail behind an otherwise-idle
-    // pool. Sorting by the previous lap's latency (unknown queries first —
-    // they might be long) bounds the makespan overhang by the LAST-started
-    // job's cost, the classical LPT guarantee. A cold run with no prior
-    // lap keeps the natural order — identical results either way.
-    val prior = lastCorpusLatencies
-    val submitOrder =
-      if (prior.isEmpty) queries
-      else queries.sortBy { case (name, _) => -prior.getOrElse(name, Long.MaxValue) }
+    // [[SubmitThreads]]. Queries go in their natural (name-sorted) order.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(SubmitThreads)
     // Latencies are a LOCAL map per run: the previous field-level map
     // leaked stale timings into the next lap's snapshot if Await timed out.
     val latencies = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = submitOrder.map { case (name, text) =>
+      val futures = queries.map { case (name, text) =>
         scala.concurrent.Future {
           val t0 = System.nanoTime()
           val n = exec.sql(text).head().getLong(0)
@@ -640,15 +632,9 @@ object JobCorpus {
           name -> n
         }
       }
-      // 15 min covers every bench/verify shape at the capped sf scales;
-      // the scale campaign's x100 default-profile lap legitimately runs
-      // longer (data-dominated shuffle joins) — overridable, not a code
-      // path the driver gate ever takes.
-      val timeoutMin = sys.env.get("GRAFT_CORPUS_TIMEOUT_MIN")
-        .flatMap(_.toIntOption).getOrElse(15)
       val out = scala.concurrent.Await
         .result(scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration(timeoutMin, "min"))
+          scala.concurrent.duration.Duration(CorpusTimeoutMin, "min"))
         .toDF("q", "n").orderBy("q")
       lastCorpusLatencies = latencies.asScala.toMap
       out
@@ -805,12 +791,12 @@ object JobCorpus {
     import spark.implicits._
     val byName = queries.toMap
     // Concurrent submission, one short-lived CompassSession scope per
-    // query (same [[submitThreads]] shape as runAll): each query's sketch
+    // query (same [[SubmitThreads]] shape as runAll): each query's sketch
     // jobs, splice, and execution are independent, so the planner threads
     // overlap planning with execution. The per-SCOPE lastPlan (not the
     // racy session-level field) proves each query individually took the
     // COMPASS path.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(submitThreads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(SubmitThreads)
     val runs = try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -830,8 +816,7 @@ object JobCorpus {
       }
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration(sys.env.get("GRAFT_CORPUS_TIMEOUT_MIN")
-          .flatMap(_.toIntOption).getOrElse(15), "min"))
+        scala.concurrent.duration.Duration(CorpusTimeoutMin, "min"))
     } finally pool.shutdown()
     lastCompassRuns = runs
     runs.map(r => r.name -> r.count).toDF("q", "n").orderBy("q")

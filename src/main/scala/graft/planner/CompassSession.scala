@@ -66,8 +66,8 @@ final case class CompassPlan(
   * without any scan at all. Joins the optimizer cannot improve (non-inner,
   * no equi-edges, <3 tables) fall through untouched.
   *
-  * Thresholds match the reference defaults
-  * (Catalog/COMPASS_init_variables.txt:1-5).
+  * Sketch dimensions and size thresholds are fixed, as the reference
+  * fixes them in one init file — see the constants on the companion.
   *
   * Concurrency contract: optimize() caches nothing — the spliced plan
   * reads the base tables like any query — so interleaved queries on one
@@ -80,14 +80,6 @@ final case class CompassPlan(
   */
 final class CompassSession(
     val spark: SparkSession,
-    sketchRows: Int = 73,
-    sketchBuckets: Int = 1021,
-    minTableSize: Long = 200, // PUSH_DOWN_MIN_TABLE_SIZE_SK
-    // Hint threshold is rows-surviving (bytes unknown pre-projection);
-    // 100k rows of pruned join columns is comfortably under executor
-    // broadcast budgets, while anything larger is left to AQE's own
-    // size-based decision.
-    broadcastRowLimit: Long = 100000,
     templateCache: Option[SketchTemplateCache] = None,
     // Wall-time policy (r12 verdict): when every instance except at most
     // one sits under spark.sql.autoBroadcastJoinThreshold, Catalyst
@@ -101,6 +93,7 @@ final class CompassSession(
     // is broadcastable; a production session at data scale turns it on
     // to skip the regime where order provably doesn't matter.
     skipWhenAllBroadcastable: Boolean = false) {
+  import CompassSession.{BroadcastRowLimit, MinTableSize, SketchBuckets, SketchRows}
 
   // Config contract: Catalyst must not re-reorder the spliced spine.
   // Two logical rules could override the enumerator's choice —
@@ -345,7 +338,7 @@ final class CompassSession(
     var warmed = 0
     workload.foreach { df =>
       JoinGraphExtractor.extract(df.queryExecution.analyzed).foreach { case (g, _) =>
-        val reg = new SeedRegistry(sketchRows)
+        val reg = new SeedRegistry(SketchRows)
         g.edges.foreach { case ((ia, a), (ib, b)) =>
           reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
         }
@@ -362,7 +355,7 @@ final class CompassSession(
             val colNames = attrs.map(a => label(g, inst.idx, a))
             val classKeys = attrs.map(a => reg.classKey(seedKey(g, inst.idx, a)))
             Some { () =>
-              cache.getOrBuild(tk.get, colNames, classKeys, sketchRows, sketchBuckets)(
+              cache.getOrBuild(tk.get, colNames, classKeys, SketchRows, SketchBuckets)(
                 sketchOf(inst.plan, attrs, colNames, seeds))
               1
             }
@@ -409,7 +402,7 @@ final class CompassSession(
 
   private def sketchOf(plan: LogicalPlan, attrs: Seq[Attribute],
       colNames: Seq[String], seeds: Seq[ColumnSeeds]): SketchGroup =
-    CompassSession.buildSketch(spark, plan, attrs, sketchRows, sketchBuckets, colNames, seeds)
+    CompassSession.buildSketch(spark, plan, attrs, SketchRows, SketchBuckets, colNames, seeds)
 
   /** Instance subtree with its own filter conjuncts applied (the "pushed
     * down selection" — reference FilterPushDownSketch.cpp:199-231 splices
@@ -432,7 +425,7 @@ final class CompassSession(
     * resolution stays sequential — SeedRegistry mutates.
     */
   private def buildSketches(g: ExtractedJoinGraph): IndexedSeq[GraphNode] = {
-    val reg = new SeedRegistry(sketchRows)
+    val reg = new SeedRegistry(SketchRows)
     g.edges.foreach { case ((ia, a), (ib, b)) =>
       reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
     }
@@ -463,8 +456,8 @@ final class CompassSession(
       // small (reference: FilterPushDownSketch.cpp:154-198).
       val tinyTemplate: Option[SketchGroup] =
         if (hasFilter) templateKey.flatMap(tk => templateCache.flatMap(
-          _.peek(tk, colNames, seedClassKeys, sketchRows, sketchBuckets)
-            .filter(_.count < minTableSize)))
+          _.peek(tk, colNames, seedClassKeys, SketchRows, SketchBuckets)
+            .filter(_.count < MinTableSize)))
         else None
 
       def build(): SketchGroup = sketchOf(filteredPlan(g, inst.idx), attrs, colNames, seeds)
@@ -472,7 +465,7 @@ final class CompassSession(
       () => {
         val sketch = tinyTemplate.getOrElse((templateCache, hasFilter) match {
           case (Some(cache), false) if templateKey.isDefined =>
-            cache.getOrBuild(templateKey.get, colNames, seedClassKeys, sketchRows, sketchBuckets)(build())
+            cache.getOrBuild(templateKey.get, colNames, seedClassKeys, SketchRows, SketchBuckets)(build())
           case (_, true) if dataId.isDefined =>
             // Canonicalized filtered plan: exprIds normalize to output
             // ordinals, so the same predicate set over the same relation
@@ -481,7 +474,7 @@ final class CompassSession(
             val key = Seq(dataId.get,
               CompassSession.filteredPlan(g, inst.idx).canonicalized.toString,
               colNames.mkString(","), seedClassKeys.mkString(","),
-              sketchRows.toString, sketchBuckets.toString).mkString("|")
+              SketchRows.toString, SketchBuckets.toString).mkString("|")
             memoizedFiltered(key)(build())
           case _ => build()
         })
@@ -504,7 +497,7 @@ final class CompassSession(
 
     def base(i: Int, withHint: Boolean): LogicalPlan = {
       val p = filteredPlan(g, i)
-      if (withHint && countOf.get(i).exists(c => c > 0 && c <= broadcastRowLimit))
+      if (withHint && countOf.get(i).exists(c => c > 0 && c <= BroadcastRowLimit))
         ResolvedHint(p, HintInfo(strategy = Some(BROADCAST)))
       else p
     }
@@ -519,6 +512,21 @@ final class CompassSession(
 }
 
 object CompassSession {
+  // Fixed as the reference fixes them (Catalog/COMPASS_init_variables.txt):
+  // sketch rows × buckets per plane (lines 1-2), and
+  // PUSH_DOWN_MIN_TABLE_SIZE_SK (line 3) — a filtered instance whose table
+  // template counts fewer rows reuses the template, no sketch job.
+  val SketchRows = 73
+  val SketchBuckets = 1021
+  val MinTableSize = 200L
+
+  /** graft's analogue of PUSH_DOWN_MAX_SIZE (init file line 5): at most
+    * this many surviving rows earn a broadcast hint. Rows, not bytes (bytes
+    * are unknown before projection); 100k rows of pruned join columns sit
+    * well under executor broadcast budgets.
+    */
+  val BroadcastRowLimit = 100000L
+
   /** Sketch key expression: integral → long (equality-preserving fold);
     * anything else — DATE (Spark refuses date→bigint at analysis, so the
     * r2 date branch silently disabled COMPASS for date keys), TIMESTAMP
@@ -527,11 +535,13 @@ object CompassSession {
     * decimals → xxhash64 (the reference joins on dictionary-encoded
     * integer ids — mapd-core/StringDictionary/ — a 64-bit hash preserves
     * equality semantics the same way, with negligible collision mass).
+    * NULL in, NULL out: `xxhash64(NULL)` is its seed, so a bare hash would
+    * sketch every NULL key into one bucket instead of skipping it.
     */
   private[graft] def keyExpr(a: Attribute): Expression = a.dataType match {
     case LongType => a
     case IntegerType | ShortType | ByteType => Cast(a, LongType)
-    case _ => new XxHash64(Seq(a))
+    case _ => If(IsNull(a), Literal(null, LongType), new XxHash64(Seq(a)))
   }
 
   /** Sketch `plan`'s rows over `attrs` in one Spark job (reference:

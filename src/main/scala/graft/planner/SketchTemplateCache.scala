@@ -114,13 +114,10 @@ final class SketchTemplateCache(dir: Path) {
   // filtered instance (r12 measured the cold filtered-sketch path at
   // ~50% of per-query time on the JOB subset). Unlike table templates
   // the population is workload-shaped and unbounded, so the tier is
-  // CAPPED: past `maxFilteredFiles` the oldest files (mtime) are pruned
+  // CAPPED: past `FilteredCap` the oldest files (mtime) are pruned
   // — always safe, the tier is a rebuildable cache by construction, and
   // staleness is impossible because the key's data-identity component
   // snapshots location + mtime (a rewritten table simply misses).
-
-  private val filteredCap: Int =
-    sys.env.get("GRAFT_FILTERED_CACHE_CAP").flatMap(_.toIntOption).getOrElse(512)
 
   private def filteredFile(rawKey: String): Path = {
     val h = MessageDigest.getInstance("SHA-256").digest(rawKey.getBytes("UTF-8"))
@@ -153,22 +150,27 @@ final class SketchTemplateCache(dir: Path) {
           Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     } finally Files.deleteIfExists(tmp): Unit
-    // Bound the tier: delete oldest-by-mtime beyond the cap. Best-effort —
-    // concurrent stores may race the listing; a missed prune is caught by
-    // the next store, a double delete is a no-op.
+    pruneFiltered(SketchTemplateCache.FilteredCap)
+  }
+
+  /** Bound the filtered tier: delete its oldest-by-mtime files beyond
+    * `cap`; table templates share the directory and are never touched.
+    * Best-effort — concurrent stores may race the listing; a missed prune
+    * is caught by the next store, a double delete is a no-op.
+    */
+  private[graft] def pruneFiltered(cap: Int): Unit =
     try {
       val s = Files.list(dir)
       val files =
         try s.filter(p => p.getFileName.toString.startsWith("filtered-"))
           .toArray(new Array[Path](_)).toSeq
         finally s.close()
-      if (files.size > filteredCap)
+      if (files.size > cap)
         files.sortBy(p =>
             try Files.getLastModifiedTime(p).toMillis catch { case _: Throwable => 0L })
-          .dropRight(filteredCap)
+          .dropRight(cap)
           .foreach(p => try Files.deleteIfExists(p): Unit catch { case _: Throwable => () })
     } catch { case scala.util.control.NonFatal(_) => () }
-  }
 
   def clear(): Unit = {
     memory.clear()
@@ -181,6 +183,9 @@ final class SketchTemplateCache(dir: Path) {
 }
 
 object SketchTemplateCache {
+  /** Most filtered-tier files kept on disk (~600 KB each). */
+  private[graft] val FilteredCap = 512
+
   /** Default on-disk location (rebuildable — delete to force PRE_PROCESSING
     * behavior, reference COMPASS_init_variables.txt:6).
     */

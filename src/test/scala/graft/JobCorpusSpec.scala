@@ -371,6 +371,18 @@ class JobCorpusSpec extends AnyFunSuite {
     assert(child.table("title").columns.contains("production_year"))
   }
 
+  test("q_job_compass's CompassSession and the corpus child resolve one trim profile") {
+    JobCorpus.ensureData(spark)
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
+      "spark.sql.constraintPropagation.enabled", "spark.sql.join.preferSortMergeJoin")
+    val compassChild = JobEntries.compassFor(spark).spark
+    val corpusChild = JobCorpus.interactiveSession(spark, 1)
+    assert(compassChild ne spark)
+    assert(keys.map(compassChild.conf.get) == keys.map(corpusChild.conf.get),
+      "the COMPASS entry and the vanilla corpus must run the same trim")
+    assert(keys.map(corpusChild.conf.get) == Seq("false", "false", "false", "true"))
+  }
+
   test("generator is deterministic: same counts and checksums on regeneration") {
     val gens = JobCorpus.generators(spark).toMap
     val t1 = gens("title")

@@ -45,23 +45,53 @@ class SketchTemplateCacheSpec extends AnyFunSuite {
   }
 
   test("the cap prunes oldest filtered entries; table templates are untouched") {
-    // Cap via env is fixed at JVM start, so exercise the prune by writing
-    // past the default cap cheaply is impractical — instead prove the
-    // invariant the prune relies on: storeFiltered never deletes
-    // NON-filtered files (the table-template tier shares the directory).
+    // 20 stores stay under FilteredCap, so nothing is pruned here; the
+    // small-cap case below drives the prune itself. This one proves that
+    // storeFiltered never deletes NON-filtered files (the table-template
+    // tier shares the directory).
     val dir = java.nio.file.Files.createTempDirectory("graft-ftier-cap")
     val cache = new SketchTemplateCache(dir)
     cache.getOrBuild("tbl", Seq("c"), Seq("cls"), 5, 17)(group(3L))
     (1 to 20).foreach(i => cache.storeFiltered(s"k$i", group(100L + i)))
+    val names = listNames(dir)
+    assert(names.exists(_.startsWith("sketch-")),
+      "table template must survive filtered stores")
+    assert(names.count(_.startsWith("filtered-")) == 20)
+  }
+
+  test("pruning to a small cap keeps the newest filtered files and every table template") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ftier-prune")
+    val cache = new SketchTemplateCache(dir)
+    cache.getOrBuild("tbl", Seq("c"), Seq("cls"), 5, 17)(group(3L))
+    // Distinct, increasing mtimes (k10 newest), independent of clock
+    // granularity; the table template is older than every one of them.
+    val t0 = System.currentTimeMillis() - 100000L
+    def setMtime(name: String, ms: Long): Unit = java.nio.file.Files
+      .setLastModifiedTime(dir.resolve(name), java.nio.file.attribute.FileTime.fromMillis(ms))
+    listNames(dir).foreach(setMtime(_, t0))
+    (1 to 10).foreach { i =>
+      val before = listNames(dir).toSet
+      cache.storeFiltered(s"k$i", group(100L + i))
+      val added = listNames(dir).filterNot(before)
+      assert(added.size == 1 && added.head.startsWith("filtered-"))
+      setMtime(added.head, t0 + i * 1000L)
+    }
+    cache.pruneFiltered(3)
+    val names = listNames(dir)
+    assert(names.count(_.startsWith("filtered-")) == 3)
+    (8 to 10).foreach(i => assert(cache.loadFiltered(s"k$i").isDefined, s"newest k$i pruned"))
+    (1 to 7).foreach(i => assert(cache.loadFiltered(s"k$i").isEmpty, s"old k$i kept"))
+    assert(names.count(_.startsWith("sketch-")) == 1,
+      "a table template must never be pruned")
+  }
+
+  private def listNames(dir: java.nio.file.Path): Seq[String] = {
     val s = java.nio.file.Files.list(dir)
-    val names = try {
+    try {
       val b = Seq.newBuilder[String]
       s.forEach(p => b += p.getFileName.toString)
       b.result()
     } finally s.close()
-    assert(names.exists(_.startsWith("sketch-")),
-      "table template must survive filtered stores")
-    assert(names.count(_.startsWith("filtered-")) == 20)
   }
 
   test("concurrent store/load across 8 threads: every load is None or a valid group") {
