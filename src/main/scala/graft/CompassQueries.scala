@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
 object CompassQueries {
   import Queries._
 
-  // ONE session wrapper per SparkSession, so entries share its
-  // filtered-sketch memo (a fresh wrapper per call would rebuild every
-  // filtered sketch). NOT weakly keyed: a CompassSession strongly
+  // ONE session wrapper per SparkSession, so entries share its sketch
+  // store's memory memo (a fresh wrapper per call would re-read every
+  // sketch from disk). NOT weakly keyed: a CompassSession strongly
   // references its SparkSession, so weak keys could never be collected
   // (the WeakHashMap self-reference trap the OpCaches doc spells out);
   // instead, entries whose session has STOPPED are swept on access.

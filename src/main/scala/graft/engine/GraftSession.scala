@@ -40,7 +40,9 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
     */
   def sql(query: String): DataFrame = compass.sql(query)
 
-  /** The last COMPASS plan trace, if the last query was optimized. */
+  /** The COMPASS plan trace of the last [[sql]] call, if it was optimized
+    * (query scopes keep their own).
+    */
   def explainLast: Option[String] = compass.lastPlan.map(_.explainString)
 
   def table(name: String): DataFrame = Tables.load(spark, dataDir, name)

@@ -771,7 +771,7 @@ object JobCorpus {
     * with `\fpd` on (reference README.md:57, queries/README.md,
     * SQLFrontend/mapdql.cpp:1313-1317), not a per-family sample.
     * Variants within a family share unfiltered templates (cache) AND
-    * identical filtered instances (the session's filtered-sketch memo,
+    * identical filtered instances (the sketch store's filtered tier,
     * keyed on templateId+filter), so sketch-job volume grows far slower
     * than query count.
     */
@@ -794,8 +794,8 @@ object JobCorpus {
     // query (same [[SubmitThreads]] shape as runAll): each query's sketch
     // jobs, splice, and execution are independent, so the planner threads
     // overlap planning with execution. The per-SCOPE lastPlan (not the
-    // racy session-level field) proves each query individually took the
-    // COMPASS path.
+    // session's default-scope one) proves each query individually took
+    // the COMPASS path.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(SubmitThreads)
     val runs = try {
       implicit val ec: scala.concurrent.ExecutionContext =

@@ -69,14 +69,14 @@ final case class CompassPlan(
   * Sketch dimensions and size thresholds are fixed, as the reference
   * fixes them in one init file — see the constants on the companion.
   *
-  * Concurrency contract: optimize() caches nothing — the spliced plan
-  * reads the base tables like any query — so interleaved queries on one
-  * session share no mutable state except the filtered-sketch memo, which
-  * is safe for concurrent use. Each in-flight query stream takes its own
-  * [[QueryScope]] (`newScope()`) only to read its own `lastPlan`; the
-  * session's own optimize()/sql() run in a default scope (the
-  * one-query-at-a-time convenience surface). The sketch jobs inside a
-  * single optimize() are themselves parallel.
+  * Concurrency contract: optimize() caches no query data — the spliced
+  * plan reads the base tables like any query — so interleaved queries on
+  * one session share no mutable state except the sketch store, which is
+  * safe for concurrent use and builds each key once. Each in-flight query
+  * stream takes its own [[QueryScope]] (`newScope()`) only to read its own
+  * `lastPlan`; the session's own optimize()/sql() and `lastPlan` use a
+  * default scope (the one-query-at-a-time convenience surface). The sketch
+  * jobs inside a single optimize() are themselves parallel.
   */
 final class CompassSession(
     val spark: SparkSession,
@@ -110,93 +110,10 @@ final class CompassSession(
   spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
   spark.conf.set("spark.sql.optimizer.starSchemaDetection", "false")
 
-  /** Last-completed optimize() wins — introspection only (explain traces,
-    * quality harness); concurrent scopes wanting their own trace read it
-    * immediately after their optimize() returns or synchronize externally.
+  /** Every sketch this session reuses: the caller's store, or a
+    * memory-only one (same lookup, no disk I/O).
     */
-  @volatile var lastPlan: Option[CompassPlan] = None
-
-  /** Session-lifetime memo for FILTERED-instance sketches, keyed by
-    * (resolved data identity, canonicalized filtered plan, join columns,
-    * seed classes, dims). A workload run (e.g. one query per JOB family)
-    * filters the same table with the same predicate set many times —
-    * `cn.country_code = '[us]'`, `it.info = 'top 250 rank'` recur across
-    * families — and each repeat paid a full sketch job. Same data + same
-    * filter semantics + same seeds ⇒ byte-identical sketch, so sharing is
-    * lossless. The memo is in-flight-deduplicated: 16 concurrent
-    * optimize() threads hitting one key build once, the rest await the
-    * same future. A failed build is REMOVED so later queries retry
-    * rather than inherit the failure.
-    *
-    * When a [[SketchTemplateCache]] is configured, built filtered
-    * sketches additionally spill to its capped disk tier
-    * (`storeFiltered`) keyed by the same canonical key, and a memory
-    * miss consults disk before building — so a COLD session with a warm
-    * cache dir pays file reads, not sketch jobs (the reference keeps
-    * its templates on disk across sessions the same way,
-    * Catalog/Catalog.h:579-731; r12 measured the cold filtered path at
-    * ~50% of per-query time on the JOB subset).
-    *
-    * Invalidation rides on the templateId component: it snapshots data
-    * location + mtime, so a rewritten table changes every key.
-    */
-  private val filteredMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[graft.sketch.SketchGroup]]()
-  private val filteredHitCount = new java.util.concurrent.atomic.AtomicLong(0)
-  private val filteredMissCount = new java.util.concurrent.atomic.AtomicLong(0)
-  private val filteredDiskHitCount = new java.util.concurrent.atomic.AtomicLong(0)
-  /** Test hooks: memo effectiveness across a workload run. `filteredMisses`
-    * counts sketch JOBS actually run (a disk hit is not a miss — no job).
-    */
-  private[graft] def filteredHits: Long = filteredHitCount.get()
-  private[graft] def filteredMisses: Long = filteredMissCount.get()
-  private[graft] def filteredDiskHits: Long = filteredDiskHitCount.get()
-
-  private def memoizedFiltered(key: String)(build: => SketchGroup): SketchGroup = {
-    while (true) {
-      // Bound driver memory for long-lived sessions over many distinct
-      // filters (each group is O(rows·buckets·cols) ints): coarse full-clear
-      // at the cap — waiters on evicted in-flight futures still complete
-      // (they hold their own reference); subsequent queries just rebuild.
-      if (filteredMemo.size >= 512) filteredMemo.clear()
-      val mine = new java.util.concurrent.CompletableFuture[SketchGroup]()
-      val existing = filteredMemo.putIfAbsent(key, mine)
-      if (existing == null) {
-        try {
-          val g = templateCache.flatMap(_.loadFiltered(key)) match {
-            case Some(fromDisk) =>
-              filteredDiskHitCount.incrementAndGet()
-              fromDisk
-            case None =>
-              filteredMissCount.incrementAndGet()
-              val built = build
-              // The disk tier is best-effort end to end: a cache-dir write
-              // failure (disk full, read-only dir) must not discard the
-              // sketch we just built — degrade to memory-memo-only.
-              try templateCache.foreach(_.storeFiltered(key, built))
-              catch { case scala.util.control.NonFatal(_) => }
-              built
-          }
-          mine.complete(g); return g
-        }
-        catch { case e: Throwable =>
-          filteredMemo.remove(key, mine)
-          mine.completeExceptionally(e)
-          throw e
-        }
-      } else {
-        // A waiter whose builder fails must not inherit that unrelated
-        // query's exception: the owner removed the failed entry, so loop
-        // and build (or await the next builder) fresh — the documented
-        // retry-on-failure guarantee, now held for concurrent waiters too.
-        try { val g = existing.get(); filteredHitCount.incrementAndGet(); return g }
-        catch { case _: java.util.concurrent.ExecutionException =>
-          filteredMemo.remove(key, existing): Unit
-        }
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  private val store = templateCache.getOrElse(SketchTemplateCache.inMemory())
 
   /** `\fpd`-style toggle (reference: mapd-core/SQLFrontend/mapdql.cpp:1313). */
   @volatile var fpdEnabled: Boolean = true
@@ -208,9 +125,9 @@ final class CompassSession(
     * scan).
     */
   final class QueryScope private[CompassSession] () {
-    /** This scope's own last COMPASS plan — unlike the session-level
-      * `lastPlan`, safe to read under concurrent scopes (each in-flight
-      * query stream sees exactly its own trace).
+    /** This scope's own last COMPASS plan — safe to read under
+      * concurrent scopes (each in-flight query stream sees exactly its
+      * own trace).
       */
     @volatile var lastPlan: Option[CompassPlan] = None
 
@@ -228,7 +145,15 @@ final class CompassSession(
 
   private val defaultScope = newScope()
 
-  def close(): Unit = filteredMemo.clear()
+  /** The default scope's last COMPASS plan: what the session's own
+    * optimize()/sql() produced. Read it right after that call; streams
+    * running in their own scopes read `scope.lastPlan`.
+    */
+  def lastPlan: Option[CompassPlan] = defaultScope.lastPlan
+  def lastPlan_=(p: Option[CompassPlan]): Unit = defaultScope.lastPlan = p
+
+  /** Drop the store's memory memo; its disk tier stays warm. */
+  def close(): Unit = store.release()
 
   def sql(text: String): DataFrame = optimize(spark.sql(text))
 
@@ -305,7 +230,6 @@ final class CompassSession(
             sketchBuildMillis = (t1 - t0) / 1000000,
             enumerateMillis = (t2 - t1) / 1000000)
           scope.lastPlan = Some(published)
-          lastPlan = Some(published)
           spliced
         case _ => df
       }
@@ -333,39 +257,14 @@ final class CompassSession(
     * instances are skipped: templates only ever serve unfiltered scans.
     * Returns the number of templates now warm.
     */
-  def warmTemplates(workload: Seq[DataFrame]): Int = {
-    val cache = templateCache.getOrElse(return 0)
-    var warmed = 0
-    workload.foreach { df =>
-      JoinGraphExtractor.extract(df.queryExecution.analyzed).foreach { case (g, _) =>
-        val reg = new SeedRegistry(SketchRows)
-        g.edges.foreach { case ((ia, a), (ib, b)) =>
-          reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
-        }
-        val jobs: IndexedSeq[() => Int] = g.instances.flatMap { inst =>
-          val hasFilter = g.instanceFilters.get(inst.idx).exists(_.nonEmpty)
-          val tk = JoinGraphExtractor.templateId(inst.plan)
-          if (hasFilter || tk.isEmpty) None
-          else {
-            // Seed resolution OUTSIDE the thunk: awaitAll runs thunks on
-            // pool threads and SeedRegistry mutates (same invariant as
-            // buildSketches — "seed resolution stays sequential").
-            val attrs = g.joinAttrs(inst.idx)
-            val seeds = attrs.map(a => reg.seedsFor(seedKey(g, inst.idx, a)))
-            val colNames = attrs.map(a => label(g, inst.idx, a))
-            val classKeys = attrs.map(a => reg.classKey(seedKey(g, inst.idx, a)))
-            Some { () =>
-              cache.getOrBuild(tk.get, colNames, classKeys, SketchRows, SketchBuckets)(
-                sketchOf(inst.plan, attrs, colNames, seeds))
-              1
-            }
-          }
-        }.toIndexedSeq
-        warmed += CompassSession.awaitAll(jobs).sum
+  def warmTemplates(workload: Seq[DataFrame]): Int =
+    workload.map { df =>
+      JoinGraphExtractor.extract(df.queryExecution.analyzed).fold(0) { case (g, _) =>
+        val jobs = resolve(g).filterNot(_.hasFilter).flatMap(i =>
+          i.templateKey.map(k => () => { store.getOrBuild(k)(i.build()); 1 }))
+        CompassSession.awaitAll(jobs).sum
       }
-    }
-    warmed
-  }
+    }.sum
 
   /** Column label: plain name — unique within a base-table instance, and
     * STABLE across queries (no exprIds), so seed equivalence classes and
@@ -400,10 +299,6 @@ final class CompassSession(
       ((ia, label(g, ia, a)), (ib, label(g, ib, b)))
     }
 
-  private def sketchOf(plan: LogicalPlan, attrs: Seq[Attribute],
-      colNames: Seq[String], seeds: Seq[ColumnSeeds]): SketchGroup =
-    CompassSession.buildSketch(spark, plan, attrs, SketchRows, SketchBuckets, colNames, seeds)
-
   /** Instance subtree with its own filter conjuncts applied (the "pushed
     * down selection" — reference FilterPushDownSketch.cpp:199-231 splices
     * RelFilter+RelCompound; here a Filter node Catalyst will push into the
@@ -412,74 +307,84 @@ final class CompassSession(
   private def filteredPlan(g: ExtractedJoinGraph, i: Int): LogicalPlan =
     CompassSession.filteredPlan(g, i)
 
-  /** One sketch job per instance: filtered scan → [[CompassSession.buildSketch]]
-    * over its join columns (reference: executeFilterAndEvaluate,
-    * FilterPushDownSketch.cpp:871-891). Unfiltered instances are served
-    * from the template cache when available (reference:
-    * findSketchTemplateAndCopy, FilterPushDownSketch.cpp:315-382).
-    *
-    * The per-instance jobs are INDEPENDENT Spark jobs, so they launch
-    * concurrently (the reference builds sequentially; on a cluster the
-    * projection-pruned scans overlap across executors, and locally the
-    * per-job scheduling overhead stops being × nInstances). Seed
-    * resolution stays sequential — SeedRegistry mutates.
+  /** One instance's sketch inputs, resolved by [[resolve]]. */
+  private final class InstanceSketch(g: ExtractedJoinGraph, val idx: Int,
+      attrs: Seq[Attribute], colNames: Seq[String], seeds: Seq[ColumnSeeds],
+      classKeys: Seq[String]) {
+    val hasFilter: Boolean = g.instanceFilters.get(idx).exists(_.nonEmpty)
+
+    // Keys use the RESOLVED base relation (data location + mtime
+    // snapshot), never the instance alias: two different relations aliased
+    // identically must not share a slot, and the same table name over
+    // different directories/scale factors must not serve a stale sketch.
+    // Derived/local relations have no data identity, so no key: they build.
+    // lazy: templateId stats the data location, so for an unfiltered
+    // instance the stat runs inside its parallel sketch job.
+    private lazy val dataId: Option[String] = JoinGraphExtractor.templateId(g.instances(idx).plan)
+
+    /** The unfiltered table's template. */
+    def templateKey: Option[SketchTemplateCache.Key] = dataId.map(
+      SketchTemplateCache.templateKey(_, colNames, classKeys, SketchRows, SketchBuckets))
+
+    /** This filtered instance's sketch. Canonicalized filtered plan:
+      * exprIds normalize to output ordinals, so the same predicate set over
+      * the same relation keys identically from any query; a conservative
+      * mismatch just rebuilds (never serves a wrong sketch).
+      */
+    def filteredKey: Option[SketchTemplateCache.Key] = dataId.map(id =>
+      SketchTemplateCache.filteredKey(Seq(id,
+        filteredPlan(g, idx).canonicalized.toString,
+        colNames.mkString(","), classKeys.mkString(","),
+        SketchRows.toString, SketchBuckets.toString).mkString("|")))
+
+    def build(): SketchGroup = CompassSession.buildSketch(
+      spark, filteredPlan(g, idx), attrs, SketchRows, SketchBuckets, colNames, seeds)
+  }
+
+  /** Every instance's seeds, column labels, seed classes and data identity.
+    * The live pre-pass and [[warmTemplates]] both resolve here, so warm
+    * keys and live keys cannot drift. Sequential — SeedRegistry mutates.
     */
-  private def buildSketches(g: ExtractedJoinGraph): IndexedSeq[GraphNode] = {
+  private def resolve(g: ExtractedJoinGraph): IndexedSeq[InstanceSketch] = {
     val reg = new SeedRegistry(SketchRows)
     g.edges.foreach { case ((ia, a), (ib, b)) =>
       reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
     }
-    val jobs = g.instances.map { inst =>
+    g.instances.map { inst =>
       val attrs = g.joinAttrs(inst.idx)
-      val seeds = attrs.map(a => reg.seedsFor(seedKey(g, inst.idx, a)))
-      val colNames = attrs.map(a => label(g, inst.idx, a))
-      val hasFilter = g.instanceFilters.get(inst.idx).exists(_.nonEmpty)
-      val seedClassKeys = attrs.map(a => reg.classKey(seedKey(g, inst.idx, a)))
-      // Templates are keyed by the RESOLVED base relation (data location +
-      // mtime snapshot), never the instance alias: two different relations
-      // aliased identically must not share a cache slot, and the same
-      // table name over different directories/scale factors must not serve
-      // a stale sketch. Derived/local relations get no template (and no
-      // filtered-memo entry — dataId is the data-identity component of
-      // both keys).
-      // lazy: templateId stats the data location (files + mtime); the
-      // unfiltered/no-template-cache path never consumes it and must not
-      // pay the filesystem round-trip per instance.
-      lazy val dataId: Option[String] = JoinGraphExtractor.templateId(inst.plan)
-      lazy val templateKey: Option[String] =
-        if (templateCache.isDefined) dataId else None
+      val keys = attrs.map(seedKey(g, inst.idx, _))
+      new InstanceSketch(g, inst.idx, attrs, keys.map(_._2), keys.map(reg.seedsFor),
+        keys.map(reg.classKey))
+    }.toIndexedSeq
+  }
 
-      // Tiny-table shortcut: if the template cache already knows this
-      // table (template count == table cardinality) and it is below
+  /** One sketch job per instance: filtered scan → [[CompassSession.buildSketch]]
+    * over its join columns (reference: executeFilterAndEvaluate,
+    * FilterPushDownSketch.cpp:871-891). Every sketch goes through the
+    * session's [[SketchTemplateCache]]: unfiltered instances by template
+    * (reference: findSketchTemplateAndCopy, FilterPushDownSketch.cpp:315-382),
+    * filtered ones by their canonical filtered plan.
+    *
+    * The per-instance jobs are INDEPENDENT Spark jobs, so they launch
+    * concurrently (the reference builds sequentially; on a cluster the
+    * projection-pruned scans overlap across executors, and locally the
+    * per-job scheduling overhead stops being × nInstances).
+    */
+  private def buildSketches(g: ExtractedJoinGraph): IndexedSeq[GraphNode] = {
+    val jobs = resolve(g).map { i =>
+      // Tiny-table shortcut: if the store already knows this table
+      // (template count == table cardinality) and it is below
       // PUSH_DOWN_MIN_TABLE_SIZE_SK, skip the filtered sketch job and use
       // the template — the filter can't meaningfully shrink a table that
       // small (reference: FilterPushDownSketch.cpp:154-198).
-      val tinyTemplate: Option[SketchGroup] =
-        if (hasFilter) templateKey.flatMap(tk => templateCache.flatMap(
-          _.peek(tk, colNames, seedClassKeys, SketchRows, SketchBuckets)
-            .filter(_.count < MinTableSize)))
+      val tiny =
+        if (i.hasFilter) i.templateKey.flatMap(store.peek).filter(_.count < MinTableSize)
         else None
-
-      def build(): SketchGroup = sketchOf(filteredPlan(g, inst.idx), attrs, colNames, seeds)
-
-      () => {
-        val sketch = tinyTemplate.getOrElse((templateCache, hasFilter) match {
-          case (Some(cache), false) if templateKey.isDefined =>
-            cache.getOrBuild(templateKey.get, colNames, seedClassKeys, SketchRows, SketchBuckets)(build())
-          case (_, true) if dataId.isDefined =>
-            // Canonicalized filtered plan: exprIds normalize to output
-            // ordinals, so the same predicate set over the same relation
-            // keys identically from any query; a conservative mismatch
-            // just rebuilds (never serves a wrong sketch).
-            val key = Seq(dataId.get,
-              CompassSession.filteredPlan(g, inst.idx).canonicalized.toString,
-              colNames.mkString(","), seedClassKeys.mkString(","),
-              SketchRows.toString, SketchBuckets.toString).mkString("|")
-            memoizedFiltered(key)(build())
-          case _ => build()
-        })
-        GraphNode(inst.idx, sketch)
-      }
+      () => GraphNode(i.idx, tiny.getOrElse(
+        (if (i.hasFilter) i.filteredKey else i.templateKey) match {
+          case Some(k) => store.getOrBuild(k)(i.build())
+          case None => i.build()
+        }))
     }
     CompassSession.awaitAll(jobs)
   }

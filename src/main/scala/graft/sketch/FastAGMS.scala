@@ -153,6 +153,11 @@ object SketchGroup {
     val bis = new ByteArrayInputStream(bytes)
     val in = new DataInputStream(bis)
     val rows = in.readInt(); val buckets = in.readInt(); val nCols = in.readInt()
+    // A corrupt header must fail here, before it sizes the arrays below:
+    // every (column, row) carries a 24-byte seed pair and `buckets` doubles.
+    require(rows > 0 && buckets > 0 && nCols >= 0 &&
+      nCols.toDouble * rows * (24.0 + 8.0 * buckets) <= bytes.length,
+      "not a serialized SketchGroup")
     val count = in.readLong()
     val columns = Array.fill(nCols)(in.readUTF())
     val seeds = Array.fill(nCols) {

@@ -20,6 +20,33 @@ class CompassSessionSpec extends AnyFunSuite {
       |WHERE r_name = 'ASIA'
       |GROUP BY n_name ORDER BY n_name""".stripMargin
 
+  /** Spark jobs `cs.optimize` runs for `q` — its sketch builds (analysis
+    * and the splice run none) — and the optimized frame.
+    */
+  private def optimizeCountingJobs(cs: CompassSession, q: String)
+      : (org.apache.spark.sql.DataFrame, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val df = cs.optimize(spark.sql(q))
+      org.apache.spark.ListenerDrain(sc)
+      (df, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def cacheFiles(dir: java.nio.file.Path, prefix: String): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.list(dir)
+    try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith(prefix))
+    finally s.close()
+  }
+
   test("optimized 5-way join returns identical results to vanilla Spark") {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
@@ -154,17 +181,15 @@ class CompassSessionSpec extends AnyFunSuite {
   test("filtered-sketch memo: repeated (table, filter-set) builds once per session") {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
-    cs.sql(fiveWay).collect()
-    val missesAfterFirst = cs.filteredMisses
-    assert(missesAfterFirst >= 1, "the filtered region instance must be a memo miss")
-    assert(cs.filteredHits == 0)
-    val optimized = cs.sql(fiveWay).collect().map(_.toSeq)
-    assert(cs.filteredMisses == missesAfterFirst,
-      "identical (table, filter-set) must be served from the memo, not rebuilt")
-    assert(cs.filteredHits >= 1)
+    val (_, firstJobs) = optimizeCountingJobs(cs, fiveWay)
+    assert(firstJobs >= 1, "the first query must build its sketches")
+    val (again, secondJobs) = optimizeCountingJobs(cs, fiveWay)
+    assert(secondJobs == 0,
+      s"identical (table, filter-set) must be served from the memo, not rebuilt ($secondJobs jobs)")
+    assert(cs.lastPlan.isDefined)
     // Memo-served sketches still yield a correct (vanilla-identical) result.
     val vanilla = spark.sql(fiveWay).collect().map(_.toSeq)
-    assert(optimized.toSeq == vanilla.toSeq)
+    assert(again.collect().map(_.toSeq).toSeq == vanilla.toSeq)
   }
 
   test("filtered-sketch disk tier: a COLD session with a warm cache dir " +
@@ -175,26 +200,42 @@ class CompassSessionSpec extends AnyFunSuite {
     // spills it to the disk tier.
     val cs1 = new CompassSession(spark,
       templateCache = Some(new SketchTemplateCache(cacheDir)))
-    val r1 = cs1.sql(fiveWay).collect().map(_.toSeq)
+    val (df1, coldJobs) = optimizeCountingJobs(cs1, fiveWay)
+    val r1 = df1.collect().map(_.toSeq)
     val plan1 = cs1.lastPlan.get
-    assert(cs1.filteredMisses >= 1, "cold session must build the filtered sketch")
-    assert(cs1.filteredDiskHits == 0)
+    assert(coldJobs >= 1, "cold session must build the filtered sketch")
+    assert(cacheFiles(cacheDir, "filtered-").nonEmpty, "the filtered sketch must spill to disk")
     // Session 2: NEW CompassSession (memory memo empty — the r12 cold-start
-    // cost) over the SAME cache dir: every filtered sketch must come from
-    // disk, no sketch job, and the plan + results must be identical (the
-    // persisted bytes ARE the built sketch, so estimates cannot drift).
+    // cost) over the SAME cache dir: every sketch must come from disk, no
+    // sketch job, and the plan + results must be identical (the persisted
+    // bytes ARE the built sketch, so estimates cannot drift).
     val cs2 = new CompassSession(spark,
       templateCache = Some(new SketchTemplateCache(cacheDir)))
-    val r2 = cs2.sql(fiveWay).collect().map(_.toSeq)
+    val (df2, warmJobs) = optimizeCountingJobs(cs2, fiveWay)
+    val r2 = df2.collect().map(_.toSeq)
     val plan2 = cs2.lastPlan.get
-    assert(cs2.filteredMisses == 0,
-      s"warm disk tier must serve every filtered sketch (built ${cs2.filteredMisses})")
-    assert(cs2.filteredDiskHits >= 1)
+    assert(warmJobs == 0, s"warm disk tier must serve every sketch (ran $warmJobs jobs)")
     assert(plan2.order == plan1.order, "disk-served sketches must reproduce the plan")
     assert(plan2.sketchCounts == plan1.sketchCounts)
     assert(r2.toSeq == r1.toSeq)
     // And the result still equals vanilla.
     assert(r2.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
+  }
+
+  test("a corrupt template file is rebuilt, and the query stays on the COMPASS path") {
+    Tables.registerAll(spark, dir)
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft-corrupt-template")
+    new CompassSession(spark, templateCache = Some(new SketchTemplateCache(cacheDir)))
+      .warmTemplates(Seq(spark.sql(fiveWay)))
+    val templates = cacheFiles(cacheDir, "sketch-")
+    assert(templates.nonEmpty)
+    templates.foreach(java.nio.file.Files.write(_, Array[Byte](1, 2, 3)))
+    val cache = new SketchTemplateCache(cacheDir)
+    val cs = new CompassSession(spark, templateCache = Some(cache))
+    val r = cs.sql(fiveWay).collect().map(_.toSeq)
+    assert(cs.lastPlan.isDefined, "a corrupt template must not knock the query off COMPASS")
+    assert(r.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
+    assert(cache.misses > 0, "the corrupt templates must be rebuilt")
   }
 
   test("skipWhenAllBroadcastable: toy-scale region skips the pre-pass, " +
@@ -204,10 +245,10 @@ class CompassSessionSpec extends AnyFunSuite {
     // sf0.001: every table is far under the 10MB default threshold, so
     // order provably can't matter — the policy must leave the plan
     // untouched, run ZERO sketch jobs, and still return correct rows.
-    val r = cs.sql(fiveWay).collect().map(_.toSeq)
+    val (df, jobs) = optimizeCountingJobs(cs, fiveWay)
+    val r = df.collect().map(_.toSeq)
     assert(cs.lastPlan.isEmpty, "all-broadcastable region must skip the COMPASS path")
-    assert(cs.filteredMisses == 0 && cs.filteredHits == 0,
-      "the skip must happen BEFORE any sketch job")
+    assert(jobs == 0, "the skip must happen BEFORE any sketch job")
     assert(r.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
     // Shrink the threshold so >1 instance is "big": the same query must
     // now take the full COMPASS path.
