@@ -146,10 +146,10 @@ object Bench {
     // spread so a real regression is distinguishable from noise.
     val warmSpread = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
     // Per-ENTRY (sketch, enumerate, exec) triples for the COMPASS-path JOB
-    // entries, snapshotted right after each entry's timed COLD run. The
-    // r11 bench read JobCorpus.lastCompassRuns ONCE after all laps of all
-    // entries, so the recorded triples belonged to whichever compass run
-    // happened last (a warm lap) — mislabeled telemetry.
+    // entries, from each entry's timed COLD lap (and, under
+    // "<entry>#warm_last", its last warm lap). Every lap records into its
+    // own Telemetry scope, so a triple always belongs to the lap it is
+    // filed under.
     val jobPlanning = scala.collection.mutable.LinkedHashMap
       .empty[String, Seq[graft.job.JobCorpus.CompassRun]]
     val jobQuality = scala.collection.mutable.LinkedHashMap
@@ -173,13 +173,13 @@ object Bench {
         val xs = lat.values.toSeq.sorted
         Some((xs(xs.size / 2), xs((xs.size * 9) / 10 min (xs.size - 1)), xs.last, xs.size))
       }
-    // Per-lap GC + JIT attribution for the long-running entries (r16
-    // verdict #4: the quiesced record's q_job_corpus warm lap ran SLOWER
-    // than cold with nothing to attribute it to). Two MXBean reads per
-    // lap: cumulative stop-the-world collection time and cumulative JIT
-    // compilation time — their per-lap deltas separate "the lap's code
-    // was slower" from "the JVM charged this lap for accumulated
-    // garbage / fresh compilation".
+    // Per-lap GC + JIT attribution (r16 verdict #4: the quiesced record's
+    // q_job_corpus warm lap ran SLOWER than cold with nothing to
+    // attribute it to). Two MXBean reads per lap: cumulative
+    // stop-the-world collection time and cumulative JIT compilation time
+    // — their per-lap deltas separate "the lap's code was slower" from
+    // "the JVM charged this lap for accumulated garbage / fresh
+    // compilation".
     def gcJitNow(): (Long, Long) = {
       import scala.jdk.CollectionConverters._
       val gc = java.lang.management.ManagementFactory
@@ -189,10 +189,25 @@ object Bench {
         .map(_.getTotalCompilationTime).getOrElse(0L)
       (gc, jit)
     }
-    // entry -> per-lap [wall_ms, gc_ms, jit_ms], cold first.
+    // entry -> per-lap [wall_ms, gc_ms, jit_ms] of its completed laps,
+    // cold first.
     val lapTelemetry = scala.collection.mutable
       .LinkedHashMap.empty[String, Vector[(Long, Long, Long)]]
-    val telemetryEntries = Set("q_job_corpus", "q_job_compass")
+    // One timed lap of an entry: its wall seconds (or the error), its
+    // [wall_ms, gc_ms, jit_ms], and what the entry recorded into the
+    // lap's Telemetry scope (also when it failed part-way).
+    case class Lap(time: Either[String, Double],
+        gcJit: (Long, Long, Long), rec: Telemetry.Record)
+    def lap(e: Queries.Entry): Lap = {
+      val (gc0, jit0) = gcJitNow()
+      val t0 = System.nanoTime()
+      val (out, rec) = Telemetry.capture(materialize(e.run(spark, sfDir)))
+      val ns = System.nanoTime() - t0
+      val (gc1, jit1) = gcJitNow()
+      Lap(out.toEither.map(_ => ns / 1e9).left.map(ex =>
+          Option(ex.getMessage).getOrElse(ex.getClass.getName).take(120)),
+        (ns / 1000000, gc1 - gc0, jit1 - jit0), rec)
+    }
     // entry -> (task-result bytes shipped to the driver, heap
     // high-water bytes) over the COLD lap — the driver-memory audit
     // channel (r19 verdict #2). Full record only.
@@ -205,63 +220,31 @@ object Bench {
       // to interrupt (r3 showed ~1.5x uniform drift on join entries).
       System.gc()
       DriverFootprint.reset()
-      if (e.name.startsWith("q_job")) {
-        graft.job.JobCorpus.lastCompassRuns = Nil
-        graft.job.JobCorpus.lastCorpusLatencies = Map.empty
-        JobEntries.lastQualityReports = Nil
-      }
-      if (e.name.startsWith("q_stream"))
-        StreamQueries.lastBatchDurations = Map.empty
-      val (gc0, jit0) = gcJitNow()
-      val t0 = System.nanoTime()
-      try {
-        val n = materialize(e.run(spark, sfDir))
-        require(n >= 0)
-        timings(e.name) = Right((System.nanoTime() - t0) / 1e9)
-        if (telemetryEntries(e.name)) {
-          val (gc1, jit1) = gcJitNow()
-          lapTelemetry(e.name) = Vector(
-            ((System.nanoTime() - t0) / 1000000, gc1 - gc0, jit1 - jit0))
-        }
-      } catch {
-        case NonFatal(ex) =>
-          timings(e.name) = Left(Option(ex.getMessage).getOrElse(ex.getClass.getName).take(120))
-      }
+      val cold = lap(e)
+      timings(e.name) = cold.time
+      if (cold.time.isRight) lapTelemetry(e.name) = Vector(cold.gcJit)
       // Cold-lap driver footprint (snapshot settles the async listener
       // bus AFTER the wall time was recorded, so it cannot contaminate
       // the timing).
       driverPeaks(e.name) = DriverFootprint.snapshot()
-      // Snapshot BEFORE the warm laps re-run the entry: the triple must
-      // describe the cold run whose wall time the primary metric records.
-      if (e.name.startsWith("q_job")) {
-        val runs = graft.job.JobCorpus.lastCompassRuns
-        if (runs.nonEmpty) jobPlanning(e.name) = runs
-        val reports = JobEntries.lastQualityReports
-        if (reports.nonEmpty) jobQuality(e.name) = reports
-        latencyStats(graft.job.JobCorpus.lastCorpusLatencies)
-          .foreach(jobLatency(e.name) = _)
-        // Per-FAMILY attribution (full record only): the corpus summary
-        // hides WHICH families carry the tail; grouping the 113 per-query
-        // latencies by their family number (digits prefix of "28a")
-        // makes the deep-chain cost directly readable round-over-round.
-        if (graft.job.JobCorpus.lastCorpusLatencies.nonEmpty &&
-            !jobFamilyLatency.contains(e.name))
-          jobFamilyLatency(e.name) = graft.job.JobCorpus.lastCorpusLatencies
-            .groupBy { case (q, _) => q.takeWhile(_.isDigit) }
-            .map { case (fam, qs) =>
-              val xs = qs.values.toSeq.sorted
-              fam -> ((xs.size, xs(xs.size / 2), xs.last))
-            }
-        graft.job.JobCorpus.lastCompassRuns = Nil
-        graft.job.JobCorpus.lastCorpusLatencies = Map.empty
-        JobEntries.lastQualityReports = Nil
-      }
-      if (e.name.startsWith("q_stream")) {
-        val durs = StreamQueries.lastBatchDurations.values.flatten.toSeq.sorted
-        if (durs.nonEmpty)
-          streamBatches(e.name) = (durs.size, durs(durs.size / 2), durs.last)
-        StreamQueries.lastBatchDurations = Map.empty
-      }
+      val rec = cold.rec
+      if (rec.compassRuns.nonEmpty) jobPlanning(e.name) = rec.compassRuns
+      if (rec.qualityReports.nonEmpty) jobQuality(e.name) = rec.qualityReports
+      latencyStats(rec.corpusLatencies).foreach(jobLatency(e.name) = _)
+      // Per-FAMILY attribution (full record only): the corpus summary
+      // hides WHICH families carry the tail; grouping the 113 per-query
+      // latencies by their family number (digits prefix of "28a") makes
+      // the deep-chain cost directly readable round-over-round.
+      if (rec.corpusLatencies.nonEmpty)
+        jobFamilyLatency(e.name) = rec.corpusLatencies
+          .groupBy { case (q, _) => q.takeWhile(_.isDigit) }
+          .map { case (fam, qs) =>
+            val xs = qs.values.toSeq.sorted
+            fam -> ((xs.size, xs(xs.size / 2), xs.last))
+          }
+      val durs = rec.batchDurations.values.flatten.toSeq.sorted
+      if (durs.nonEmpty)
+        streamBatches(e.name) = (durs.size, durs(durs.size / 2), durs.last)
       // Operator-internal persists only serve their own query's action;
       // release them so the 70+-query run doesn't accumulate cache.
       graft.operators.OpCaches.releaseAll(spark)
@@ -272,7 +255,7 @@ object Bench {
       // per query. Operator persists were released, so this measures
       // recomputation, not cache reads; only generated-code and JIT state
       // carries over. Cold stays the primary (round-comparable) metric.
-      if (timings(e.name).isRight) {
+      if (cold.time.isRight) {
         // The checkpoint-heavy trio measured 3x lap-over-lap swings on
         // identical code (r9 warm_spread) — GC/page-cache jitter on
         // eager-checkpoint entries. 5 laps instead of 3 so their median
@@ -285,41 +268,28 @@ object Bench {
         val nLaps = if (checkpointHeavy(e.name)) 5
           else if (longRunning(e.name)) 1
           else if (headline.contains(e.name)) 3 else 1
-        val laps = scala.collection.mutable.ArrayBuffer.empty[Double]
-        var lap = 0
-        while (lap < nLaps) {
+        // Lazy: the first failed lap ends the entry's warm laps.
+        val warm = Iterator.fill(nLaps) {
           // Between-lap heap settle for the jittery trio: an eager
           // checkpoint mid-lap is where a pending GC lands otherwise.
           if (checkpointHeavy(e.name)) System.gc()
-          val (gcW0, jitW0) = gcJitNow()
-          val t1 = System.nanoTime()
-          try {
-            materialize(e.run(spark, sfDir))
-            laps += (System.nanoTime() - t1) / 1e9
-            if (telemetryEntries(e.name)) {
-              val (gcW1, jitW1) = gcJitNow()
-              lapTelemetry(e.name) = lapTelemetry.getOrElse(e.name, Vector.empty) :+
-                (((System.nanoTime() - t1) / 1000000, gcW1 - gcW0, jitW1 - jitW0))
-            }
-          } catch { case NonFatal(_) => lap = nLaps }
-          graft.operators.OpCaches.releaseAll(spark)
-          lap += 1
-        }
-        if (laps.nonEmpty) {
-          val sortedLaps = laps.sorted
+          try lap(e) finally graft.operators.OpCaches.releaseAll(spark)
+        }.takeWhile(_.time.isRight).toVector
+        lapTelemetry(e.name) ++= warm.map(_.gcJit)
+        if (warm.nonEmpty) {
+          val sortedLaps = warm.flatMap(_.time.toOption).sorted
           warmTimings(e.name) = sortedLaps(sortedLaps.size / 2)
           warmSpread(e.name) = (sortedLaps.head,
             sortedLaps(sortedLaps.size / 2), sortedLaps.last)
-        }
-        // Warm-lap telemetry under its own key: the r11 record conflated
-        // a warm lap's triples with the round's planning record; keeping
-        // BOTH labeled makes a warm>cold anomaly decomposable from the
-        // bench file alone.
-        if (e.name.startsWith("q_job")) {
-          val runs = graft.job.JobCorpus.lastCompassRuns
-          if (runs.nonEmpty) jobPlanning(e.name + "#warm_last") = runs
-          val reports = JobEntries.lastQualityReports
-          if (reports.nonEmpty) jobQuality(e.name + "#warm_last") = reports
+          // Warm-lap telemetry under its own key: the r11 record conflated
+          // a warm lap's triples with the round's planning record; keeping
+          // BOTH labeled makes a warm>cold anomaly decomposable from the
+          // bench file alone.
+          val last = warm.last.rec
+          if (last.compassRuns.nonEmpty)
+            jobPlanning(e.name + "#warm_last") = last.compassRuns
+          if (last.qualityReports.nonEmpty)
+            jobQuality(e.name + "#warm_last") = last.qualityReports
         }
       }
     }
@@ -396,8 +366,8 @@ object Bench {
     def streamJson(m: Iterable[(String, (Int, Long, Long))]): String =
       m.map { case (k, (n, md, mx)) => s""""${esc(k)}":[$n,$md,$mx]""" }
         .mkString("{", ",", "}")
-    // Per-lap [wall_ms, gc_ms, jit_ms] for the telemetry entries, cold
-    // lap first — the warm>cold attribution channel (r16 verdict #4).
+    // Per-lap [wall_ms, gc_ms, jit_ms] for every entry, cold lap first —
+    // the warm>cold attribution channel (r16 verdict #4).
     val lapTelemetryJson = lapTelemetry.map { case (k, lapsT) =>
       s""""${esc(k)}":[${lapsT.map { case (w, g, j) => s"[$w,$g,$j]" }.mkString(",")}]"""
     }.mkString("{", ",", "}")

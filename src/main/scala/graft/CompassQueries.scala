@@ -12,21 +12,27 @@ import org.apache.spark.sql.SparkSession
 object CompassQueries {
   import Queries._
 
-  // ONE session wrapper per SparkSession, so entries share its sketch
-  // store's memory memo (a fresh wrapper per call would re-read every
-  // sketch from disk). NOT weakly keyed: a CompassSession strongly
-  // references its SparkSession, so weak keys could never be collected
-  // (the WeakHashMap self-reference trap the OpCaches doc spells out);
-  // instead, entries whose session has STOPPED are swept on access.
+  /** One CompassSession per Spark session, over `wrap(session)`, so
+    * entries share its sketch store's memory memo (a fresh wrapper per
+    * call would re-read every sketch from disk). NOT weakly keyed: a
+    * CompassSession strongly references its SparkSession, so weak keys
+    * could never be collected (the WeakHashMap self-reference trap the
+    * OpCaches doc spells out); instead, entries whose session has
+    * STOPPED are swept on access.
+    */
+  private[graft] def memo(
+      wrap: SparkSession => SparkSession): SparkSession => CompassSession = {
+    val sessions = scala.collection.mutable.Map.empty[SparkSession, CompassSession]
+    s => sessions.synchronized {
+      sessions.filterInPlace((sess, _) => !sess.sparkContext.isStopped)
+      sessions.getOrElseUpdate(s,
+        new CompassSession(wrap(s), templateCache = Some(SketchTemplateCache.default())))
+    }
+  }
+
   // Entries run sequentially (Verify/Bench/driver) in the session's
   // default scope.
-  private val sessions =
-    scala.collection.mutable.Map.empty[SparkSession, CompassSession]
-  private def compass(s: SparkSession): CompassSession = sessions.synchronized {
-    sessions.filterInPlace((sess, _) => !sess.sparkContext.isStopped)
-    sessions.getOrElseUpdate(s,
-      new CompassSession(s, templateCache = Some(SketchTemplateCache.default())))
-  }
+  private val compass = memo(identity)
 
   /** PRE_PROCESSING for harnesses (reference: `PRE_PROCESSING`,
     * Catalog/COMPASS_init_variables.txt:6 — build every unfiltered

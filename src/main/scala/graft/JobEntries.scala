@@ -1,7 +1,7 @@
 package graft
 
 import graft.job.JobCorpus
-import graft.planner.{CompassSession, SketchTemplateCache}
+import graft.planner.CompassSession
 import org.apache.spark.sql.SparkSession
 
 /** Driver entries for the literal JOB corpus (see [[graft.job.JobCorpus]]).
@@ -11,39 +11,18 @@ import org.apache.spark.sql.SparkSession
 object JobEntries {
   import Queries._
 
-  // One COMPASS session per Spark session: the sketch template cache is
-  // the point of the PRE_PROCESSING analogue — rebuilding it per entry
-  // call would benchmark construction, not querying. Same rule as
-  // CompassQueries.compass: a strong map (a CompassSession references its
-  // SparkSession, so weak keys could never be collected) whose entries are
-  // swept once their session has stopped.
-  //
-  // The CompassSession rides a JobCorpus.trimmedSession child: the
-  // COMPASS corpus entries execute at x1 by contract, the regime the trim
-  // profile is measured for. That child is the ENTRY's bench profile, not
-  // a library default.
-  private val compassSessions =
-    scala.collection.mutable.Map.empty[SparkSession, CompassSession]
-
-  private[graft] def compassFor(s: SparkSession): CompassSession = compassSessions.synchronized {
-    compassSessions.filterInPlace((sess, _) => !sess.sparkContext.isStopped)
-    compassSessions.getOrElseUpdate(s, new CompassSession(JobCorpus.trimmedSession(s),
-      templateCache = Some(SketchTemplateCache.default())))
-  }
+  // One COMPASS session per Spark session (CompassQueries.memo), riding a
+  // JobCorpus.trimmedSession child: the COMPASS corpus entries execute at
+  // x1 by contract, the regime the trim profile is measured for. That
+  // child is the ENTRY's bench profile, not a library default.
+  private[graft] val compassFor: SparkSession => CompassSession =
+    CompassQueries.memo(JobCorpus.trimmedSession)
 
   /** Untimed PRE_PROCESSING for Bench: dataset + views + unfiltered
     * sketch templates for the COMPASS subset, on the same per-session
     * CompassSession the timed entries use.
     */
   def warmJob(s: SparkSession): Int = JobCorpus.warmCompass(s, compassFor(s))
-
-  /** Most recent q_job_quality battery — per-family (planMs,
-    * compassExecMs, naiveExecMs) splits. Bench snapshots this right
-    * after the entry's timed run, so the quality entry's wall time is
-    * decomposable (the r11 warm-lap anomaly was undiagnosable without
-    * this split).
-    */
-  @volatile var lastQualityReports: Seq[graft.planner.OptimizerQuality.Report] = Nil
 
   val entries: Seq[Entry] = Seq(
     // The reference's own 113-query workload, end to end. The synthetic
@@ -53,7 +32,9 @@ object JobEntries {
     // base files the static DuckDB twin reads. A verify at any OTHER sf
     // would mismatch loudly, never silently.
     dfq("q_job_corpus", JobCorpus.duckOracleSql) { (s, dir) =>
-      JobCorpus.runAll(s, dir)
+      val (counts, latencies) = JobCorpus.runAll(s, dir)
+      Telemetry.record(_.copy(corpusLatencies = latencies))
+      counts
     },
 
     // The ENTIRE corpus through the full COMPASS path (extraction →
@@ -64,7 +45,11 @@ object JobEntries {
     // (r16 verdict #1). Per-query [sketch, enum, exec] telemetry
     // (`JobCorpus.CompassRun`) rides into the bench record.
     dfq("q_job_compass", JobCorpus.duckOracleSqlFor(JobCorpus.queries.map(_._1))) {
-      (s, _) => JobCorpus.runCompassFull(s, compassFor(s))
+      (s, _) =>
+        val runs = JobCorpus.runCompassFull(s, compassFor(s))
+        Telemetry.record(_.copy(compassRuns = runs))
+        import s.implicits._
+        runs.map(r => r.name -> r.count).toDF("q", "n").orderBy("q")
     },
 
     // Measured optimizer quality ON the literal JOB workload — the
@@ -89,7 +74,7 @@ object JobEntries {
       val reports = JobCorpus.qualitySubset.map { name =>
         graft.planner.OptimizerQuality.compare(s, cs, name, byName(name))
       }
-      lastQualityReports = reports
+      Telemetry.record(_.copy(qualityReports = reports))
       import s.implicits._
       val perQuery = reports.map(r => (r.family,
         if (r.compassSum <= 2L * r.naiveSum + 100) 1L else 0L,

@@ -179,16 +179,6 @@ object StreamQueries {
     if (table == "events") Tables.normalizeEvents(raw) else raw
   }
 
-  /** Per-micro-batch `triggerExecution` durations (ms) of the most recent
-    * streaming drains, keyed per started stream. Bench snapshots + clears
-    * this around each `q_stream_*` entry and emits count/median/max, so a
-    * contended driver number is decomposable into "every batch slowed"
-    * vs "one batch stalled" from the bench file alone (r12: streaming
-    * entries ran ~2x under driver load with no per-batch signal — the
-    * same diagnosability `job_planning` gives the JOB trio).
-    */
-  @volatile var lastBatchDurations: Map[String, Seq[Long]] = Map.empty
-
   /** Final state-store footprint of a drained stream: total state rows
     * and bytes at the last progress, plus total input rows (summed over
     * recentProgress — bounded at ~100 progresses, plenty for an
@@ -212,13 +202,13 @@ object StreamQueries {
     */
   private[graft] val LinearStateRatio = 0.5
 
-  /** Per-drain footprints of the most recent streaming runs, keyed like
-    * [[lastBatchDurations]].
-    */
-  @volatile var lastStateFootprints: Map[String, StateFootprint] = Map.empty
-
-  /** Drain a started streaming query, recording its per-batch durations
-    * under `key`, and always stop it. Every entry starts its query with
+  /** Drain a started streaming query, recording its per-batch
+    * `triggerExecution` durations and its [[StateFootprint]] under `key`
+    * into the open [[Telemetry]] scope, and always stop it. Bench emits
+    * count/median/max of the durations, so a contended driver number is
+    * decomposable into "every batch slowed" vs "one batch stalled" from
+    * the bench file alone (r12: streaming entries ran ~2x under driver
+    * load with no per-batch signal). Every entry starts its query with
     * `Trigger.AvailableNow` (r17 verdict #7): the stream processes all
     * input present at start — INCLUDING the final watermark-advancing
     * no-data batch, so event-time timeouts (sessionize) and eviction
@@ -247,10 +237,9 @@ object StreamQueries {
         stateBytes = progresses.lastOption
           .map(_.stateOperators.map(_.memoryUsedBytes).sum).getOrElse(0L),
         inputRows = progresses.map(_.numInputRows).sum)
-      synchronized {
-        lastBatchDurations += key -> durs
-        lastStateFootprints += key -> foot
-      }
+      Telemetry.record(r => r.copy(
+        batchDurations = r.batchDurations + (key -> durs),
+        stateFootprints = r.stateFootprints + (key -> foot)))
     } finally q.stop()
 
   private def availableNow =

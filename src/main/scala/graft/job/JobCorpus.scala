@@ -2,6 +2,7 @@ package graft.job
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.duration._
 
 /** The literal Join Order Benchmark corpus — the reference's own workload
   * (113 `COUNT(*)` queries over the 21-table IMDb schema,
@@ -476,12 +477,6 @@ object JobCorpus {
     names.map(n => n -> resource(s"/job/$n.sql"))
   }
 
-  /** Run every query through the engine's SQL surface; one (q, n) row
-    * each. Execution is per-query (113 independent Spark jobs — a
-    * 113-branch union would be one pathological Catalyst tree); the
-    * collected counts are genuine executor results, assembled into a
-    * DataFrame only for the driver's differential compare.
-    */
   // One tuned child session per (parent session, scale) — avoids paying
   // view registration per warm lap.
   private val interactiveSessions =
@@ -582,7 +577,7 @@ object JobCorpus {
     */
   private[graft] val SubmitThreads = 4
 
-  /** Whole-lap timeout (minutes) for [[runAllOn]] and [[runCompassSubset]].
+  /** Whole-lap timeout (minutes) for [[runAll]] and [[runCompassSubset]].
     * 15 covers every bench/verify shape; `GRAFT_CORPUS_TIMEOUT_MIN`
     * overrides it because the scale campaign's ×100 default-profile lap
     * legitimately runs longer (data-dominated shuffle joins).
@@ -590,61 +585,47 @@ object JobCorpus {
   private[graft] val CorpusTimeoutMin: Int =
     sys.env.get("GRAFT_CORPUS_TIMEOUT_MIN").flatMap(_.toIntOption).getOrElse(15)
 
-  /** Per-query wall-clock latencies (ms) of the most recent [[runAll]] —
-    * read by Bench so the official record carries a contention-robust
-    * per-query median beside the contention-sensitive total wall.
-    * Telemetry only: nothing reads it to order a lap.
+  /** Run `body` over `items` on [[SubmitThreads]] workers and return the
+    * results in input order. Each JOB query is a small independent job
+    * whose cost is mostly driver-side planning, so concurrent submission
+    * overlaps one query's planning with another's execution (Spark SQL is
+    * thread-safe across jobs on one session). If the lap fails or misses
+    * `timeout`, bodies that have not started are dropped and running ones
+    * interrupted (`shutdownNow`): a plain `shutdown` would still run every
+    * queued query, into whatever the caller times next.
     */
-  @volatile var lastCorpusLatencies: Map[String, Long] = Map.empty
-  import scala.jdk.CollectionConverters._
+  private[graft] def submitAll[A, B](items: Seq[A],
+      timeout: Duration)(body: A => B): Seq[B] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(SubmitThreads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.traverse(items)(a => Future(body(a))), timeout)
+    catch { case t: Throwable => pool.shutdownNow(); throw t }
+    finally pool.shutdown()
+  }
 
-  def runAll(spark: SparkSession, sfDir: String = ""): DataFrame = {
+  /** Run every query through the engine's SQL surface: one (q, n) row
+    * each, plus each query's wall-clock ms. Execution is per-query (113
+    * independent Spark jobs — a 113-branch union would be one
+    * pathological Catalyst tree); the collected counts are genuine
+    * executor results, assembled into a DataFrame only for the driver's
+    * differential compare. Queries go in their natural (name-sorted)
+    * order through [[submitAll]].
+    */
+  def runAll(spark: SparkSession, sfDir: String = ""): (DataFrame, Map[String, Long]) = {
+    import spark.implicits._
     val m = scaleFor(sfDir)
     ensureData(spark, m)
-    runAllOn(spark, executionSession(spark, m))
+    val exec = executionSession(spark, m)
+    val runs = submitAll(queries, CorpusTimeoutMin.minutes) { case (name, text) =>
+      val t0 = System.nanoTime()
+      val n = exec.sql(text).head().getLong(0)
+      (name, n, (System.nanoTime() - t0) / 1000000)
+    }
+    (runs.map(r => (r._1, r._2)).toDF("q", "n").orderBy("q"),
+      runs.map(r => r._1 -> r._3).toMap)
   }
 
-  /** [[runAll]] with an explicit execution session — the scale campaign
-    * (r17 verdict #1) drives the SAME corpus body on a default-conf
-    * session vs the interactive-trimmed child to measure where the
-    * profile dial flips; callers must have data + views ready on `exec`.
-    */
-  def runAllOn(spark: SparkSession, exec: SparkSession): DataFrame = {
-    import spark.implicits._
-    // Concurrent submission: each query is a tiny independent job whose
-    // cost is dominated by driver-side planning, so the planner threads
-    // overlap planning with execution (Spark SQL is thread-safe across
-    // jobs on one session; local[32] has the cores idle). ~4x wall-clock
-    // over sequential submission at this scale. Thread count: see
-    // [[SubmitThreads]]. Queries go in their natural (name-sorted) order.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(SubmitThreads)
-    // Latencies are a LOCAL map per run: the previous field-level map
-    // leaked stale timings into the next lap's snapshot if Await timed out.
-    val latencies = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = queries.map { case (name, text) =>
-        scala.concurrent.Future {
-          val t0 = System.nanoTime()
-          val n = exec.sql(text).head().getLong(0)
-          latencies.put(name, (System.nanoTime() - t0) / 1000000)
-          name -> n
-        }
-      }
-      val out = scala.concurrent.Await
-        .result(scala.concurrent.Future.sequence(futures),
-          scala.concurrent.duration.Duration(CorpusTimeoutMin, "min"))
-        .toDF("q", "n").orderBy("q")
-      lastCorpusLatencies = latencies.asScala.toMap
-      out
-    } finally pool.shutdown()
-  }
-
-  /** The DuckDB twin: the SAME 113 query texts, each table reference
-    * rewritten to read the entry's own parquet files, one scalar
-    * subquery per query, UNION ALL'd into the (q, n) relation.
-    */
   /** Placeholder in the corpus oracle for the SCALE-matched data dir:
     * `runAll` reads the sf-scaled IMDb (x1 at sf0.01, x10 at sf0.1) but
     * oracle texts are static strings, so the corpus twin carries this
@@ -656,6 +637,10 @@ object JobCorpus {
     */
   val JobDataToken = "{{JOB_DATA_DIR}}"
 
+  /** The DuckDB twin: the SAME 113 query texts, each table reference
+    * rewritten to read the entry's own parquet files, one scalar
+    * subquery per query, UNION ALL'd into the (q, n) relation.
+    */
   lazy val duckOracleSql: String =
     duckOracleSqlFor(queries.map(_._1), JobDataToken)
 
@@ -694,12 +679,10 @@ object JobCorpus {
   /** Representative subset routed through the COMPASS pre-pass (the full
     * engine path: join-graph extraction → per-instance sketches →
     * enumeration → splice): ONE query per JOB family, all 33 families.
-    * The whole corpus through COMPASS would add ~900 sketch jobs per run;
-    * one-per-family proves every join-graph shape in the literal workload
-    * takes the optimized path and returns identical counts, while the
-    * full 113 run through the vanilla surface above. Sketch-job volume is
-    * bounded by warming the unfiltered templates first
-    * ([[warmCompass]] — the PRE_PROCESSING analogue).
+    * One-per-family proves every join-graph shape in the literal workload
+    * takes the optimized path and returns identical counts at a fraction
+    * of the full corpus's sketch jobs; the specs and the estimator A/Bs
+    * run it, while `q_job_compass` runs all 113 ([[runCompassFull]]).
     */
   val compassSubset: Seq[String] = Seq(
     "1a", "2d", "3b", "4a", "5c", "6a", "7a", "8a", "9a", "10a",
@@ -725,12 +708,6 @@ object JobCorpus {
     */
   final case class CompassRun(name: String, count: Long,
       sketchMs: Long, enumerateMs: Long, execMs: Long)
-
-  /** The most recent [[runCompassSubset]] telemetry — read by Bench to
-    * emit the planning split into the bench JSON without re-running the
-    * subset.
-    */
-  @volatile var lastCompassRuns: Seq[CompassRun] = Nil
 
   /** PRE_PROCESSING analogue for the JOB path: pre-build the unfiltered
     * sketch templates every subset query needs, so timed runs measure
@@ -776,50 +753,38 @@ object JobCorpus {
     * than query count.
     */
   def runCompassFull(spark: SparkSession,
-      cs: graft.planner.CompassSession, m: Int = 1): DataFrame =
+      cs: graft.planner.CompassSession, m: Int = 1): Seq[CompassRun] =
     runCompassSubset(spark, cs, queries.map(_._1), m)
 
+  /** Run `names` through `cs`, one short-lived CompassSession scope per
+    * query, and return one [[CompassRun]] each, in `names` order. Each
+    * query's sketch jobs, splice and execution are independent, so they
+    * go through [[submitAll]] like [[runAll]]. The per-SCOPE lastPlan
+    * (not the session's default-scope one) proves each query
+    * individually took the COMPASS path.
+    */
   def runCompassSubset(spark: SparkSession,
       cs: graft.planner.CompassSession,
-      names: Seq[String] = compassSubset, m: Int = 1): DataFrame = {
+      names: Seq[String] = compassSubset, m: Int = 1): Seq[CompassRun] = {
     ensureData(spark, m)
     // scope.sql analyzes on cs.spark — the views must live there (r17:
     // that session may be a trimmed child; see JobEntries.compassFor).
     // m > 1: the scale campaign routes the corpus through a PRODUCTION
     // CompassSession over the scaled IMDb (r17 verdict #2).
     registerViews(cs.spark, m)
-    import spark.implicits._
     val byName = queries.toMap
-    // Concurrent submission, one short-lived CompassSession scope per
-    // query (same [[SubmitThreads]] shape as runAll): each query's sketch
-    // jobs, splice, and execution are independent, so the planner threads
-    // overlap planning with execution. The per-SCOPE lastPlan (not the
-    // session's default-scope one) proves each query individually took
-    // the COMPASS path.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(SubmitThreads)
-    val runs = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = names.map { name =>
-        scala.concurrent.Future {
-          val scope = cs.newScope()
-          try {
-            val df = scope.sql(byName(name))
-            val plan = scope.lastPlan
-              .getOrElse(sys.error(s"JOB $name did not take the COMPASS path"))
-            val t0 = System.nanoTime()
-            val n = df.head().getLong(0)
-            val execMs = (System.nanoTime() - t0) / 1000000
-            CompassRun(name, n, plan.sketchBuildMillis, plan.enumerateMillis, execMs)
-          } finally cs.dropScope(scope)
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration(CorpusTimeoutMin, "min"))
-    } finally pool.shutdown()
-    lastCompassRuns = runs
-    runs.map(r => r.name -> r.count).toDF("q", "n").orderBy("q")
+    submitAll(names, CorpusTimeoutMin.minutes) { name =>
+      val scope = cs.newScope()
+      try {
+        val df = scope.sql(byName(name))
+        val plan = scope.lastPlan
+          .getOrElse(sys.error(s"JOB $name did not take the COMPASS path"))
+        val t0 = System.nanoTime()
+        val n = df.head().getLong(0)
+        val execMs = (System.nanoTime() - t0) / 1000000
+        CompassRun(name, n, plan.sketchBuildMillis, plan.enumerateMillis, execMs)
+      } finally cs.dropScope(scope)
+    }
   }
 
   /** Bench facet for the `skipWhenAllBroadcastable` policy (r13 verdict

@@ -2,6 +2,7 @@ package graft.job
 
 import org.apache.spark.sql.SparkSession
 import graft.planner.{CompassSession, SketchTemplateCache}
+import scala.concurrent.duration._
 
 /** r17 verdict #1/#2 — the scale campaign: RUN the volume-gated claims
   * instead of arguing them. Facets (one per invocation so each runs in
@@ -50,9 +51,6 @@ object ScaleCampaignMain {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def counts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
-    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
   /** One corpus lap with a PER-QUERY job-group cap: the x100 campaign's
     * first uncapped run sat 25+ minutes inside ONE broadcast-probe task
     * (a vanilla-join-order intermediate explosion — at data scale a bad
@@ -78,45 +76,29 @@ object ScaleCampaignMain {
     // the id cancelled permanently, so reusing the bare query name would
     // insta-kill the next lap's run of the same query.
     val lapId = lapCounter.incrementAndGet()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(JobCorpus.SubmitThreads)
-    val results = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    val timeouts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val t0 = System.nanoTime()
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = JobCorpus.queries.map { case (name, text) =>
-        scala.concurrent.Future {
-          val sc = exec.sparkContext
-          val group = s"$name#$lapId"
-          sc.setJobGroup(group, name, interruptOnCancel = true)
-          val timer = new java.util.Timer(true)
-          val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-          timer.schedule(new java.util.TimerTask {
-            // AndFutureJobs: a cancel landing BETWEEN a query's jobs (AQE
-            // runs several per query) must also kill the next one, or the
-            // cap silently leaks.
-            def run(): Unit = { fired.set(true); sc.cancelJobGroupAndFutureJobs(group) }
-          }, QueryCapSec * 1000L)
-          val q0 = System.nanoTime()
-          try {
-            val n = exec.sql(text).head().getLong(0)
-            results.put(name, (n, (System.nanoTime() - q0) / 1000000))
-          } catch {
-            case NonFatal(e) =>
-              if (fired.get) timeouts.add(name)
-              else throw e
-          } finally { timer.cancel(); sc.clearJobGroup() }
-        }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration(180, "min"))
-    } finally pool.shutdown()
-    import scala.jdk.CollectionConverters._
-    Lap(results.asScala.view.mapValues(_._1).toMap,
-      results.asScala.view.mapValues(_._2).toMap,
-      timeouts.asScala.toSeq.sorted, (System.nanoTime() - t0) / 1e9)
+    // Right((q, n, ms)) per completed query, Left(q) per cap-out.
+    val outcomes = JobCorpus.submitAll(JobCorpus.queries, 180.minutes) {
+      case (name, text) =>
+        val sc = exec.sparkContext
+        val group = s"$name#$lapId"
+        sc.setJobGroup(group, name, interruptOnCancel = true)
+        val timer = new java.util.Timer(true)
+        val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+        timer.schedule(new java.util.TimerTask {
+          // AndFutureJobs: a cancel landing BETWEEN a query's jobs (AQE
+          // runs several per query) must also kill the next one, or the
+          // cap silently leaks.
+          def run(): Unit = { fired.set(true); sc.cancelJobGroupAndFutureJobs(group) }
+        }, QueryCapSec * 1000L)
+        val q0 = System.nanoTime()
+        try Right((name, exec.sql(text).head().getLong(0), (System.nanoTime() - q0) / 1000000))
+        catch { case NonFatal(_) if fired.get => Left(name) }
+        finally { timer.cancel(); sc.clearJobGroup() }
+    }
+    val done = outcomes.collect { case Right(r) => r }
+    Lap(done.map(r => r._1 -> r._2).toMap, done.map(r => r._1 -> r._3).toMap,
+      outcomes.collect { case Left(q) => q }.sorted, (System.nanoTime() - t0) / 1e9)
   }
 
   private def lapJson(l: Lap): String = {
@@ -218,10 +200,9 @@ object ScaleCampaignMain {
     try {
       // PRE_PROCESSING (untimed, the reference's own shape).
       val nTemplates = JobCorpus.warmCompassAt(spark, cs, m)
-      val (cCmp, tCold) = timed(counts(JobCorpus.runCompassFull(spark, cs, m)))
-      val runsCold = JobCorpus.lastCompassRuns
-      val (_, tWarm) = timed(counts(JobCorpus.runCompassFull(spark, cs, m)))
-      val runsWarm = JobCorpus.lastCompassRuns
+      val (runsCold, tCold) = timed(JobCorpus.runCompassFull(spark, cs, m))
+      val (runsWarm, tWarm) = timed(JobCorpus.runCompassFull(spark, cs, m))
+      val cCmp = runsCold.map(r => r.name -> r.count).toMap
       def split(rs: Seq[JobCorpus.CompassRun]): (Long, Long, Long) =
         (rs.map(_.sketchMs).sum, rs.map(_.enumerateMs).sum, rs.map(_.execMs).sum)
       val (skC, enC, exC) = split(runsCold)

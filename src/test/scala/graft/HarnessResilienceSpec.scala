@@ -52,6 +52,26 @@ class HarnessResilienceSpec extends AnyFunSuite {
       s"streaming per-batch telemetry missing from the full record")
   }
 
+  test("Bench telemetry: a JOB entry carries per-query planning triples " +
+      "and GC/JIT for both of its laps") {
+    val fullOut = Paths.get(Queries.tempDir("bench-job")).resolve("full.json")
+    Bench.run(spark, "/root/testdata/sf0.001",
+      only = Set("q_job_compass"), fullOut = fullOut)
+    val full = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(fullOut.toFile)
+    assert(full.get("errors").asInt == 0, s"q_job_compass failed: ${full.get("queries")}")
+    Seq("q_job_compass", "q_job_compass#warm_last").foreach { k =>
+      val perQuery = Option(full.get("job_planning").get(k))
+        .getOrElse(fail(s"job_planning has no $k: ${full.get("job_planning")}"))
+        .get("per_query_sketch_enum_exec_ms")
+      assert(perQuery.size == 113, s"$k holds ${perQuery.size} per-query entries")
+      perQuery.elements.forEachRemaining(t =>
+        assert(t.isArray && t.size == 3, s"$k: not a [sketch, enum, exec] triple: $t"))
+    }
+    val laps = full.get("lap_wall_gc_jit_ms").get("q_job_compass")
+    assert(laps != null && laps.size == 2, s"lap telemetry: $laps")
+  }
+
   test("Verify surfaces a dead entry as an error marker, not silence") {
     val out = Paths.get(Queries.tempDir("verify-corrupt"))
     Verify.run(spark, corruptDir, out.toString, subset = Set("q1_agg"))

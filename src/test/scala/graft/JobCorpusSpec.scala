@@ -47,7 +47,7 @@ class JobCorpusSpec extends AnyFunSuite {
       templateCache = Some(SketchTemplateCache.default()))
     try {
       val viaCompass = JobCorpus.runCompassSubset(spark, cs)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        .map(r => r.name -> r.count).toMap
       val byName = JobCorpus.queries.toMap
       JobCorpus.compassSubset.foreach { name =>
         val vanilla = spark.sql(byName(name)).head().getLong(0)
@@ -300,7 +300,7 @@ class JobCorpusSpec extends AnyFunSuite {
     // its port target keeps planning a bounded fraction of runtime.
     // Telemetry here comes from the same CompassRun records Bench emits
     // into BENCH_FULL.json's job_planning block. Bounds are loose (the
-    // 8-way concurrent submission inflates per-query wall-clock when
+    // concurrent submission inflates per-query wall-clock when
     // threads contend for the shared sketch pool) but pin the two real
     // regressions: enumeration must stay driver-local milliseconds, and
     // total planning must not dwarf execution (a broken template cache
@@ -311,8 +311,7 @@ class JobCorpusSpec extends AnyFunSuite {
       templateCache = Some(SketchTemplateCache.default()))
     try {
       JobCorpus.warmCompass(spark, cs)
-      JobCorpus.runCompassSubset(spark, cs).collect()
-      val runs = JobCorpus.lastCompassRuns
+      val runs = JobCorpus.runCompassSubset(spark, cs)
       assert(runs.size == JobCorpus.compassSubset.size)
       val sketchTot = runs.map(_.sketchMs).sum
       val enumTot = runs.map(_.enumerateMs).sum
@@ -328,6 +327,30 @@ class JobCorpusSpec extends AnyFunSuite {
       assert(sketchTot + enumTot <= 5L * execTot + 5000,
         s"planning ${sketchTot + enumTot}ms dwarfs execution ${execTot}ms — template cache dead?")
     } finally cs.close()
+  }
+
+  test("submitAll returns results in input order") {
+    val out = JobCorpus.submitAll(1 to 20, scala.concurrent.duration.Duration(30, "s")) { i =>
+      Thread.sleep(((20 - i) % 4) * 10L) // finish out of order
+      i * 10
+    }
+    assert(out == (1 to 20).map(_ * 10))
+  }
+
+  test("a timed-out submission drops the bodies that have not started") {
+    // shutdown() instead of shutdownNow() would still start all 12 (three
+    // rounds of 300 ms fit the 2 s wait), leaking a failed lap's queued
+    // queries into whatever the caller times next.
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    intercept[java.util.concurrent.TimeoutException] {
+      JobCorpus.submitAll(1 to 12, scala.concurrent.duration.Duration(100, "ms")) { _ =>
+        started.incrementAndGet()
+        Thread.sleep(300)
+      }
+    }
+    Thread.sleep(2000)
+    assert(started.get <= JobCorpus.SubmitThreads,
+      s"${started.get} bodies started after the lap timed out")
   }
 
   test("sf-dir scale mapping: gate scale is 1, bench scale is 10, capped") {

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Measured-membership gate for the streaming partition dial (r19
   * verdict #2): `HeavyStateEntries` must not be a hand-maintained name
   * set. Every `q_stream_*` entry is RUN here and its final state-store
-  * footprint recorded (`StreamQueries.lastStateFootprints`, captured by
-  * the same drain harness the bench uses); an entry whose state rows
+  * footprint captured in a `Telemetry` scope, as recorded by the same
+  * drain harness the bench uses; an entry whose state rows
   * scale linearly with input rows (ratio ≥ LinearStateRatio — the
   * dedup-shaped class the ×1000 dial measurement was about) must appear
   * in an EXPLICIT decision set: either `HeavyStateEntries` (measured
@@ -21,9 +21,9 @@ class StreamStateClassSpec extends AnyFunSuite {
 
   private def footprints(dir: String): Map[String, (Long, Long)] =
     StreamQueries.entries.map { e =>
-      StreamQueries.lastStateFootprints = Map.empty
-      e.run(spark, dir).collect()
-      val fs = StreamQueries.lastStateFootprints.values
+      val (out, rec) = Telemetry.capture(e.run(spark, dir).collect())
+      out.get
+      val fs = rec.stateFootprints.values
       e.name -> (fs.map(_.stateRows).sum, fs.map(_.inputRows).sum)
     }.toMap
 
