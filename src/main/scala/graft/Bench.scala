@@ -352,7 +352,8 @@ object Bench {
     val skipPolicyJson =
       if (!selected.exists(e => e.name == "q_job_quality")) "null"
       else try {
-        val f = graft.job.JobCorpus.measureSkipPolicy(spark, sfDir)
+        val f = graft.job.JobCorpus.measureSkipPolicyAt(spark,
+          graft.job.JobCorpus.scaleFor(sfDir))
         s"""{"off_plan_ms":${f.offPlanMs},"on_plan_ms":${f.onPlanMs},"skipped":${f.nSkipped},"families":${f.families},"equal":${f.allEqual}}"""
       } catch { case NonFatal(e) =>
         // Bounded: this string also rides the ~2000-char compact stdout

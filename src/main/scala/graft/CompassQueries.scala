@@ -12,27 +12,23 @@ import org.apache.spark.sql.SparkSession
 object CompassQueries {
   import Queries._
 
-  /** One CompassSession per Spark session, over `wrap(session)`, so
-    * entries share its sketch store's memory memo (a fresh wrapper per
-    * call would re-read every sketch from disk). NOT weakly keyed: a
-    * CompassSession strongly references its SparkSession, so weak keys
-    * could never be collected (the WeakHashMap self-reference trap the
-    * OpCaches doc spells out); instead, entries whose session has
-    * STOPPED are swept on access.
-    */
-  private[graft] def memo(
-      wrap: SparkSession => SparkSession): SparkSession => CompassSession = {
-    val sessions = scala.collection.mutable.Map.empty[SparkSession, CompassSession]
-    s => sessions.synchronized {
-      sessions.filterInPlace((sess, _) => !sess.sparkContext.isStopped)
-      sessions.getOrElseUpdate(s,
-        new CompassSession(wrap(s), templateCache = Some(SketchTemplateCache.default())))
-    }
-  }
+  private val sessions = scala.collection.mutable.Map.empty[SparkSession, CompassSession]
 
-  // Entries run sequentially (Verify/Bench/driver) in the session's
-  // default scope.
-  private val compass = memo(identity)
+  /** One CompassSession per session it wraps, so entries share its
+    * sketch store's memory memo (a fresh wrapper per call would re-read
+    * every sketch from disk). The plain entries wrap the harness session
+    * itself; `JobEntries.compassFor` wraps the JOB corpus's x1 trim child.
+    * NOT weakly keyed: a CompassSession strongly references its
+    * SparkSession, so weak keys could never be collected (the WeakHashMap
+    * self-reference trap the OpCaches doc spells out); instead, entries
+    * whose session has STOPPED are swept on access. Entries run
+    * sequentially (Verify/Bench/driver) in the session's default scope.
+    */
+  private[graft] def memo(s: SparkSession): CompassSession = sessions.synchronized {
+    sessions.filterInPlace((sess, _) => !sess.sparkContext.isStopped)
+    sessions.getOrElseUpdate(s,
+      new CompassSession(s, templateCache = Some(SketchTemplateCache.default())))
+  }
 
   /** PRE_PROCESSING for harnesses (reference: `PRE_PROCESSING`,
     * Catalog/COMPASS_init_variables.txt:6 — build every unfiltered
@@ -46,7 +42,7 @@ object CompassQueries {
   def warm(s: SparkSession, dir: String): Int = {
     entries: Unit // force the lazy val — workloadTexts fills as its side effect
     Tables.registerAll(s, dir)
-    compass(s).warmTemplates(
+    memo(s).warmTemplates(
       (workloadTexts.toSeq ++ graft.planner.OptimizerQuality.families.map(_._2))
         .map(s.sql))
   }
@@ -57,7 +53,7 @@ object CompassQueries {
     workloadTexts += text
     dfq(name, text) { (s, dir) =>
       Tables.registerAll(s, dir)
-      compass(s).sql(text)
+      memo(s).sql(text)
     }
   }
 
@@ -278,7 +274,7 @@ object CompassQueries {
         "UNION ALL SELECT 'job7cycle', 1, 1 UNION ALL SELECT 'snowflake4', 1, 1" +
         ") t ORDER BY family") { (s, dir) =>
       Tables.registerAll(s, dir)
-      val cs = compass(s)
+      val cs = memo(s)
       val reports = graft.planner.OptimizerQuality.families.map { case (fam, text) =>
         graft.planner.OptimizerQuality.compare(s, cs, fam, text)
       }

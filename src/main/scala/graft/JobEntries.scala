@@ -11,18 +11,23 @@ import org.apache.spark.sql.SparkSession
 object JobEntries {
   import Queries._
 
-  // One COMPASS session per Spark session (CompassQueries.memo), riding a
-  // JobCorpus.trimmedSession child: the COMPASS corpus entries execute at
-  // x1 by contract, the regime the trim profile is measured for. That
-  // child is the ENTRY's bench profile, not a library default.
-  private[graft] val compassFor: SparkSession => CompassSession =
-    CompassQueries.memo(JobCorpus.trimmedSession)
+  /** The COMPASS session of the JOB entries (CompassQueries.memo) wraps
+    * the x1 trim child `q_job_corpus` runs on at the gate scale: the
+    * COMPASS corpus entries execute at x1 by contract, the regime the trim
+    * profile is measured for. That child is the ENTRY's bench profile,
+    * not a library default. Sharing it leaves the vanilla corpus's plans
+    * as they were: of the two confs CompassSession pins on it,
+    * `spark.sql.cbo.joinReorder.enabled=false` is Spark's default and
+    * `spark.sql.optimizer.starSchemaDetection` is no Spark conf at all.
+    */
+  private[graft] def compassFor(s: SparkSession): CompassSession =
+    CompassQueries.memo(JobCorpus.session(s, trim = true, 1))
 
   /** Untimed PRE_PROCESSING for Bench: dataset + views + unfiltered
     * sketch templates for the COMPASS subset, on the same per-session
     * CompassSession the timed entries use.
     */
-  def warmJob(s: SparkSession): Int = JobCorpus.warmCompass(s, compassFor(s))
+  def warmJob(s: SparkSession): Int = JobCorpus.warmCompassAt(s, compassFor(s), 1)
 
   val entries: Seq[Entry] = Seq(
     // The reference's own 113-query workload, end to end. The synthetic

@@ -27,8 +27,9 @@ import Queries.{Entry, dfq}
   */
 object StreamQueries {
 
-  /** Child session tuned for THIS entry scale's stream volume, memoized
-    * per parent. A streaming query's state-store instance count is fixed
+  /** Child session tuned for THIS entry scale's stream volume, one
+    * registry child (`graft.engine.LocalSession.child`) per partition
+    * count. A streaming query's state-store instance count is fixed
     * by `spark.sql.shuffle.partitions` at first start — every stateful
     * operator runs one store per partition (a stream-stream join runs
     * FOUR), each paying per-batch provider setup + a checkpoint-delta
@@ -44,13 +45,15 @@ object StreamQueries {
     * ride the child (entries are wrapped below), so no frame ever mixes
     * sessions.
     */
-  private val tunedSessions =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[Int, SparkSession]]()
+  private def streamSession(s: SparkSession, partitions: Int): SparkSession =
+    graft.engine.LocalSession.child(s, ("stream", partitions)) {
+      _.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    }
 
   /** The measured state-store dial, now CODE (SCALE.md r18 measured it;
     * r19 re-measured in clean isolated JVMs and encodes it the way
-    * `JobCorpus.executionSession` encodes the profile dial). Only the
-    * entry that WINS at 32 on both cold and warm laps flips:
+    * `JobCorpus.useInteractiveProfile` encodes the JOB profile dial).
+    * Only the entry that WINS at 32 on both cold and warm laps flips:
     * q_stream_dedup (per-event dedup state, the largest store) measured
     * 41.6/59.9 s at 8 partitions vs 34.1/53.5 at 32 on the ×1000 corpus.
     * q_stream_topk is a measured WASH at ×1000 (26.7/37.2 at 8 vs
@@ -109,19 +112,6 @@ object StreamQueries {
 
   private[graft] def streamPartitions(name: String, dir: String): Int =
     streamPartitionsFor(name, eventsBytes(dir))
-
-  private def streamSession(s: SparkSession, partitions: Int = 8): SparkSession = synchronized {
-    val children = Option(tunedSessions.get(s)).getOrElse {
-      val m = scala.collection.mutable.Map.empty[Int, SparkSession]
-      tunedSessions.put(s, m)
-      m
-    }
-    children.getOrElseUpdate(partitions, {
-      val c = s.newSession()
-      c.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      c
-    })
-  }
 
   /** Untimed per-JVM/per-SESSION streaming machinery warmup for Bench:
     * one micro-stream (2 rows, watermark + windowed agg + memory sink)

@@ -37,4 +37,27 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  // Strongly held, the OpCaches discipline: entries whose context has
+  // STOPPED are swept on every call, so a stopped session cannot pin its
+  // children for the JVM's life.
+  private val children = scala.collection.mutable.Map.empty[(SparkSession, Any), SparkSession]
+
+  /** The one home for derived sessions: the child of `parent` for `key`,
+    * built once. `init` runs on a fresh `newSession` of `parent` (own
+    * conf, temp views and functions; shared executors and cache) before any
+    * caller sees it, and every later call with the same (parent, key)
+    * returns that child, so its settings are applied at exactly one site
+    * and never reach the parent. The key must name everything `init`
+    * depends on.
+    */
+  def child(parent: SparkSession, key: Any)(init: SparkSession => Unit): SparkSession =
+    children.synchronized {
+      children.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
+      children.getOrElseUpdate((parent, key), {
+        val c = parent.newSession()
+        init(c)
+        c
+      })
+    }
 }

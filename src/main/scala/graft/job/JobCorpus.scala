@@ -477,16 +477,17 @@ object JobCorpus {
     names.map(n => n -> resource(s"/job/$n.sql"))
   }
 
-  // One tuned child session per (parent session, scale) — avoids paying
-  // view registration per warm lap.
-  private val interactiveSessions =
-    new java.util.WeakHashMap[SparkSession, (Int, SparkSession)]()
-
-  /** The JOB trim profile, defined once: a child of `spark` (own conf,
-    * shared executors) for plans that are broadcast-join trees over
-    * megabyte tables, where per-query DRIVER work dominates. The vanilla
-    * corpus ([[interactiveSession]]) and the `q_job_compass` entry's
-    * CompassSession both run on one. Each setting is measured:
+  /** The JOB child session of `spark` for one profile at scale `m`, built
+    * once through the engine's session registry
+    * (`graft.engine.LocalSession.child`): the scale-`m` IMDb is written if
+    * missing and its 21 views registered at creation, so no timed lap pays
+    * view registration, and a Bench that runs the corpus at x10 and
+    * COMPASS at x1 keeps one child for each. `trim = false` is Spark's
+    * untouched default conf (AQE re-planning on). `trim = true` is the JOB
+    * trim profile, defined here once, for plans that are broadcast-join
+    * trees over megabyte tables, where per-query DRIVER work dominates.
+    * The vanilla corpus and the `q_job_compass` entry's CompassSession both
+    * run on its x1 child. Each setting is measured:
     *  - AQE off: no re-planning of plans with no exchanges to adapt.
     *  - Whole-stage codegen off: no Janino for 113 distinct sub-second
     *    shapes; codegen on lost in r18 and again in r21 (59.1/51.3 s vs
@@ -498,17 +499,23 @@ object JobCorpus {
     *    interpreted hash builds sent q_job_compass exec 29.6→91.6 s.
     * Together: 48 → ~25 s over the corpus at x10, 14.5 → 7.7 s cold on the
     * COMPASS path (r17), identical counts. At data scale the defaults win,
-    * so the corpus gates the profile on volume ([[executionSession]]) and a
-    * production CompassSession wraps the user's session untouched.
+    * so the corpus gates the profile on volume ([[executionSession]]).
+    * Neither profile is cacheTable'd: measured at x10, pinning all 21
+    * tables in the columnar cache was ~7% SLOWER over the 113 queries
+    * (29.9 s vs 27.8 s cold) — per-query driver planning dominates and the
+    * InMemoryScan adds materialization without removing a bottleneck.
     */
-  private[graft] def trimmedSession(spark: SparkSession): SparkSession = {
-    val c = spark.newSession()
-    c.conf.set("spark.sql.adaptive.enabled", "false")
-    c.conf.set("spark.sql.codegen.wholeStage", "false")
-    c.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    c.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-    c
-  }
+  private[graft] def session(spark: SparkSession, trim: Boolean, m: Int): SparkSession =
+    graft.engine.LocalSession.child(spark, ("job", trim, m)) { c =>
+      if (trim) {
+        c.conf.set("spark.sql.adaptive.enabled", "false")
+        c.conf.set("spark.sql.codegen.wholeStage", "false")
+        c.conf.set("spark.sql.constraintPropagation.enabled", "false")
+        c.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+      }
+      ensureData(spark, m)
+      registerViews(c, m)
+    }
 
   /** Measured boundary of the interactive-trim profile (SCALE.md r18
     * facet 1): the trim (AQE/codegen/constraint propagation off) wins
@@ -524,46 +531,14 @@ object JobCorpus {
   private[graft] def useInteractiveProfile(m: Int): Boolean =
     m <= InteractiveMaxScale
 
-  // Default-profile children (AQE on), cached like interactiveSessions.
-  private val defaultSessions =
-    new java.util.WeakHashMap[SparkSession, (Int, SparkSession)]()
-
-  /** The volume-gated execution session: interactive trim inside the
-    * measured regime, untouched default conf (AQE re-planning on) past
-    * it. [[runAll]] routes through this; `scaleFor`'s ×20 cap means the
-    * bench entries always land on the trim, while campaign harnesses
-    * calling at ×100 get the only profile that completes there.
+  /** The volume-gated execution session: the trim child inside the
+    * measured regime, the default-conf child past it. [[runAll]] routes
+    * through this; `scaleFor`'s ×20 cap means the bench entries always
+    * land on the trim, while campaign harnesses calling at ×100 get the
+    * only profile that completes there.
     */
   private[graft] def executionSession(spark: SparkSession, m: Int): SparkSession =
-    if (useInteractiveProfile(m)) interactiveSession(spark, m)
-    else synchronized {
-      Option(defaultSessions.get(spark)).filter(_._1 == m).map(_._2)
-        .getOrElse {
-          val c = spark.newSession()
-          registerViews(c, m)
-          defaultSessions.put(spark, (m, c))
-          c
-        }
-    }
-
-  /** [[trimmedSession]] with the scale-`m` views registered, memoized per
-    * (parent session, scale).
-    */
-  private[graft] def interactiveSession(spark: SparkSession, m: Int): SparkSession =
-    synchronized {
-      Option(interactiveSessions.get(spark)).filter(_._1 == m).map(_._2)
-        .getOrElse {
-          val c = trimmedSession(spark)
-          registerViews(c, m)
-          // Deliberately NOT cacheTable'd: measured at x10, pinning all
-          // 21 tables in the columnar cache was ~7% SLOWER over the 113
-          // queries (29.9 s vs 27.8 s cold) — per-query driver planning
-          // dominates and the InMemoryScan adds materialization without
-          // removing a bottleneck.
-          interactiveSessions.put(spark, (m, c))
-          c
-        }
-    }
+    session(spark, useInteractiveProfile(m), m)
 
   /** Submission concurrency for the corpus and compass-subset runs and
     * the scale campaign's capped laps. The 16-thread shape (fastest on a
@@ -714,12 +689,6 @@ object JobCorpus {
     * steady-state planning (template hits), not first-touch builds.
     * Idempotent — a warm cache takes zero sketch jobs.
     */
-  def warmCompass(spark: SparkSession,
-      cs: graft.planner.CompassSession, sfDir: String = "",
-      names: Seq[String] = Nil): Int =
-    warmCompassAt(spark, cs, scaleFor(sfDir), names)
-
-  /** [[warmCompass]] with an explicit scale multiplier (scale campaign). */
   def warmCompassAt(spark: SparkSession,
       cs: graft.planner.CompassSession, m: Int,
       names: Seq[String] = Nil): Int = {
@@ -799,13 +768,6 @@ object JobCorpus {
   final case class SkipPolicyFacet(offPlanMs: Long, onPlanMs: Long,
       nSkipped: Int, families: Int, allEqual: Boolean)
 
-  def measureSkipPolicy(spark: SparkSession, sfDir: String = ""): SkipPolicyFacet =
-    measureSkipPolicyAt(spark, scaleFor(sfDir))
-
-  /** [[measureSkipPolicy]] with an explicit scale multiplier — the scale
-    * campaign's check that the policy DECLINES to skip once big tables
-    * exceed the broadcast threshold (the at-scale reversal, measured).
-    */
   def measureSkipPolicyAt(spark: SparkSession, m: Int): SkipPolicyFacet = {
     ensureData(spark, m)
     registerViews(spark, m)

@@ -8,14 +8,16 @@ import scala.concurrent.duration._
   * instead of arguing them. Facets (one per invocation so each runs in
   * a fresh JVM with no cross-facet warmth):
   *
-  *   profiles <m>   — the 113-query corpus on a DEFAULT-conf session vs
-  *                    the interactive-trimmed child, cold + warm laps,
-  *                    counts compared. The trim (AQE/codegen/constraint
-  *                    off) is gated on "driver work dominates"; at data-
-  *                    dominated scale the dial must REVERSE (defaults
-  *                    win) or the gate threshold is wrong.
+  *   profiles <m>   — the 113-query corpus on `JobCorpus.executionSession`
+  *                    (the routing `runAll` and the bench entry take)
+  *                    against the other profile as counterfactual, cold +
+  *                    warm laps, counts compared. The trim (AQE/codegen/
+  *                    constraint off) is gated on "driver work
+  *                    dominates"; at data-dominated scale the dial must
+  *                    REVERSE (defaults win) or the gate threshold is
+  *                    wrong.
   *   compass <m>    — all 113 queries through the full COMPASS path on a
-  *                    PRODUCTION CompassSession (user-session conf: AQE,
+  *                    PRODUCTION CompassSession (default conf: AQE,
   *                    codegen, constraint propagation all ON) over the
   *                    scaled IMDb: counts equal to the vanilla corpus,
   *                    planning fraction recorded, splice exercised
@@ -23,20 +25,24 @@ import scala.concurrent.duration._
   *   skip <m>       — measureSkipPolicyAt: the all-broadcastable skip
   *                    heuristic must DECLINE to skip once the scaled
   *                    fact tables exceed the broadcast threshold.
+  *   capouts <m>    — one capped default-profile lap, then the static
+  *                    physical plan of every query that hit the cap.
   *
-  * Output: one JSON line per facet (stdout), consumed into SCALE.md.
+  * Every child session comes from `JobCorpus.session`, views registered
+  * at the facet's scale. Output: one JSON line per facet (stdout),
+  * consumed into SCALE.md.
   */
 object ScaleCampaignMain {
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ScaleCampaignMain <profiles|compass|skip> <m>")
+    require(args.length >= 2,
+      "usage: ScaleCampaignMain <profiles|compass|skip|capouts> <m>")
     val facet = args(0)
     val m = args(1).toInt
     val spark = graft.engine.LocalSession("graft-scale-campaign")
     try {
       facet match {
         case "profiles" => profiles(spark, m)
-        case "chooser" => chooser(spark, m)
         case "compass" => compass(spark, m)
         case "skip" => skip(spark, m)
         case "capouts" => capouts(spark, m)
@@ -124,62 +130,33 @@ object ScaleCampaignMain {
       s""""families_n_med_sum_ms":$fams}"""
   }
 
-  /** Corpus on default conf vs the interactive trim, cold + warm. */
-  private def profiles(spark: SparkSession, m: Int): Unit = {
-    JobCorpus.ensureData(spark, m)
-    // Default-profile child: PRODUCTION conf (nothing trimmed).
-    val dflt = spark.newSession()
-    JobCorpus.registerViews(dflt, m)
-    val trimmed = JobCorpus.interactiveSession(spark, m)
-
-    // Alternate cold laps (each profile's first lap pays its own JIT/
-    // codegen), then a warm lap each.
-    val coldD = cappedLap(dflt)
-    val coldT = cappedLap(trimmed)
-    val warmD = cappedLap(dflt)
-    val warmT = cappedLap(trimmed)
-    // Counts must agree on every query that completed under BOTH
-    // profiles; a timeout is a latency fact, not a correctness pass.
-    val common = coldD.counts.keySet intersect coldT.counts.keySet
-    val diverging = common.filter(q => coldD.counts(q) != coldT.counts(q))
-    require(diverging.isEmpty,
-      s"profile counts diverge at x$m on: ${diverging.take(5)}")
-    println(s"""{"facet":"profiles","m":$m,"queries":113,""" +
-      s""""cap_sec":$QueryCapSec,"counts_equal_on":${common.size},""" +
-      s""""default_cold":${lapJson(coldD)},"trim_cold":${lapJson(coldT)},""" +
-      s""""default_warm":${lapJson(warmD)},"trim_warm":${lapJson(warmT)}}""")
-  }
-
-  /** Chooser-routed corpus lap (r19 verdict #5): where the r18 profiles
-    * facet measured both profiles via EXPLICIT sessions, this routes one
-    * side through `JobCorpus.executionSession(spark, m)` — the exact
-    * code path `runAll` (and hence the bench entry) takes — and laps the
-    * OTHER profile as the counterfactual, so the record shows the gate
-    * picking the measured winner on its own routing, each side of the
-    * ×20 boundary. Counts must agree wherever both complete.
+  /** Chooser-routed corpus laps (r18 facet 1, r19 verdict #5): one side
+    * runs on `JobCorpus.executionSession(spark, m)`, the exact code path
+    * `runAll` (and hence the bench entry) takes, and the OTHER profile is
+    * lapped as the counterfactual, so the record shows the gate picking
+    * the measured winner on its own routing, each side of the ×20
+    * boundary. Cold laps alternate (each profile's first lap pays its own
+    * JIT/codegen), then a warm lap each. Counts must agree on every query
+    * that completed in any two laps; a timeout is a latency fact, not a
+    * correctness pass. `counts_equal_on` is the number completed in all
+    * four.
     */
-  private def chooser(spark: SparkSession, m: Int): Unit = {
-    JobCorpus.ensureData(spark, m)
+  private def profiles(spark: SparkSession, m: Int): Unit = {
+    val routedTrim = JobCorpus.useInteractiveProfile(m)
     val routed = JobCorpus.executionSession(spark, m)
-    val routedProfile =
-      if (JobCorpus.useInteractiveProfile(m)) "interactive-trim" else "default"
-    // executionSession's interactive child registers views itself via
-    // interactiveSession; the default child is a plain newSession that
-    // needs them. registerViews is idempotent per (session, m).
-    JobCorpus.registerViews(routed, m)
-    val other =
-      if (JobCorpus.useInteractiveProfile(m)) {
-        val d = spark.newSession(); JobCorpus.registerViews(d, m); d
-      } else JobCorpus.interactiveSession(spark, m)
+    val other = JobCorpus.session(spark, trim = !routedTrim, m)
     val coldR = cappedLap(routed)
     val coldO = cappedLap(other)
     val warmR = cappedLap(routed)
     val warmO = cappedLap(other)
-    val common = coldR.counts.keySet intersect coldO.counts.keySet
-    val diverging = common.filter(q => coldR.counts(q) != coldO.counts(q))
+    val laps = Seq(coldR, coldO, warmR, warmO)
+    val diverging = laps.flatMap(_.counts.keys).distinct
+      .filter(q => laps.flatMap(_.counts.get(q)).distinct.size > 1)
     require(diverging.isEmpty,
-      s"chooser-facet counts diverge at x$m on: ${diverging.take(5)}")
-    println(s"""{"facet":"chooser","m":$m,"routed_profile":"$routedProfile",""" +
+      s"profile counts diverge at x$m on: ${diverging.sorted.take(5)}")
+    val common = laps.map(_.counts.keySet).reduce(_ intersect _)
+    println(s"""{"facet":"profiles","m":$m,"queries":113,""" +
+      s""""routed_profile":"${if (routedTrim) "interactive-trim" else "default"}",""" +
       s""""cap_sec":$QueryCapSec,"counts_equal_on":${common.size},""" +
       s""""routed_cold":${lapJson(coldR)},"other_cold":${lapJson(coldO)},""" +
       s""""routed_warm":${lapJson(warmR)},"other_warm":${lapJson(warmO)}}""")
@@ -193,8 +170,7 @@ object ScaleCampaignMain {
     * without sketch-informed ordering).
     */
   private def compass(spark: SparkSession, m: Int): Unit = {
-    JobCorpus.ensureData(spark, m)
-    val prod = spark.newSession() // user conf untouched: AQE + codegen ON
+    val prod = JobCorpus.session(spark, trim = false, m) // AQE + codegen ON
     val cs = new CompassSession(prod,
       templateCache = Some(SketchTemplateCache.default()))
     try {
@@ -229,9 +205,7 @@ object ScaleCampaignMain {
     * the record says WHAT they wait on, not just that they time out.
     */
   private def capouts(spark: SparkSession, m: Int): Unit = {
-    JobCorpus.ensureData(spark, m)
-    val dflt = spark.newSession()
-    JobCorpus.registerViews(dflt, m)
+    val dflt = JobCorpus.session(spark, trim = false, m)
     val lap = cappedLap(dflt)
     val byName = JobCorpus.queries.toMap
     val planSummaries = lap.timeouts.map { q =>

@@ -91,7 +91,7 @@ class JobCorpusSpec extends AnyFunSuite {
     // session bit-for-bit, and the OFF side demonstrably took the
     // COMPASS path (the facet raises otherwise — a planner regression
     // must not masquerade as a successful skip).
-    val f = JobCorpus.measureSkipPolicy(spark)
+    val f = JobCorpus.measureSkipPolicyAt(spark, 1)
     assert(f.families == 12 && f.nSkipped == 12,
       s"expected all 12 families to skip at x1, got ${f.nSkipped}")
     assert(f.allEqual, "policy ON changed a result")
@@ -122,7 +122,7 @@ class JobCorpusSpec extends AnyFunSuite {
       // point — any machine converges after one warm — and the
       // reference's own headline fixture (PRE_PROCESSING builds ALL
       // templates before the experiment, COMPASS_init_variables.txt:6).
-      JobCorpus.warmCompass(spark, cs)
+      JobCorpus.warmCompassAt(spark, cs, 1)
       val rows = JobCorpus.abEstimatorModes(spark, cs)
       assert(rows.size == 33)
       // The documented exceptions: families where the reference's
@@ -310,7 +310,7 @@ class JobCorpusSpec extends AnyFunSuite {
     val cs = new CompassSession(spark,
       templateCache = Some(SketchTemplateCache.default()))
     try {
-      JobCorpus.warmCompass(spark, cs)
+      JobCorpus.warmCompassAt(spark, cs, 1)
       val runs = JobCorpus.runCompassSubset(spark, cs)
       assert(runs.size == JobCorpus.compassSubset.size)
       val sketchTot = runs.map(_.sketchMs).sum
@@ -377,8 +377,7 @@ class JobCorpusSpec extends AnyFunSuite {
   }
 
   test("interactive profile is scoped to the corpus child session, parent untouched") {
-    JobCorpus.ensureData(spark)
-    val child = JobCorpus.interactiveSession(spark, 1)
+    val child = JobCorpus.executionSession(spark, 1)
     assert(child ne spark)
     assert(child.conf.get("spark.sql.adaptive.enabled") == "false")
     assert(child.conf.get("spark.sql.codegen.wholeStage") == "false")
@@ -388,22 +387,33 @@ class JobCorpusSpec extends AnyFunSuite {
     // data-heavy plans).
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.codegen.wholeStage") == "true")
-    // Memoized per (parent, scale): repeat call returns the same child.
-    assert(JobCorpus.interactiveSession(spark, 1) eq child)
+    // Memoized per (parent, profile, scale): repeat calls return the same child.
+    assert(JobCorpus.executionSession(spark, 1) eq child)
+    assert(JobCorpus.session(spark, trim = true, 1) eq child)
     // Views resolve in the child (registered at construction).
     assert(child.table("title").columns.contains("production_year"))
   }
 
   test("q_job_compass's CompassSession and the corpus child resolve one trim profile") {
-    JobCorpus.ensureData(spark)
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage",
       "spark.sql.constraintPropagation.enabled", "spark.sql.join.preferSortMergeJoin")
     val compassChild = JobEntries.compassFor(spark).spark
-    val corpusChild = JobCorpus.interactiveSession(spark, 1)
+    val corpusChild = JobCorpus.executionSession(spark, 1)
+    assert(compassChild eq corpusChild,
+      "the COMPASS entry must wrap the x1 child the vanilla corpus runs on")
     assert(compassChild ne spark)
-    assert(keys.map(compassChild.conf.get) == keys.map(corpusChild.conf.get),
-      "the COMPASS entry and the vanilla corpus must run the same trim")
     assert(keys.map(corpusChild.conf.get) == Seq("false", "false", "false", "true"))
+    // CompassSession pins `spark.sql.cbo.joinReorder.enabled=false` on the
+    // session it wraps, Spark's default; its other pin,
+    // `spark.sql.optimizer.starSchemaDetection`, is not a Spark conf (star
+    // detection is `spark.sql.cbo.starSchemaDetection`, default false). So
+    // sharing the child leaves the vanilla corpus planning exactly as a
+    // child that no CompassSession wraps.
+    val planning = Seq("spark.sql.cbo.joinReorder.enabled",
+      "spark.sql.cbo.starSchemaDetection")
+    assert(planning.map(corpusChild.conf.get) == Seq("false", "false"))
+    assert(planning.map(JobCorpus.session(spark, trim = false, 1).conf.get) ==
+      Seq("false", "false"))
   }
 
   test("generator is deterministic: same counts and checksums on regeneration") {

@@ -29,14 +29,16 @@ class ProfileChooserSpec extends AnyFunSuite {
   }
 
   test("the two profiles genuinely differ: trim has AQE off, default child keeps it on") {
-    JobCorpus.ensureData(spark, 1)
     val exec = JobCorpus.executionSession(spark, 1)
     // Inside the regime the execution session IS the trimmed child.
+    assert(exec eq JobCorpus.session(spark, trim = true, 1))
     assert(exec.conf.get("spark.sql.adaptive.enabled") == "false")
     assert(exec.conf.get("spark.sql.codegen.wholeStage") == "false")
-    // The else-branch builds a plain newSession(): default conf — AQE
-    // stays on (the only profile that completes the x100 tail).
-    val dflt = spark.newSession()
+    // Past the boundary the chooser takes the default-profile child:
+    // Spark's own conf, AQE on (the only profile that completes the x100
+    // tail). Read at x1 from the same registry; no x100 data is built.
+    val dflt = JobCorpus.session(spark, trim = false, 1)
+    assert(dflt ne exec)
     assert(dflt.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(dflt.conf.get("spark.sql.codegen.wholeStage") == "true")
   }

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - light fixed-state entries LOSE at 32 at every volume.
   * The chooser requires BOTH signals — a winning-heavy entry AND
   * volume at the measured boundary — exactly like
-  * JobCorpus.executionSession's profile gate.
+  * JobCorpus.useInteractiveProfile's profile gate.
   */
 class StreamDialSpec extends AnyFunSuite {
 
