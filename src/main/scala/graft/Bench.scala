@@ -345,22 +345,6 @@ object Bench {
         .map { case (f, (n, med, mx)) => s""""${esc(f)}":[$n,$med,$mx]""" }
         .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
-    // skipWhenAllBroadcastable facet (r13 verdict #6): planning ms with
-    // the policy OFF vs ON over the 12-family quality subset at this
-    // bench's JOB scale, result equality asserted. Untimed (not part of
-    // any entry); skipped when the JOB entries are filtered out.
-    val skipPolicyJson =
-      if (!selected.exists(e => e.name == "q_job_quality")) "null"
-      else try {
-        val f = graft.job.JobCorpus.measureSkipPolicyAt(spark,
-          graft.job.JobCorpus.scaleFor(sfDir))
-        s"""{"off_plan_ms":${f.offPlanMs},"on_plan_ms":${f.onPlanMs},"skipped":${f.nSkipped},"families":${f.families},"equal":${f.allEqual}}"""
-      } catch { case NonFatal(e) =>
-        // Bounded: this string also rides the ~2000-char compact stdout
-        // line — an unbounded stack-bearing message would truncate the
-        // whole record past the driver's parse window.
-        s""""error: ${esc(String.valueOf(e.getMessage).take(80))}""""
-      }
     // Per-streaming-entry [n_batches, median_ms, max_ms] — full map in
     // the file; the compact stdout line carries only the 3 largest-max
     // entries (the ~2000-char driver window cannot fit 13 more keys).
@@ -379,7 +363,7 @@ object Bench {
       s""""${esc(k)}":[${rb >> 10},${hp >> 20}]"""
     }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonOf(timings)},"warm_total":$warmTotal,"warm":${jsonOf(warmTimings.map { case (k, v) => k -> Right(v) })},"warm_spread":$spreadJson,"lap_wall_gc_jit_ms":$lapTelemetryJson,"driver_ingress_kb_heap_peak_mb":$driverPeaksJson,"job_planning":$jobPlanningFull,"job_quality_plan_compass_naive_ms":$jobQualityFull,"job_corpus_latency":$jobLatencyJson,"job_corpus_family_n_med_max_ms":$jobFamilyJson,"skip_policy":$skipPolicyJson,"stream_batches":${streamJson(streamBatches)},"errors":$nErr,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonOf(timings)},"warm_total":$warmTotal,"warm":${jsonOf(warmTimings.map { case (k, v) => k -> Right(v) })},"warm_spread":$spreadJson,"lap_wall_gc_jit_ms":$lapTelemetryJson,"driver_ingress_kb_heap_peak_mb":$driverPeaksJson,"job_planning":$jobPlanningFull,"job_quality_plan_compass_naive_ms":$jobQualityFull,"job_corpus_latency":$jobLatencyJson,"job_corpus_family_n_med_max_ms":$jobFamilyJson,"stream_batches":${streamJson(streamBatches)},"errors":$nErr,"sf":"$sfDir"}"""
     Option(fullOut.toAbsolutePath.getParent)
       .foreach(p => java.nio.file.Files.createDirectories(p): Unit)
     java.nio.file.Files.write(fullOut,
@@ -404,6 +388,6 @@ object Bench {
     }.mkString("{", ",", "}")
     val streamNoisiest = streamJson(
       streamBatches.toSeq.sortBy { case (_, (_, _, mx)) => -mx }.take(3))
-    s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":${jsonOf(compact)},"warm_total":${f2(warmTotal)},"warm_is_median_of_3":true,"warm_spread_noisiest":$noisiest,"job_planning":$jobPlanningCompact,"job_corpus_latency":$jobLatencyJson,"skip_policy":$skipPolicyJson,"stream_batches_noisiest":$streamNoisiest,"errors":$nErr,"n_queries":${timings.size},"full":"$fullOut","sf":"$sfDir"}"""
+    s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":${jsonOf(compact)},"warm_total":${f2(warmTotal)},"warm_is_median_of_3":true,"warm_spread_noisiest":$noisiest,"job_planning":$jobPlanningCompact,"job_corpus_latency":$jobLatencyJson,"stream_batches_noisiest":$streamNoisiest,"errors":$nErr,"n_queries":${timings.size},"full":"$fullOut","sf":"$sfDir"}"""
   }
 }

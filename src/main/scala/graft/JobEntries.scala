@@ -16,9 +16,9 @@ object JobEntries {
     * COMPASS corpus entries execute at x1 by contract, the regime the trim
     * profile is measured for. That child is the ENTRY's bench profile,
     * not a library default. Sharing it leaves the vanilla corpus's plans
-    * as they were: of the two confs CompassSession pins on it,
-    * `spark.sql.cbo.joinReorder.enabled=false` is Spark's default and
-    * `spark.sql.optimizer.starSchemaDetection` is no Spark conf at all.
+    * as they were: both confs CompassSession pins on it,
+    * `spark.sql.cbo.joinReorder.enabled=false` and
+    * `spark.sql.cbo.starSchemaDetection=false`, are Spark's defaults.
     */
   private[graft] def compassFor(s: SparkSession): CompassSession =
     CompassQueries.memo(JobCorpus.session(s, trim = true, 1))

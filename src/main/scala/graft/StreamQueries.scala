@@ -16,12 +16,12 @@ import Queries.{Entry, dfq}
   * Import/Importer.h:568-620, so "stream in → same answers as batch" IS
   * the reference contract).
   *
-  * Sink choice is deliberate per entry: the stateless gate writes a real
-  * parquet FILE sink with a checkpoint (the production append path,
-  * executor-side, any scale); the aggregation/dedup entries use the
-  * memory sink as the CHECK surface — their outputs are
-  * contractually small-to-moderate here, while production would point
-  * the same lambdas at a file/kafka sink. Bounded state throughout:
+  * The output mode picks the sink ([[drain]]): append-mode entries
+  * write a real parquet FILE sink with a checkpoint (the production
+  * append path, executor-side, any scale) and read it back; the
+  * complete-mode aggregations use the memory sink as the CHECK surface —
+  * their outputs are O(windows/keys), while production would point the
+  * same lambdas at an overwritable table. Bounded state throughout:
   * complete-mode windows are O(types × hours-of-data) and the dedup
   * state is watermark-evicted.
   */
@@ -114,8 +114,9 @@ object StreamQueries {
     streamPartitionsFor(name, eventsBytes(dir))
 
   /** Untimed per-JVM/per-SESSION streaming machinery warmup for Bench:
-    * one micro-stream (2 rows, watermark + windowed agg + memory sink)
-    * on the SAME tuned child session the timed entries run on — since
+    * one 2-row micro-stream drained once per output mode (watermark +
+    * windowed agg into the memory sink, then the bare rows into the file
+    * sink) on the SAME tuned child session the timed entries run on — since
     * r17 the entries live on `streamSession(s)`, so warming the parent
     * would leave the child's session-scoped init (SessionState,
     * StreamingQueryManager, conf resolution) inside the first timed
@@ -134,19 +135,13 @@ object StreamQueries {
       c.range(2).selectExpr("timestamp_seconds(id) AS ts", "id AS v")
         .write.mode("overwrite").parquet(s"$d/in")
       val schema = c.read.parquet(s"$d/in").schema
-      val q = c.readStream.schema(schema).parquet(s"$d/in")
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"))
-        .count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_stream_warmup").trigger(availableNow).start()
-      // Same loud bound as drainTracked: a warmup stream that misses
-      // AvailableNow self-termination is a defect in the SAME machinery
-      // the timed entries rely on — masking it here would surface later
-      // as an unexplained timed-entry hang.
-      try require(q.awaitTermination(600000L),
-        "warmup stream did not terminate within 10 min under AvailableNow")
-      finally q.stop()
+      val src = c.readStream.schema(schema).parquet(s"$d/in")
+      // One drain per output mode: the memory sink and the file sink
+      // each pay their first use here, not in a timed entry's cold lap.
+      val windowed = src.withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour")).count()
+      drain(windowed, "graft_stream_warmup", "complete").collect(): Unit
+      drain(src, "graft_stream_warmup", "append").collect(): Unit
     }
   }
 
@@ -235,31 +230,27 @@ object StreamQueries {
   private def availableNow =
     org.apache.spark.sql.streaming.Trigger.AvailableNow()
 
-  /** Run `df` into a sink to completion, return the drained rows.
-    * Fixed query names are safe across repeated entry runs — active-query
-    * name uniqueness only applies to RUNNING queries, and the sink view
-    * is re-registered per start.
+  /** Run `df` into a sink to completion, return the drained rows; the
+    * output mode picks the sink. Fixed query names are safe across
+    * repeated entry runs — active-query name uniqueness only applies to
+    * RUNNING queries.
     *
-    * Default sink: MEMORY — every output row ships to the driver as task
-    * results, which is the O(n) harness artifact the ×100/×1000 driver-
-    * ingress audits flagged (q_stream_dedup ~1.0 GB of task results and
-    * a 42 GB heap high-water at ×1000). `GRAFT_STREAM_SINK=file` (r22,
-    * r20 verdict #2) reroutes APPEND-mode drains to a real parquet FILE
-    * sink — executors write, the driver sees only commit metadata — and
-    * reads the committed files back, so the entry's returned relation is
-    * IDENTICAL row-for-row and the declared results never change.
-    * COMPLETE-mode drains (global aggregations: windowed/topk/enrich/
-    * user_totals/psi) stay on the memory sink under the knob: Spark's
-    * file sink is append-only BY DESIGN (complete mode would have to
-    * rewrite history per batch); a production deployment drains those
-    * via foreachBatch into an overwritable/merge table. That structural
-    * split — not a missing measurement — is the reason the file-sink
-    * numbers below cover the append entries only.
+    * APPEND mode drains to a parquet FILE sink: executors write, the
+    * driver sees only commit metadata, and the committed files are read
+    * back, so the entry's relation is the memory table's row for row.
+    * The memory sink shipped every output row to the driver as task
+    * results — at ×1000 q_stream_dedup moved ~1.0 GB that way (a 42 GB
+    * heap high-water); the file sink cut its driver ingress to 1.6 MB
+    * and its cold lap from 141.5 to 18.3 s (SCALE.md r22).
+    * COMPLETE mode (global aggregations: windowed/topk/enrich/
+    * user_totals/psi) stays on the MEMORY sink: Spark's file sink is
+    * append-only by design (complete mode would have to rewrite history
+    * per batch); a production deployment drains those via foreachBatch
+    * into an overwritable/merge table. Their state, and so their output,
+    * is O(windows/keys), not O(events).
     */
-  private def drainToMemory(df: DataFrame, name: String, mode: String): DataFrame = {
-    val useFile = mode == "append" &&
-      sys.env.get("GRAFT_STREAM_SINK").contains("file")
-    if (useFile) {
+  private def drain(df: DataFrame, name: String, mode: String): DataFrame =
+    if (mode == "append") {
       val root = java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir", "/tmp"), "graft_stream_sink")
       sweepDeadSinks(root)
@@ -286,7 +277,6 @@ object StreamQueries {
       drainTracked(q, name)
       df.sparkSession.table(name)
     }
-  }
 
   private def deleteTree(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root))
@@ -333,7 +323,7 @@ object StreamQueries {
         "count(*) AS n, round(sum(value), 2) AS sv FROM events GROUP BY 1, 2 ORDER BY 1, 2") {
       (s, dir) =>
         val agg = EventStream.windowedStats(fileStream(s, dir, "events"))
-        drainToMemory(agg, "graft_stream_windowed", "complete")
+        drain(agg, "graft_stream_windowed", "complete")
           .select(col("window_start").cast("long").as("h"), col("event_type"),
             col("n"), col("sv"))
           .orderBy("h", "event_type")
@@ -354,7 +344,7 @@ object StreamQueries {
       val counts = EventStream.windowedKeyCounts(
         fileStream(s, dir, "events"), "user_id")
       import org.apache.spark.sql.expressions.Window
-      drainToMemory(counts, "graft_stream_topk", "complete")
+      drain(counts, "graft_stream_topk", "complete")
         .select(col("window_start").cast("long").as("h"), col("user_id"), col("n"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("h")).orderBy(col("n").desc, col("user_id"))))
@@ -376,7 +366,7 @@ object StreamQueries {
         val doubled = fileStream(s, dir, "events")
           .union(fileStream(s, dir, "events"))
         val deduped = EventStream.dedupStream(doubled, "event_id", "30 days")
-        drainToMemory(deduped, "graft_stream_dedup", "append")
+        drain(deduped, "graft_stream_dedup", "append")
           .select(col("event_id"), col("event_type"), col("value"))
           .orderBy("event_id")
     },
@@ -411,7 +401,7 @@ object StreamQueries {
         .select(col("user_id"), col("ts"), col("value"))
         .as[EventStream.SessionEvent]
       val sessions = EventStream.sessionize(ev, gapSec = 1800)
-      drainToMemory(sessions.toDF(), "graft_stream_sessionize", "append")
+      drain(sessions.toDF(), "graft_stream_sessionize", "append")
         .select(col("user_id"),
           unix_timestamp(col("session_start")).as("start_s"),
           col("n_events").cast("long").as("n_events"),
@@ -446,7 +436,7 @@ object StreamQueries {
         .as[EventStream.FunnelEvent]
       val conv = EventStream.funnelStream(
         ev, Seq("view", "click", "purchase"), withinSec = 300000L)
-      drainToMemory(conv.toDF(), "graft_stream_funnel", "append")
+      drain(conv.toDF(), "graft_stream_funnel", "append")
         .select(col("user_id"),
           unix_timestamp(col("t_first")).as("first_s"),
           unix_timestamp(col("t_last")).as("last_s"),
@@ -480,7 +470,7 @@ object StreamQueries {
         .as[EventStream.FunnelEvent]
       val conv = EventStream.funnelStream(
         ev, Seq("view", "click", "purchase"), withinSec = 86400L)
-      drainToMemory(conv.toDF(), "graft_stream_funnel_tight", "append")
+      drain(conv.toDF(), "graft_stream_funnel_tight", "append")
         .select(col("user_id"),
           unix_timestamp(col("t_first")).as("first_s"),
           unix_timestamp(col("t_last")).as("last_s"),
@@ -513,7 +503,7 @@ object StreamQueries {
         .withColumn("ts", timestamp_seconds(col("doc_id") + lit(1000000000L)))
       val survivors = EventStream.dedupChunkStream(
         stream, "doc_id", "text", "ts", chunkTokens = 8)
-      val emitted = drainToMemory(survivors, "graft_stream_chunk_dedup", "append")
+      val emitted = drain(survivors, "graft_stream_chunk_dedup", "append")
         .groupBy("chunk").agg(count(lit(1)).as("n"))
       val corpus = Tables.load(s, dir, "documents")
         .select(explode(graft.operators.TextDedup.chunkStrings(
@@ -539,7 +529,7 @@ object StreamQueries {
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sv"))
-      drainToMemory(enriched, "graft_stream_enrich", "complete")
+      drain(enriched, "graft_stream_enrich", "complete")
         .orderBy("c_mktsegment")
     },
 
@@ -565,7 +555,7 @@ object StreamQueries {
           col("event_id").as("click_id"))
       val pairs = EventStream.attributionJoin(
         impressions, clicks, attributionSec = 3600L)
-      drainToMemory(pairs.select(col("imp_id"), col("click_id")),
+      drain(pairs.select(col("imp_id"), col("click_id")),
           "graft_stream_attribution", "append")
         .orderBy("imp_id", "click_id")
     },
@@ -580,7 +570,7 @@ object StreamQueries {
       "SELECT user_id, count(*) AS n_events, round(sum(value), 2) AS total_value " +
         "FROM events GROUP BY 1 ORDER BY 1") { (s, dir) =>
       val totals = EventStream.userTotals(fileStream(s, dir, "events"))
-      drainToMemory(totals, "graft_stream_user_totals", "complete")
+      drain(totals, "graft_stream_user_totals", "complete")
         .orderBy("user_id")
     },
 
@@ -614,7 +604,7 @@ object StreamQueries {
           col("event_id").as("click_id"))
       val pairs = EventStream.attributionJoin(
         impressions, clicks, attributionSec = 3600L, joinType = "left_outer")
-      drainToMemory(pairs.select(col("imp_id"),
+      drain(pairs.select(col("imp_id"),
           coalesce(col("click_id"), lit(-1L)).as("click_id")),
           "graft_stream_attribution_outer", "append")
         .orderBy("imp_id", "click_id")
@@ -659,7 +649,7 @@ object StreamQueries {
           stream, "doc_id", "text", "ts",
           numHashes = 64, bands = 16, shingleK = 3,
           windowLen = "1 hour", watermark = "30 days")
-        val out = drainToMemory(survivors, "graft_stream_neardup", "append")
+        val out = drain(survivors, "graft_stream_neardup", "append")
           .select(col("doc_id")).withColumn("survived", lit(1L))
         val banded = docs.select(col("doc_id"),
             posexplode(graft.operators.TextDedup.bandHashes(col("text"), 64, 16, 3)))
@@ -706,18 +696,10 @@ object StreamQueries {
         "  FROM toks) " +
         "SELECT doc_id, quality FROM qual WHERE quality >= 0.3 ORDER BY doc_id") {
       (s, dir) =>
-        val out = Queries.tempDir("graft-stream-curate")
         val gated = EventStream.curateStream(
           fileStream(s, dir, "documents"), "text")
-        val q = gated
-          .select(col("doc_id"), col("quality"))
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", s"$out/data")
-          .option("checkpointLocation", s"$out/chk")
-          .trigger(availableNow)
-          .start()
-        drainTracked(q, "graft_stream_curate")
-        s.read.parquet(s"$out/data").orderBy("doc_id")
+        drain(gated.select(col("doc_id"), col("quality")),
+          "graft_stream_curate", "append").orderBy("doc_id")
     },
 
     // Deterministic sampling ON the stream: the md5-gate selection rule is
@@ -734,7 +716,7 @@ object StreamQueries {
         "ORDER BY event_id") { (s, dir) =>
       val sampled = graft.operators.Sampling.deterministicSample(
         fileStream(s, dir, "events"), "event_id", 0.05, "s12")
-      drainToMemory(
+      drain(
         sampled.select(col("event_id"), col("user_id"),
           floor(col("value") * 100 + 0.5).cast("long").as("cents")),
         "graft_stream_sample", "append").orderBy("event_id")
@@ -764,7 +746,7 @@ object StreamQueries {
         .filter(col("ts") >= cut)
         .select(least(floor(col("value") / 50).cast("int"), lit(7)).as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("nl"))
-      val liveCounts = drainToMemory(live, "graft_stream_psi", "complete")
+      val liveCounts = drain(live, "graft_stream_psi", "complete")
       val baseCounts = Tables.load(s, dir, "events")
         .filter(col("ts") < cut)
         .select(least(floor(col("value") / 50).cast("int"), lit(7)).as("bin"))

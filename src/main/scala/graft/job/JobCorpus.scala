@@ -756,57 +756,6 @@ object JobCorpus {
     }
   }
 
-  /** Bench facet for the `skipWhenAllBroadcastable` policy (r13 verdict
-    * #6): run the 12-family quality subset through two CompassSessions —
-    * policy OFF (full pre-pass) and ON — timing ONLY the optimize step
-    * (cs.sql builds sketches eagerly; execution is a separate head()),
-    * and compare result counts. Returns (offPlanMs, onPlanMs, nSkipped,
-    * allEqual). When the scale's big tables exceed the broadcast
-    * threshold the policy correctly declines to skip (nSkipped < 12) —
-    * the facet reports that honestly rather than forcing the regime.
-    */
-  final case class SkipPolicyFacet(offPlanMs: Long, onPlanMs: Long,
-      nSkipped: Int, families: Int, allEqual: Boolean)
-
-  def measureSkipPolicyAt(spark: SparkSession, m: Int): SkipPolicyFacet = {
-    ensureData(spark, m)
-    registerViews(spark, m)
-    val byName = queries.toMap
-    val texts = qualitySubset.map(n => n -> byName(n))
-    import graft.planner.{CompassSession, SketchTemplateCache}
-    val csOff = new CompassSession(spark,
-      templateCache = Some(SketchTemplateCache.default()))
-    val csOn = new CompassSession(spark,
-      templateCache = Some(SketchTemplateCache.default()),
-      skipWhenAllBroadcastable = true)
-    try {
-      // Steady-state planning: warm unfiltered templates for the OFF side
-      // (the ON side's whole point is to touch nothing).
-      csOff.warmTemplates(texts.map(t => spark.sql(t._2)))
-      var offMs = 0L; var onMs = 0L; var skipped = 0; var equal = true
-      texts.foreach { case (name, text) =>
-        csOff.lastPlan = None
-        val t0 = System.nanoTime()
-        val dfOff = csOff.sql(text)
-        offMs += (System.nanoTime() - t0) / 1000000
-        // The OFF side must actually take the COMPASS path: a query that
-        // silently stopped being optimizable would otherwise be counted
-        // as a successful policy skip (lastPlan None on BOTH sides) and
-        // the facet would mask a planner regression as a win.
-        require(csOff.lastPlan.nonEmpty,
-          s"skip-policy facet: $name did not take the COMPASS path with " +
-            "the policy OFF — planner regression, not a skip")
-        csOn.lastPlan = None
-        val t1 = System.nanoTime()
-        val dfOn = csOn.sql(text)
-        onMs += (System.nanoTime() - t1) / 1000000
-        if (csOn.lastPlan.isEmpty) skipped += 1
-        equal &&= dfOff.head().getLong(0) == dfOn.head().getLong(0)
-      }
-      SkipPolicyFacet(offMs, onMs, skipped, texts.size, equal)
-    } finally { csOff.close(); csOn.close() }
-  }
-
   /** A/B the enumerator's estimator math on plan CHOICE over the JOB
     * compass families (r13 verdict #5) — see
     * [[graft.planner.OptimizerQuality.abForQuery]] for the measurement.

@@ -22,9 +22,6 @@ import scala.concurrent.duration._
   *                    scaled IMDb: counts equal to the vanilla corpus,
   *                    planning fraction recorded, splice exercised
   *                    against real exchanges + AQE re-planning.
-  *   skip <m>       — measureSkipPolicyAt: the all-broadcastable skip
-  *                    heuristic must DECLINE to skip once the scaled
-  *                    fact tables exceed the broadcast threshold.
   *   capouts <m>    — one capped default-profile lap, then the static
   *                    physical plan of every query that hit the cap.
   *
@@ -36,7 +33,7 @@ object ScaleCampaignMain {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
-      "usage: ScaleCampaignMain <profiles|compass|skip|capouts> <m>")
+      "usage: ScaleCampaignMain <profiles|compass|capouts> <m>")
     val facet = args(0)
     val m = args(1).toInt
     val spark = graft.engine.LocalSession("graft-scale-campaign")
@@ -44,7 +41,6 @@ object ScaleCampaignMain {
       facet match {
         case "profiles" => profiles(spark, m)
         case "compass" => compass(spark, m)
-        case "skip" => skip(spark, m)
         case "capouts" => capouts(spark, m)
         case other => sys.error(s"unknown facet $other")
       }
@@ -135,16 +131,23 @@ object ScaleCampaignMain {
     * `runAll` (and hence the bench entry) takes, and the OTHER profile is
     * lapped as the counterfactual, so the record shows the gate picking
     * the measured winner on its own routing, each side of the ×20
-    * boundary. Cold laps alternate (each profile's first lap pays its own
-    * JIT/codegen), then a warm lap each. Counts must agree on every query
-    * that completed in any two laps; a timeout is a latency fact, not a
-    * correctness pass. `counts_equal_on` is the number completed in all
-    * four.
+    * boundary. The laps run in this order: one untimed warm-up (the 33
+    * compass-subset queries through plain Spark on the x1 trim child), so
+    * neither cold lap alone pays the JVM's JIT warm-up; then the routed
+    * cold lap, the other cold lap, the routed warm lap and the other warm
+    * lap. Counts must agree on every query that completed in any two
+    * laps; a timeout is a latency fact, not a correctness pass.
+    * `counts_equal_on` is the number completed in all four timed laps.
     */
   private def profiles(spark: SparkSession, m: Int): Unit = {
     val routedTrim = JobCorpus.useInteractiveProfile(m)
     val routed = JobCorpus.executionSession(spark, m)
     val other = JobCorpus.session(spark, trim = !routedTrim, m)
+    val warmUp = JobCorpus.session(spark, trim = true, 1)
+    val byName = JobCorpus.queries.toMap
+    JobCorpus.submitAll(JobCorpus.compassSubset, JobCorpus.CorpusTimeoutMin.minutes) {
+      q => warmUp.sql(byName(q)).head()
+    }
     val coldR = cappedLap(routed)
     val coldO = cappedLap(other)
     val warmR = cappedLap(routed)
@@ -219,12 +222,5 @@ object ScaleCampaignMain {
       s""""completed":${lap.counts.size},"wall_s":${f"${lap.wallS}%.1f"},""" +
       s""""timeouts":${lap.timeouts.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""timeout_plans":$planSummaries,"lap":${lapJson(lap)}}""")
-  }
-
-  private def skip(spark: SparkSession, m: Int): Unit = {
-    val f = JobCorpus.measureSkipPolicyAt(spark, m)
-    println(s"""{"facet":"skip","m":$m,"off_plan_ms":${f.offPlanMs},""" +
-      s""""on_plan_ms":${f.onPlanMs},"n_skipped":${f.nSkipped},""" +
-      s""""families":${f.families},"all_equal":${f.allEqual}}""")
   }
 }

@@ -80,26 +80,14 @@ final case class CompassPlan(
   */
 final class CompassSession(
     val spark: SparkSession,
-    templateCache: Option[SketchTemplateCache] = None,
-    // Wall-time policy (r12 verdict): when every instance except at most
-    // one sits under spark.sql.autoBroadcastJoinThreshold, Catalyst
-    // compiles ANY join order into the same shuffle-free chain of
-    // broadcast hash joins streaming the single big side — the order
-    // cannot change which side streams, so the sketch jobs + splice buy
-    // nothing and only add planning overhead (measured at sf0.1: the
-    // COMPASS spine ran SLOWER than naive in ~half the quality families
-    // for exactly this reason). OFF by default: the differential entries
-    // exist to exercise the COMPASS path at toy scale where everything
-    // is broadcastable; a production session at data scale turns it on
-    // to skip the regime where order provably doesn't matter.
-    skipWhenAllBroadcastable: Boolean = false) {
+    templateCache: Option[SketchTemplateCache] = None) {
   import CompassSession.{BroadcastRowLimit, MinTableSize, SketchBuckets, SketchRows}
 
   // Config contract: Catalyst must not re-reorder the spliced spine.
   // Two logical rules could override the enumerator's choice —
   // CostBasedJoinReorder (spark.sql.cbo.joinReorder.enabled) and the
   // star-schema heuristic inside ReorderJoin
-  // (spark.sql.optimizer.starSchemaDetection). Both default to false;
+  // (spark.sql.cbo.starSchemaDetection). Both default to false;
   // pinning them here makes the contract hold even on a session where a
   // user enabled them. Plain ReorderJoin preserves a spine whose every
   // join carries a condition (it only pulls conditioned joins ahead of
@@ -108,7 +96,7 @@ final class CompassSession(
   // CompassOrderGuardSpec, including the deliberate-Cross disconnected
   // shape.
   spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-  spark.conf.set("spark.sql.optimizer.starSchemaDetection", "false")
+  spark.conf.set("spark.sql.cbo.starSchemaDetection", "false")
 
   /** Every sketch this session reuses: the caller's store, or a
     * memory-only one (same lookup, no disk I/O).
@@ -150,7 +138,6 @@ final class CompassSession(
     * running in their own scopes read `scope.lastPlan`.
     */
   def lastPlan: Option[CompassPlan] = defaultScope.lastPlan
-  def lastPlan_=(p: Option[CompassPlan]): Unit = defaultScope.lastPlan = p
 
   /** Drop the store's memory memo; its disk tier stays warm. */
   def close(): Unit = store.release()
@@ -178,32 +165,14 @@ final class CompassSession(
     (g, buildSketches(g), enumeratorEdges(g))
   }
 
-  /** True when at most ONE instance's UNFILTERED base relation is over
-    * the session's autoBroadcastJoinThreshold (stats-based, the same
-    * sizeInBytes Catalyst's broadcast decision reads — filters only
-    * shrink, so "unfiltered under threshold" is conservative-safe).
-    * Checked BEFORE any sketch job so the skip saves the whole pre-pass,
-    * not just the splice. A disabled threshold (<= 0) never skips.
-    */
-  private def allButOneBroadcastable(g: ExtractedJoinGraph): Boolean = {
-    val threshold = Bridge.autoBroadcastThreshold(spark)
-    threshold > 0 && g.instances.count(i =>
-      Bridge.sizeInBytes(i.plan) > BigInt(threshold)) <= 1
-  }
-
   private def optimizeIn(scope: QueryScope, df: DataFrame): DataFrame = {
-    if (!fpdEnabled) return df
+    // Clear first: with fpd off, the previous query's plan must not
+    // stand in for this one's.
     scope.lastPlan = None
+    if (!fpdEnabled) return df
     try {
       val analyzed = df.queryExecution.analyzed
       JoinGraphExtractor.extract(analyzed) match {
-        case Some((g, _)) if skipWhenAllBroadcastable &&
-            g.instances.size >= 3 && allButOneBroadcastable(g) =>
-          // Order provably can't matter (see the constructor flag's doc):
-          // leave the plan untouched — no sketch jobs, no splice. lastPlan
-          // stays None, honestly reporting "did not take the COMPASS
-          // path" to the quality harness.
-          df
         case Some((g, rebuild)) if g.instances.size >= 3 =>
           // Timing mirrors the reference's per-phase instrumentation
           // (FilterPushDownSketch.cpp:1564-1569, RelAlgExecutor.cpp:2628).

@@ -127,7 +127,6 @@ object OptimizerQuality {
     val df = spark.sql(text)
     val g = JoinGraphExtractor.extract(df.queryExecution.analyzed)
       .getOrElse(sys.error(s"$family: not an optimizable join region"))._1
-    cs.lastPlan = None
     val tPlan = System.nanoTime()
     cs.optimize(df)
     val planMs = (System.nanoTime() - tPlan) / 1000000
@@ -225,7 +224,6 @@ object OptimizerQuality {
     val df = spark.sql(text)
     val g = JoinGraphExtractor.extract(df.queryExecution.analyzed)
       .getOrElse(sys.error(s"$family: not an optimizable join region"))._1
-    cs.lastPlan = None
     cs.optimize(df)
     val plan = cs.lastPlan
       .getOrElse(sys.error(s"$family: query did not take the COMPASS path"))

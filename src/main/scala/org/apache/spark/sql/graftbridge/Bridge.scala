@@ -19,19 +19,6 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `sizeInBytes` statistic of a resolved logical plan — the same number
-    * Catalyst's broadcast-side decision reads.
-    */
-  def sizeInBytes(plan: LogicalPlan): BigInt = plan.stats.sizeInBytes
-
-  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes
-    * (negative = broadcasting disabled). Lives here because SQLConf
-    * access is `private[sql]`.
-    */
-  def autoBroadcastThreshold(spark: SparkSession): Long =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.conf.autoBroadcastJoinThreshold
-
   /** Per-join `numOutputRows` metrics of an EXECUTED physical plan, in
     * pre-order (root-most join first), descending through AQE wrappers and
     * query stages. On a left-deep join spine this is every prefix's true

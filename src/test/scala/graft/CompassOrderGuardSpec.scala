@@ -24,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Config contract (asserted below): CompassSession pins
   * spark.sql.cbo.joinReorder.enabled=false and
-  * spark.sql.optimizer.starSchemaDetection=false on its session.
+  * spark.sql.cbo.starSchemaDetection=false on its session.
   */
 class CompassOrderGuardSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -34,7 +34,6 @@ class CompassOrderGuardSpec extends AnyFunSuite {
     val df0 = spark.sql(text)
     val g = JoinGraphExtractor.extract(df0.queryExecution.analyzed)
       .getOrElse(sys.error("not an optimizable join region"))._1
-    cs.lastPlan = None
     val opt = cs.optimize(df0)
     val plan = cs.lastPlan.getOrElse(sys.error("did not take the COMPASS path"))
     opt.collect(): Unit
@@ -116,10 +115,13 @@ class CompassOrderGuardSpec extends AnyFunSuite {
   }
 
   test("config contract: CompassSession pins the reorder rules off") {
-    val cs = new CompassSession(spark)
-    try {
-      assert(spark.conf.get("spark.sql.cbo.joinReorder.enabled") == "false")
-      assert(spark.conf.get("spark.sql.optimizer.starSchemaDetection") == "false")
-    } finally cs.close()
+    // Both rules ON first: the pins must override a user's setting, and
+    // reading a key Spark does not define would fail, not pass.
+    val keys = Seq("spark.sql.cbo.joinReorder.enabled", "spark.sql.cbo.starSchemaDetection")
+    val child = spark.newSession()
+    keys.foreach(child.conf.set(_, "true"))
+    val cs = new CompassSession(child)
+    try assert(keys.map(child.conf.get) == Seq("false", "false"))
+    finally cs.close()
   }
 }

@@ -148,15 +148,23 @@ class CompassSessionSpec extends AnyFunSuite {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
     cs.fpdEnabled = false
-    cs.lastPlan = None
     cs.sql(fiveWay).collect()
     assert(cs.lastPlan.isEmpty)
+  }
+
+  test("fpd toggle off clears the previous query's plan") {
+    Tables.registerAll(spark, dir)
+    val cs = new CompassSession(spark)
+    cs.sql(fiveWay).collect()
+    assert(cs.lastPlan.isDefined, "the 5-way query must take the COMPASS path")
+    cs.fpdEnabled = false
+    cs.sql(fiveWay).collect()
+    assert(cs.lastPlan.isEmpty, "a vanilla run must not report the previous plan")
   }
 
   test("left join / two-table queries fall through untouched") {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
-    cs.lastPlan = None
     val q = "SELECT count(*) AS n FROM customer LEFT JOIN orders ON c_custkey = o_custkey"
     assert(cs.sql(q).collect().head.getLong(0) ==
       spark.sql(q).collect().head.getLong(0))
@@ -236,30 +244,6 @@ class CompassSessionSpec extends AnyFunSuite {
     assert(cs.lastPlan.isDefined, "a corrupt template must not knock the query off COMPASS")
     assert(r.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
     assert(cache.misses > 0, "the corrupt templates must be rebuilt")
-  }
-
-  test("skipWhenAllBroadcastable: toy-scale region skips the pre-pass, " +
-      "big-side regime takes it (wall-time policy, r12 verdict #5)") {
-    Tables.registerAll(spark, dir)
-    val cs = new CompassSession(spark, skipWhenAllBroadcastable = true)
-    // sf0.001: every table is far under the 10MB default threshold, so
-    // order provably can't matter — the policy must leave the plan
-    // untouched, run ZERO sketch jobs, and still return correct rows.
-    val (df, jobs) = optimizeCountingJobs(cs, fiveWay)
-    val r = df.collect().map(_.toSeq)
-    assert(cs.lastPlan.isEmpty, "all-broadcastable region must skip the COMPASS path")
-    assert(jobs == 0, "the skip must happen BEFORE any sketch job")
-    assert(r.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
-    // Shrink the threshold so >1 instance is "big": the same query must
-    // now take the full COMPASS path.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      cs.lastPlan = None
-      val r2 = cs.sql(fiveWay).collect().map(_.toSeq)
-      assert(cs.lastPlan.isDefined, "big-side regime must take the COMPASS path")
-      assert(r2.toSeq == r.toSeq)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("PRE_PROCESSING warm-up: first compass query after warm() builds nothing") {
@@ -413,7 +397,6 @@ class CompassSessionSpec extends AnyFunSuite {
     val c = Tables.load(spark, dir, "customer")
     val df = l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
-    cs.lastPlan = None
     val n = cs.optimize(df).count()
     assert(n == df.count())
     assert(cs.lastPlan.nonEmpty, "DataFrame-built join should be optimizable")
@@ -528,7 +511,6 @@ class CompassSessionSpec extends AnyFunSuite {
     val c = Tables.load(spark, dir, "customer")
     val df = l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
-    cs.lastPlan = None
     val out = cs.optimize(df) // sketch job throws inside the UDF → fallback
     assert(cs.lastPlan.isEmpty, "failed sketch build must fall back to vanilla")
     assert(out eq df, "fallback must return the input frame")
@@ -546,7 +528,6 @@ class CompassSessionSpec extends AnyFunSuite {
     val c = days.take(10).map(d => (d, 1L)).toDF("dc", "cv")
     val df = a.join(b, col("da") === col("db")).join(c, col("db") === col("dc"))
     val cs = new CompassSession(spark)
-    cs.lastPlan = None
     val n = cs.optimize(df).count()
     assert(n == df.count())
     assert(cs.lastPlan.nonEmpty,
@@ -596,7 +577,6 @@ class CompassSessionSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical.Join
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
-    cs.lastPlan = None
     val q = "SELECT count(*) AS n FROM supplier, nation, region " +
       "WHERE s_nationkey = n_nationkey AND n_name LIKE 'B%'"
     val out = cs.sql(q)

@@ -84,22 +84,6 @@ class JobCorpusSpec extends AnyFunSuite {
     } finally cs.close()
   }
 
-  test("skip-policy facet: all 12 quality families skip at x1, results identical, OFF side on-path") {
-    // The bench facet (r13 verdict #6) must mean what it claims: with
-    // the policy ON the pre-pass is skipped (lastPlan None) for every
-    // all-but-one-broadcastable family, results match the full-pre-pass
-    // session bit-for-bit, and the OFF side demonstrably took the
-    // COMPASS path (the facet raises otherwise — a planner regression
-    // must not masquerade as a successful skip).
-    val f = JobCorpus.measureSkipPolicyAt(spark, 1)
-    assert(f.families == 12 && f.nSkipped == 12,
-      s"expected all 12 families to skip at x1, got ${f.nSkipped}")
-    assert(f.allEqual, "policy ON changed a result")
-    assert(f.onPlanMs < f.offPlanMs,
-      s"skipping must cost less planning than the full pre-pass " +
-        s"(on=${f.onPlanMs}ms off=${f.offPlanMs}ms)")
-  }
-
   test("estimator-mode A/B across ALL 33 JOB families: documented exceptions, bounded losses") {
     // ESTIMATES.md §4 gate (r13 verdict #5): the three estimator modes
     // are enumerated over ONE shared sketch set per family and each
@@ -403,12 +387,11 @@ class JobCorpusSpec extends AnyFunSuite {
       "the COMPASS entry must wrap the x1 child the vanilla corpus runs on")
     assert(compassChild ne spark)
     assert(keys.map(corpusChild.conf.get) == Seq("false", "false", "false", "true"))
-    // CompassSession pins `spark.sql.cbo.joinReorder.enabled=false` on the
-    // session it wraps, Spark's default; its other pin,
-    // `spark.sql.optimizer.starSchemaDetection`, is not a Spark conf (star
-    // detection is `spark.sql.cbo.starSchemaDetection`, default false). So
-    // sharing the child leaves the vanilla corpus planning exactly as a
-    // child that no CompassSession wraps.
+    // CompassSession pins `spark.sql.cbo.joinReorder.enabled` and
+    // `spark.sql.cbo.starSchemaDetection` to false on the session it
+    // wraps, both Spark's defaults. So sharing the child leaves the
+    // vanilla corpus planning exactly as a child that no CompassSession
+    // wraps.
     val planning = Seq("spark.sql.cbo.joinReorder.enabled",
       "spark.sql.cbo.starSchemaDetection")
     assert(planning.map(corpusChild.conf.get) == Seq("false", "false"))

@@ -12,9 +12,9 @@ class StreamQueriesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def run(name: String) =
+  private def run(name: String, d: String = dir) =
     Queries.all.find(_.name == name)
-      .getOrElse(fail(s"entry $name not registered")).run(spark, dir)
+      .getOrElse(fail(s"entry $name not registered")).run(spark, d)
 
   test("the file-sink sweep deletes only sink dirs whose JVM has exited") {
     val root = java.nio.file.Files.createTempDirectory("graft-sink-sweep")
@@ -42,6 +42,21 @@ class StreamQueriesSpec extends AnyFunSuite {
       assert(out.count() == n, "every event exactly once despite double delivery")
       assert(out.select("event_id").distinct().count() == n)
     } finally out.unpersist()
+  }
+
+  test("two q_stream_dedup drains in one JVM each return exactly the events") {
+    // Append mode drains through the file sink. A sink dir reused across
+    // drains would re-serve the first run's rows through _spark_metadata,
+    // and its checkpoint would skip or dedup away the second run's input.
+    // The larger corpus drains first, so a reused dir cannot pass by
+    // re-serving rows that happen to be the right answer.
+    val runs = Seq("/root/testdata/sf0.01", dir).map { d =>
+      val n = Tables.load(spark, d, "events").count()
+      val ids = run("q_stream_dedup", d).select("event_id").collect().map(_.getLong(0))
+      (n, ids.length.toLong, ids.distinct.length.toLong)
+    }
+    runs.foreach { case (n, rows, distinct) => assert(rows == n && distinct == n) }
+    assert(runs.head._1 > runs(1)._1, "the first corpus must be the larger one")
   }
 
   test("q_stream_curate equals the batch curation gate") {
