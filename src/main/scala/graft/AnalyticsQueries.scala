@@ -439,7 +439,7 @@ object AnalyticsQueries {
     // replayable). Emits the 25 largest communities. Scale: each round
     // is one edges⋈labels equi-join + a keyed count + a keyed
     // row_number — at cluster scale the rounds run through the
-    // persisted-loop discipline (graft.operators.Components.ckpt).
+    // checkpointed-loop discipline (graft.operators.OpCaches.materialize).
     // Engine side persists po/pr/e once (r21): the oracle text references
     // `e` four times (l0 + the three round joins) and each reference
     // inlined the whole repeat-graph build (32 parquet scans in the

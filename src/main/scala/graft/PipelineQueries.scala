@@ -1844,10 +1844,10 @@ object PipelineQueries {
       val qual = TextAnalysis.withQualityScore(
           Tables.load(s, dir, "documents"), "text")
         .select(col("doc_id"), col("lang"), col("quality"))
-      val ranked = graft.operators.Prefix.withRunningSums(
-        qual, "quality", Nil, tieCols = Seq("doc_id"))
-      val n = ranked.agg(max("_idx").as("_n"))
-      ranked.crossJoin(broadcast(n))
+      // The corpus size rides the prefix's partition totals
+      // (totalCountCol), so no second pass computes max(_idx).
+      graft.operators.Prefix.withRunningSums(
+          qual, "quality", Nil, tieCols = Seq("doc_id"), totalCountCol = "_n")
         .filter(col("_idx") > floor(lit(0.25) * col("_n")))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_kept"), min("quality").as("min_q"))
@@ -2393,8 +2393,7 @@ object PipelineQueries {
           }))
         .withColumn("fid", col("doc_id") * 10 + col("f"))
       val frames = graft.operators.OpCaches.trackCheckpoint(
-        if (s.sparkContext.getCheckpointDir.isDefined) framesBuilt.checkpoint()
-        else framesBuilt.localCheckpoint())
+        graft.operators.OpCaches.materialize(framesBuilt))
       val jpegFrames = Multimodal.encodeJpeg(
         frames, "fid", "w", "h", "pixels", quality = 0.95f)
       val packed = Multimodal.packFrames(

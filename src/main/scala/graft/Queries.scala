@@ -62,15 +62,12 @@ object Queries {
     * blocks (no columnar cache encode — measured faster than persist()
     * on every converted entry) and a truncated plan. Pays one job per
     * view up front; right when the view's own build is a chain the
-    * downstream statement would re-run serially anyway. Reliable
-    * (dir-based) checkpoint when the context has a checkpoint dir,
-    * executor-local otherwise — same discipline as
-    * [[graft.operators.Components]]' loop checkpoints.
+    * downstream statement would re-run serially anyway. Materialized by
+    * [[graft.operators.OpCaches.materialize]], like every operator
+    * checkpoint.
     */
   def checkpointedView(s: SparkSession, viewName: String, text: String): DataFrame = {
-    val built = s.sql(text)
-    val df = if (s.sparkContext.getCheckpointDir.isDefined) built.checkpoint()
-      else built.localCheckpoint()
+    val df = graft.operators.OpCaches.materialize(s.sql(text))
     df.createOrReplaceTempView(viewName)
     // Released between entries like every operator persist (r22, ADVICE):
     // untracked, the temp view pinned the checkpoint RDD's MEMORY_AND_DISK
@@ -120,8 +117,7 @@ object Queries {
       // EAGER materialization (raw row blocks, like checkpointedView):
       // the conf scope requires the wedge execution to happen HERE.
       val ck = graft.operators.OpCaches.trackCheckpoint(
-        if (s.sparkContext.getCheckpointDir.isDefined) built.checkpoint()
-        else built.localCheckpoint(), Some("graft_tri_anchors"))
+        graft.operators.OpCaches.materialize(built), Some("graft_tri_anchors"))
       (ck, built.queryExecution.executedPlan.toString)
     } finally prevPreferSmj match {
       case Some(v) => s.conf.set("spark.sql.join.preferSortMergeJoin", v)

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the clustering
   * step of a dedup pipeline: near-duplicate PAIRS (from MinHash / SimHash
@@ -27,26 +26,16 @@ import org.apache.spark.storage.StorageLevel
   * `component` = the minimum node id reachable. Isolated documents (no
   * near-dup pair) are their own components — callers union them in from
   * the corpus if needed (see the `q_dedup_components` entry).
+  *
+  * Every iterative operator here materializes its rounds through
+  * [[OpCaches.materialize]]: a checkpoint, not just a cache — a persisted
+  * DataFrame still carries its FULL logical plan, so every round would
+  * re-analyze and re-optimize the upstream pipeline (for dedup, the whole
+  * MinHash-LSH HOF lattice) plus all previous rounds' joins, and that
+  * plan work (not data) dominated the loops at bench scale. The
+  * checkpoint roots the plan at the materialized partitions.
   */
 object Components {
-
-  /** Eager checkpoint for iterative loops — lineage truncation, not just
-    * caching: a persisted DataFrame still carries its FULL logical plan,
-    * so every round would re-analyze and re-optimize the upstream
-    * pipeline (for dedup, the whole MinHash-LSH HOF lattice) plus all
-    * previous rounds' joins, and that plan work (not data) dominated the
-    * loops at bench scale. The checkpoint roots the plan at the
-    * materialized partitions: reliable (dir-based) when
-    * `sparkContext.setCheckpointDir` was called, executor-local
-    * otherwise — standard iterative-graph practice; set a checkpoint dir
-    * at cluster scale so executor loss cannot orphan a long loop.
-    * Checkpointed blocks are freed by the ContextCleaner once the
-    * DataFrame is unreachable (unpersist() is a no-op on them). Shared
-    * by every iterative operator in this file.
-    */
-  private def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -54,21 +43,19 @@ object Components {
     // Symmetrize once; every round's neighbor-min join reads this
     // relation. The input lineage (e.g. a full MinHash-LSH pipeline) is
     // materialized FIRST so the two union branches don't each recompute
-    // it — measured 2× the whole upstream cost without this.
-    val directed = OpCaches.track(
+    // it — measured 2× the whole upstream cost without this. Lazy: its
+    // first read is `sym`'s checkpoint, which computes it once.
+    val directed = OpCaches.materialize(
       edges
         .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a") =!= col("b")) // also drops null-id edges
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    // Rounds eager-checkpoint via the shared [[ckpt]] (see its doc).
-    val sym = ckpt(
+        .filter(col("a") =!= col("b")), // also drops null-id edges
+      eager = false)
+    val sym = OpCaches.materialize(
       directed.union(directed.select(col("b").as("a"), col("a").as("b")))
         .distinct())
-    // The edge pipeline is fully consumed into `sym`'s checkpoint.
-    directed.unpersist()
 
     // comp₀ = min(id, min neighbor) — one aggregate seeds the labels.
-    var labels = ckpt(
+    var labels = OpCaches.materialize(
       sym.groupBy(col("a").as("id"))
         .agg(min(col("b")).as("min_nbr"))
         .select(col("id"), least(col("id"), col("min_nbr")).as("comp")))
@@ -105,11 +92,11 @@ object Components {
           col("comp") === col("p_id"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("p_comp"), col("comp"))).as("comp"))
-      // Eager checkpoint materializes the round AND keeps the next round's
-      // plan constant-size (labels is always a leaf, never k rounds of
-      // nested joins); the superseded round's blocks go with its GC'd
-      // DataFrame.
-      val next = ckpt(jumped)
+      // The checkpoint keeps the next round's plan constant-size (labels
+      // is always a leaf, never k rounds of nested joins); the superseded
+      // round's blocks go with its GC'd DataFrame. Lazy: the round's first
+      // read is its label sum, so materializing and summing are one job.
+      val next = OpCaches.materialize(jumped, eager = false)
       val nextSum = labelSum(next)
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
@@ -143,17 +130,17 @@ object Components {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1,
       s"pageRank: damping must be in (0,1), got $damping")
-    val e = ckpt(edges
+    val e = OpCaches.materialize(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
       .distinct())
-    val nodes = ckpt(
+    val nodes = OpCaches.materialize(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count().toDouble // one scalar, any graph size
     require(n > 0, "pageRank: empty graph")
     val outdeg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-    var ranks = ckpt(nodes.withColumn("rank", lit(1.0 / n)))
+    var ranks = OpCaches.materialize(nodes.withColumn("rank", lit(1.0 / n)))
     for (_ <- 1 to iters) {
       // Mass a node RECEIVES: Σ over in-edges of rank(src)/outdeg(src).
       val inMass = e
@@ -166,7 +153,7 @@ object Components {
       val dangling = ranks
         .join(outdeg.select(col("src").as("id")), Seq("id"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
-      ranks = ckpt(nodes
+      ranks = OpCaches.materialize(nodes
         .join(inMass, Seq("id"), "left")
         .select(col("id"),
           (lit((1.0 - damping) / n) +
@@ -198,33 +185,32 @@ object Components {
       sources: Seq[Long], maxHops: Int): DataFrame = {
     require(sources.nonEmpty, "bfsHops: at least one source node")
     require(maxHops >= 0, s"bfsHops: maxHops must be >= 0, got $maxHops")
-    val directed = OpCaches.track(
+    val directed = OpCaches.materialize(
       edges
         .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val sym = ckpt(
+        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b")),
+      eager = false) // first read: `sym`'s checkpoint, as in connectedComponents
+    val sym = OpCaches.materialize(
       directed.union(directed.select(col("b").as("a"), col("a").as("b")))
         .distinct())
-    directed.unpersist()
     // Symmetric relation ⇒ the src side alone covers every node.
-    val nodes = ckpt(sym.select(col("a").as("id")).distinct())
+    val nodes = OpCaches.materialize(sym.select(col("a").as("id")).distinct())
 
-    var dist = ckpt(nodes.filter(col("id").isin(sources: _*))
+    var dist = OpCaches.materialize(nodes.filter(col("id").isin(sources: _*))
       .withColumn("hops", lit(0)))
     var frontier = dist
     var h = 0
     var exhausted = frontier.isEmpty
     while (h < maxHops && !exhausted) {
       h += 1
-      val nxt = ckpt(frontier
+      val nxt = OpCaches.materialize(frontier
         .join(sym, col("id") === col("a"))
         .select(col("b").as("id")).distinct()
         .join(dist, Seq("id"), "left_anti")
         .withColumn("hops", lit(h)))
       if (nxt.isEmpty) exhausted = true
       else {
-        dist = ckpt(dist.union(nxt))
+        dist = OpCaches.materialize(dist.union(nxt))
         frontier = nxt
       }
     }
@@ -249,33 +235,32 @@ object Components {
       nLandmarks: Int, maxHops: Int): DataFrame = {
     require(nLandmarks >= 1, s"landmarkDistances: nLandmarks must be >= 1, got $nLandmarks")
     require(maxHops >= 0, s"landmarkDistances: maxHops must be >= 0, got $maxHops")
-    val directed = OpCaches.track(
+    val directed = OpCaches.materialize(
       edges
         .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val sym = ckpt(
+        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b")),
+      eager = false) // first read: `sym`'s checkpoint, as in connectedComponents
+    val sym = OpCaches.materialize(
       directed.union(directed.select(col("b").as("a"), col("a").as("b")))
         .distinct())
-    directed.unpersist()
-    val landmarks = ckpt(
+    val landmarks = OpCaches.materialize(
       sym.select(col("a").as("id")).distinct().orderBy("id").limit(nLandmarks))
 
-    var dist = ckpt(landmarks
+    var dist = OpCaches.materialize(landmarks
       .select(col("id").as("lm"), col("id"), lit(0).as("hops")))
     var frontier = dist
     var h = 0
     var exhausted = frontier.isEmpty
     while (h < maxHops && !exhausted) {
       h += 1
-      val nxt = ckpt(frontier
+      val nxt = OpCaches.materialize(frontier
         .join(sym, col("id") === col("a"))
         .select(col("lm"), col("b").as("id")).distinct()
         .join(dist, Seq("lm", "id"), "left_anti")
         .withColumn("hops", lit(h)))
       if (nxt.isEmpty) exhausted = true
       else {
-        dist = ckpt(dist.union(nxt))
+        dist = OpCaches.materialize(dist.union(nxt))
         frontier = nxt
       }
     }
@@ -305,13 +290,13 @@ object Components {
       sources: Seq[Long], maxHops: Int): DataFrame = {
     require(sources.nonEmpty, "shortestPaths: at least one source node")
     require(maxHops >= 0, s"shortestPaths: maxHops must be >= 0, got $maxHops")
-    val e = ckpt(edges
+    val e = OpCaches.materialize(edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"),
         col(weightCol).cast("long").as("w"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("w").isNotNull &&
         col("a") =!= col("b")))
 
-    var dist = ckpt(e.sparkSession.createDataFrame(
+    var dist = OpCaches.materialize(e.sparkSession.createDataFrame(
       // distinct: duplicate seeds would ride every left_anti/union round
       // and emit duplicate (id, dist) rows
       e.sparkSession.sparkContext.parallelize(sources.distinct.map(Tuple1(_))).map(t =>
@@ -332,14 +317,14 @@ object Components {
         .join(e, col("id") === col("a"))
         .groupBy(col("b").as("nid"))
         .agg(min(col("d") + col("w")).as("nd"))
-      val improved = ckpt(cand
+      val improved = OpCaches.materialize(cand
         .join(dist.withColumnsRenamed(Map("id" -> "o_id", "d" -> "o_d")),
           col("nid") === col("o_id"), "left")
         .filter(col("o_d").isNull || col("nd") < col("o_d"))
         .select(col("nid").as("id"), col("nd").as("d")))
       if (improved.isEmpty) exhausted = true
       else {
-        dist = ckpt(dist.join(improved, Seq("id"), "left_anti").union(improved))
+        dist = OpCaches.materialize(dist.join(improved, Seq("id"), "left_anti").union(improved))
         frontier = improved
       }
     }
@@ -365,22 +350,21 @@ object Components {
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     require(rounds >= 1, s"kCore: rounds must be >= 1, got $rounds")
-    val directed = OpCaches.track(
+    val directed = OpCaches.materialize(
       edges
         .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    var e = ckpt(
+        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b")),
+      eager = false) // first read: the checkpoint below, as in connectedComponents
+    var e = OpCaches.materialize(
       directed.union(directed.select(col("b").as("a"), col("a").as("b")))
         .distinct())
-    directed.unpersist()
     var prevEdges = e.count() // one scalar per round, like the BFS frontier
     var r = 0
     var done = prevEdges == 0L
     while (r < rounds && !done) {
       val survivors = e.groupBy(col("a").as("id"))
         .agg(count(lit(1)).as("d")).filter(col("d") >= k).select("id")
-      val next = ckpt(e
+      val next = OpCaches.materialize(e
         .join(survivors.withColumnRenamed("id", "_ia"), col("a") === col("_ia"))
         .join(survivors.withColumnRenamed("id", "_ib"), col("b") === col("_ib"))
         .select(col("a"), col("b")))

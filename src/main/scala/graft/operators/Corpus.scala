@@ -184,10 +184,11 @@ object Corpus {
     * [xy, x, y] instead of [xy, xy]). Identical `replace` semantics in
     * every engine. Each round is one partial-aggregated count shuffle
     * over (pair) plus a driver argmax of ONE row (the contractually-tiny
-    * collect pattern); the corpus never leaves the cluster, each round
-    * re-persists and the previous round unpersists, so peak cache is
-    * ~2 corpus copies — at 100 TB the counts shuffle carries distinct
-    * pairs, not occurrences.
+    * collect pattern); the corpus never leaves the cluster, and each
+    * round's vocabulary is [[OpCaches.materialize]]d (a checkpoint, so
+    * the round's plan stays one leaf deep and the superseded round's
+    * blocks go with the ContextCleaner) — at 100 TB the counts shuffle
+    * carries distinct pairs, not occurrences.
     */
   def bpeMerges(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
     require(rounds > 0, s"bpeMerges: rounds must be positive, got $rounds")
@@ -209,11 +210,11 @@ object Corpus {
         concat_ws("  ", array_remove(split(col("w"), ""), "")),
         lit("  ")).as("s"), col("cnt"))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var prev: Option[DataFrame] = None
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      val cached = OpCaches.track(corpus.persist())
+      // Lazy: the round's first read is its pair count, which computes it.
+      val cached = OpCaches.materialize(corpus, eager = false)
       val t = split(trim(col("s")), "  ")
       val top = cached
         .select(col("cnt"), explode(arrays_zip(
@@ -222,11 +223,6 @@ object Corpus {
         .groupBy("l", "r").agg(sum("cnt").as("n"))
         .orderBy(col("n").desc, col("l"), col("r"))
         .limit(1).collect()
-      // The count action materialized `cached`; the round before it is
-      // no longer an input of anything — drop it so peak cache stays ~2
-      // corpus copies regardless of `rounds`.
-      prev.foreach(_.unpersist())
-      prev = Some(cached)
       if (top.isEmpty) exhausted = true // every word is one symbol
       else {
         val (l, rt, n) = (top(0).getString(0), top(0).getString(1),

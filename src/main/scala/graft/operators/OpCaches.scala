@@ -19,15 +19,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * making the cache unreleasable. Instead, entries for STOPPED sessions
   * (whose cached RDDs are already gone) are swept on every call, so an
   * abandoned-then-stopped session cannot leak for the JVM's life.
-  * Usage: operators wrap `persist()` in [[track]]; harnesses
-  * (Verify/Bench/GraftSession) call [[releaseAll]] between queries.
-  * Release contract, per kind:
-  *  - a [[track]]ed persist is only a cache: a DataFrame that reads it
-  *    stays valid after release and recomputes from its lineage;
-  *  - a [[trackCheckpoint]]ed relation is NOT: its local-checkpoint
+  * Harnesses (Verify/Bench/GraftSession) call [[releaseAll]] between
+  * queries. An operator holds an intermediate in one of three ways, and
+  * the release contract differs per kind:
+  *  - a [[track]]ed `persist()` is only a cache: a DataFrame that reads
+  *    it stays valid after release and recomputes from its lineage;
+  *  - a [[trackCheckpoint]]ed checkpoint view (a [[materialize]]d
+  *    relation registered as a temp view) is NOT: its local-checkpoint
   *    blocks are the only copy of the data, so that DataFrame (and any
   *    plan built on it) is invalid after release and fails when read.
-  *    Finish with such results before releasing.
+  *    Finish with such results before releasing;
+  *  - an untracked [[materialize]] is never touched by [[releaseAll]]:
+  *    it stays valid for as long as the DataFrame (or a plan built on it)
+  *    is reachable, and the ContextCleaner frees its blocks after that.
   */
 object OpCaches {
   private val tracked = scala.collection.mutable.Map
@@ -46,6 +50,26 @@ object OpCaches {
     tracked.filterInPlace((s, _) => !s.sparkContext.isStopped)
     checkpointed.filterInPlace((s, _) => !s.sparkContext.isStopped)
   }
+
+  /** The one way an operator materializes an intermediate: a reliable
+    * (dir-based) checkpoint when `sparkContext.setCheckpointDir` was
+    * called, executor-local otherwise — set a checkpoint dir at cluster
+    * scale so executor loss cannot orphan a long loop. Unlike `persist()`
+    * it truncates the lineage, so an iterative loop's plan stays
+    * constant-size, and the relation keeps the partitioning AQE chose
+    * when it ran: Spark builds a persisted plan with AQE's final-stage
+    * coalescing off, which freezes `spark.sql.shuffle.partitions` (200 by
+    * default) into every relation read from the cache. Untracked: the
+    * ContextCleaner frees the blocks once the DataFrame is unreachable
+    * (`unpersist()` is a no-op on them). `eager = false` defers the
+    * final stage to the relation's first action: right when that action
+    * reads every partition (an aggregate), which then pays one job for
+    * both; wrong before a `limit`/`isEmpty`, which reads only some.
+    * (A reliable checkpoint's deferred write recomputes that stage once.)
+    */
+  def materialize(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 
   def track(df: DataFrame): DataFrame = tracked.synchronized {
     sweepStopped()
@@ -81,7 +105,7 @@ object OpCaches {
       df.queryExecution.logical match {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.unpersist(false): Unit
-        case _ => () // reliable (dir-based) checkpoint: no blocks to drop
+        case _ => () // not checkpoint-backed: no checkpoint blocks to drop
       }
     })
   }

@@ -27,8 +27,21 @@ import org.apache.spark.sql.DataFrame
   *
   * Total cost: two balanced full-data shuffles (range + pid-hash) and a
   * broadcast join — no single-task stage anywhere, at any scale.
+  *
+  * `numPartitions` fixes the range shuffle's partition count; the
+  * default (0) leaves it to AQE, which sizes it from the data the
+  * shuffle carries. AQE coalesces only ADJACENT range partitions, so
+  * every partition still holds one contiguous key range. The locally
+  * summed relation is [[OpCaches.materialize]]d, so the partition ids
+  * it carries are the ones the offsets are computed from.
   */
 object Prefix {
+
+  /** Range partitioning at a fixed count, or at the count AQE picks. */
+  private def rangePartitioned(df: DataFrame, numPartitions: Int,
+      cols: Seq[org.apache.spark.sql.Column]): DataFrame =
+    if (numPartitions > 0) df.repartitionByRange(numPartitions, cols: _*)
+    else df.repartitionByRange(cols: _*)
 
   /** Adds a global 1-based row index (`idxCol`) ordered by `orderCol`,
     * plus one global running-sum column per `(valueCol, outCol)` pair —
@@ -61,8 +74,6 @@ object Prefix {
       numPartitions: Int = 0, tieCols: Seq[String] = Nil,
       groupCols: Seq[String] = Nil, totalCountCol: String = ""): DataFrame = {
     val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
     sums.foreach { case (v, _) =>
       val t = df.schema(v).dataType
       require(t == LongType || t == DoubleType,
@@ -71,7 +82,8 @@ object Prefix {
     require(totalCountCol.isEmpty || groupCols.isEmpty,
       "withRunningSums: totalCountCol is not supported with groupCols")
     if (groupCols.nonEmpty)
-      return withGroupedRunningSums(df, orderCol, sums, idxCol, n, tieCols, groupCols)
+      return withGroupedRunningSums(df, orderCol, sums, idxCol, numPartitions,
+        tieCols, groupCols)
     val orderCols = col(orderCol) +: tieCols.map(col)
     val wBase = Window.partitionBy("_pid").orderBy(orderCols: _*)
     // Explicit ROWS frame: the default for an ordered window is RANGE
@@ -81,15 +93,15 @@ object Prefix {
     // replaces.
     val wRows = wBase.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = sums.foldLeft(
-      df.repartitionByRange(n, orderCols: _*)
+      rangePartitioned(df, numPartitions, orderCols)
         .withColumn("_pid", spark_partition_id())
         .withColumn("_lidx", row_number().over(wBase).cast("long"))) {
       case (acc, (v, out)) =>
         acc.withColumn(s"_loc_$out", sum(col(v)).over(wRows))
     }
-    // Read twice (totals + result join): materialize once.
-    val localP = OpCaches.track(local
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // Read twice (totals + result join): materialize once. Lazy: the
+    // totals collect is the first read and computes every partition.
+    val localP = OpCaches.materialize(local, eager = false)
     val aggs = count(lit(1)).as("_n") +:
       sums.map { case (v, out) => sum(col(v)).as(s"_tot_$out") }
     val totals = localP.groupBy("_pid").agg(aggs.head, aggs.tail: _*)
@@ -162,7 +174,7 @@ object Prefix {
     */
   private def withGroupedRunningSums(
       df: DataFrame, orderCol: String, sums: Seq[(String, String)],
-      idxCol: String, n: Int, tieCols: Seq[String],
+      idxCol: String, numPartitions: Int, tieCols: Seq[String],
       groupCols: Seq[String]): DataFrame = {
     val spark = df.sparkSession
     val orderCols = col(orderCol) +: tieCols.map(col)
@@ -170,14 +182,13 @@ object Prefix {
       .orderBy(orderCols: _*)
     val wRows = wBase.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = sums.foldLeft(
-      df.repartitionByRange(n, (groupCols.map(col) ++ orderCols): _*)
+      rangePartitioned(df, numPartitions, groupCols.map(col) ++ orderCols)
         .withColumn("_pid", spark_partition_id())
         .withColumn("_lidx", row_number().over(wBase).cast("long"))) {
       case (acc, (v, out)) =>
         acc.withColumn(s"_loc_$out", sum(col(v)).over(wRows))
     }
-    val localP = OpCaches.track(local
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val localP = OpCaches.materialize(local, eager = false)
     val aggs = count(lit(1)).as("_n") +:
       sums.map { case (v, out) => sum(col(v)).as(s"_tot_$out") }
     val totals = localP.groupBy(("_pid" +: groupCols).map(col): _*)
@@ -257,8 +268,6 @@ object Prefix {
       numPartitions: Int = 0, tieCols: Seq[String] = Nil,
       groupCols: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
     val t = df.schema(valueCol).dataType
     require(t == LongType || t == DoubleType,
       s"withRunningMinExclusive: $valueCol must be LONG or DOUBLE, got $t")
@@ -266,12 +275,11 @@ object Prefix {
     val wBase = Window.partitionBy(("_pid" +: groupCols).map(col): _*)
       .orderBy(orderCols: _*)
     val wExcl = wBase.rowsBetween(Window.unboundedPreceding, -1)
-    val local = df
-      .repartitionByRange(n, (groupCols.map(col) ++ orderCols): _*)
-      .withColumn("_pid", spark_partition_id())
-      .withColumn("_lmin", min(col(valueCol)).over(wExcl))
-    val localP = OpCaches.track(local
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val localP = OpCaches.materialize(
+      rangePartitioned(df, numPartitions, groupCols.map(col) ++ orderCols)
+        .withColumn("_pid", spark_partition_id())
+        .withColumn("_lmin", min(col(valueCol)).over(wExcl)),
+      eager = false)
     val totals = localP.groupBy(("_pid" +: groupCols).map(col): _*)
       .agg(min(col(valueCol)).as("_tot")).orderBy("_pid").collect()
     val g = groupCols.size

@@ -62,4 +62,16 @@ class OpCachesSpec extends AnyFunSuite {
     val e = intercept[org.apache.spark.SparkException](ck.collect())
     assert(e.getMessage.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"), e.getMessage)
   }
+
+  test("release contract: a materialized operator result stays valid after releaseAll") {
+    OpCaches.releaseAll(spark)
+    import spark.implicits._
+    val df = graft.operators.Prefix.withRunningSums(
+      (1 to 200).map(i => ((i * 37) % 211, i.toLong)).toDF("k", "v"),
+      "k", Seq("v" -> "rv"))
+    val rows = df.collect().toSeq
+    OpCaches.releaseAll(spark)
+    assert(df.collect().toSeq == rows,
+      "an untracked materialize is not released: the result must still read")
+  }
 }

@@ -231,6 +231,36 @@ class PlanAuditSpec extends AnyFunSuite {
   private def finalPlan(plan: String): String =
     plan.split("== Initial Plan ==").head
 
+  /** The final plan of entry `name`, followed by the final plan of every
+    * checkpoint the entry ran. Operators materialize intermediates through
+    * `OpCaches.materialize`, so a relation such as Prefix's locally summed
+    * windows runs as its own checkpoint execution: its plan is not nested
+    * in the entry's final plan the way a persisted relation's was.
+    */
+  private def planWithCheckpoints(name: String): String = {
+    Tables.registerAll(spark, dir)
+    val sc = spark.sparkContext
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "checkpoint" || funcName == "localCheckpoint")
+          checkpoints.add(finalPlan(qe.executedPlan.toString)): Unit
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    spark.listenerManager.register(listener)
+    try {
+      val df = Queries.queryMap(name)(spark, dir)
+      df.collect()
+      org.apache.spark.ListenerDrain(sc)
+      import scala.jdk.CollectionConverters._
+      (finalPlan(df.queryExecution.executedPlan.toString) +: checkpoints.asScala.toSeq)
+        .mkString("\n")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("ROLLUP plans one Expand + hash aggregate, not a union of scans") {
     val plan = finalPlan(planOf("q_rollup"))
     assert(plan.contains("Expand"), s"rollup should use Expand:\n$plan")
@@ -285,13 +315,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // plan shape that cannot survive a 100x scale-up. The Prefix rewrite
     // must leave every WindowExec with a real partition key (_pid) and no
     // single-partition exchange anywhere.
-    Tables.registerAll(spark, dir)
-    val df = Queries.queryMap("q_window_running")(spark, dir)
-    df.collect()
-    val plan = finalPlan(df.queryExecution.executedPlan.toString)
-    // The per-partition windows live inside the persisted local-prefix
-    // relation's nested plan — match any operator line carrying a window
-    // spec, at any nesting depth.
+    val plan = planWithCheckpoints("q_window_running")
+    // The per-partition windows live in the local-prefix relation's
+    // checkpoint plan — match any operator line carrying a window spec,
+    // in any of the plans.
     val windowLines = plan.linesIterator
       .filter(l => l.contains("Window [") && l.contains("windowspecdefinition")).toSeq
     assert(windowLines.nonEmpty, s"expected the per-partition windows in:\n$plan")
@@ -334,9 +361,7 @@ class PlanAuditSpec extends AnyFunSuite {
         // the lag-1 rank autocorrelation.
         "q_spearman", "q_vocab_coverage", "q_brier_score",
         "q_calibration", "q_rank_autocorr")) {
-      val df = Queries.queryMap(name)(spark, dir)
-      df.collect()
-      val plan = finalPlan(df.queryExecution.executedPlan.toString)
+      val plan = planWithCheckpoints(name)
       val windowLines = plan.linesIterator
         .filter(l => l.contains("Window [") && l.contains("windowspecdefinition")).toSeq
       assert(windowLines.nonEmpty, s"$name: expected prefix windows in:\n$plan")
@@ -346,9 +371,14 @@ class PlanAuditSpec extends AnyFunSuite {
       if (!boundedScalarReduce(name))
         assert(!plan.contains("Exchange SinglePartition"),
           s"$name: single-partition exchange:\n$plan")
-      else
-        assert(plan.linesIterator.count(_.contains("Exchange SinglePartition")) <= 1,
+      else {
+        // By plan id: a cached relation's exchange shows once in every
+        // checkpoint plan that reads the cache, and it is one exchange.
+        val singles = "Exchange SinglePartition[^\n]*plan_id=(\\d+)".r
+          .findAllMatchIn(plan).map(_.group(1)).toSet
+        assert(singles.size <= 1,
           s"$name: more single-partition exchanges than its one bounded reduce:\n$plan")
+      }
       graft.operators.OpCaches.releaseAll(spark)
     }
   }
@@ -466,10 +496,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // The grouped prefix sum must never fall back to a PARTITION BY lang
     // window (one task per language) — every WindowExec partitions by
     // (_pid, lang) and the per-group cap table joins as a broadcast.
-    Tables.registerAll(spark, dir)
-    val df = Queries.queryMap("q_mixture_sample")(spark, dir)
-    df.collect()
-    val plan = finalPlan(df.queryExecution.executedPlan.toString)
+    val plan = planWithCheckpoints("q_mixture_sample")
     val windowLines = plan.linesIterator
       .filter(l => l.contains("Window [") && l.contains("windowspecdefinition")).toSeq
     assert(windowLines.nonEmpty, s"expected grouped per-partition windows in:\n$plan")

@@ -265,4 +265,21 @@ class PrefixSpec extends AnyFunSuite {
     assert(gotGr == wantGr)
     assert(wantGr.count(_._2.isEmpty) == 2, "one NULL head per group")
   }
+
+  test("the AQE-sized default partitioning gives the same rows as numPartitions = 8") {
+    // The cases above pass explicit counts, so they keep the offsets
+    // crossing partitions; this one pins the default (AQE picks the count).
+    // Keys are unique and the doubles are halves, so the rows are exact.
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val g = groupedSample
+    val sums = Seq("cnt" -> "rc", "price" -> "rp")
+    assert(rows(Prefix.withRunningSums(g, "k", sums)) ==
+      rows(Prefix.withRunningSums(g, "k", sums, numPartitions = 8)))
+    assert(rows(Prefix.withRunningSums(g, "k", sums, groupCols = Seq("g"))) ==
+      rows(Prefix.withRunningSums(g, "k", sums, groupCols = Seq("g"), numPartitions = 8)))
+    assert(rows(Prefix.withRunningMinExclusive(g, "k", "cnt", "m", groupCols = Seq("g"))) ==
+      rows(Prefix.withRunningMinExclusive(g, "k", "cnt", "m", numPartitions = 8,
+        groupCols = Seq("g"))))
+  }
 }
