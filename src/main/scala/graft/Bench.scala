@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.VectorMap
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every query entry at SPARK_GRAFT_SF_DIR and prints
@@ -18,6 +19,22 @@ object Bench {
   def defaultFullOut: java.nio.file.Path =
     java.nio.file.Paths.get(
       sys.env.getOrElse("GRAFT_BENCH_OUT", "target/bench_full.json"))
+
+  /** Headline subset: stable keys for round-over-round comparison. They
+    * are always on the compact line and take the median-of-3 warm laps.
+    */
+  val Headline = Vector(
+    "q1_agg", "q_scan_full", "q_join_inner", "q_join_multiway",
+    "q_count_distinct", "q_orderby_limit", "q_window_running",
+    "q_sessionize_batch", "q_compass_multiway", "q_compass_filtered",
+    "q_compass_6way", "q_compass_9way", "q_compass_12way",
+    "q_compass_17way", "q_compass_quality",
+    "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash", "q_dedup_ngram",
+    "q_dedup_components", "q_ann_exact", "q_ann_lsh", "q_ann_ivf",
+    "q_ann_ivf_indexed", "q_ann_neardup",
+    "q_asof_join", "q_range_join", "q_lang_id", "q_text_pipeline",
+    "q_lm_score", "q_curation_e2e",
+    "q_events_window", "q_job_corpus")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -122,20 +139,6 @@ object Bench {
       // first timed cold lap.
       try StreamQueries.warmMachinery(spark, sfDir)
       catch { case NonFatal(_) => () }
-    // Headline subset: stable keys for round-over-round comparison; these
-    // also get the median-of-3 warm treatment below.
-    val headline = Vector(
-      "q1_agg", "q_scan_full", "q_join_inner", "q_join_multiway",
-      "q_count_distinct", "q_orderby_limit", "q_window_running",
-      "q_sessionize_batch", "q_compass_multiway", "q_compass_filtered",
-      "q_compass_6way", "q_compass_9way", "q_compass_12way",
-      "q_compass_17way", "q_compass_quality",
-      "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash", "q_dedup_ngram",
-      "q_dedup_components", "q_ann_exact", "q_ann_lsh", "q_ann_ivf",
-      "q_ann_ivf_indexed", "q_ann_neardup",
-      "q_asof_join", "q_range_join", "q_lang_id", "q_text_pipeline",
-      "q_lm_score", "q_curation_e2e",
-      "q_events_window", "q_job_corpus")
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Either[String, Double]]
     val warmTimings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // Per-entry warm spread [min, median, max] — single-shot times on
@@ -267,7 +270,7 @@ object Bench {
         val longRunning = Set("q_job_corpus")
         val nLaps = if (checkpointHeavy(e.name)) 5
           else if (longRunning(e.name)) 1
-          else if (headline.contains(e.name)) 3 else 1
+          else if (Headline.contains(e.name)) 3 else 1
         // Lazy: the first failed lap ends the entry's warm laps.
         val warm = Iterator.fill(nLaps) {
           // Between-lap heap settle for the jittery trio: an eager
@@ -293,101 +296,113 @@ object Bench {
         }
       }
     }
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString }
-    def jsonOf(m: Iterable[(String, Either[String, Double])]): String = m.map {
-      // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
-      case (k, Right(t)) =>
-        s""""${esc(k)}":${String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))}"""
-      case (k, Left(err)) => s""""${esc(k)}":"error: ${esc(err)}""""
-    }.mkString("{", ",", "}")
-    val total = timings.values.collect { case Right(t) => t }.sum
-    val nErr = timings.values.count(_.isLeft)
-    // The driver captures only the LAST 2000 characters of output and
-    // parses the JSON line it finds there; a full 110-entry map is ~3.3 kB
-    // and can never fit (r3-r5 all recorded parsed:null). So: the full
-    // per-entry map goes to a FILE, and stdout gets ONE compact line — a
-    // fixed representative subset (stable keys, round-over-round
-    // comparable) plus this run's slowest entries and the totals.
-    val warmTotal = warmTimings.values.sum
-    def f3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    val spreadJson = warmSpread.map { case (k, (mn, md, mx)) =>
-      s""""${esc(k)}":[${f3(mn)},${f3(md)},${f3(mx)}]"""
-    }.mkString("{", ",", "}")
-    // Planning-overhead split for the COMPASS-path JOB subset — the
-    // per-query (sketch, enumerate, exec) ms the reference prints per
-    // query, keyed by the ENTRY whose timed cold run produced them.
-    // Totals go on the compact stdout line; per-query triples only fit
-    // the file.
-    def planningTotals(runs: Seq[graft.job.JobCorpus.CompassRun]): String =
-      s""""sketch_ms":${runs.map(_.sketchMs).sum},"enumerate_ms":${runs.map(_.enumerateMs).sum},"exec_ms":${runs.map(_.execMs).sum}"""
-    val jobPlanningFull = jobPlanning.map { case (entry, runs) =>
-      s""""${esc(entry)}":""" + runs.map(r =>
-          s""""${esc(r.name)}":[${r.sketchMs},${r.enumerateMs},${r.execMs}]""")
-        .mkString(s"""{${planningTotals(runs)},"per_query_sketch_enum_exec_ms":{""", ",", "}}")
-    }.mkString("{", ",", "}")
-    // Per-family (plan, compass-spine, naive-spine) ms decomposition of
-    // the quality battery's wall time — the r11 warm-lap anomaly was
-    // undiagnosable because the entry's 77 s was one opaque number.
-    val jobQualityFull = jobQuality.map { case (entry, reports) =>
-      s""""${esc(entry)}":""" + reports.map(r =>
-          s""""${esc(r.family)}":[${r.planMs},${r.compassExecMs},${r.naiveExecMs}]""")
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    val jobLatencyJson = jobLatency.map { case (k, (med, p90, mx, n)) =>
-      s""""${esc(k)}":{"median_ms":$med,"p90_ms":$p90,"max_ms":$mx,"n":$n}"""
-    }.mkString("{", ",", "}")
-    // Per-family [n, median_ms, max_ms] — families sorted numerically so
-    // the record diffs cleanly round-over-round. Full file only.
-    val jobFamilyJson = jobFamilyLatency.map { case (entry, fams) =>
-      s""""${esc(entry)}":""" + fams.toSeq
-        .sortBy { case (f, _) => f.toIntOption.getOrElse(Int.MaxValue) }
-        .map { case (f, (n, med, mx)) => s""""${esc(f)}":[$n,$med,$mx]""" }
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    // Per-streaming-entry [n_batches, median_ms, max_ms] — full map in
-    // the file; the compact stdout line carries only the 3 largest-max
-    // entries (the ~2000-char driver window cannot fit 13 more keys).
-    def streamJson(m: Iterable[(String, (Int, Long, Long))]): String =
-      m.map { case (k, (n, md, mx)) => s""""${esc(k)}":[$n,$md,$mx]""" }
-        .mkString("{", ",", "}")
-    // Per-lap [wall_ms, gc_ms, jit_ms] for every entry, cold lap first —
-    // the warm>cold attribution channel (r16 verdict #4).
-    val lapTelemetryJson = lapTelemetry.map { case (k, lapsT) =>
-      s""""${esc(k)}":[${lapsT.map { case (w, g, j) => s"[$w,$g,$j]" }.mkString(",")}]"""
-    }.mkString("{", ",", "}")
-    // Cold-lap driver footprint: [task-result KB shipped to the driver,
-    // heap high-water MB]. Full record only (40+ keys never fit the
-    // driver's ~2000-char stdout window).
-    val driverPeaksJson = driverPeaks.map { case (k, (rb, hp)) =>
-      s""""${esc(k)}":[${rb >> 10},${hp >> 20}]"""
-    }.mkString("{", ",", "}")
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonOf(timings)},"warm_total":$warmTotal,"warm":${jsonOf(warmTimings.map { case (k, v) => k -> Right(v) })},"warm_spread":$spreadJson,"lap_wall_gc_jit_ms":$lapTelemetryJson,"driver_ingress_kb_heap_peak_mb":$driverPeaksJson,"job_planning":$jobPlanningFull,"job_quality_plan_compass_naive_ms":$jobQualityFull,"job_corpus_latency":$jobLatencyJson,"job_corpus_family_n_med_max_ms":$jobFamilyJson,"stream_batches":${streamJson(streamBatches)},"errors":$nErr,"sf":"$sfDir"}"""
+    val record = Record(sfDir, fullOut.toString, timings, warmTimings,
+      warmSpread, lapTelemetry, driverPeaks, jobPlanning, jobQuality,
+      jobLatency, jobFamilyLatency, streamBatches)
     Option(fullOut.toAbsolutePath.getParent)
       .foreach(p => java.nio.file.Files.createDirectories(p): Unit)
-    java.nio.file.Files.write(fullOut,
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-    val slow = timings.collect { case (k, Right(t)) => k -> t }.toSeq
-      .sortBy(-_._2).take(5)
-    val compact = (headline.flatMap(k => timings.get(k).map(k -> _)) ++
-      timings.filter(_._2.isLeft).take(5) ++ // cap: mass failure must still fit the window
-      slow.filterNot(kv => headline.contains(kv._1)).map { case (k, t) => k -> Right(t) }
-      ).distinctBy(_._1)
-    def f2(d: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(d))
-    // The 3 widest warm spreads (max/min ratio) go on the compact line:
-    // the driver's window is ~2000 chars, so the full spread map stays in
-    // BENCH_FULL.json and stdout carries just enough to flag noise.
-    val noisiest = warmSpread.toSeq
-      .sortBy { case (_, (mn, _, mx)) => -(mx / math.max(mn, 1e-9)) }.take(3)
-      .map { case (k, (mn, md, mx)) =>
-        s""""${esc(k)}":[${f2(mn)},${f2(md)},${f2(mx)}]"""
-      }.mkString("{", ",", "}")
-    val jobPlanningCompact = jobPlanning.map { case (entry, runs) =>
-      s""""${esc(entry)}":{${planningTotals(runs)}}"""
-    }.mkString("{", ",", "}")
-    val streamNoisiest = streamJson(
-      streamBatches.toSeq.sortBy { case (_, (_, _, mx)) => -mx }.take(3))
-    s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":${jsonOf(compact)},"warm_total":${f2(warmTotal)},"warm_is_median_of_3":true,"warm_spread_noisiest":$noisiest,"job_planning":$jobPlanningCompact,"job_corpus_latency":$jobLatencyJson,"stream_batches_noisiest":$streamNoisiest,"errors":$nErr,"n_queries":${timings.size},"full":"$fullOut","sf":"$sfDir"}"""
+    java.nio.file.Files.write(fullOut, (Records.write(record.full) + "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+    Records.write(record.compact)
+  }
+
+  /** Failure text on the compact line is cut to this many chars (the full
+    * record keeps the lap's 120): five non-headline failures at 120 chars
+    * would push the line past the 2000-char window it is read from.
+    */
+  private val CompactErrorChars = 24
+
+  /** What one run measured, each map in run order. [[full]] is the record
+    * the file keeps; [[compact]] is the stdout line, a projection of it.
+    */
+  final case class Record(sf: String, fullOut: String,
+      queries: collection.Map[String, Either[String, Double]],
+      warm: collection.Map[String, Double],
+      warmSpread: collection.Map[String, (Double, Double, Double)],
+      lapWallGcJitMs: collection.Map[String, Vector[(Long, Long, Long)]],
+      driverPeaks: collection.Map[String, (Long, Long)],
+      jobPlanning: collection.Map[String, Seq[graft.job.JobCorpus.CompassRun]],
+      jobQuality: collection.Map[String, Seq[graft.planner.OptimizerQuality.Report]],
+      jobLatency: collection.Map[String, (Long, Long, Long, Int)],
+      jobFamilyLatency: collection.Map[String, Map[String, (Int, Long, Long)]],
+      streamBatches: collection.Map[String, (Int, Long, Long)]) {
+    private def total = queries.values.collect { case Right(t) => t }.sum
+    private def errors = queries.values.count(_.isLeft)
+    private def entries[V](m: Iterable[(String, V)])(f: V => Any) =
+      m.iterator.map { case (k, v) => k -> f(v) }.to(VectorMap)
+    private def seconds(t: Either[String, Double], errorChars: Int): Any =
+      t.fold("error: " + _.take(errorChars), Records.round(_, 3))
+    // Planning-overhead split for the COMPASS-path JOB subset: the
+    // per-query (sketch, enumerate, exec) ms the reference prints per
+    // query, keyed by the ENTRY whose timed lap produced them. Totals go
+    // on both lines; per-query triples only fit the file.
+    private def planningTotals(runs: Seq[graft.job.JobCorpus.CompassRun]) =
+      VectorMap("sketch_ms" -> runs.map(_.sketchMs).sum,
+        "enumerate_ms" -> runs.map(_.enumerateMs).sum,
+        "exec_ms" -> runs.map(_.execMs).sum)
+    private def corpusLatency = entries(jobLatency) { case (med, p90, mx, n) =>
+      VectorMap("median_ms" -> med, "p90_ms" -> p90, "max_ms" -> mx, "n" -> n)
+    }
+
+    def full: VectorMap[String, Any] = VectorMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> entries(queries)(seconds(_, Int.MaxValue)),
+      "warm_total" -> warm.values.sum,
+      "warm" -> entries(warm)(Records.round(_, 3)),
+      "warm_spread" -> entries(warmSpread) { case (mn, md, mx) =>
+        Seq(mn, md, mx).map(Records.round(_, 3)) },
+      // Per-lap [wall_ms, gc_ms, jit_ms], cold lap first: the warm>cold
+      // attribution channel (r16 verdict #4).
+      "lap_wall_gc_jit_ms" -> lapWallGcJitMs,
+      // Cold-lap [task-result KB shipped to the driver, heap high-water MB].
+      "driver_ingress_kb_heap_peak_mb" -> entries(driverPeaks) { case (rb, hp) =>
+        (rb >> 10, hp >> 20) },
+      "job_planning" -> entries(jobPlanning)(runs => planningTotals(runs) +
+        ("per_query_sketch_enum_exec_ms" -> entries(runs.map(r => r.name -> r))(r =>
+          (r.sketchMs, r.enumerateMs, r.execMs)))),
+      // Per-family (plan, compass-spine, naive-spine) ms of the quality
+      // battery: the r11 warm-lap anomaly was undiagnosable while the
+      // entry's 77 s was one opaque number.
+      "job_quality_plan_compass_naive_ms" -> entries(jobQuality)(reports =>
+        entries(reports.map(r => r.family -> r))(r =>
+          (r.planMs, r.compassExecMs, r.naiveExecMs))),
+      "job_corpus_latency" -> corpusLatency,
+      // Per-family [n, median_ms, max_ms], families sorted numerically so
+      // the record diffs cleanly round-over-round.
+      "job_corpus_family_n_med_max_ms" -> entries(jobFamilyLatency)(_.toSeq
+        .sortBy { case (f, _) => f.toIntOption.getOrElse(Int.MaxValue) }.to(VectorMap)),
+      // Per-streaming-entry [n_batches, median_ms, max_ms].
+      "stream_batches" -> streamBatches,
+      "errors" -> errors, "sf" -> sf)
+
+    /** The bench line is parsed from the LAST 2000 chars of output, and
+      * the full map can never fit (r3-r5 all recorded parsed:null). So
+      * stdout carries the headline entries, up to 5 failures and this
+      * run's 5 slowest other entries, the 3 widest warm spreads and the 3
+      * streaming entries with the largest batch max.
+      */
+    def compact: VectorMap[String, Any] = {
+      val slow = queries.collect { case (k, Right(t)) => k -> t }.toSeq
+        .sortBy(-_._2).take(5)
+      val shown = (Headline.flatMap(k => queries.get(k).map(k -> _)) ++
+        queries.filter(_._2.isLeft).take(5) ++
+        slow.filterNot(kv => Headline.contains(kv._1)).map { case (k, t) => k -> Right(t) }
+        ).distinctBy(_._1)
+      val noisiest = warmSpread.toSeq
+        .sortBy { case (_, (mn, _, mx)) => -(mx / math.max(mn, 1e-9)) }.take(3)
+      VectorMap(
+        "metric" -> "total", "value" -> Records.round(total, 2), "unit" -> "sec",
+        "queries" -> entries(shown)(seconds(_, CompactErrorChars)),
+        "warm_total" -> Records.round(warm.values.sum, 2),
+        "warm_is_median_of_3" -> true,
+        "warm_spread_noisiest" -> entries(noisiest) { case (mn, md, mx) =>
+          Seq(mn, md, mx).map(Records.round(_, 2)) },
+        "job_planning" -> entries(jobPlanning)(planningTotals),
+        "job_corpus_latency" -> corpusLatency,
+        "stream_batches_noisiest" -> streamBatches.toSeq
+          .sortBy { case (_, (_, _, mx)) => -mx }.take(3).to(VectorMap),
+        "errors" -> errors, "n_queries" -> queries.size,
+        "full" -> fullOut, "sf" -> sf)
+    }
   }
 }

@@ -43,18 +43,6 @@ object Verify {
       // useful within one query's action.
       graft.operators.OpCaches.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Partial-soundness oracles (ANN / signature entries) re-derive the
     // checkable columns of the SPARK RESULT: the SQL reads this run's
     // dump via read_parquet, so the output dir is substituted here, at
@@ -65,11 +53,16 @@ object Verify {
     // (x1-vs-x1 at the driver's sf0.01; x10-vs-x10 under an sf0.1 audit).
     val jobDir = graft.job.JobCorpus.dataPathFor(
       graft.job.JobCorpus.scaleFor(sfDir))
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(Queries.VerifyOutToken, absOut)
-          .replace(graft.job.JobCorpus.JobDataToken, jobDir))}"
-      }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json): Unit
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql, absOut, jobDir)): Unit
   }
+
+  /** `oracle_sql.json`: each entry's DuckDB SQL with this run's output and
+    * JOB data dirs substituted for their tokens.
+    */
+  def oracleJson(sql: Map[String, String], absOut: String, jobDir: String): String =
+    Records.write(sql.map { case (k, v) =>
+      k -> v.replace(Queries.VerifyOutToken, absOut)
+        .replace(graft.job.JobCorpus.JobDataToken, jobDir)
+    })
 }

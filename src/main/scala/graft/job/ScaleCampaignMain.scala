@@ -2,6 +2,8 @@ package graft.job
 
 import org.apache.spark.sql.SparkSession
 import graft.planner.{CompassSession, SketchTemplateCache}
+import graft.Records
+import scala.collection.immutable.VectorMap
 import scala.concurrent.duration._
 
 /** r17 verdict #1/#2 — the scale campaign: RUN the volume-gated claims
@@ -103,10 +105,8 @@ object ScaleCampaignMain {
       outcomes.collect { case Left(q) => q }.sorted, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def lapJson(l: Lap): String = {
+  private[graft] def lapRecord(l: Lap): VectorMap[String, Any] = {
     val v = l.latMs.values.toSeq.sorted
-    val top = l.latMs.toSeq.sortBy(-_._2).take(5)
-      .map { case (q, t) => s""""$q":$t""" }.mkString(",")
     // Per-family [n, median_ms, sum_ms] (r22, verdict #4): the routing
     // decision is per FAMILY, so the facet must attribute latency at
     // that grain — the p50/p90 summary hides which families would win
@@ -115,15 +115,15 @@ object ScaleCampaignMain {
       .toSeq.sortBy { case (f, _) => f.toIntOption.getOrElse(Int.MaxValue) }
       .map { case (f, qs) =>
         val xs = qs.values.toSeq.sorted
-        s""""$f":[${xs.size},${xs(xs.size / 2)},${xs.sum}]"""
-      }.mkString("{", ",", "}")
-    val stats =
-      if (v.isEmpty) """"p50_ms":0,"p90_ms":0,"max_ms":0,"top5":{}"""
-      else s""""p50_ms":${v(v.size / 2)},"p90_ms":${v((v.size * 9) / 10)},""" +
-        s""""max_ms":${v.last},"top5":{$top}"""
-    s"""{"wall_s":${f"${l.wallS}%.1f"},"completed":${l.counts.size},""" +
-      s""""timeouts":${l.timeouts.map("\"" + _ + "\"").mkString("[", ",", "]")},$stats,""" +
-      s""""families_n_med_sum_ms":$fams}"""
+        f -> ((xs.size, xs(xs.size / 2), xs.sum))
+      }.to(VectorMap)
+    VectorMap("wall_s" -> Records.round(l.wallS, 1), "completed" -> l.counts.size,
+      "timeouts" -> l.timeouts,
+      "p50_ms" -> v.lift(v.size / 2).getOrElse(0L),
+      "p90_ms" -> v.lift((v.size * 9) / 10).getOrElse(0L),
+      "max_ms" -> v.lastOption.getOrElse(0L),
+      "top5" -> l.latMs.toSeq.sortBy(-_._2).take(5).to(VectorMap),
+      "families_n_med_sum_ms" -> fams)
   }
 
   /** Chooser-routed corpus laps (r18 facet 1, r19 verdict #5): one side
@@ -157,12 +157,17 @@ object ScaleCampaignMain {
       .filter(q => laps.flatMap(_.counts.get(q)).distinct.size > 1)
     require(diverging.isEmpty,
       s"profile counts diverge at x$m on: ${diverging.sorted.take(5)}")
-    val common = laps.map(_.counts.keySet).reduce(_ intersect _)
-    println(s"""{"facet":"profiles","m":$m,"queries":113,""" +
-      s""""routed_profile":"${if (routedTrim) "interactive-trim" else "default"}",""" +
-      s""""cap_sec":$QueryCapSec,"counts_equal_on":${common.size},""" +
-      s""""routed_cold":${lapJson(coldR)},"other_cold":${lapJson(coldO)},""" +
-      s""""routed_warm":${lapJson(warmR)},"other_warm":${lapJson(warmO)}}""")
+    println(Records.write(profilesRecord(m, routedTrim, coldR, coldO, warmR, warmO)))
+  }
+
+  private[graft] def profilesRecord(m: Int, routedTrim: Boolean,
+      coldR: Lap, coldO: Lap, warmR: Lap, warmO: Lap): VectorMap[String, Any] = {
+    val common = Seq(coldR, coldO, warmR, warmO).map(_.counts.keySet).reduce(_ intersect _)
+    VectorMap("facet" -> "profiles", "m" -> m, "queries" -> 113,
+      "routed_profile" -> (if (routedTrim) "interactive-trim" else "default"),
+      "cap_sec" -> QueryCapSec, "counts_equal_on" -> common.size,
+      "routed_cold" -> lapRecord(coldR), "other_cold" -> lapRecord(coldO),
+      "routed_warm" -> lapRecord(warmR), "other_warm" -> lapRecord(warmO))
   }
 
   /** Full corpus through COMPASS on a PRODUCTION-conf session. Counts
@@ -181,24 +186,27 @@ object ScaleCampaignMain {
       val nTemplates = JobCorpus.warmCompassAt(spark, cs, m)
       val (runsCold, tCold) = timed(JobCorpus.runCompassFull(spark, cs, m))
       val (runsWarm, tWarm) = timed(JobCorpus.runCompassFull(spark, cs, m))
-      val cCmp = runsCold.map(r => r.name -> r.count).toMap
-      def split(rs: Seq[JobCorpus.CompassRun]): (Long, Long, Long) =
-        (rs.map(_.sketchMs).sum, rs.map(_.enumerateMs).sum, rs.map(_.execMs).sum)
-      val (skC, enC, exC) = split(runsCold)
-      val (skW, enW, exW) = split(runsWarm)
-      val execTop = runsCold.sortBy(-_.execMs).take(5)
-        .map(r => s""""${r.name}":${r.execMs}""").mkString(",")
-      val countsJson = cCmp.toSeq.sorted
-        .map { case (q, n) => s""""$q":$n""" }.mkString(",")
-      println(s"""{"facet":"compass","m":$m,"queries":${cCmp.size},""" +
-        s""""templates":$nTemplates,""" +
-        s""""compass_cold_s":${f"$tCold%.1f"},"compass_warm_s":${f"$tWarm%.1f"},""" +
-        s""""cold_ms":{"sketch":$skC,"enumerate":$enC,"exec":$exC},""" +
-        s""""warm_ms":{"sketch":$skW,"enumerate":$enW,"exec":$exW},""" +
-        s""""planning_fraction_cold":${f"${(skC + enC).toDouble / math.max(1, skC + enC + exC)}%.3f"},""" +
-        s""""planning_fraction_warm":${f"${(skW + enW).toDouble / math.max(1, skW + enW + exW)}%.3f"},""" +
-        s""""exec_top5_ms":{$execTop},"counts":{$countsJson}}""")
+      println(Records.write(compassRecord(m, nTemplates, runsCold, tCold, runsWarm, tWarm)))
     } finally cs.close()
+  }
+
+  private[graft] def compassRecord(m: Int, nTemplates: Int,
+      runsCold: Seq[JobCorpus.CompassRun], tCold: Double,
+      runsWarm: Seq[JobCorpus.CompassRun], tWarm: Double): VectorMap[String, Any] = {
+    def split(rs: Seq[JobCorpus.CompassRun]) = VectorMap("sketch" -> rs.map(_.sketchMs).sum,
+      "enumerate" -> rs.map(_.enumerateMs).sum, "exec" -> rs.map(_.execMs).sum)
+    def planningFraction(ms: VectorMap[String, Long]) = Records.round(
+      (ms("sketch") + ms("enumerate")).toDouble / math.max(1, ms.values.sum), 3)
+    val (cold, warm) = (split(runsCold), split(runsWarm))
+    val counts = runsCold.map(r => r.name -> r.count).toMap
+    VectorMap("facet" -> "compass", "m" -> m, "queries" -> counts.size,
+      "templates" -> nTemplates,
+      "compass_cold_s" -> Records.round(tCold, 1), "compass_warm_s" -> Records.round(tWarm, 1),
+      "cold_ms" -> cold, "warm_ms" -> warm,
+      "planning_fraction_cold" -> planningFraction(cold),
+      "planning_fraction_warm" -> planningFraction(warm),
+      "exec_top5_ms" -> runsCold.sortBy(-_.execMs).take(5).map(r => r.name -> r.execMs).to(VectorMap),
+      "counts" -> counts.toSeq.sorted.to(VectorMap))
   }
 
   /** r21 verdict #7 — adjudicate the ×100 cap-outs at plan level: ONE
@@ -211,16 +219,21 @@ object ScaleCampaignMain {
     val dflt = JobCorpus.session(spark, trim = false, m)
     val lap = cappedLap(dflt)
     val byName = JobCorpus.queries.toMap
-    val planSummaries = lap.timeouts.map { q =>
-      val plan = dflt.sql(byName(q)).queryExecution.executedPlan.toString
+    println(Records.write(capoutsRecord(m, lap, lap.timeouts.map(q =>
+      q -> dflt.sql(byName(q)).queryExecution.executedPlan.toString))))
+  }
+
+  private[graft] def capoutsRecord(m: Int, lap: Lap,
+      plans: Seq[(String, String)]): VectorMap[String, Any] = {
+    val planSummaries = plans.map { case (q, plan) =>
       def n(pat: String) = pat.r.findAllIn(plan).size
-      s""""$q":{"smj":${n("SortMergeJoin")},"bhj":${n("BroadcastHashJoin")},""" +
-        s""""shj":${n("ShuffledHashJoin")},"exchanges":${n("Exchange ")},""" +
-        s""""nested_loop":${n("NestedLoop")}}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"facet":"capouts","m":$m,"cap_sec":$QueryCapSec,""" +
-      s""""completed":${lap.counts.size},"wall_s":${f"${lap.wallS}%.1f"},""" +
-      s""""timeouts":${lap.timeouts.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""timeout_plans":$planSummaries,"lap":${lapJson(lap)}}""")
+      q -> VectorMap("smj" -> n("SortMergeJoin"), "bhj" -> n("BroadcastHashJoin"),
+        "shj" -> n("ShuffledHashJoin"), "exchanges" -> n("Exchange "),
+        "nested_loop" -> n("NestedLoop"))
+    }
+    VectorMap("facet" -> "capouts", "m" -> m, "cap_sec" -> QueryCapSec,
+      "completed" -> lap.counts.size, "wall_s" -> Records.round(lap.wallS, 1),
+      "timeouts" -> lap.timeouts, "timeout_plans" -> planSummaries.to(VectorMap),
+      "lap" -> lapRecord(lap))
   }
 }

@@ -40,19 +40,8 @@ object Components {
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 25): DataFrame = {
-    // Symmetrize once; every round's neighbor-min join reads this
-    // relation. The input lineage (e.g. a full MinHash-LSH pipeline) is
-    // materialized FIRST so the two union branches don't each recompute
-    // it — measured 2× the whole upstream cost without this. Lazy: its
-    // first read is `sym`'s checkpoint, which computes it once.
-    val directed = OpCaches.materialize(
-      edges
-        .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a") =!= col("b")), // also drops null-id edges
-      eager = false)
-    val sym = OpCaches.materialize(
-      directed.union(directed.select(col("b").as("a"), col("a").as("b")))
-        .distinct())
+    // Symmetrize once; every round's neighbor-min join reads this relation.
+    val sym = symmetric(edges, srcCol, dstCol)
 
     // comp₀ = min(id, min neighbor) — one aggregate seeds the labels.
     var labels = OpCaches.materialize(
@@ -185,35 +174,12 @@ object Components {
       sources: Seq[Long], maxHops: Int): DataFrame = {
     require(sources.nonEmpty, "bfsHops: at least one source node")
     require(maxHops >= 0, s"bfsHops: maxHops must be >= 0, got $maxHops")
-    val directed = OpCaches.materialize(
-      edges
-        .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b")),
-      eager = false) // first read: `sym`'s checkpoint, as in connectedComponents
-    val sym = OpCaches.materialize(
-      directed.union(directed.select(col("b").as("a"), col("a").as("b")))
-        .distinct())
+    val sym = symmetric(edges, srcCol, dstCol)
     // Symmetric relation ⇒ the src side alone covers every node.
     val nodes = OpCaches.materialize(sym.select(col("a").as("id")).distinct())
-
-    var dist = OpCaches.materialize(nodes.filter(col("id").isin(sources: _*))
-      .withColumn("hops", lit(0)))
-    var frontier = dist
-    var h = 0
-    var exhausted = frontier.isEmpty
-    while (h < maxHops && !exhausted) {
-      h += 1
-      val nxt = OpCaches.materialize(frontier
-        .join(sym, col("id") === col("a"))
-        .select(col("b").as("id")).distinct()
-        .join(dist, Seq("id"), "left_anti")
-        .withColumn("hops", lit(h)))
-      if (nxt.isEmpty) exhausted = true
-      else {
-        dist = OpCaches.materialize(dist.union(nxt))
-        frontier = nxt
-      }
-    }
+    val dist = frontierRounds(sym,
+      nodes.filter(col("id").isin(sources: _*)).withColumn("hops", lit(0)),
+      carry = Nil, maxHops)
     nodes.join(dist, Seq("id"), "left")
       .select(col("id"), coalesce(col("hops"), lit(-1)).cast("int").as("hops"))
   }
@@ -235,19 +201,24 @@ object Components {
       nLandmarks: Int, maxHops: Int): DataFrame = {
     require(nLandmarks >= 1, s"landmarkDistances: nLandmarks must be >= 1, got $nLandmarks")
     require(maxHops >= 0, s"landmarkDistances: maxHops must be >= 0, got $maxHops")
-    val directed = OpCaches.materialize(
-      edges
-        .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b")),
-      eager = false) // first read: `sym`'s checkpoint, as in connectedComponents
-    val sym = OpCaches.materialize(
-      directed.union(directed.select(col("b").as("a"), col("a").as("b")))
-        .distinct())
+    val sym = symmetric(edges, srcCol, dstCol)
     val landmarks = OpCaches.materialize(
       sym.select(col("a").as("id")).distinct().orderBy("id").limit(nLandmarks))
+    frontierRounds(sym,
+      landmarks.select(col("id").as("lm"), col("id"), lit(0).as("hops")),
+      carry = Seq("lm"), maxHops)
+  }
 
-    var dist = OpCaches.materialize(landmarks
-      .select(col("id").as("lm"), col("id"), lit(0).as("hops")))
+  /** The frontier loop of [[bfsHops]] and [[landmarkDistances]]: BFS
+    * state rows are (carry..., id, hops), `seeds` the hop-0 rows. Each
+    * round joins the last round's new rows onto `sym`, keeps the reached
+    * (carry..., id) keys not yet settled and settles them at the round's
+    * hop count. It stops after `maxHops` rounds or on an empty round.
+    * Returns every settled row.
+    */
+  private def frontierRounds(sym: DataFrame, seeds: DataFrame,
+      carry: Seq[String], maxHops: Int): DataFrame = {
+    var dist = OpCaches.materialize(seeds)
     var frontier = dist
     var h = 0
     var exhausted = frontier.isEmpty
@@ -255,8 +226,8 @@ object Components {
       h += 1
       val nxt = OpCaches.materialize(frontier
         .join(sym, col("id") === col("a"))
-        .select(col("lm"), col("b").as("id")).distinct()
-        .join(dist, Seq("lm", "id"), "left_anti")
+        .select(carry.map(col) :+ col("b").as("id"): _*).distinct()
+        .join(dist, carry :+ "id", "left_anti")
         .withColumn("hops", lit(h)))
       if (nxt.isEmpty) exhausted = true
       else {
@@ -350,14 +321,7 @@ object Components {
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     require(rounds >= 1, s"kCore: rounds must be >= 1, got $rounds")
-    val directed = OpCaches.materialize(
-      edges
-        .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b")),
-      eager = false) // first read: the checkpoint below, as in connectedComponents
-    var e = OpCaches.materialize(
-      directed.union(directed.select(col("b").as("a"), col("a").as("b")))
-        .distinct())
+    var e = symmetric(edges, srcCol, dstCol)
     var prevEdges = e.count() // one scalar per round, like the BFS frontier
     var r = 0
     var done = prevEdges == 0L
@@ -375,6 +339,23 @@ object Components {
       r += 1
     }
     e.groupBy(col("a").as("id")).agg(count(lit(1)).cast("int").as("degree"))
+  }
+
+  /** The undirected edge set of `edges`: (a, b) and (b, a) for every edge
+    * between two distinct non-null ids, each pair once, materialized.
+    * The input lineage (e.g. a full MinHash-LSH pipeline) is materialized
+    * first so the two union branches don't each recompute it — measured
+    * 2× the whole upstream cost without this. Lazy: its first read is the
+    * symmetric relation's checkpoint, which computes it once.
+    */
+  private def symmetric(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val directed = OpCaches.materialize(
+      edges
+        .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
+        .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b")),
+      eager = false)
+    OpCaches.materialize(
+      directed.union(directed.select(col("b").as("a"), col("a").as("b"))).distinct())
   }
 
   /** Dedup-group summary from near-dup pairs over a corpus: every

@@ -103,7 +103,7 @@ class HeavyHittersSpec extends AnyFunSuite {
     val df = HeavyHitters.topK(
       Tables.load(spark, "/root/testdata/sf0.001", "orders"), "o_custkey", 10)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = PlanText.finalPlan(df.queryExecution.executedPlan.toString)
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
       s"candidate semi-join must broadcast:\n$plan")
   }

@@ -43,7 +43,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val df = Similarity.ivfTopKIndexed(queries, "vec_id", "embedding",
       path, k = 3, nProbe = 2)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = PlanText.finalPlan(df.queryExecution.executedPlan.toString)
     // Directory-level partition pruning: the IN-filter on centroid_id
     // must appear as a PartitionFilters entry on the lists scan, so only
     // the probed directories are read.

@@ -1,5 +1,6 @@
 package graft
 
+import graft.PlanText.finalPlan
 import graft.planner.CompassSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -81,13 +82,12 @@ class PlanAuditSpec extends AnyFunSuite {
     // interpreted eval (e.g. a kernel Expression losing doGenCode) would
     // silently 10x the hot path. The codegen'd projection shows as a
     // "*(n)" stage containing the kernel's prettyName.
-    val split = "== Initial Plan =="
     val lang = {
       Tables.registerAll(spark, dir)
       val df = operators.TextAnalysis.withLanguageId(
         Tables.load(spark, dir, "documents"), "text")
       df.collect()
-      df.queryExecution.executedPlan.toString.split(split).head
+      finalPlan(df.queryExecution.executedPlan.toString)
     }
     assert("\\*\\(\\d+\\).*Project".r.findFirstIn(lang).isDefined,
       s"lang-id projection not codegen'd:\n$lang")
@@ -99,7 +99,7 @@ class PlanAuditSpec extends AnyFunSuite {
           operators.TextDedup.shingleHashes(
             org.apache.spark.sql.functions.col("text"), 3), 64).as("sig"))
       df.collect()
-      df.queryExecution.executedPlan.toString.split(split).head
+      finalPlan(df.queryExecution.executedPlan.toString)
     }
     assert(sig.contains("*("), s"minhash projection not codegen'd:\n$sig")
   }
@@ -120,7 +120,7 @@ class PlanAuditSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.lit(bytes),
         org.apache.spark.sql.functions.col("l_suppkey")))
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = finalPlan(df.queryExecution.executedPlan.toString)
     val filterLine = plan.linesIterator.find(_.contains("bloom_might_contain"))
     assert(filterLine.isDefined, s"probe filter missing from plan:\n$plan")
     assert(filterLine.get.contains("*("),
@@ -225,11 +225,6 @@ class PlanAuditSpec extends AnyFunSuite {
     val anti = planOf("q_join_anti")
     assert(anti.contains("LeftAnti"), s"NOT EXISTS must plan as an anti join:\n$anti")
   }
-
-  // AQE's toString prints "== Final Plan ==" followed by "== Initial
-  // Plan ==" — count operators in the final section only.
-  private def finalPlan(plan: String): String =
-    plan.split("== Initial Plan ==").head
 
   /** The final plan of entry `name`, followed by the final plan of every
     * checkpoint the entry ran. Operators materialize intermediates through
@@ -406,7 +401,7 @@ class PlanAuditSpec extends AnyFunSuite {
       // joins (smaller still than SHJ); at bench scale the same policy
       // yields ShuffledHashJoin. Either way the Σdeg² wedge stream must
       // not be sorted: no SortMergeJoin in the final plan.
-      val finalSection = wedgePlan.split("== Initial Plan ==").head
+      val finalSection = finalPlan(wedgePlan)
       assert(finalSection.contains("ShuffledHashJoin") ||
         finalSection.contains("BroadcastHashJoin"),
         s"no hash join in the executed wedge enumeration:\n$wedgePlan")
@@ -651,9 +646,9 @@ class PlanAuditSpec extends AnyFunSuite {
       s"session merge must never cross-join:\n$plan")
     // AdaptiveSparkPlan.toString prints Final AND Initial — count only
     // the final plan or the one real shuffle doubles.
-    val finalPlan = plan.split("== Initial Plan ==").head
-    assert(finalPlan.linesIterator.count(_.contains("Exchange hashpartitioning")) <= 1,
-      s"expected at most one session-key shuffle:\n$finalPlan")
+    val finalSection = finalPlan(plan)
+    assert(finalSection.linesIterator.count(_.contains("Exchange hashpartitioning")) <= 1,
+      s"expected at most one session-key shuffle:\n$finalSection")
   }
 
   test("streaming near-dup's batch collision relation: equi-joins on buckets, never all-pairs") {

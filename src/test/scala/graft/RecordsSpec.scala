@@ -1,0 +1,143 @@
+package graft
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.job.JobCorpus.CompassRun
+import graft.job.ScaleCampaignMain
+import graft.planner.OptimizerQuality
+import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.immutable.VectorMap
+import scala.jdk.CollectionConverters._
+
+/** The records graft prints, rendered from synthetic values through
+  * [[Records]] without running Spark: the Bench lines' shape and the
+  * 2000-char output window, string escaping, and locale-independent
+  * numbers on the scale campaign's facet lines.
+  */
+class RecordsSpec extends AnyFunSuite {
+  private val json = new ObjectMapper()
+  private def parse(line: String): JsonNode = json.readTree(line)
+  private def keys(n: JsonNode): Seq[String] = n.fieldNames().asScala.toSeq
+
+  private val message120 = ("stage failed: " + "x" * 200).take(120)
+
+  /** A 337-entry run shaped like the r22 record (its headline timings,
+    * JOB planning totals and streaming batches) plus the worst case the
+    * compact line admits: 5 failures outside the headline with 120-char
+    * messages, 5 slow non-headline entries, three JOB planning blocks
+    * (one of them `#warm_last`) and 16 streaming entries.
+    */
+  private def wideRecord(message: String = message120): Bench.Record = {
+    val names = Bench.Headline ++ (Bench.Headline.size until 337)
+      .map(i => f"q_synthetic_entry_$i%03d")
+    val failed = names.takeRight(5).toSet
+    val slow = names.takeRight(10).take(5).toSet
+    val queries = names.map(n => n -> (
+      if (failed(n)) Left(message)
+      else Right(if (slow(n)) 9.346 else if (n == "q_job_corpus") 47.452 else 1.234))
+    ).to(VectorMap)
+    val runs = (1 to 33).map(i => CompassRun(s"${i}a", 1000L, 43, 49, 802))
+    Bench.Record("/srv/graft/testdata/sf0.1", "target/bench_full.json",
+      queries = queries,
+      warm = Bench.Headline.map(_ -> 11.111).to(VectorMap),
+      warmSpread = Bench.Headline.map(_ -> ((10.123, 11.111, 99.999))).to(VectorMap),
+      lapWallGcJitMs = names.map(_ -> Vector((12345L, 123L, 1234L), (11111L, 99L, 555L))).to(VectorMap),
+      driverPeaks = names.map(_ -> ((123456789L, 987654321L))).to(VectorMap),
+      jobPlanning = VectorMap("q_job_compass" -> runs,
+        "q_job_compass#warm_last" -> runs, "q_job_quality" -> runs),
+      jobQuality = VectorMap("q_job_quality" ->
+        Seq(OptimizerQuality.Report("1a", 10, 20, 13, 225, 146))),
+      jobLatency = VectorMap("q_job_corpus" -> ((1108L, 2837L, 5333L, 113))),
+      jobFamilyLatency = VectorMap("q_job_corpus" ->
+        Map("10" -> ((3, 1088L, 1209L)), "2" -> ((4, 1422L, 1515L)))),
+      streamBatches = (1 to 16).map(i => f"q_stream_entry_$i%02d" -> ((1, 4079L, 4079L)))
+        .to(VectorMap))
+  }
+
+  test("a 337-entry record with 5 long failures keeps the compact line in the 2000-char window") {
+    val r = wideRecord()
+    val compact = Records.write(r.compact)
+    val full = Records.write(r.full)
+    assert(compact.length <= 2000, s"compact line is ${compact.length} chars:\n$compact")
+    val c = parse(compact)
+    val f = parse(full)
+    assert(c.get("errors").asInt == 5 && f.get("errors").asInt == 5)
+    assert(c.get("n_queries").asInt == 337 && f.get("queries").size == 337)
+    info(s"compact line: ${compact.length} chars")
+    // Headline (33), the 5 failures, and the 4 of the run's 5 slowest
+    // entries that are not headline (q_job_corpus is the slowest).
+    assert(c.get("queries").size == 42)
+    assert(c.get("job_planning").size == 3 && c.get("stream_batches_noisiest").size == 3)
+    // The compact line cuts the failure text; the full record keeps all 120 chars.
+    val failed = "q_synthetic_entry_336"
+    assert(f.get("queries").get(failed).asText == "error: " + message120)
+    assert(message120.startsWith(c.get("queries").get(failed).asText.stripPrefix("error: ")))
+  }
+
+  test("both Bench lines keep their keys, key order and printed precision") {
+    val r = wideRecord()
+    val f = parse(Records.write(r.full))
+    assert(keys(f) == Seq("metric", "value", "unit", "queries", "warm_total", "warm",
+      "warm_spread", "lap_wall_gc_jit_ms", "driver_ingress_kb_heap_peak_mb",
+      "job_planning", "job_quality_plan_compass_naive_ms", "job_corpus_latency",
+      "job_corpus_family_n_med_max_ms", "stream_batches", "errors", "sf"))
+    assert(keys(f.get("job_planning").get("q_job_compass")) ==
+      Seq("sketch_ms", "enumerate_ms", "exec_ms", "per_query_sketch_enum_exec_ms"))
+    assert(keys(f.get("job_corpus_latency").get("q_job_corpus")) ==
+      Seq("median_ms", "p90_ms", "max_ms", "n"))
+    assert(keys(f.get("job_corpus_family_n_med_max_ms").get("q_job_corpus")) == Seq("2", "10"))
+    val c = parse(Records.write(r.compact))
+    assert(keys(c) == Seq("metric", "value", "unit", "queries", "warm_total",
+      "warm_is_median_of_3", "warm_spread_noisiest", "job_planning",
+      "job_corpus_latency", "stream_batches_noisiest", "errors", "n_queries", "full", "sf"))
+    assert(keys(c.get("queries")).take(Bench.Headline.size) == Bench.Headline)
+    val full = Records.write(r.full)
+    val compact = Records.write(r.compact)
+    assert(full.contains("\"q1_agg\":1.234,") && full.contains("[10.123,11.111,99.999]"))
+    assert(full.contains("\"driver_ingress_kb_heap_peak_mb\":{\"q1_agg\":[120563,941]"))
+    assert(compact.contains("\"q1_agg\":1.234,") && compact.contains("[10.12,11.11,100.00]"))
+    assert(compact.contains("\"warm_total\":366.66,"))
+  }
+
+  test("a failure message reads back exactly from the full line") {
+    val message = "quote \" backslash \\ tab \t newline \n sigma Σ"
+    val f = parse(Records.write(wideRecord(message).full))
+    assert(f.get("queries").get("q_synthetic_entry_336").asText == "error: " + message)
+  }
+
+  test("oracle_sql.json round-trips SQL with a tab and a CR, tokens substituted") {
+    val sql = Map(
+      "q_a" -> "SELECT\t1 AS x\r\nFROM t",
+      "q_b" -> s"SELECT * FROM read_parquet('${Queries.VerifyOutToken}/q_b/*.parquet')")
+    val n = parse(Verify.oracleJson(sql, "/out dir", "/job"))
+    assert(n.size == 2)
+    assert(n.get("q_a").asText == sql("q_a"))
+    assert(n.get("q_b").asText == "SELECT * FROM read_parquet('/out dir/q_b/*.parquet')")
+  }
+
+  test("campaign facet lines parse under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      val lap = ScaleCampaignMain.Lap(Map("1a" -> 5L, "10b" -> 7L),
+        Map("1a" -> 120L, "10b" -> 950L), Seq("17e"), 1.25)
+      val empty = ScaleCampaignMain.Lap(Map.empty, Map.empty, Nil, 0.5)
+      val profiles = parse(Records.write(
+        ScaleCampaignMain.profilesRecord(1, routedTrim = true, lap, lap, lap, empty)))
+      assert(profiles.get("routed_cold").get("wall_s").asDouble == 1.3)
+      assert(profiles.get("other_warm").get("wall_s").asDouble == 0.5)
+      assert(profiles.get("other_warm").get("p90_ms").asLong == 0L)
+      assert(keys(profiles.get("routed_cold").get("families_n_med_sum_ms")) == Seq("1", "10"))
+      assert(profiles.get("counts_equal_on").asInt == 0)
+      val capouts = parse(Records.write(ScaleCampaignMain.capoutsRecord(1, lap,
+        Seq("17e" -> "SortMergeJoin\nExchange hashpartitioning\nSortMergeJoin"))))
+      assert(capouts.get("wall_s").asDouble == 1.3)
+      assert(capouts.get("timeout_plans").get("17e").get("smj").asInt == 2)
+      val runs = Seq(CompassRun("1a", 5, 10, 20, 70), CompassRun("10b", 7, 5, 5, 190))
+      val compass = parse(Records.write(
+        ScaleCampaignMain.compassRecord(1, 21, runs, 2.45, runs, 1.5)))
+      assert(compass.get("compass_cold_s").asDouble == 2.5)
+      assert(compass.get("planning_fraction_cold").asDouble == 0.133)
+      assert(keys(compass.get("counts")) == Seq("10b", "1a"))
+    } finally java.util.Locale.setDefault(saved)
+  }
+}

@@ -111,7 +111,7 @@ class SamplingSpec extends AnyFunSuite {
     val df = Sampling.deterministicSample(
       Tables.load(spark, "/root/testdata/sf0.001", "lineitem"), "l_orderkey", 0.25)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = PlanText.finalPlan(df.queryExecution.executedPlan.toString)
     assert(!plan.contains("Exchange"), s"sample must not shuffle:\n$plan")
   }
 }

@@ -232,8 +232,7 @@ class TemporalSpec extends AnyFunSuite {
     val trades = (1 to 50).map(i => ("a", ts(i % 60), i.toLong)).toDF("k", "ts", "id")
     val out = Temporal.asofJoin(trades, quotes, "k", "ts", Seq("px"))
     out.collect()
-    val plan = out.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
+    val plan = PlanText.finalPlan(out.queryExecution.executedPlan.toString)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"as-of must not plan a product join:\n$plan")
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
