@@ -21,7 +21,9 @@ object Bench {
       sys.env.getOrElse("GRAFT_BENCH_OUT", "target/bench_full.json"))
 
   /** Headline subset: stable keys for round-over-round comparison. They
-    * are always on the compact line and take the median-of-3 warm laps.
+    * are always on the compact line and take 3 warm laps, except
+    * q_job_corpus (1) and the checkpoint-heavy trio (5); every
+    * non-headline entry takes 1.
     */
   val Headline = Vector(
     "q1_agg", "q_scan_full", "q_join_inner", "q_join_multiway",
@@ -146,7 +148,8 @@ object Bench {
     // (r7→r8 measured 2.5-4.5x on BYTE-IDENTICAL code), so one sample
     // cannot support a 2x regression gate. Headline entries take 3 warm
     // laps and report the median as the comparable number plus the
-    // spread so a real regression is distinguishable from noise.
+    // spread so a real regression is distinguishable from noise; an
+    // entry with one warm lap has no spread and records none.
     val warmSpread = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
     // Per-ENTRY (sketch, enumerate, exec) triples for the COMPASS-path JOB
     // entries, from each entry's timed COLD lap (and, under
@@ -282,8 +285,9 @@ object Bench {
         if (warm.nonEmpty) {
           val sortedLaps = warm.flatMap(_.time.toOption).sorted
           warmTimings(e.name) = sortedLaps(sortedLaps.size / 2)
-          warmSpread(e.name) = (sortedLaps.head,
-            sortedLaps(sortedLaps.size / 2), sortedLaps.last)
+          if (sortedLaps.size >= 2)
+            warmSpread(e.name) = (sortedLaps.head,
+              sortedLaps(sortedLaps.size / 2), sortedLaps.last)
           // Warm-lap telemetry under its own key: the r11 record conflated
           // a warm lap's triples with the round's planning record; keeping
           // BOTH labeled makes a warm>cold anomaly decomposable from the
@@ -382,19 +386,17 @@ object Bench {
       * streaming entries with the largest batch max.
       */
     def compact: VectorMap[String, Any] = {
-      val slow = queries.collect { case (k, Right(t)) => k -> t }.toSeq
-        .sortBy(-_._2).take(5)
+      val slow = queries.collect { case (k, Right(t)) if !Headline.contains(k) => k -> t }
+        .toSeq.sortBy(-_._2).take(5)
       val shown = (Headline.flatMap(k => queries.get(k).map(k -> _)) ++
         queries.filter(_._2.isLeft).take(5) ++
-        slow.filterNot(kv => Headline.contains(kv._1)).map { case (k, t) => k -> Right(t) }
-        ).distinctBy(_._1)
+        slow.map { case (k, t) => k -> Right(t) }).distinctBy(_._1)
       val noisiest = warmSpread.toSeq
         .sortBy { case (_, (mn, _, mx)) => -(mx / math.max(mn, 1e-9)) }.take(3)
       VectorMap(
         "metric" -> "total", "value" -> Records.round(total, 2), "unit" -> "sec",
         "queries" -> entries(shown)(seconds(_, CompactErrorChars)),
         "warm_total" -> Records.round(warm.values.sum, 2),
-        "warm_is_median_of_3" -> true,
         "warm_spread_noisiest" -> entries(noisiest) { case (mn, md, mx) =>
           Seq(mn, md, mx).map(Records.round(_, 2)) },
         "job_planning" -> entries(jobPlanning)(planningTotals),

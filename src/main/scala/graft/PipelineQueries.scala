@@ -86,8 +86,8 @@ object PipelineQueries {
     // the shadow probability is J^64 (≈6e-10; SkewGuardRecallSpec
     // measures 0 excess on a purpose-built adversary), so a future
     // mismatch here showing EXTRA Spark survivors should be read as
-    // "corpus exhibits the blind spot" → raise `hubAnchors`/bands, not
-    // as an oracle bug.
+    // "corpus exhibits the blind spot" → raise `bands` (no bucket-pairing
+    // variant closes it, COVERAGE.md r19/r20), not as an oracle bug.
     dfq("q_dedup_minhash",
       "WITH toks AS (SELECT doc_id, string_split_regex(text, '\\s+') AS t FROM documents), " +
         "sh AS (SELECT doc_id, list_distinct([array_to_string(t[CAST(i AS INT):CAST(i+2 AS INT)], ' ') " +

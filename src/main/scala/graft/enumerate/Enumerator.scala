@@ -266,27 +266,6 @@ final class Enumerator(
   def adjustedOrder(order: Seq[Int]): Seq[Int] =
     Enumerator.adjustPlanForMapD(graph, order)
 
-  /** The stock baseline order: largest sketch count first, then repeatedly
-    * the largest instance adjacent to the placed prefix (largest remaining
-    * when nothing connects — the Cross case), ties to the smaller id.
-    * The same construction [[graft.planner.OptimizerQuality.naiveOrder]]
-    * applies to TRUE counts — and sketch counts ARE exact survivor
-    * counts, so the two coincide up to count ties.
-    */
-  def stockOrder(): Seq[Int] = {
-    val adj: Map[Int, Set[Int]] = joinCols.keys.toSeq.groupBy(_._1)
-      .view.mapValues(_.map(_._2).toSet).toMap.withDefaultValue(Set.empty)
-    def largest(cand: Iterable[Int]): Int =
-      cand.minBy(i => (-sketchOf(i).count, i))
-    var placed = Vector(largest(nodes.map(_.id)))
-    while (placed.size < total) {
-      val remaining = nodes.map(_.id).filterNot(placed.contains)
-      val connected = remaining.filter(i => adj(i).exists(placed.contains))
-      placed :+= largest(if (connected.nonEmpty) connected else remaining)
-    }
-    placed
-  }
-
   /** The optimal connected left-deep order and its accumulated
     * intermediate-size estimate. Cost of an order = Σ estimate(prefix) for
     * prefixes of size 2..N-1 (the full join is identical for all orders and
@@ -312,7 +291,8 @@ final class Enumerator(
       }
     }
     if (st.bestOrder.isEmpty) return (fallback, 0.0)
-    val stock = stockOrder()
+    val stock = Enumerator.stockOrder(nodes.map(_.id), joinCols.keys,
+      i => sketchOf(i).count)
     // A disconnected member inside an otherwise seed-aligned prefix can
     // make estimation throw (composedPlane's require); an unestimable
     // stock candidate simply doesn't compete.
@@ -375,6 +355,31 @@ object Enumerator {
     * reference fixes it (variables_details.txt:13-14).
     */
   val TraversalBound = 100
+
+  /** The stock baseline order (reference RelAlgExecutor.cpp:2608-2621
+    * sorts relations by descending size): the largest instance first,
+    * then repeatedly the largest instance adjacent to the placed prefix
+    * (the largest remaining when nothing connects — the Cross case, as in
+    * rebuildRegion), ties to the smaller id. `links` are the join graph's
+    * (a, b) edges, either direction. The enumerator's stock candidate
+    * applies it to sketch counts and the quality battery's baseline to
+    * true counts; sketch counts ARE exact survivor counts, so when the
+    * enumerator falls back to its stock candidate the two orders coincide
+    * and the quality comparison reads equal sums.
+    */
+  def stockOrder(ids: Seq[Int], links: Iterable[(Int, Int)],
+      counts: Int => Long): Seq[Int] = {
+    val adj = links.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap.withDefaultValue(Set.empty)
+    def largest(cand: Iterable[Int]): Int = cand.minBy(i => (-counts(i), i))
+    var placed = Vector(largest(ids))
+    while (placed.size < ids.size) {
+      val remaining = ids.filterNot(placed.contains)
+      val connected = remaining.filter(i => adj(i).exists(placed.contains))
+      placed :+= largest(if (connected.nonEmpty) connected else remaining)
+    }
+    placed
+  }
 
   /** Behavior-parity port of the reference's left-deep fix-up pass
     * (reference: mapd-core/QueryEngine/RelAlgExecutor.cpp:2327-2395,

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *    pairs come from a self-equi-join on (band, band_hash) — the classic
   *    banding scheme. NEVER all-pairs: at 100 TB the cross join is
   *    impossible, while band buckets keep each join partition tiny.
-  *    Skewed buckets (boilerplate docs) are bounded by `maxBucket`:
-  *    oversized buckets are dropped with a count, the standard LSH skew
-  *    guard (those documents are caught by the exact-hash pass instead);
+  *    Skewed buckets (boilerplate docs, big near-dup families) are
+  *    bounded by `maxBucket`: members of an oversized bucket pair only
+  *    with the bucket's min id, at linear cost;
   *  - SimHash: 64-bit signature whose Hamming distance tracks cosine
   *    similarity of term sets — near-dup candidates = equal 16-bit chunks
   *    (Hamming ≤ 3 guarantee by pigeonhole over 4 chunks).
@@ -92,9 +92,6 @@ object TextDedup {
     })
   }
 
-  /** doc_id → (band, band_hash) rows: the LSH bucketing relation.
-    * `bands` × `rowsPerBand` must equal the signature length.
-    */
   /** Materialized (id, shingle-hash array) relation. Scale guards:
     * repartition first — higher-order functions run interpreted (outside
     * codegen) and a small parquet input arrives as ONE partition, so the
@@ -109,12 +106,9 @@ object TextDedup {
         .select(col(idCol), shingleHashes(col(textCol), k).as("sh"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  def bandedSignatures(
-      df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3): DataFrame =
-    bandsOf(shingleDF(df, idCol, textCol, shingleK), idCol, numHashes, bands)
-
-  /** Band-bucket relation from a materialized shingle relation. */
+  /** doc id → (band, band_hash) rows, the LSH bucketing relation, from a
+    * materialized shingle relation. `bands` must divide `numHashes`.
+    */
   private def bandsOf(sh: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
@@ -129,6 +123,8 @@ object TextDedup {
           b => xxhash64(concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
   }
+
+  private val BandKey = Seq("band", "band_hash")
 
   /** Pure-expression band hashes of a text column: element b = xxhash64
     * of the b-th signature band — the same banding arithmetic
@@ -149,243 +145,173 @@ object TextDedup {
           b => xxhash64(concat_ws(",", slice(sig, b * r + 1, lit(r)))))), 1)
   }
 
-  /** Near-duplicate candidate pairs via banded MinHash-LSH, verified with
-    * exact shingle-set Jaccard ≥ `threshold`. Returns (id_a, id_b, jaccard)
-    * with id_a < id_b. The only shuffles: the band self-join (small keys)
-    * and the final distinct.
+  /** The skew guard of the bucketed joins: split `rows` into the rows of
+    * buckets (`keys`) with at most `maxBucket` members and the rows of the
+    * oversized ones. The oversized set comes from a map-side-combined
+    * aggregate and is routed with BROADCAST joins: it is tiny by
+    * construction, while a window over the bucket key would shuffle AND
+    * sort every row.
     */
-  def minhashNearDups(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
-      shingleK: Int = 3, maxBucket: Int = 64, hubAnchors: Int = 1,
-      sortedNeighbors: Boolean = false,
-      rebandOversized: Boolean = false): DataFrame = {
-    val sh = shingleDF(df, idCol, textCol, shingleK)
-    val banded = bandsOf(sh, idCol, numHashes, bands)
-    // Skew guard, hub form (×1000 campaign fix): buckets over `maxBucket`
-    // members — boilerplate, or big near-dup families, the web-crawl
-    // shape — are kept at LINEAR cost instead of being dropped. The
-    // pre-r18 guard anti-joined them away on the theory that the
-    // exact-dup pass catches their rows; that is only true of IDENTICAL
-    // boilerplate — a family of ~100 near-identical (not equal) replicas
-    // lost every candidate, measured as 448 k survivors where the
-    // construction says ~4.8 k (SCALE.md r18). Hub pairing bounds the
-    // cost the guard exists to bound (O(B) per bucket, not O(B²)) while
-    // keeping recall: every member pairs with the bucket's min id, the
-    // exact-Jaccard verify rejects false positives, and keep-min dedup
-    // semantics downstream are unchanged because the hub IS the minimum.
-    // Residual blind spot, documented: in a MIXED oversized bucket a
-    // member near-dup to another member but not to the hub is missed —
-    // strictly more recall than the dropping guard, same cost bound.
-    // Oversized buckets are found with a map-side-combined aggregate and
-    // routed with BROADCAST joins (the oversized set is tiny by
-    // construction; a window over (band, band_hash) would shuffle AND
-    // sort every banded row).
-    val oversized = banded.groupBy(col("band"), col("band_hash"))
+  private def splitOversized(rows: DataFrame, keys: Seq[String],
+      maxBucket: Int): (DataFrame, DataFrame) = {
+    val oversized = rows.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > maxBucket)
-      .select("band", "band_hash")
-    val bounded = banded.join(broadcast(oversized),
-      Seq("band", "band_hash"), "left_anti")
-    val a = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_a"))
-    val b = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_b"))
-    val inBucket = a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val overRows = banded.join(broadcast(oversized), Seq("band", "band_hash"))
-    // Anchor set per oversized bucket: always the min id (the hub —
-    // keep-min dedup semantics need every dropped member reachable from
-    // a smaller near-dup, and the hub IS the bucket minimum), plus, when
-    // hubAnchors > 1, k−1 pseudo-random secondary anchors (deterministic
-    // xxhash64(id) order, so re-runs pick the same members). Secondary
-    // anchors shrink the documented blind spot — a member-member
-    // near-dup family hiding inside a mixed oversized bucket is found
-    // iff an anchor lands in the family — at O(k·B) candidates per
-    // bucket, same cost class. SkewGuardRecallSpec measures the
-    // geometry: at the shipped 16-band config the blind spot requires a
-    // family to shadow a foreign bucket in all 16 bands (P ≈ J^64 for
-    // sub-threshold J — vanishing), which is why hubAnchors defaults
-    // to 1; raise it for low-band configurations.
-    val anchors =
-      if (hubAnchors <= 1)
-        overRows.groupBy(col("band"), col("band_hash"))
-          .agg(min(col(idCol)).as("anchor"))
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("band_hash"))
-          .orderBy(xxhash64(col(idCol)), col(idCol))
-        overRows.withColumn("_rk", row_number().over(w))
-          .filter(col("_rk") < lit(hubAnchors))
-          .select(col("band"), col("band_hash"), col(idCol).as("anchor"))
-          .union(overRows.groupBy(col("band"), col("band_hash"))
-            .agg(min(col(idCol)).as("anchor")))
-          .distinct()
-      }
-    val hubPairs = overRows.join(broadcast(anchors), Seq("band", "band_hash"))
-      .filter(col(idCol) =!= col("anchor"))
-      .select(least(col("anchor"), col(idCol)).as("id_a"),
-        greatest(col("anchor"), col(idCol)).as("id_b"))
-    // Sorted-neighborhood variant (off by default): within each
-    // oversized bucket, sort members by full minhash signature (tie on
-    // id) and pair ADJACENT members — O(B log B) per bucket, one extra
-    // sort of the oversized rows. Rationale: members that hide in a
-    // foreign bucket with IDENTICAL signatures form one equal-key run,
-    // so near-dup families inside it become adjacent wherever their ids
-    // are locally contiguous; SkewGuardRecallSpec measures BOTH the win
-    // (contiguous-id families) and the honest failure mode (scrambled
-    // ids interleave equal-signature runs) — see COVERAGE.md r19.
-    val neighborPairs =
-      if (!sortedNeighbors) None
-      else {
-        val sigKey = sh.select(col(idCol),
-          concat_ws(",", minhashSignature(col("sh"), numHashes)).as("_sk"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("band_hash"))
-          .orderBy(col("_sk"), col(idCol))
-        Some(overRows.join(sigKey, idCol)
-          .withColumn("_nid", lead(col(idCol), 1).over(w))
-          .filter(col("_nid").isNotNull)
-          .select(least(col(idCol), col("_nid")).as("id_a"),
-            greatest(col(idCol), col("_nid")).as("id_b")))
-      }
-    // Re-banding variant (off by default): give ONLY the oversized-bucket
-    // members a second, ROTATED banding of the same signature — band j
-    // hashes rows (j·r + r/2 .. j·r + r/2 + r − 1) mod numHashes, i.e.
-    // the band boundaries shift by half a band. A family shadowed into
-    // the mass's bucket in an original band needed that band's rows to
-    // agree with a large mass subset AS A GROUP; the rotated bands test
-    // DIFFERENT row groups, whose agreeing-mass subsets can intersect to
-    // under maxBucket — a second chance to isolate. (It cannot rescue a
-    // member whose EVERY row agrees with the mass; rotation reuses the
-    // same hashes, it does not add independence.) Cost: O(|oversized
-    // members| · bands) extra rows, full pairing only inside re-banded
-    // buckets that came back under maxBucket (still-oversized ones were
-    // already hub-paired) — the same O(B·bands) class as the anchors
-    // knob. Measured on the SkewGuardRecallSpec adversary (r20): see
-    // COVERAGE.md.
-    val rebandPairs =
-      if (!rebandOversized) None
-      else {
-        val r = numHashes / bands
-        val off = r / 2
-        val overIds = overRows.select(col(idCol)).distinct()
-        val overSigs = sh.join(broadcast(overIds), Seq(idCol))
-          .select(col(idCol), minhashSignature(col("sh"), numHashes).as("sig"))
-        val rebanded = overSigs.select(col(idCol), posexplode(
-            transform(sequence(lit(0), lit(bands - 1)),
-              b => xxhash64(concat_ws(",",
-                transform(sequence(lit(0), lit(r - 1)),
-                  i => element_at(col("sig"),
-                    (pmod(b * r + off + i, lit(numHashes)) + 1).cast("int"))))))))
-          .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-        val small = rebanded.groupBy(col("band"), col("band_hash"))
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1 && col("n") <= maxBucket)
-          .select("band", "band_hash")
-        val ra = rebanded.join(broadcast(small), Seq("band", "band_hash"))
-        Some(ra.select(col("band"), col("band_hash"), col(idCol).as("id_a"))
-          .join(ra.select(col("band"), col("band_hash"), col(idCol).as("id_b")),
-            Seq("band", "band_hash"))
-          .filter(col("id_a") < col("id_b"))
-          .select("id_a", "id_b"))
-      }
-    val candidates = (neighborPairs.toSeq ++ rebandPairs.toSeq)
-      .foldLeft(inBucket.union(hubPairs))(_ union _)
-      .distinct()
-    // Exact verify on the candidate set only, reusing the cached shingles.
+      .select(keys.map(col): _*)
+    (rows.join(broadcast(oversized), keys, "left_anti"),
+      rows.join(broadcast(oversized), keys))
+  }
+
+  /** Exact verify of candidate pairs (columns `a`, `b`): shingle-set
+    * Jaccard from the two-column (id, sh) relations `shA` and `shB`, kept
+    * at ≥ `threshold`. Returns (a, b, jaccard rounded to 6 places).
+    */
+  private def verified(candidates: DataFrame, a: String, shA: DataFrame,
+      b: String, shB: DataFrame, threshold: Double): DataFrame =
     candidates
-      .join(sh.withColumnsRenamed(Map(idCol -> "id_a", "sh" -> "sh_a")), "id_a")
-      .join(sh.withColumnsRenamed(Map(idCol -> "id_b", "sh" -> "sh_b")), "id_b")
+      .join(shA.toDF(a, "sh_a"), a)
+      .join(shB.toDF(b, "sh_b"), b)
       .withColumn("jaccard",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+      .select(col(a), col(b), round(col("jaccard"), 6).as("jaccard"))
+
+  /** Digest of the normalized text: the exact-duplicate key. */
+  private def textDigest(text: Column): Column = xxhash64(lower(trim(text)))
+
+  /** Near-duplicate candidate pairs via banded MinHash-LSH, verified with
+    * exact shingle-set Jaccard ≥ `threshold`. Returns (id_a, id_b, jaccard)
+    * with id_a < id_b. The only shuffles: the band self-join (small keys)
+    * and the final distinct.
+    *
+    * Skew guard, hub form (×1000 campaign fix): buckets over `maxBucket`
+    * members — boilerplate, or big near-dup families, the web-crawl
+    * shape — are kept at LINEAR cost instead of being dropped: every
+    * member pairs with the bucket's min id (the hub) instead of with every
+    * other member. Dropping them lost every candidate of a family of ~100
+    * near-identical (not equal) replicas, measured as 448 k survivors
+    * where the construction says ~4.8 k (SCALE.md r18). The exact-Jaccard
+    * verify rejects false positives, and keep-min dedup semantics
+    * downstream are unchanged because the hub IS the minimum.
+    *
+    * Residual blind spot: in a MIXED oversized bucket, a member near-dup
+    * to another member but not to the hub yields no pair from that
+    * bucket. At the shipped 16 bands a family must land in a foreign
+    * bucket in every band to be missed (P ≈ J^64 for sub-threshold J);
+    * SkewGuardRecallSpec measures it. At low band counts only more bands
+    * close it: no variant that pairs more of an oversized bucket did
+    * (COVERAGE.md r19/r20).
+    */
+  def minhashNearDups(
+      df: DataFrame, idCol: String, textCol: String,
+      threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
+      shingleK: Int = 3, maxBucket: Int = 64): DataFrame = {
+    val sh = shingleDF(df, idCol, textCol, shingleK)
+    val (bounded, overRows) =
+      splitOversized(bandsOf(sh, idCol, numHashes, bands), BandKey, maxBucket)
+    val a = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_a"))
+    val b = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_b"))
+    val inBucket = a.join(b, BandKey)
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+    val hubs = overRows.groupBy(col("band"), col("band_hash"))
+      .agg(min(col(idCol)).as("anchor"))
+    val hubPairs = overRows.join(broadcast(hubs), BandKey)
+      .filter(col(idCol) =!= col("anchor"))
+      .select(least(col("anchor"), col(idCol)).as("id_a"),
+        greatest(col("anchor"), col(idCol)).as("id_b"))
+    verified(inBucket.union(hubPairs).distinct(), "id_a", sh, "id_b", sh, threshold)
   }
 
   /** Incremental-ingestion near-dup check: which documents of a NEW
     * `batch` near-duplicate something already in `corpus`? The
     * daily-crawl shape — the corpus is never self-joined (its band
     * relation is an artifact a real deployment materializes once and
-    * appends to), only batch buckets meet corpus buckets, so per-day
-    * cost scales with the batch, not the corpus. Returns
-    * (batch_id, corpus_id, jaccard) with exact shingle-Jaccard ≥
-    * `threshold`, verified on candidates only. Oversized CORPUS buckets
-    * (boilerplate / big near-dup families) are excluded from the O(B)
-    * per-batch-row bucket join and covered at linear cost instead: an
-    * exact-digest join (identical boilerplate) plus hub candidates
-    * pairing the batch row with the oversized bucket's min corpus id
-    * (near-identical families — digest alone missed those, ×1000
-    * campaign). Digest collisions are harmless — the exact-Jaccard
-    * verify rejects them. Batch buckets are bounded by the batch size.
+    * appends to, see [[buildDedupIndex]]), only batch buckets meet corpus
+    * buckets, so per-day cost scales with the batch, not the corpus.
+    * Returns (batch_id, corpus_id, jaccard) with exact shingle-Jaccard ≥
+    * `threshold`, verified on candidates only.
     */
   def minhashNearDupsAgainst(
       corpus: DataFrame, batch: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
       shingleK: Int = 3, maxBucket: Int = 64): DataFrame = {
-    val shC = shingleDF(corpus, idCol, textCol, shingleK)
-    val shB = shingleDF(batch, idCol, textCol, shingleK)
-    val bandedC = bandsOf(shC, idCol, numHashes, bands)
-    val bandedB = bandsOf(shB, idCol, numHashes, bands)
-    val oversized = bandedC.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select("band", "band_hash")
-    val boundedC = bandedC.join(broadcast(oversized),
-      Seq("band", "band_hash"), "left_anti")
-    val lshCandidates = boundedC
-      .select(col("band"), col("band_hash"), col(idCol).as("corpus_id"))
-      .join(bandedB.select(col("band"), col("band_hash"),
-        col(idCol).as("batch_id")), Seq("band", "band_hash"))
-      .select("batch_id", "corpus_id")
-    val exactCandidates = batch
-      .select(col(idCol).as("batch_id"),
-        xxhash64(lower(trim(col(textCol)))).as("_digest"))
-      .join(corpus.select(col(idCol).as("corpus_id"),
-        xxhash64(lower(trim(col(textCol)))).as("_digest")), "_digest")
-      .select("batch_id", "corpus_id")
-    // Hub candidates (×1000 campaign fix, same blind spot as the
-    // self-join guard): a batch doc landing in an oversized CORPUS
-    // bucket pairs with that bucket's min corpus id at linear cost —
-    // the digest pass alone only catches IDENTICAL boilerplate, so a
-    // batch doc near-duplicating a big near-dup family used to slip
-    // through entirely.
-    val corpusHubs = bandedC.join(broadcast(oversized),
-        Seq("band", "band_hash"))
-      .groupBy(col("band"), col("band_hash"))
-      .agg(min(col(idCol)).as("corpus_id"))
-    val hubCandidates = bandedB
-      .select(col("band"), col("band_hash"), col(idCol).as("batch_id"))
-      .join(broadcast(corpusHubs), Seq("band", "band_hash"))
-      .select("batch_id", "corpus_id")
-    val candidates =
-      lshCandidates.union(exactCandidates).union(hubCandidates).distinct()
-    candidates
-      .join(shB.withColumnsRenamed(Map(idCol -> "batch_id", "sh" -> "sh_b")),
-        "batch_id")
-      .join(shC.withColumnsRenamed(Map(idCol -> "corpus_id", "sh" -> "sh_c")),
-        "corpus_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_b"), col("sh_c"))).cast("double") /
-          size(array_union(col("sh_b"), col("sh_c"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("jaccard"), 6).as("jaccard"))
+    val (sh, digests, banded) =
+      corpusRelations(corpus, idCol, textCol, numHashes, bands, shingleK)
+    nearDupsAgainstCorpus(sh, digests, banded, batch, idCol, textCol,
+      threshold, numHashes, bands, shingleK, maxBucket)
   }
 
-  /** The (shingles, bands) relations a persisted dedup index stores —
-    * canonical column names so the on-disk schema is independent of the
-    * caller's id column.
+  /** Dedup an incoming batch against a [[buildDedupIndex]] index — the
+    * semantics of [[minhashNearDupsAgainst]], with every corpus-side
+    * relation read from the persisted artifact instead of re-derived from
+    * text. The oversized-bucket set is recomputed from the stored bands (a
+    * metadata-sized aggregate — it must see appended rows, so it cannot be
+    * frozen at build time).
     */
-  private def indexRelations(docs: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, shingleK: Int): (DataFrame, DataFrame) = {
+  def nearDupsAgainstIndex(batch: DataFrame, idCol: String, textCol: String,
+      path: String, threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
+    val spark = batch.sparkSession
+    val (numHashes, bands, shingleK) = indexMeta(spark, path)
+    val sh = spark.read.parquet(s"$path/shingles")
+    nearDupsAgainstCorpus(sh.select("id", "sh"), sh.select("id", "digest"),
+      spark.read.parquet(s"$path/bands"), batch, idCol, textCol,
+      threshold, numHashes, bands, shingleK, maxBucket)
+  }
+
+  /** The batch-vs-corpus body of [[minhashNearDupsAgainst]] and
+    * [[nearDupsAgainstIndex]], over the corpus relations in the index
+    * schema: shingles (id, sh), digests (id, digest) and bands (id, band,
+    * band_hash). Candidates are the union of three passes:
+    *  - LSH: batch buckets meet the corpus buckets of at most `maxBucket`
+    *    members (the corpus-side skew guard; batch buckets are bounded by
+    *    the batch size);
+    *  - exact digest: catches identical boilerplate, whose buckets are
+    *    all oversized;
+    *  - hubs (×1000 campaign fix): a batch doc landing in an oversized
+    *    corpus bucket pairs with that bucket's min corpus id at linear
+    *    cost — the digest pass alone misses a batch doc that
+    *    near-duplicates a big near-dup family.
+    * Digest collisions are harmless: the exact-Jaccard verify rejects
+    * them.
+    */
+  private def nearDupsAgainstCorpus(
+      corpusSh: DataFrame, corpusDigests: DataFrame, corpusBands: DataFrame,
+      batch: DataFrame, idCol: String, textCol: String, threshold: Double,
+      numHashes: Int, bands: Int, shingleK: Int, maxBucket: Int): DataFrame = {
+    val shB = shingleDF(batch, idCol, textCol, shingleK)
+    val bandedB = bandsOf(shB, idCol, numHashes, bands)
+      .select(col("band"), col("band_hash"), col(idCol).as("batch_id"))
+    val (boundedC, overC) = splitOversized(corpusBands, BandKey, maxBucket)
+    val lshCandidates = boundedC
+      .select(col("band"), col("band_hash"), col("id").as("corpus_id"))
+      .join(bandedB, BandKey)
+      .select("batch_id", "corpus_id")
+    val exactCandidates = batch
+      .select(col(idCol).as("batch_id"), textDigest(col(textCol)).as("digest"))
+      .join(corpusDigests.toDF("corpus_id", "digest"), "digest")
+      .select("batch_id", "corpus_id")
+    val corpusHubs = overC.groupBy(col("band"), col("band_hash"))
+      .agg(min(col("id")).as("corpus_id"))
+    val hubCandidates = bandedB.join(broadcast(corpusHubs), BandKey)
+      .select("batch_id", "corpus_id")
+    verified(lshCandidates.union(exactCandidates).union(hubCandidates).distinct(),
+      "batch_id", shB, "corpus_id", corpusSh, threshold)
+  }
+
+  /** A corpus's relations in the index schema: shingles (id, sh), text
+    * digests (id, digest) and bands (id, band, band_hash) — canonical
+    * column names, so the on-disk schema is independent of the caller's
+    * id column.
+    */
+  private def corpusRelations(docs: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, bands: Int, shingleK: Int): (DataFrame, DataFrame, DataFrame) = {
     val sh = shingleDF(docs, idCol, textCol, shingleK)
-    val dig = docs.select(col(idCol).as("id"),
-      xxhash64(lower(trim(col(textCol)))).as("digest"))
-    val shOut = sh.select(col(idCol).as("id"), col("sh")).join(dig, "id")
-    val bandsOut = bandsOf(sh, idCol, numHashes, bands)
-      .select(col(idCol).as("id"), col("band"), col("band_hash"))
-    (shOut, bandsOut)
+    (sh.toDF("id", "sh"),
+      docs.select(col(idCol).as("id"), textDigest(col(textCol)).as("digest")),
+      bandsOf(sh, idCol, numHashes, bands)
+        .select(col(idCol).as("id"), col("band"), col("band_hash")))
   }
 
   /** Build a PERSISTED dedup index — the materialized corpus-side
@@ -405,10 +331,7 @@ object TextDedup {
       path: String, numHashes: Int = 64, bands: Int = 16,
       shingleK: Int = 3): Unit = {
     val spark = corpus.sparkSession
-    val (shOut, bandsOut) =
-      indexRelations(corpus, idCol, textCol, numHashes, bands, shingleK)
-    shOut.write.mode("overwrite").parquet(s"$path/shingles")
-    bandsOut.write.mode("overwrite").parquet(s"$path/bands")
+    writeIndex(corpus, idCol, textCol, path, numHashes, bands, shingleK, "overwrite")
     import spark.implicits._
     Seq((numHashes, bands, shingleK)).toDF("num_hashes", "bands", "shingle_k")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
@@ -421,70 +344,23 @@ object TextDedup {
     */
   def appendDedupIndex(newDocs: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
-    val spark = newDocs.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (shOut, bandsOut) = indexRelations(newDocs, idCol, textCol,
-      m.getInt(0), m.getInt(1), m.getInt(2))
-    shOut.write.mode("append").parquet(s"$path/shingles")
-    bandsOut.write.mode("append").parquet(s"$path/bands")
+    val (numHashes, bands, shingleK) = indexMeta(newDocs.sparkSession, path)
+    writeIndex(newDocs, idCol, textCol, path, numHashes, bands, shingleK, "append")
   }
 
-  /** Dedup an incoming batch against a [[buildDedupIndex]] index —
-    * identical semantics to [[minhashNearDupsAgainst]] (banded LSH +
-    * exact-digest candidates + exact-Jaccard verify, corpus-side skew
-    * guard), with every corpus-side relation read from the persisted
-    * artifact instead of re-derived from text. The oversized-bucket set
-    * is recomputed from the stored bands (a metadata-sized aggregate —
-    * it must see appended rows, so it cannot be frozen at build time).
-    */
-  def nearDupsAgainstIndex(batch: DataFrame, idCol: String, textCol: String,
-      path: String, threshold: Double = 0.8, maxBucket: Int = 64): DataFrame = {
-    val spark = batch.sparkSession
+  private def writeIndex(docs: DataFrame, idCol: String, textCol: String,
+      path: String, numHashes: Int, bands: Int, shingleK: Int, mode: String): Unit = {
+    val (sh, digests, banded) =
+      corpusRelations(docs, idCol, textCol, numHashes, bands, shingleK)
+    sh.join(digests, "id").write.mode(mode).parquet(s"$path/shingles")
+    banded.write.mode(mode).parquet(s"$path/bands")
+  }
+
+  /** (num_hashes, bands, shingle_k) pinned in an index's `meta/`. */
+  private def indexMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Int, Int, Int) = {
     val m = spark.read.parquet(s"$path/meta").head()
-    val (numHashes, bands, shingleK) = (m.getInt(0), m.getInt(1), m.getInt(2))
-    val shC = spark.read.parquet(s"$path/shingles")
-    val bandedC = spark.read.parquet(s"$path/bands")
-    val shB = shingleDF(batch, idCol, textCol, shingleK)
-    val bandedB = bandsOf(shB, idCol, numHashes, bands)
-    val oversized = bandedC.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select("band", "band_hash")
-    val lshCandidates = bandedC
-      .join(broadcast(oversized), Seq("band", "band_hash"), "left_anti")
-      .select(col("band"), col("band_hash"), col("id").as("corpus_id"))
-      .join(bandedB.select(col("band"), col("band_hash"),
-        col(idCol).as("batch_id")), Seq("band", "band_hash"))
-      .select("batch_id", "corpus_id")
-    val exactCandidates = batch
-      .select(col(idCol).as("batch_id"),
-        xxhash64(lower(trim(col(textCol)))).as("digest"))
-      .join(shC.select(col("id").as("corpus_id"), col("digest")), "digest")
-      .select("batch_id", "corpus_id")
-    // Hub candidates for oversized corpus buckets — see
-    // [[minhashNearDupsAgainst]]; identical semantics on the persisted
-    // relations.
-    val corpusHubs = bandedC.join(broadcast(oversized),
-        Seq("band", "band_hash"))
-      .groupBy(col("band"), col("band_hash"))
-      .agg(min(col("id")).as("corpus_id"))
-    val hubCandidates = bandedB
-      .select(col("band"), col("band_hash"), col(idCol).as("batch_id"))
-      .join(broadcast(corpusHubs), Seq("band", "band_hash"))
-      .select("batch_id", "corpus_id")
-    val candidates =
-      lshCandidates.union(exactCandidates).union(hubCandidates).distinct()
-    candidates
-      .join(shB.withColumnsRenamed(Map(idCol -> "batch_id", "sh" -> "sh_b")),
-        "batch_id")
-      .join(shC.select(col("id").as("corpus_id"), col("sh").as("sh_c")),
-        "corpus_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_b"), col("sh_c"))).cast("double") /
-          size(array_union(col("sh_b"), col("sh_c"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("jaccard"), 6).as("jaccard"))
+    (m.getInt(0), m.getInt(1), m.getInt(2))
   }
 
   /** 64-bit SimHash over whitespace terms: bit j of the signature is the
@@ -517,10 +393,11 @@ object TextDedup {
     * join key is (chunk index, chunk value). Returns pairs with their
     * Hamming distance ≤ `maxHamming`.
     *
-    * Same skew guard as [[minhashNearDups]]: short/boilerplate corpora
-    * collapse onto few signatures, and one popular 16-bit chunk value
-    * would make an O(n²) bucket at scale — oversized buckets are dropped
-    * (the exact-dup pass catches identical docs far more cheaply).
+    * Skew guard: short/boilerplate corpora collapse onto few signatures,
+    * and one popular 16-bit chunk value would make an O(n²) bucket at
+    * scale — oversized buckets (the split [[minhashNearDups]] uses) are
+    * dropped here (the exact-dup pass catches identical docs far more
+    * cheaply).
     */
   def simhashNearDups(
       df: DataFrame, idCol: String, textCol: String,
@@ -537,14 +414,7 @@ object TextDedup {
       transform(sequence(lit(0), lit(3)),
         c => call_function("shiftright", col("sig"), c * 16).bitwiseAND(lit(0xFFFFL)))))
       .withColumnsRenamed(Map("pos" -> "chunk", "col" -> "chunk_val"))
-    // Same aggregate + broadcast-anti skew guard as minhashNearDups — no
-    // full-relation window shuffle+sort just to count bucket sizes.
-    val oversized = chunked.groupBy(col("chunk"), col("chunk_val"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select("chunk", "chunk_val")
-    val bounded = chunked.join(broadcast(oversized),
-      Seq("chunk", "chunk_val"), "left_anti")
+    val (bounded, _) = splitOversized(chunked, Seq("chunk", "chunk_val"), maxBucket)
     val a = bounded.select(col("chunk"), col("chunk_val"),
       col(idCol).as("id_a"), col("sig").as("sig_a"))
     val b = bounded.select(col("chunk"), col("chunk_val"),
@@ -625,6 +495,16 @@ object TextDedup {
       .filter(col("n_docs") >= minDocs)
   }
 
+  /** Non-overlapping `c`-token chunk strings of a projected token-array
+    * column (last chunk may be shorter — ceil split, so every token
+    * belongs to exactly one chunk). Shared by the batch dedup and its
+    * streaming face so the two cannot drift.
+    */
+  private[graft] def chunkStrings(w: Column, c: Int): Column =
+    transform(
+      sequence(lit(0), ceil(size(w) / lit(c.toDouble)).cast("int") - 1),
+      i => concat_ws(" ", slice(w, i * c + 1, lit(c))))
+
   /** Sub-document exact dedup with reconstruction — the REMOVAL step
     * that [[repeatedSpans]] only detects: split every document into
     * non-overlapping `chunkTokens`-token chunks, keep each distinct
@@ -645,16 +525,6 @@ object TextDedup {
     * document's OWN chunks (state bounded by the document itself, the
     * same bound as the input row).
     */
-  /** Non-overlapping `c`-token chunk strings of a projected token-array
-    * column (last chunk may be shorter — ceil split, so every token
-    * belongs to exactly one chunk). Shared by the batch dedup and its
-    * streaming face so the two cannot drift.
-    */
-  private[graft] def chunkStrings(w: Column, c: Int): Column =
-    transform(
-      sequence(lit(0), ceil(size(w) / lit(c.toDouble)).cast("int") - 1),
-      i => concat_ws(" ", slice(w, i * c + 1, lit(c))))
-
   def dedupChunksExact(df: DataFrame, idCol: String, textCol: String,
       chunkTokens: Int = 8): DataFrame = {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
@@ -714,6 +584,19 @@ object TextDedup {
         round(col("n_shared").cast("double") / col("n_spans"), 6))
   }
 
+  /** Distinct word-k-gram shingle STRINGS per document: (_id, _tok). */
+  private def shingleSet(docs: DataFrame, idCol: String, textCol: String,
+                         k: Int): DataFrame = {
+    val words = docs.select(col(idCol).as("_id"),
+      split(lower(col(textCol)), " ").as("_w"))
+    words
+      .select(col("_id"), col("_w"), explode(
+        sequence(lit(1), greatest(size(col("_w")) - (k - 1), lit(1)))).as("_i"))
+      .select(col("_id"),
+        array_join(slice(col("_w"), col("_i"), lit(k)), " ").as("_tok"))
+      .distinct()
+  }
+
   /** EXACT set-similarity self-join at word-k-gram-shingle Jaccard ≥
     * `threshold`, with PPJoin-style prefix filtering (Chaudhuri et al.
     * ICDE'06; Xiao et al. WWW'08). Unlike the MinHash path, pruning here
@@ -733,19 +616,6 @@ object TextDedup {
     *
     * Returns (d1, d2, inter, uni, jaccard) with d1 < d2.
     */
-  /** Distinct word-k-gram shingle STRINGS per document: (_id, _tok). */
-  private def shingleSet(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int): DataFrame = {
-    val words = docs.select(col(idCol).as("_id"),
-      split(lower(col(textCol)), " ").as("_w"))
-    words
-      .select(col("_id"), col("_w"), explode(
-        sequence(lit(1), greatest(size(col("_w")) - (k - 1), lit(1)))).as("_i"))
-      .select(col("_id"),
-        array_join(slice(col("_w"), col("_i"), lit(k)), " ").as("_tok"))
-      .distinct()
-  }
-
   def exactSimilarityJoin(docs: DataFrame, idCol: String, textCol: String,
                           k: Int = 5, threshold: Double = 0.5): DataFrame = {
     require(k >= 1, s"shingle length k must be >= 1, got $k")

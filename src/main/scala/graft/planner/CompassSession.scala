@@ -224,16 +224,18 @@ final class CompassSession(
     * cache keys — resolved data identity, join-column order, seed classes —
     * are constructed by exactly the machinery the live path uses. Filtered
     * instances are skipped: templates only ever serve unfiltered scans.
-    * Returns the number of templates now warm.
+    * The workload's distinct templates are built as one concurrent batch.
+    * Returns the number of distinct templates now warm.
     */
-  def warmTemplates(workload: Seq[DataFrame]): Int =
-    workload.map { df =>
-      JoinGraphExtractor.extract(df.queryExecution.analyzed).fold(0) { case (g, _) =>
-        val jobs = resolve(g).filterNot(_.hasFilter).flatMap(i =>
-          i.templateKey.map(k => () => { store.getOrBuild(k)(i.build()); 1 }))
-        CompassSession.awaitAll(jobs).sum
+  def warmTemplates(workload: Seq[DataFrame]): Int = {
+    val templates = workload.flatMap { df =>
+      JoinGraphExtractor.extract(df.queryExecution.analyzed).toSeq.flatMap { case (g, _) =>
+        resolve(g).filterNot(_.hasFilter).flatMap(i => i.templateKey.map(_ -> i))
       }
-    }.sum
+    }.distinctBy(_._1.file)
+    CompassSession.awaitAll(templates.toIndexedSeq.map { case (k, i) =>
+      () => store.getOrBuild(k)(i.build()) }).size
+  }
 
   /** Column label: plain name — unique within a base-table instance, and
     * STABLE across queries (no exprIds), so seed equivalence classes and

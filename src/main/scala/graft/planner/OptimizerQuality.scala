@@ -1,5 +1,6 @@
 package graft.planner
 
+import graft.enumerate.Enumerator
 import graft.plans.{ExtractedJoinGraph, JoinGraphExtractor}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan}
@@ -148,7 +149,8 @@ object OptimizerQuality {
     // compass ≤ naive pin is made harder, never easier.
     val counts: Map[Int, Long] = g.instances.indices
       .map(i => i -> plan.sketchCounts(g.instances(i).name)).toMap
-    val naive = naiveOrder(g, counts)
+    val naive = Enumerator.stockOrder(g.instances.indices,
+      g.edges.map { case ((a, _), (b, _)) => (a, b) }, counts)
     val tC = System.nanoTime()
     val compassSum = prefixSum(spark, g, compassOrder)
     val tN = System.nanoTime()
@@ -237,36 +239,6 @@ object OptimizerQuality {
     }
   }
 
-  /** Stock baseline (reference RelAlgExecutor.cpp:2608-2621 sorts relations
-    * by descending size): largest filtered instance first, then repeatedly
-    * the largest instance adjacent to the placed prefix (largest remaining
-    * when nothing connects — the Cross case, as in rebuildRegion). Ties
-    * break on instance INDEX — deterministic, and the same tie-break as
-    * `Enumerator.stockOrder`, so when the enumerator falls back to its
-    * stock candidate the two orders coincide exactly (sketch counts are
-    * exact survivor counts) and the quality comparison reads equal sums.
-    */
-  def naiveOrder(g: ExtractedJoinGraph, counts: Map[Int, Long]): Seq[Int] = {
-    val adj: Map[Int, Set[Int]] = {
-      val m = scala.collection.mutable.Map.empty[Int, Set[Int]]
-        .withDefaultValue(Set.empty)
-      g.edges.foreach { case ((a, _), (b, _)) =>
-        m(a) = m(a) + b; m(b) = m(b) + a
-      }
-      m.toMap.withDefaultValue(Set.empty)
-    }
-    def largest(cand: Iterable[Int]): Int =
-      cand.minBy(i => (-counts(i), i))
-    val all = g.instances.indices.toSet
-    var placed = Vector(largest(all))
-    while (placed.size < all.size) {
-      val remaining = all -- placed
-      val connected = remaining.filter(i => adj(i).exists(placed.contains))
-      placed :+= largest(if (connected.nonEmpty) connected else remaining)
-    }
-    placed
-  }
-
   /** One query's estimator-mode A/B verdict (r13 verdict #5): the order
     * each estimator mode chose (unconditional reference product-median /
     * independence cascade / the shipping alignment-guarded hybrid), each
@@ -301,7 +273,6 @@ object OptimizerQuality {
   def abForQuery(spark: SparkSession, cs: CompassSession, name: String,
       df: org.apache.spark.sql.DataFrame): ModeAB = {
     val (g, nodes, edges) = cs.sketchGraph(df)
-    import graft.enumerate.Enumerator
     def bestUnder(mode: String): Seq[Int] =
       new Enumerator(nodes, edges, estimator = mode).optimalOrder()._1
     val ref = bestUnder(Enumerator.ModeReference)

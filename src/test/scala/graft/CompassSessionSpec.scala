@@ -272,6 +272,23 @@ class CompassSessionSpec extends AnyFunSuite {
     assert(cs.lastPlan.isDefined, "query must stay on the COMPASS path")
   }
 
+  test("warm-up counts distinct templates: two queries over the same 5 warm 5") {
+    Tables.registerAll(spark, dir)
+    val cacheDir = java.nio.file.Files.createTempDirectory("graft-warm-distinct")
+    try {
+      val cache = new SketchTemplateCache(cacheDir)
+      val q = """SELECT count(*) FROM lineitem
+                |JOIN orders ON l_orderkey = o_orderkey
+                |JOIN customer ON o_custkey = c_custkey
+                |JOIN nation ON c_nationkey = n_nationkey
+                |JOIN region ON n_regionkey = r_regionkey""".stripMargin
+      val warmed = new CompassSession(spark, templateCache = Some(cache))
+        .warmTemplates(Seq(spark.sql(q), spark.sql(q.replace("count(*)", "max(r_name)"))))
+      assert(warmed == 5, s"expected 5 distinct templates, got $warmed")
+      assert(cache.misses == 5)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(cacheDir.toFile)
+  }
+
   test("BASELINE metric: chosen order's true intermediate size <= naive's") {
     // The reference's success criterion (BASELINE.md "Port target"): on
     // multi-join queries the sketch-chosen order's intermediate-result sum

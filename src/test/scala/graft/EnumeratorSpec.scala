@@ -114,6 +114,19 @@ class EnumeratorSpec extends AnyFunSuite {
       s"expected the pinned over-estimate: est=$kOnly true=$trueComposite")
   }
 
+  test("stock order: largest first, then the largest adjacent; ties to the smaller id") {
+    // Adjacency beats size: 2 is the second largest, but 3 and then 1
+    // touch the placed prefix first.
+    assert(Enumerator.stockOrder(0 to 3, Seq((0, 1), (1, 2), (0, 3)),
+      Map(0 -> 100L, 1 -> 5L, 2 -> 90L, 3 -> 50L)) == Seq(0, 3, 1, 2))
+    // Nothing adjacent to the prefix: the largest remaining instance.
+    assert(Enumerator.stockOrder(0 to 3, Seq((0, 1)),
+      Map(0 -> 10L, 1 -> 20L, 2 -> 5L, 3 -> 30L)) == Seq(3, 1, 0, 2))
+    // Equal counts: the smaller id wins, whatever order the ids come in.
+    assert(Enumerator.stockOrder(Seq(2, 0, 3, 1), Seq((2, 3), (3, 1)),
+      _ => 7L) == Seq(0, 1, 3, 2))
+  }
+
   test("no-edge fallback: descending cardinality (MapD stock order)") {
     val reg = new SeedRegistry(rows)
     val a = mkSketch(reg, "0", Seq("k"), Seq.fill(10)(Seq(1)))

@@ -1,0 +1,107 @@
+package graft
+
+import graft.operators.{OpCaches, TextDedup}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+/** Work pins for the MinHash near-dup family on the sf0.01 documents (the
+  * copy the `curation` benchmark workload reads): each operator's Spark
+  * job count and shuffle-write records are ceilings at the values
+  * measured when the pins were set. Both counters are exact from run to
+  * run, so a rise is a plan change, not noise: a second pass over a
+  * relation, an extra exchange or a lost persist. A counter that falls
+  * lowers its pin in the same change.
+  *
+  * Job counts do not depend on the core count (measured equal at 2, 4 and
+  * 8 cores). Shuffle-write records do, slightly: partial aggregates write
+  * one record per key per map partition, and the operators spread their
+  * input over every core (minhashNearDups wrote 31,693 / 32,109 / 32,277
+  * records at 2 / 4 / 8 cores). So the record pins hold at
+  * [[MinHashWorkSpec.PinnedCores]] and are printed elsewhere. Task counts
+  * follow the core count and are printed, never gated.
+  */
+class MinHashWorkSpec extends AnyFunSuite {
+  import MinHashWorkSpec._
+
+  private lazy val spark = SparkTestSession.spark
+  private val sfDir = "perfbench/data/sf0.01"
+  private lazy val docs = Tables.load(spark, sfDir, "documents")
+
+  /** Build and collect `run` under a listener, with the operator caches
+    * released before and after so every persist is paid inside the run.
+    */
+  private def measure(run: => DataFrame): Work = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
+    val records = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        Option(e.taskMetrics).foreach(m =>
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+      }
+    }
+    OpCaches.releaseAll(spark)
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val rows = run.collect().length
+      org.apache.spark.ListenerDrain(sc)
+      Work(rows, jobs.get, records.get, tasks.get)
+    } finally {
+      sc.removeSparkListener(listener)
+      OpCaches.releaseAll(spark)
+    }
+  }
+
+  private def pinned(name: String, w: Work, maxJobs: Int, maxRecords: Long): Unit = {
+    val cores = spark.sparkContext.defaultParallelism
+    info(s"$name: rows ${w.rows}, jobs ${w.jobs}, shuffle records ${w.shuffleRecords}, " +
+      s"tasks ${w.tasks} at $cores cores")
+    assert(w.rows > 0, s"$name found no pairs at sf0.01")
+    assert(w.jobs <= maxJobs, s"$name ran ${w.jobs} jobs (pin $maxJobs)")
+    if (cores == PinnedCores)
+      assert(w.shuffleRecords <= maxRecords,
+        s"$name wrote ${w.shuffleRecords} shuffle records (pin $maxRecords)")
+  }
+
+  private def corpus = docs.filter(col("doc_id") < 400)
+  private def batch = docs.filter(col("doc_id") >= 400)
+
+  test("minhashNearDups: job and shuffle-record pins") {
+    pinned("minhashNearDups",
+      measure(TextDedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.8)),
+      maxJobs = 24, maxRecords = 32109L)
+  }
+
+  test("minhashNearDupsAgainst: job and shuffle-record pins") {
+    pinned("minhashNearDupsAgainst",
+      measure(TextDedup.minhashNearDupsAgainst(corpus, batch, "doc_id", "text",
+        threshold = 0.8)),
+      maxJobs = 18, maxRecords = 13248L)
+  }
+
+  test("nearDupsAgainstIndex: job and shuffle-record pins") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_minhash_work")
+    try {
+      TextDedup.buildDedupIndex(corpus, "doc_id", "text", dir.toString)
+      pinned("nearDupsAgainstIndex",
+        measure(TextDedup.nearDupsAgainstIndex(batch, "doc_id", "text", dir.toString,
+          threshold = 0.8)),
+        maxJobs = 16, maxRecords = 6478L)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+}
+
+object MinHashWorkSpec {
+  /** Core count the shuffle-record pins were measured at. */
+  val PinnedCores = 4
+
+  private final case class Work(rows: Int, jobs: Int, shuffleRecords: Long, tasks: Int)
+}

@@ -63,14 +63,24 @@ class RecordsSpec extends AnyFunSuite {
     assert(c.get("errors").asInt == 5 && f.get("errors").asInt == 5)
     assert(c.get("n_queries").asInt == 337 && f.get("queries").size == 337)
     info(s"compact line: ${compact.length} chars")
-    // Headline (33), the 5 failures, and the 4 of the run's 5 slowest
-    // entries that are not headline (q_job_corpus is the slowest).
-    assert(c.get("queries").size == 42)
+    // Headline (33), the 5 failures and the 5 slowest entries that are
+    // not headline.
+    assert(c.get("queries").size == 43)
     assert(c.get("job_planning").size == 3 && c.get("stream_batches_noisiest").size == 3)
     // The compact line cuts the failure text; the full record keeps all 120 chars.
     val failed = "q_synthetic_entry_336"
     assert(f.get("queries").get(failed).asText == "error: " + message120)
     assert(message120.startsWith(c.get("queries").get(failed).asText.stripPrefix("error: ")))
+  }
+
+  test("the compact line shows the 5 slowest non-headline entries when a headline entry is slower") {
+    val slowest = (1 to 6).map(i => f"q_synthetic_slow_$i" -> (20.0 - i))
+    val queries = (Bench.Headline.map(_ -> Right(1.0)) ++
+      slowest.map { case (k, t) => k -> Right(t) } :+ ("q_synthetic_fast" -> Right(0.5)))
+      .to(VectorMap).updated("q_job_corpus", Right(47.452))
+    val r = wideRecord().copy(queries = queries)
+    val shown = keys(parse(Records.write(r.compact)).get("queries"))
+    assert(shown.drop(Bench.Headline.size) == slowest.take(5).map(_._1))
   }
 
   test("both Bench lines keep their keys, key order and printed precision") {
@@ -87,7 +97,7 @@ class RecordsSpec extends AnyFunSuite {
     assert(keys(f.get("job_corpus_family_n_med_max_ms").get("q_job_corpus")) == Seq("2", "10"))
     val c = parse(Records.write(r.compact))
     assert(keys(c) == Seq("metric", "value", "unit", "queries", "warm_total",
-      "warm_is_median_of_3", "warm_spread_noisiest", "job_planning",
+      "warm_spread_noisiest", "job_planning",
       "job_corpus_latency", "stream_batches_noisiest", "errors", "n_queries", "full", "sf"))
     assert(keys(c.get("queries")).take(Bench.Headline.size) == Bench.Headline)
     val full = Records.write(r.full)

@@ -23,16 +23,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * spec's printout):
   *   - toy banding (numHashes=4, bands=2): the blind spot is REAL —
   *     the hub guard wrongly keeps dozens of shadowed family members
-  *     that the unguarded ceiling dedups; hub + k pseudo-random
-  *     secondary anchors (same O(kB) bound) recovers a measurable part
-  *     of the gap, not all of it.
+  *     that the unguarded ceiling dedups. No variant that pairs more
+  *     of an oversized bucket closes that gap (COVERAGE.md r19/r20).
   *   - shipped banding (numHashes=64, bands=16): the blind spot
   *     VANISHES — shadowing a foreign bucket in all 16 bands needs all
   *     64 minhashes to agree with the mass (P = J^64 ≈ 6e-10 at
   *     J = 0.72), so some band always isolates the family into a small
-  *     pure bucket where the full in-bucket join pairs it. Hub-only
-  *     (hubAnchors = 1) is therefore the right default at the shipped
-  *     config; hubAnchors > 1 is the dial for low-band configurations.
+  *     pure bucket where the full in-bucket join pairs it. At low band
+  *     counts only more bands close the gap.
   */
 class SkewGuardRecallSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -82,45 +80,14 @@ class SkewGuardRecallSpec extends AnyFunSuite {
   private def survivors(pairs: Set[(Long, Long)]): Set[Long] =
     docs.map(_._1).toSet -- pairs.map(_._2)
 
-  private def enginePairs(numHashes: Int, bands: Int, maxBucket: Int,
-      hubAnchors: Int, sortedNeighbors: Boolean = false,
-      rebandOversized: Boolean = false,
-      corpus: Seq[(Long, String)] = docs): Set[(Long, Long)] = {
+  private def enginePairs(numHashes: Int, bands: Int,
+      maxBucket: Int): Set[(Long, Long)] = {
     import spark.implicits._
-    val df = corpus.toDF("doc_id", "text").repartition(4)
+    val df = docs.toDF("doc_id", "text").repartition(4)
     TextDedup.minhashNearDups(df, "doc_id", "text", threshold = 0.8,
-        numHashes = numHashes, bands = bands, maxBucket = maxBucket,
-        hubAnchors = hubAnchors, sortedNeighbors = sortedNeighbors,
-        rebandOversized = rebandOversized)
+        numHashes = numHashes, bands = bands, maxBucket = maxBucket)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
-
-  /** Fixture B: the SAME corpus with ids assigned by a fixed random
-    * permutation — family members no longer contiguous in id space, the
-    * realistic web-crawl shape. Ground truth and the keep-min rule are
-    * recomputed on the remapped ids.
-    */
-  private lazy val scrambled: Seq[(Long, String)] = {
-    val rng = new scala.util.Random(1234)
-    val ids = rng.shuffle(docs.map(_._1).toVector)
-    docs.zip(ids).map { case ((_, text), nid) => (nid, text) }
-  }
-
-  private def truthPairsOf(corpus: Seq[(Long, String)]): Set[(Long, Long)] = {
-    val sh = corpus.map { case (id, t) => (id, shingles(t)) }
-    (for {
-      i <- sh.indices.iterator
-      j <- (i + 1) until sh.size
-      (ia, sa) = sh(i)
-      (ib, sb) = sh(j)
-      inter = (sa & sb).size.toDouble
-      if inter / (sa.size + sb.size - inter) >= 0.8
-    } yield (math.min(ia, ib), math.max(ia, ib))).toSet
-  }
-
-  private def survivorsOf(corpus: Seq[(Long, String)],
-      pairs: Set[(Long, Long)]): Set[Long] =
-    corpus.map(_._1).toSet -- pairs.map(_._2)
 
   test("fixture geometry: truth = mass + family pairs, 49 survivors") {
     // Every mass pair and every within-family pair qualifies; nothing
@@ -133,97 +100,25 @@ class SkewGuardRecallSpec extends AnyFunSuite {
     assert(!truthPairs.exists { case (a, b) => a < massN && b >= 1000 })
   }
 
-  test("toy banding (4 hashes / 2 bands): blind spot measured; anchors recover part of it") {
+  test("toy banding (4 hashes / 2 bands): hub-only blind spot measured") {
     val truth = survivors(truthPairs)
-    val ceiling = survivors(enginePairs(4, 2, 1 << 30, 1))
-    val hub = survivors(enginePairs(4, 2, 16, 1))
-    val anchored = survivors(enginePairs(4, 2, 16, 8))
+    val ceiling = survivors(enginePairs(4, 2, 1 << 30))
+    val hub = survivors(enginePairs(4, 2, 16))
     // Excess = wrongly-kept docs vs the unguarded ceiling at the SAME
     // banding (isolates the guard's loss from generic LSH recall).
     val excessHub = (hub -- ceiling).size
-    val excessAnchor = (anchored -- ceiling).size
     info(s"truth=${truth.size} ceiling=${ceiling.size} " +
-      s"hub=${hub.size} (excess $excessHub) " +
-      s"anchors8=${anchored.size} (excess $excessAnchor)")
-    // The fixture must actually exercise the blind spot...
+      s"hub=${hub.size} (excess $excessHub)")
+    // The fixture must actually exercise the blind spot.
     assert(excessHub > 10,
       s"fixture no longer shadows families: hub excess = $excessHub")
-    // ...and secondary anchors must never lose recall vs hub-only and
-    // are expected to recover a real part of the gap.
-    assert(excessAnchor < excessHub,
-      s"anchors did not improve recall: $excessAnchor vs $excessHub")
     // The guard never ADDS pairs the ceiling lacks (verify rejects
     // false positives), so survivors only shrink toward the ceiling.
     assert(ceiling.subsetOf(hub) || (ceiling -- hub).isEmpty)
   }
 
-  test("sorted-neighborhood variant: wins on contiguous ids, degrades honestly on scrambled ids") {
-    // Fixture A (contiguous family ids): members hiding in a foreign
-    // bucket share an IDENTICAL signature with the mass, so the
-    // equal-key run tie-breaks by id and contiguous families become
-    // adjacent — sorted-adjacent pairing should recover most of the
-    // hub guard's 126-survivor blind spot at O(B log B).
-    val ceiling = survivors(enginePairs(4, 2, 1 << 30, 1))
-    val hub = survivors(enginePairs(4, 2, 16, 1))
-    val sortedA = survivors(enginePairs(4, 2, 16, 1, sortedNeighbors = true))
-    val exA = (hub -- ceiling).size
-    val exSortedA = (sortedA -- ceiling).size
-    info(s"fixture A: hub excess $exA, sorted-adjacent excess $exSortedA")
-    assert(exSortedA < exA / 2,
-      s"sorted-adjacent no longer recovers the contiguous-id case: $exSortedA vs $exA")
-
-    // Fixture B (same corpus, ids randomly permuted — the web-crawl
-    // shape): equal-signature runs interleave every shadowed family, so
-    // adjacency rarely lands inside one family. The variant must be
-    // measured where it FAILS too; the COVERAGE.md table records both.
-    val tB = truthPairsOf(scrambled)
-    val ceilB = survivorsOf(scrambled, enginePairs(4, 2, 1 << 30, 1, corpus = scrambled))
-    val hubB = survivorsOf(scrambled, enginePairs(4, 2, 16, 1, corpus = scrambled))
-    val sortB = survivorsOf(scrambled,
-      enginePairs(4, 2, 16, 1, sortedNeighbors = true, corpus = scrambled))
-    val exHubB = (hubB -- ceilB).size
-    val exSortB = (sortB -- ceilB).size
-    info(s"fixture B (scrambled): truth ${survivorsOf(scrambled, tB).size} " +
-      s"ceiling ${ceilB.size} hub excess $exHubB sorted excess $exSortB")
-    // Sorted-adjacent can only ADD candidate pairs, never lose them.
-    assert(exSortB <= exHubB)
-  }
-
-  test("re-banding variant: measured on both id layouts (r19 verdict #7)") {
-    // The last untested O(B·bands)-class knob: re-band ONLY the
-    // oversized-bucket members with rotated band boundaries (band j =
-    // rows (j·r + r/2 .. +r−1) mod numHashes) — a second chance for a
-    // shadowed family to isolate, id-INDEPENDENT (unlike
-    // sortedNeighbors' tie-break, which only helps contiguous ids).
-    // It cannot rescue members whose every row agrees with the mass
-    // (rotation reuses the same hashes); the measurement below records
-    // how much of the blind spot that ceiling leaves reachable.
-    val ceiling = survivors(enginePairs(4, 2, 1 << 30, 1))
-    val hub = survivors(enginePairs(4, 2, 16, 1))
-    val rebA = survivors(enginePairs(4, 2, 16, 1, rebandOversized = true))
-    val exHub = (hub -- ceiling).size
-    val exRebA = (rebA -- ceiling).size
-    info(s"fixture A: hub excess $exHub, reband excess $exRebA")
-
-    val ceilB = survivorsOf(scrambled,
-      enginePairs(4, 2, 1 << 30, 1, corpus = scrambled))
-    val hubB = survivorsOf(scrambled,
-      enginePairs(4, 2, 16, 1, corpus = scrambled))
-    val rebB = survivorsOf(scrambled,
-      enginePairs(4, 2, 16, 1, rebandOversized = true, corpus = scrambled))
-    val exHubB = (hubB -- ceilB).size
-    val exRebB = (rebB -- ceilB).size
-    info(s"fixture B (scrambled): hub excess $exHubB, reband excess $exRebB")
-    // Adding candidates can only shrink survivors toward the ceiling.
-    // (The variant's CANDIDATE set is id-independent — rotation never
-    // reads ids — but excess counts are keep-min survivor counts, whose
-    // baseline differs per layout: scrambling can hand a family a
-    // low-id hub of its own.)
-    assert(exRebA <= exHub && exRebB <= exHubB)
-  }
-
   test("shipped banding (64 hashes / 16 bands): blind spot vanishes, hub-only is exact") {
-    val hub = survivors(enginePairs(64, 16, 16, 1))
+    val hub = survivors(enginePairs(64, 16, 16))
     assert(hub == survivors(truthPairs),
       s"hub guard at shipped banding missed ${(hub -- survivors(truthPairs)).size} " +
         "excess survivors — the 16-band shadow-probability argument broke")
