@@ -219,20 +219,17 @@ object Bench {
     // channel (r19 verdict #2). Full record only.
     val driverPeaks = scala.collection.mutable
       .LinkedHashMap.empty[String, (Long, Long)]
-    DriverFootprint.install(spark)
     selected.foreach { e =>
       // Settle the heap between entries so a 100+-query session's
       // accumulated garbage is not charged to whichever entry GC happens
       // to interrupt (r3 showed ~1.5x uniform drift on join entries).
       System.gc()
-      DriverFootprint.reset()
-      val cold = lap(e)
+      // The lap's wall clock runs inside the scope, so neither listener
+      // bus drain is timed.
+      val (cold, work) = Work.measure(spark)(lap(e))
       timings(e.name) = cold.time
       if (cold.time.isRight) lapTelemetry(e.name) = Vector(cold.gcJit)
-      // Cold-lap driver footprint (snapshot settles the async listener
-      // bus AFTER the wall time was recorded, so it cannot contaminate
-      // the timing).
-      driverPeaks(e.name) = DriverFootprint.snapshot()
+      driverPeaks(e.name) = (work.resultBytes, work.heapPeakBytes)
       val rec = cold.rec
       if (rec.compassRuns.nonEmpty) jobPlanning(e.name) = rec.compassRuns
       if (rec.qualityReports.nonEmpty) jobQuality(e.name) = rec.qualityReports
@@ -276,7 +273,7 @@ object Bench {
           else if (Headline.contains(e.name)) 3 else 1
         // Lazy: the first failed lap ends the entry's warm laps.
         val warm = Iterator.fill(nLaps) {
-          // Between-lap heap settle for the jittery trio: an eager
+          // Between-lap GC for the jittery trio: an eager
           // checkpoint mid-lap is where a pending GC lands otherwise.
           if (checkpointHeavy(e.name)) System.gc()
           try lap(e) finally graft.operators.OpCaches.releaseAll(spark)

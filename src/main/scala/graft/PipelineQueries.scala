@@ -533,7 +533,7 @@ object PipelineQueries {
       ivfIndexDirs.put(s, m); m
     }
     perDir.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+      val path = Queries.tempDir("graft_ivf_idx")
       Similarity.buildIvfIndex(emb, "vec_id", "embedding", path, nCentroids = 16)
       path
     })
@@ -555,7 +555,7 @@ object PipelineQueries {
       dedupIndexDirs.put(s, m); m
     }
     perDir.getOrElseUpdate(dir, {
-      val path = java.nio.file.Files.createTempDirectory("graft_dedup_idx").toString
+      val path = Queries.tempDir("graft_dedup_idx")
       TextDedup.buildDedupIndex(docs.filter(col("doc_id") < 300),
         "doc_id", "text", path)
       TextDedup.appendDedupIndex(
@@ -1771,8 +1771,7 @@ object PipelineQueries {
         "SELECT CAST(floor((c - n) / 1000.0) AS BIGINT) AS shard, " +
         "  CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens " +
         "FROM cum GROUP BY 1 ORDER BY 1") { (s, dir) =>
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_shards").toString
+      val path = Queries.tempDir("graft_shards")
       graft.operators.Corpus.writeShards(
           Tables.load(s, dir, "documents"), "doc_id", "text",
           path, tokensPerShard = 1000L)

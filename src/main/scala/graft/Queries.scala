@@ -202,15 +202,21 @@ object Queries {
     */
   private[graft] def tempDir(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm))
-        p.delete(): Unit
-      }
-      rm(dir.toFile)
-    }))
+    tempDirs.add(dir.toFile)
+    tempDirsHook
     dir.toString
   }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  /** One shutdown hook deletes every dir [[tempDir]] made. */
+  private lazy val tempDirsHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() => {
+    def rm(p: java.io.File): Unit = {
+      Option(p.listFiles).foreach(_.foreach(rm))
+      p.delete(): Unit
+    }
+    tempDirs.forEach(rm(_))
+  }))
 
   /** Write orders + customer BUCKETED by custkey (matching 8-bucket
     * counts + sortBy) as catalog tables `graft_bkt_orders` /

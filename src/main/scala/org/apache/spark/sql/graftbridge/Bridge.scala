@@ -70,4 +70,11 @@ object Bridge {
   def preCBORules(ext: org.apache.spark.sql.SparkSessionExtensions,
       spark: SparkSession): Seq[org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]] =
     ext.buildPreCBORules(spark)
+
+  /** Block until every event posted so far has reached the registered
+    * listeners (the bus is `private[spark]`), so a count read afterwards
+    * is exact. Gives up with a `TimeoutException` after 60 s.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

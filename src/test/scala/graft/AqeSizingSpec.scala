@@ -2,7 +2,6 @@ package graft
 
 import graft.engine.LocalSession
 import graft.operators.{Components, Corpus, Prefix}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,24 +21,10 @@ class AqeSizingSpec extends AnyFunSuite {
     _.conf.set("spark.sql.shuffle.partitions", "200")
   }
 
-  /** Sorted rows of `run(s)`, and the task count of every stage it ran. */
-  private def tasksPerStage(s: SparkSession)(run: SparkSession => DataFrame)
-      : (Seq[String], Seq[(String, Int)]) = {
-    val sc = s.sparkContext
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        stages.add((e.stageInfo.name, e.stageInfo.numTasks)): Unit
-    }
-    org.apache.spark.ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val rows = run(s).collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      org.apache.spark.ListenerDrain(sc)
-      import scala.jdk.CollectionConverters._
-      (rows, stages.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Sorted rows of `run(s)`, and the work it did. */
+  private def rowsAndWork(s: SparkSession)(run: SparkSession => DataFrame)
+      : (Seq[String], Work.Counts) =
+    Work.measure(s)(run(s).collect().map(_.toSeq.mkString("|")).sorted.toSeq)
 
   private def keyed(s: SparkSession): DataFrame = {
     import s.implicits._
@@ -70,11 +55,10 @@ class AqeSizingSpec extends AnyFunSuite {
   calls.foreach { case (name, call) =>
     test(s"$name at 200 shuffle partitions: AQE sizes every stage, same result") {
       assert(at200.conf.get("spark.sql.shuffle.partitions") == "200")
-      val (got, stages) = tasksPerStage(at200)(call)
-      assert(stages.nonEmpty, "the listener saw no stage")
-      val wide = stages.filter(_._2 >= 200)
-      assert(wide.isEmpty, s"stages with 200+ tasks: $wide")
-      val (expected, _) = tasksPerStage(spark)(call)
+      val (got, work) = rowsAndWork(at200)(call)
+      assert(work.stages > 0, "the listener saw no stage")
+      assert(work.maxStageTasks < 200, s"a stage ran ${work.maxStageTasks} tasks")
+      val (expected, _) = rowsAndWork(spark)(call)
       assert(got.nonEmpty && got == expected)
     }
   }

@@ -25,19 +25,8 @@ class CompassSessionSpec extends AnyFunSuite {
     */
   private def optimizeCountingJobs(cs: CompassSession, q: String)
       : (org.apache.spark.sql.DataFrame, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val df = cs.optimize(spark.sql(q))
-      org.apache.spark.ListenerDrain(sc)
-      (df, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (df, work) = Work.measure(spark)(cs.optimize(spark.sql(q)))
+    (df, work.jobs)
   }
 
   private def cacheFiles(dir: java.nio.file.Path, prefix: String): Seq[java.nio.file.Path] = {
@@ -173,17 +162,18 @@ class CompassSessionSpec extends AnyFunSuite {
 
   test("template cache: unfiltered tables served without a second scan") {
     Tables.registerAll(spark, dir)
-    val cache = new SketchTemplateCache(
-      java.nio.file.Files.createTempDirectory("graft-cache-test"))
-    val cs = new CompassSession(spark, templateCache = Some(cache))
-    cs.sql(fiveWay).collect()
-    val missesAfterFirst = cache.misses
-    // 4 unfiltered instances (lineitem/orders/customer/nation); region is
-    // filtered and must NOT be cached.
-    assert(missesAfterFirst == 4, s"expected 4 cache builds, got $missesAfterFirst")
-    cs.sql(fiveWay).collect()
-    assert(cache.misses == missesAfterFirst, "second run must not rebuild")
-    assert(cache.hits >= 4)
+    TempDirs.withTempDir("graft-cache-test") { cacheDir =>
+      val cache = new SketchTemplateCache(cacheDir)
+      val cs = new CompassSession(spark, templateCache = Some(cache))
+      cs.sql(fiveWay).collect()
+      val missesAfterFirst = cache.misses
+      // 4 unfiltered instances (lineitem/orders/customer/nation); region is
+      // filtered and must NOT be cached.
+      assert(missesAfterFirst == 4, s"expected 4 cache builds, got $missesAfterFirst")
+      cs.sql(fiveWay).collect()
+      assert(cache.misses == missesAfterFirst, "second run must not rebuild")
+      assert(cache.hits >= 4)
+    }
   }
 
   test("filtered-sketch memo: repeated (table, filter-set) builds once per session") {
@@ -203,79 +193,81 @@ class CompassSessionSpec extends AnyFunSuite {
   test("filtered-sketch disk tier: a COLD session with a warm cache dir " +
       "runs zero filtered sketch jobs and plans identically") {
     Tables.registerAll(spark, dir)
-    val cacheDir = java.nio.file.Files.createTempDirectory("graft-filtered-tier")
-    // Session 1: cold everything — builds the filtered region sketch and
-    // spills it to the disk tier.
-    val cs1 = new CompassSession(spark,
-      templateCache = Some(new SketchTemplateCache(cacheDir)))
-    val (df1, coldJobs) = optimizeCountingJobs(cs1, fiveWay)
-    val r1 = df1.collect().map(_.toSeq)
-    val plan1 = cs1.lastPlan.get
-    assert(coldJobs >= 1, "cold session must build the filtered sketch")
-    assert(cacheFiles(cacheDir, "filtered-").nonEmpty, "the filtered sketch must spill to disk")
-    // Session 2: NEW CompassSession (memory memo empty — the r12 cold-start
-    // cost) over the SAME cache dir: every sketch must come from disk, no
-    // sketch job, and the plan + results must be identical (the persisted
-    // bytes ARE the built sketch, so estimates cannot drift).
-    val cs2 = new CompassSession(spark,
-      templateCache = Some(new SketchTemplateCache(cacheDir)))
-    val (df2, warmJobs) = optimizeCountingJobs(cs2, fiveWay)
-    val r2 = df2.collect().map(_.toSeq)
-    val plan2 = cs2.lastPlan.get
-    assert(warmJobs == 0, s"warm disk tier must serve every sketch (ran $warmJobs jobs)")
-    assert(plan2.order == plan1.order, "disk-served sketches must reproduce the plan")
-    assert(plan2.sketchCounts == plan1.sketchCounts)
-    assert(r2.toSeq == r1.toSeq)
-    // And the result still equals vanilla.
-    assert(r2.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
+    TempDirs.withTempDir("graft-filtered-tier") { cacheDir =>
+      // Session 1: cold everything — builds the filtered region sketch and
+      // spills it to the disk tier.
+      val cs1 = new CompassSession(spark,
+        templateCache = Some(new SketchTemplateCache(cacheDir)))
+      val (df1, coldJobs) = optimizeCountingJobs(cs1, fiveWay)
+      val r1 = df1.collect().map(_.toSeq)
+      val plan1 = cs1.lastPlan.get
+      assert(coldJobs >= 1, "cold session must build the filtered sketch")
+      assert(cacheFiles(cacheDir, "filtered-").nonEmpty, "the filtered sketch must spill to disk")
+      // Session 2: NEW CompassSession (memory memo empty — the r12 cold-start
+      // cost) over the SAME cache dir: every sketch must come from disk, no
+      // sketch job, and the plan + results must be identical (the persisted
+      // bytes ARE the built sketch, so estimates cannot drift).
+      val cs2 = new CompassSession(spark,
+        templateCache = Some(new SketchTemplateCache(cacheDir)))
+      val (df2, warmJobs) = optimizeCountingJobs(cs2, fiveWay)
+      val r2 = df2.collect().map(_.toSeq)
+      val plan2 = cs2.lastPlan.get
+      assert(warmJobs == 0, s"warm disk tier must serve every sketch (ran $warmJobs jobs)")
+      assert(plan2.order == plan1.order, "disk-served sketches must reproduce the plan")
+      assert(plan2.sketchCounts == plan1.sketchCounts)
+      assert(r2.toSeq == r1.toSeq)
+      // And the result still equals vanilla.
+      assert(r2.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
+    }
   }
 
   test("a corrupt template file is rebuilt, and the query stays on the COMPASS path") {
     Tables.registerAll(spark, dir)
-    val cacheDir = java.nio.file.Files.createTempDirectory("graft-corrupt-template")
-    new CompassSession(spark, templateCache = Some(new SketchTemplateCache(cacheDir)))
-      .warmTemplates(Seq(spark.sql(fiveWay)))
-    val templates = cacheFiles(cacheDir, "sketch-")
-    assert(templates.nonEmpty)
-    templates.foreach(java.nio.file.Files.write(_, Array[Byte](1, 2, 3)))
-    val cache = new SketchTemplateCache(cacheDir)
-    val cs = new CompassSession(spark, templateCache = Some(cache))
-    val r = cs.sql(fiveWay).collect().map(_.toSeq)
-    assert(cs.lastPlan.isDefined, "a corrupt template must not knock the query off COMPASS")
-    assert(r.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
-    assert(cache.misses > 0, "the corrupt templates must be rebuilt")
+    TempDirs.withTempDir("graft-corrupt-template") { cacheDir =>
+      new CompassSession(spark, templateCache = Some(new SketchTemplateCache(cacheDir)))
+        .warmTemplates(Seq(spark.sql(fiveWay)))
+      val templates = cacheFiles(cacheDir, "sketch-")
+      assert(templates.nonEmpty)
+      templates.foreach(java.nio.file.Files.write(_, Array[Byte](1, 2, 3)))
+      val cache = new SketchTemplateCache(cacheDir)
+      val cs = new CompassSession(spark, templateCache = Some(cache))
+      val r = cs.sql(fiveWay).collect().map(_.toSeq)
+      assert(cs.lastPlan.isDefined, "a corrupt template must not knock the query off COMPASS")
+      assert(r.toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
+      assert(cache.misses > 0, "the corrupt templates must be rebuilt")
+    }
   }
 
   test("PRE_PROCESSING warm-up: first compass query after warm() builds nothing") {
     Tables.registerAll(spark, dir)
-    val cache = new SketchTemplateCache(
-      java.nio.file.Files.createTempDirectory("graft-warm-test"))
-    val cs = new CompassSession(spark, templateCache = Some(cache))
-    // Warm with the UNFILTERED workload shape (the filtered region instance
-    // would never be template-served anyway).
-    val warmed = cs.warmTemplates(Seq(spark.sql(
-      """SELECT count(*) FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey""".stripMargin)))
-    assert(warmed == 5, s"expected 5 warmed templates, got $warmed")
-    val missesAfterWarm = cache.misses
-    assert(missesAfterWarm == 5)
-    // The live query (with its region filter) must be served entirely from
-    // the warmed templates: zero new builds, and the filtered instance
-    // takes the tiny-template shortcut rather than a sketch job.
-    cs.sql(fiveWay).collect()
-    assert(cache.misses == missesAfterWarm,
-      s"live query rebuilt templates: ${cache.misses - missesAfterWarm} new misses")
-    assert(cache.hits >= 4)
-    assert(cs.lastPlan.isDefined, "query must stay on the COMPASS path")
+    TempDirs.withTempDir("graft-warm-test") { cacheDir =>
+      val cache = new SketchTemplateCache(cacheDir)
+      val cs = new CompassSession(spark, templateCache = Some(cache))
+      // Warm with the UNFILTERED workload shape (the filtered region instance
+      // would never be template-served anyway).
+      val warmed = cs.warmTemplates(Seq(spark.sql(
+        """SELECT count(*) FROM lineitem
+          |JOIN orders ON l_orderkey = o_orderkey
+          |JOIN customer ON o_custkey = c_custkey
+          |JOIN nation ON c_nationkey = n_nationkey
+          |JOIN region ON n_regionkey = r_regionkey""".stripMargin)))
+      assert(warmed == 5, s"expected 5 warmed templates, got $warmed")
+      val missesAfterWarm = cache.misses
+      assert(missesAfterWarm == 5)
+      // The live query (with its region filter) must be served entirely from
+      // the warmed templates: zero new builds, and the filtered instance
+      // takes the tiny-template shortcut rather than a sketch job.
+      cs.sql(fiveWay).collect()
+      assert(cache.misses == missesAfterWarm,
+        s"live query rebuilt templates: ${cache.misses - missesAfterWarm} new misses")
+      assert(cache.hits >= 4)
+      assert(cs.lastPlan.isDefined, "query must stay on the COMPASS path")
+    }
   }
 
   test("warm-up counts distinct templates: two queries over the same 5 warm 5") {
     Tables.registerAll(spark, dir)
-    val cacheDir = java.nio.file.Files.createTempDirectory("graft-warm-distinct")
-    try {
+    TempDirs.withTempDir("graft-warm-distinct") { cacheDir =>
       val cache = new SketchTemplateCache(cacheDir)
       val q = """SELECT count(*) FROM lineitem
                 |JOIN orders ON l_orderkey = o_orderkey
@@ -286,7 +278,7 @@ class CompassSessionSpec extends AnyFunSuite {
         .warmTemplates(Seq(spark.sql(q), spark.sql(q.replace("count(*)", "max(r_name)"))))
       assert(warmed == 5, s"expected 5 distinct templates, got $warmed")
       assert(cache.misses == 5)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(cacheDir.toFile)
+    }
   }
 
   test("BASELINE metric: chosen order's true intermediate size <= naive's") {
@@ -322,24 +314,25 @@ class CompassSessionSpec extends AnyFunSuite {
 
   test("tiny-table shortcut: filtered small table served from its template") {
     Tables.registerAll(spark, dir)
-    val cache = new SketchTemplateCache(
-      java.nio.file.Files.createTempDirectory("graft-tiny-test"))
-    val cs = new CompassSession(spark, templateCache = Some(cache))
-    // Seed the cache: same join graph, region UNFILTERED → template built.
-    cs.sql(
-      """SELECT count(*) AS n FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey""".stripMargin).collect()
-    val missesAfterSeed = cache.misses
-    // Now region is filtered, but its template shows 5 rows < 200 → the
-    // filtered sketch job is skipped and the template served.
-    cs.sql(fiveWay).collect()
-    assert(cache.misses == missesAfterSeed,
-      "tiny filtered table must not trigger a new sketch build")
-    assert(cs.lastPlan.get.sketchCounts("region") == 5,
-      s"expected the 5-row template count, got ${cs.lastPlan.get.sketchCounts}")
+    TempDirs.withTempDir("graft-tiny-test") { cacheDir =>
+      val cache = new SketchTemplateCache(cacheDir)
+      val cs = new CompassSession(spark, templateCache = Some(cache))
+      // Seed the cache: same join graph, region UNFILTERED → template built.
+      cs.sql(
+        """SELECT count(*) AS n FROM lineitem
+          |JOIN orders ON l_orderkey = o_orderkey
+          |JOIN customer ON o_custkey = c_custkey
+          |JOIN nation ON c_nationkey = n_nationkey
+          |JOIN region ON n_regionkey = r_regionkey""".stripMargin).collect()
+      val missesAfterSeed = cache.misses
+      // Now region is filtered, but its template shows 5 rows < 200 → the
+      // filtered sketch job is skipped and the template served.
+      cs.sql(fiveWay).collect()
+      assert(cache.misses == missesAfterSeed,
+        "tiny filtered table must not trigger a new sketch build")
+      assert(cs.lastPlan.get.sketchCounts("region") == 5,
+        s"expected the 5-row template count, got ${cs.lastPlan.get.sketchCounts}")
+    }
   }
 
   test("chosen 4-table order is near-optimal among ALL connected orders by true cost") {
@@ -420,24 +413,25 @@ class CompassSessionSpec extends AnyFunSuite {
   }
 
   test("template cache keys on data identity, not view/alias name") {
-    val cache = new SketchTemplateCache(
-      java.nio.file.Files.createTempDirectory("graft-identity-test"))
-    val cs = new CompassSession(spark, templateCache = Some(cache))
-    Tables.registerAll(spark, dir) // sf0.001
-    cs.sql(fiveWay).collect()
-    val countSmall = cs.lastPlan.get.sketchCounts("customer")
-    val missesAfterFirst = cache.misses
-    // Same view names, same aliases, same columns — DIFFERENT data. An
-    // alias-keyed cache (the r2 hazard) would serve the stale sf0.001
-    // sketch; the data-identity key must rebuild.
-    Tables.registerAll(spark, "/root/testdata/sf0.01")
-    cs.sql(fiveWay).collect()
-    assert(cache.misses > missesAfterFirst,
-      "different data under the same view names must rebuild templates")
-    val countBig = cs.lastPlan.get.sketchCounts("customer")
-    assert(countBig > countSmall,
-      s"sf0.01 customer template must not reuse sf0.001's ($countSmall vs $countBig)")
-    Tables.registerAll(spark, dir) // restore
+    TempDirs.withTempDir("graft-identity-test") { cacheDir =>
+      val cache = new SketchTemplateCache(cacheDir)
+      val cs = new CompassSession(spark, templateCache = Some(cache))
+      Tables.registerAll(spark, dir) // sf0.001
+      cs.sql(fiveWay).collect()
+      val countSmall = cs.lastPlan.get.sketchCounts("customer")
+      val missesAfterFirst = cache.misses
+      // Same view names, same aliases, same columns — DIFFERENT data. An
+      // alias-keyed cache (the r2 hazard) would serve the stale sf0.001
+      // sketch; the data-identity key must rebuild.
+      Tables.registerAll(spark, "/root/testdata/sf0.01")
+      cs.sql(fiveWay).collect()
+      assert(cache.misses > missesAfterFirst,
+        "different data under the same view names must rebuild templates")
+      val countBig = cs.lastPlan.get.sketchCounts("customer")
+      assert(countBig > countSmall,
+        s"sf0.01 customer template must not reuse sf0.001's ($countSmall vs $countBig)")
+      Tables.registerAll(spark, dir) // restore
+    }
   }
 
   test("the spliced plan reads base tables, never a push-down cache") {

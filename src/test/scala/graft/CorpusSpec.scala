@@ -252,20 +252,22 @@ class CorpusSpec extends AnyFunSuite {
     // 6 docs × 4 tokens, cap 10: cum 4,8,12,16,20,24 → start offsets
     // 0,4,8,12,16,20 → shards 0,0,0,1,1,2.
     val docs = (1 to 6).map(i => (i.toLong, "w x y z")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft_shards_spec").toString
-    val manifest = Corpus.writeShards(docs, "doc_id", "text", path, tokensPerShard = 10L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(manifest.toSeq == Seq((0L, 3L, 12L), (1L, 2L, 8L), (2L, 1L, 4L)))
-    // The written data round-trips with the shard partition column and
-    // covers every document exactly once.
-    val back = spark.read.parquet(s"$path/data")
-    assert(back.columns.toSet == Set("doc_id", "text", "n_tokens", "shard"))
-    assert(back.count() == 6)
-    assert(back.filter(col("shard") === 0).select("doc_id").collect()
-      .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
-    assert(spark.read.parquet(s"$path/manifest").count() == 3)
-    intercept[IllegalArgumentException] {
-      Corpus.writeShards(docs, "doc_id", "text", path, tokensPerShard = 0L) }
+    TempDirs.withTempDir("graft_shards_spec") { tmp =>
+      val path = tmp.toString
+      val manifest = Corpus.writeShards(docs, "doc_id", "text", path, tokensPerShard = 10L)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(manifest.toSeq == Seq((0L, 3L, 12L), (1L, 2L, 8L), (2L, 1L, 4L)))
+      // The written data round-trips with the shard partition column and
+      // covers every document exactly once.
+      val back = spark.read.parquet(s"$path/data")
+      assert(back.columns.toSet == Set("doc_id", "text", "n_tokens", "shard"))
+      assert(back.count() == 6)
+      assert(back.filter(col("shard") === 0).select("doc_id").collect()
+        .map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+      assert(spark.read.parquet(s"$path/manifest").count() == 3)
+      intercept[IllegalArgumentException] {
+        Corpus.writeShards(docs, "doc_id", "text", path, tokensPerShard = 0L) }
+    }
   }
 
   test("decontaminate: optimized plan splits each text exactly once") {
@@ -276,17 +278,19 @@ class CorpusSpec extends AnyFunSuite {
     // every gram — a measured 30x slowdown. Pin one StringSplit per side.
     // A LocalRelation fixture would be constant-folded (split evaluated at
     // planning time, zero StringSplit left to count) — use a parquet scan.
-    val dir = java.nio.file.Files.createTempDirectory("corpus_plan").toString
-    Seq((1L, "a b c d e f"), (2L, "x y z w v u"))
-      .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
-    val docs = spark.read.parquet(dir)
-    val plan = Corpus.decontaminate(docs, "doc_id", "text",
-        docs.limit(1), "text", 4)
-      .queryExecution.optimizedPlan
-    var splits = 0
-    plan.foreach(_.expressions.foreach(_.foreach { e =>
-      if (e.getClass.getSimpleName == "StringSplit") splits += 1
-    }))
-    assert(splits == 2, s"expected 2 StringSplit (doc + bench side), got $splits")
+    TempDirs.withTempDir("corpus_plan") { tmp =>
+      val dir = tmp.toString
+      Seq((1L, "a b c d e f"), (2L, "x y z w v u"))
+        .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+      val docs = spark.read.parquet(dir)
+      val plan = Corpus.decontaminate(docs, "doc_id", "text",
+          docs.limit(1), "text", 4)
+        .queryExecution.optimizedPlan
+      var splits = 0
+      plan.foreach(_.expressions.foreach(_.foreach { e =>
+        if (e.getClass.getSimpleName == "StringSplit") splits += 1
+      }))
+      assert(splits == 2, s"expected 2 StringSplit (doc + bench side), got $splits")
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Measured driver-memory gate (r19 verdict #2): the "every collect()
@@ -30,25 +31,36 @@ class DriverIngressGateSpec extends AnyFunSuite {
     df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
   }
 
-  private def ingress(name: String, dir: String): (Long, Long, Long) = {
-    DriverFootprint.install(spark)
-    DriverFootprint.reset()
-    materialize(Queries.queryMap(name)(spark, dir))
+  private def ingress(name: String, dir: String): Work.Counts = {
+    val (_, work) = Work.measure(spark)(materialize(Queries.queryMap(name)(spark, dir)))
     graft.operators.OpCaches.releaseAll(spark)
-    (DriverFootprint.snapshot()._1, DriverFootprint.broadcastBytes(),
-      DriverFootprint.tasks())
+    work
+  }
+
+  test("a broadcast build counts as broadcast ingress, not as collected results") {
+    val nation = Tables.load(spark, "/root/testdata/sf0.01", "nation")
+    val joined = Tables.load(spark, "/root/testdata/sf0.01", "customer")
+      .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
+    val (_, kept) = Work.measure(spark)(materialize(joined))
+    val (rows, collected) = Work.measure(spark)(joined.collect().length)
+    info(s"materialized: broadcast ${kept.broadcastBytes} B, results ${kept.resultBytes} B; " +
+      s"collect of $rows rows: results ${collected.resultBytes} B")
+    assert(rows > 0)
+    assert(kept.broadcastBytes > 0, "the broadcast build was not counted as broadcast")
+    assert(kept.resultBytes < collected.resultBytes,
+      "materializing on the executors shipped as much as collecting the rows")
   }
 
   test("collect-site driver ingress grows sublinearly with the corpus") {
     val rows = gated.map { n =>
-      val (small, smallBc, _) = ingress(n, "/root/testdata/sf0.01")
-      val (big, bigBc, bigTasks) = ingress(n, "/root/testdata/sf0.1")
-      val ratio = if (small > 0) big.toDouble / small else 0.0
-      val perTask = if (bigTasks > 0) big / bigTasks else 0L
-      info(f"$n%-20s collect-ingress ${small >> 10}%6d KB -> ${big >> 10}%6d KB " +
-        f"(x$ratio%.2f on x10 input, ${perTask >> 10}%d KB/task), " +
-        f"broadcast-ingress ${smallBc >> 10}%d -> ${bigBc >> 10}%d KB")
-      (n, big, bigBc, ratio, perTask)
+      val small = ingress(n, "/root/testdata/sf0.01")
+      val big = ingress(n, "/root/testdata/sf0.1")
+      val ratio = if (small.resultBytes > 0) big.resultBytes.toDouble / small.resultBytes else 0.0
+      val perTask = if (big.tasks > 0) big.resultBytes / big.tasks else 0L
+      info(f"$n%-20s collect-ingress ${small.resultBytes >> 10}%6d KB -> " +
+        f"${big.resultBytes >> 10}%6d KB (x$ratio%.2f on x10 input, ${perTask >> 10}%d KB/task), " +
+        f"broadcast-ingress ${small.broadcastBytes >> 10}%d -> ${big.broadcastBytes >> 10}%d KB")
+      (n, big.resultBytes, big.broadcastBytes, ratio, perTask)
     }
     rows.foreach { case (n, big, bigBc, ratio, perTask) =>
       // Ingress is split into two classes with different contracts:

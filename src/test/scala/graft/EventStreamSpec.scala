@@ -422,29 +422,33 @@ class EventStreamSpec extends AnyFunSuite {
     // readStream → parse → writeStream.toTable: the reference's Kafka
     // StreamInsert appends rows to a catalog table which queries then
     // scan (mapd-core/Import/Importer.h:757-791).
-    val loc = java.nio.file.Files.createTempDirectory("graft_stream_t").toString
-    spark.sql("DROP TABLE IF EXISTS graft_stream_events")
-    val input = MemoryStream[String]
-    val parsed = EventStream.parseEvents(input.toDF().toDF("value"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ck").toString
-    val query = parsed.writeStream
-      .option("checkpointLocation", ckpt)
-      .option("path", s"$loc/t")
-      .toTable("graft_stream_events")
-    try {
-      def json(id: Long, h: Int, typ: String) =
-        s"""{"event_id":$id,"ts":"2024-01-01 0$h:00:00","user_id":${id % 5},"event_type":"$typ","value":1.5}"""
-      input.addData(json(1, 1, "click"), json(2, 2, "view"))
-      query.processAllAvailable()
-      assert(spark.table("graft_stream_events").count() == 2)
-      input.addData(json(3, 3, "click"))
-      query.processAllAvailable()
-      // appends accumulate; the table is queryable by the batch engine
-      val n = spark.sql(
-        "SELECT count(*) FROM graft_stream_events WHERE event_type = 'click'")
-        .head().getLong(0)
-      assert(n == 2)
-    } finally query.stop()
+    TempDirs.withTempDir("graft_stream_t") { tmp =>
+      val loc = tmp.toString
+      spark.sql("DROP TABLE IF EXISTS graft_stream_events")
+      val input = MemoryStream[String]
+      val parsed = EventStream.parseEvents(input.toDF().toDF("value"))
+      TempDirs.withTempDir("graft_stream_ck") { ckDir =>
+        val ckpt = ckDir.toString
+        val query = parsed.writeStream
+          .option("checkpointLocation", ckpt)
+          .option("path", s"$loc/t")
+          .toTable("graft_stream_events")
+        try {
+          def json(id: Long, h: Int, typ: String) =
+            s"""{"event_id":$id,"ts":"2024-01-01 0$h:00:00","user_id":${id % 5},"event_type":"$typ","value":1.5}"""
+          input.addData(json(1, 1, "click"), json(2, 2, "view"))
+          query.processAllAvailable()
+          assert(spark.table("graft_stream_events").count() == 2)
+          input.addData(json(3, 3, "click"))
+          query.processAllAvailable()
+          // appends accumulate; the table is queryable by the batch engine
+          val n = spark.sql(
+            "SELECT count(*) FROM graft_stream_events WHERE event_type = 'click'")
+            .head().getLong(0)
+          assert(n == 2)
+        } finally query.stop()
+      }
+    }
   }
 
   test("stream-static join: streaming events enrich against a broadcast dimension") {
@@ -521,38 +525,40 @@ class EventStreamSpec extends AnyFunSuite {
     // sink must end up with exactly the batch answer over all input —
     // no window duplicated (sink idempotence via the commit log), none
     // lost (state recovered from the checkpoint, source offsets resume).
-    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val (in, sink, ckpt) = (s"$base/in", s"$base/sink", s"$base/ckpt")
-    def rows(ids: Range, h0: Int): Seq[(Long, Timestamp, Long, String, Double)] =
-      ids.map(i => (i.toLong, ts(h0 + (i % 3)), i.toLong % 5, "click", 1.0))
-    def writeIn(ids: Range, h0: Int): Unit =
-      rows(ids, h0).toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(in)
-    writeIn(0 until 30, 1)
-    val schema = spark.read.parquet(in).schema
-    def startQuery() = EventStream
-      .windowedStats(spark.readStream.schema(schema).parquet(in))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt).start()
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-    // second tranche, plus a far-future sentinel that pushes the
-    // watermark past every real window so append mode emits them all
-    writeIn(30 until 60, 4)
-    writeIn(9990 until 9991, 20)
-    val q2 = startQuery()
-    try q2.processAllAvailable() finally q2.stop()
-    val got = spark.read.parquet(sink)
-      .filter(col("window_start") < ts(20))
-      .orderBy("window_start", "event_type")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-    val want = EventStream.windowedStatsBatch(
-        (rows(0 until 30, 1) ++ rows(30 until 60, 4))
-          .toDF("event_id", "ts", "user_id", "event_type", "value"))
-      .orderBy("window_start", "event_type")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-    assert(got.toSeq === want.toSeq,
-      s"restart broke exactly-once: got=${got.toSeq} want=${want.toSeq}")
+    TempDirs.withTempDir("graft_restart") { tmp =>
+      val base = tmp.toString
+      val (in, sink, ckpt) = (s"$base/in", s"$base/sink", s"$base/ckpt")
+      def rows(ids: Range, h0: Int): Seq[(Long, Timestamp, Long, String, Double)] =
+        ids.map(i => (i.toLong, ts(h0 + (i % 3)), i.toLong % 5, "click", 1.0))
+      def writeIn(ids: Range, h0: Int): Unit =
+        rows(ids, h0).toDF("event_id", "ts", "user_id", "event_type", "value")
+          .coalesce(1).write.mode("append").parquet(in)
+      writeIn(0 until 30, 1)
+      val schema = spark.read.parquet(in).schema
+      def startQuery() = EventStream
+        .windowedStats(spark.readStream.schema(schema).parquet(in))
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", sink).option("checkpointLocation", ckpt).start()
+      val q1 = startQuery()
+      try q1.processAllAvailable() finally q1.stop()
+      // second tranche, plus a far-future sentinel that pushes the
+      // watermark past every real window so append mode emits them all
+      writeIn(30 until 60, 4)
+      writeIn(9990 until 9991, 20)
+      val q2 = startQuery()
+      try q2.processAllAvailable() finally q2.stop()
+      val got = spark.read.parquet(sink)
+        .filter(col("window_start") < ts(20))
+        .orderBy("window_start", "event_type")
+        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
+      val want = EventStream.windowedStatsBatch(
+          (rows(0 until 30, 1) ++ rows(30 until 60, 4))
+            .toDF("event_id", "ts", "user_id", "event_type", "value"))
+        .orderBy("window_start", "event_type")
+        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
+      assert(got.toSeq === want.toSeq,
+        s"restart broke exactly-once: got=${got.toSeq} want=${want.toSeq}")
+    }
   }
 
   test("applyCdcStream: stale later-batch changes never override newer state") {

@@ -3,7 +3,6 @@ package graft
 import graft.functions.SketchFunctions.fagms_sketch
 import graft.planner.CompassSession
 import graft.sketch.{SeedRegistry, SketchGroup, Xi}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -181,21 +180,6 @@ class FagmsSketchAggSpec extends AnyFunSuite {
   }
 
   test("COMPASS builder runs one job with no shuffle write at one partition") {
-    val sc = spark.sparkContext
-    val group = s"sketch-shape-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          jobs.add(e.jobId)
-          e.stageIds.foreach(stages.add)
-        }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskMetrics != null)
-          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
     // A file scan: one partition, but not SinglePartition-partitioned, so
     // an aggregate over it would plan an exchange (spark.range(.., 1)
     // would not).
@@ -205,16 +189,11 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     val survivors = instance.count()
     val plan = instance.queryExecution.analyzed
     val seeds = Seq(new SeedRegistry(73).seedsFor(("orders", "o_orderkey")))
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one filtered instance")
-      val g = try CompassSession.buildSketch(
-          spark, plan, plan.output, 73, 1021, Seq("o_orderkey"), seeds)
-        finally sc.clearJobGroup()
-      assert(g.count == survivors && survivors > 0)
-      org.apache.spark.ListenerDrain(sc)
-      assert(jobs.size == 1, s"expected one sketch job, saw ${jobs.size}")
-      assert(shuffleBytes.get == 0L, s"sketch build wrote ${shuffleBytes.get} shuffle bytes")
-    } finally sc.removeSparkListener(listener)
+    val (g, work) = Work.measure(spark)(CompassSession.buildSketch(
+      spark, plan, plan.output, 73, 1021, Seq("o_orderkey"), seeds))
+    assert(g.count == survivors && survivors > 0)
+    assert(work.jobs == 1, s"expected one sketch job, saw ${work.jobs}")
+    assert(work.shuffleWriteBytes == 0L,
+      s"sketch build wrote ${work.shuffleWriteBytes} shuffle bytes")
   }
 }

@@ -39,14 +39,16 @@ class GraftSessionSpec extends AnyFunSuite {
     val scope = gs.newQueryScope()
     assert(scope.sql(q).head().getLong(0) == n1)
     assert(gs.chunkedDocuments().count() >= 500)
-    val idx = java.nio.file.Files.createTempDirectory("graft_gs_ivf").toString
-    gs.buildAnnIndex(idx, nCentroids = 4)
-    val hits = gs.annQuery(Seq(0L, 1L), idx, k = 3)
-    assert(hits.count() == 6)
     import spark.implicits._
-    gs.annAppend(Seq((100000L, Seq.fill(64)(0.5f))).toDF("vec_id", "embedding"), idx)
-    assert(spark.read.parquet(s"$idx/lists")
-      .filter($"neighbor_id" === 100000L).count() == 1)
+    TempDirs.withTempDir("graft_gs_ivf") { tmp =>
+      val idx = tmp.toString
+      gs.buildAnnIndex(idx, nCentroids = 4)
+      val hits = gs.annQuery(Seq(0L, 1L), idx, k = 3)
+      assert(hits.count() == 6)
+      gs.annAppend(Seq((100000L, Seq.fill(64)(0.5f))).toDF("vec_id", "embedding"), idx)
+      assert(spark.read.parquet(s"$idx/lists")
+        .filter($"neighbor_id" === 100000L).count() == 1)
+    }
     // r10 conveniences: PII scrub, surprisal scores, int8 quantization,
     // deterministic split — shapes + key invariants.
     val pii = gs.piiRedactedDocuments()

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 /** Every environment variable `src/main` reads is listed in README's
   * "Environment knobs" table, and the table lists nothing else: a knob
   * added, renamed or removed in code without its row (default and
-  * reason) fails here.
+  * reason) fails here. Spark work is counted in one place, [[Work]]: a
+  * second listener in the sources fails here too.
   */
 class KnobInventorySpec extends AnyFunSuite {
   private def read(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
@@ -19,12 +20,23 @@ class KnobInventorySpec extends AnyFunSuite {
   private val envRead =
     """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
 
-  private def codeKnobs: Set[String] = {
-    val files = scala.util.Using.resource(Files.walk(Paths.get("src/main")))(
+  private def sources(root: String): List[Path] = {
+    val files = scala.util.Using.resource(Files.walk(Paths.get(root)))(
       _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
-    assert(files.nonEmpty, "no sources under src/main")
-    files.flatMap(f => envRead.findAllMatchIn(read(f)).map(_.group(1))).toSet
+    assert(files.nonEmpty, s"no sources under $root")
+    files
   }
+
+  private def codeKnobs: Set[String] =
+    sources("src/main").flatMap(f => envRead.findAllMatchIn(read(f)).map(_.group(1))).toSet
+
+  /** A listener class or instance, its type written plain or qualified. */
+  private val listenerDef = """\b(?:new|extends)\s+(?:[\w.]+\.)?SparkListener\b""".r
+
+  /** Source files under `root` that define a listener, once per definition. */
+  private def listeners(root: String): List[String] =
+    sources(root).flatMap(f => listenerDef.findAllIn(read(f))
+      .map(_ => Paths.get(root).relativize(f).toString))
 
   private def readmeKnobs: Set[String] = {
     val text = read(Paths.get("README.md"))
@@ -42,5 +54,10 @@ class KnobInventorySpec extends AnyFunSuite {
     assert(code == table,
       s"read in code but not in the table: ${(code -- table).toSeq.sorted}; " +
         s"in the table but not read: ${(table -- code).toSeq.sorted}")
+  }
+
+  test("src/main defines one SparkListener, graft.Work's, and src/test none") {
+    assert(listeners("src/main") == List("scala/graft/Work.scala"))
+    assert(listeners("src/test").isEmpty)
   }
 }

@@ -1,12 +1,9 @@
 package graft
 
 import graft.operators.{OpCaches, TextDedup}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Work pins for the MinHash near-dup family on the sf0.01 documents (the
   * copy the `curation` benchmark workload reads): each operator's Spark
@@ -31,44 +28,26 @@ class MinHashWorkSpec extends AnyFunSuite {
   private val sfDir = "perfbench/data/sf0.01"
   private lazy val docs = Tables.load(spark, sfDir, "documents")
 
-  /** Build and collect `run` under a listener, with the operator caches
+  /** Build and collect `run` in a [[Work]] scope, with the operator caches
     * released before and after so every persist is paid inside the run.
     */
-  private def measure(run: => DataFrame): Work = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val tasks = new AtomicInteger
-    val records = new AtomicLong
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        Option(e.taskMetrics).foreach(m =>
-          records.addAndGet(m.shuffleWriteMetrics.recordsWritten))
-      }
-    }
+  private def measure(run: => DataFrame): (Int, Work.Counts) = {
     OpCaches.releaseAll(spark)
-    org.apache.spark.ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val rows = run.collect().length
-      org.apache.spark.ListenerDrain(sc)
-      Work(rows, jobs.get, records.get, tasks.get)
-    } finally {
-      sc.removeSparkListener(listener)
-      OpCaches.releaseAll(spark)
-    }
+    try Work.measure(spark)(run.collect().length)
+    finally OpCaches.releaseAll(spark)
   }
 
-  private def pinned(name: String, w: Work, maxJobs: Int, maxRecords: Long): Unit = {
+  private def pinned(name: String, measured: (Int, Work.Counts), maxJobs: Int,
+      maxRecords: Long): Unit = {
+    val (rows, w) = measured
     val cores = spark.sparkContext.defaultParallelism
-    info(s"$name: rows ${w.rows}, jobs ${w.jobs}, shuffle records ${w.shuffleRecords}, " +
+    info(s"$name: rows $rows, jobs ${w.jobs}, shuffle records ${w.shuffleWriteRecords}, " +
       s"tasks ${w.tasks} at $cores cores")
-    assert(w.rows > 0, s"$name found no pairs at sf0.01")
+    assert(rows > 0, s"$name found no pairs at sf0.01")
     assert(w.jobs <= maxJobs, s"$name ran ${w.jobs} jobs (pin $maxJobs)")
     if (cores == PinnedCores)
-      assert(w.shuffleRecords <= maxRecords,
-        s"$name wrote ${w.shuffleRecords} shuffle records (pin $maxRecords)")
+      assert(w.shuffleWriteRecords <= maxRecords,
+        s"$name wrote ${w.shuffleWriteRecords} shuffle records (pin $maxRecords)")
   }
 
   private def corpus = docs.filter(col("doc_id") < 400)
@@ -88,20 +67,17 @@ class MinHashWorkSpec extends AnyFunSuite {
   }
 
   test("nearDupsAgainstIndex: job and shuffle-record pins") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_minhash_work")
-    try {
+    TempDirs.withTempDir("graft_minhash_work") { dir =>
       TextDedup.buildDedupIndex(corpus, "doc_id", "text", dir.toString)
       pinned("nearDupsAgainstIndex",
         measure(TextDedup.nearDupsAgainstIndex(batch, "doc_id", "text", dir.toString,
           threshold = 0.8)),
         maxJobs = 16, maxRecords = 6478L)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 }
 
 object MinHashWorkSpec {
   /** Core count the shuffle-record pins were measured at. */
   val PinnedCores = 4
-
-  private final case class Work(rows: Int, jobs: Int, shuffleRecords: Long, tasks: Int)
 }

@@ -40,17 +40,18 @@ class NegativeSpec extends AnyFunSuite {
     // The reference's importer counts reject rows up to max_reject
     // (mapd-core/Import/Importer.cpp); Spark's equivalent contract is
     // mode=PERMISSIVE (null the bad field) vs FAILFAST (raise).
-    val dir = java.nio.file.Files.createTempDirectory("graft_badcsv")
-    java.nio.file.Files.writeString(dir.resolve("part.csv"),
-      "id,qty\n1,10\n2,notanumber\n3,30\n")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, qty INT")
-    val permissive = spark.read.option("header", "true").schema(schema)
-      .option("mode", "PERMISSIVE").csv(dir.toString).collect()
-    assert(permissive.length == 3)
-    assert(permissive.count(_.isNullAt(1)) == 1, "bad field must read as null")
-    intercept[Exception] {
-      spark.read.option("header", "true").schema(schema)
-        .option("mode", "FAILFAST").csv(dir.toString).collect()
+    TempDirs.withTempDir("graft_badcsv") { dir =>
+      java.nio.file.Files.writeString(dir.resolve("part.csv"),
+        "id,qty\n1,10\n2,notanumber\n3,30\n")
+      val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, qty INT")
+      val permissive = spark.read.option("header", "true").schema(schema)
+        .option("mode", "PERMISSIVE").csv(dir.toString).collect()
+      assert(permissive.length == 3)
+      assert(permissive.count(_.isNullAt(1)) == 1, "bad field must read as null")
+      intercept[Exception] {
+        spark.read.option("header", "true").schema(schema)
+          .option("mode", "FAILFAST").csv(dir.toString).collect()
+      }
     }
   }
 

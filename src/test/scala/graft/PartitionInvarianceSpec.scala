@@ -100,8 +100,8 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     // lap lives in tools/scale_battery.sh (GRAFT_HOT_USER); this keeps
     // the property in every `sbt test`.
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("hotuser").toFile
-    try {
+    TempDirs.withTempDir("hotuser") { dir =>
+      val tmp = dir.toFile
       val hotN = 60000
       val rng = new scala.util.Random(13)
       val hot = (1 to hotN).map { i =>
@@ -137,11 +137,6 @@ class PartitionInvarianceSpec extends AnyFunSuite {
       val one = holt.repartition(1).collect().map(_.toString).sorted
       val many = holt.repartition(32).collect().map(_.toString).sorted
       assert(one.sameElements(many), "q_holt_linear drifted under the hot-user layout")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(tmp)
     }
   }
 }

@@ -244,12 +244,12 @@ class PlanAuditSpec extends AnyFunSuite {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    org.apache.spark.ListenerDrain(sc)
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
     spark.listenerManager.register(listener)
     try {
       val df = Queries.queryMap(name)(spark, dir)
       df.collect()
-      org.apache.spark.ListenerDrain(sc)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(sc)
       import scala.jdk.CollectionConverters._
       (finalPlan(df.queryExecution.executedPlan.toString) +: checkpoints.asScala.toSeq)
         .mkString("\n")
@@ -277,31 +277,33 @@ class PlanAuditSpec extends AnyFunSuite {
     // At 100 TB the fact-fact join must not shuffle either side: write both
     // relations bucketed on the join key and assert the join plans with no
     // Exchange at all (SortMergeJoin reads the buckets directly).
-    val wh = java.nio.file.Files.createTempDirectory("graft_bucket").toString
-    spark.sql("DROP TABLE IF EXISTS graft_bkt_l")
-    spark.sql("DROP TABLE IF EXISTS graft_bkt_o")
-    Tables.load(spark, dir, "lineitem").select("l_orderkey", "l_quantity")
-      .write.option("path", s"$wh/l").bucketBy(8, "l_orderkey")
-      .sortBy("l_orderkey").saveAsTable("graft_bkt_l")
-    Tables.load(spark, dir, "orders").select("o_orderkey", "o_totalprice")
-      .write.option("path", s"$wh/o").bucketBy(8, "o_orderkey")
-      .sortBy("o_orderkey").saveAsTable("graft_bkt_o")
-    // Disable broadcast so the test proves bucket co-location, not a
-    // trivially exchange-free broadcast join.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("graft_bkt_l")
-        .join(spark.table("graft_bkt_o"),
-          org.apache.spark.sql.functions.col("l_orderkey") ===
-            org.apache.spark.sql.functions.col("o_orderkey"))
-        .groupBy("l_orderkey").count()
-      joined.collect()
-      val plan = finalPlan(joined.queryExecution.executedPlan.toString)
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ over buckets:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    TempDirs.withTempDir("graft_bucket") { tmp =>
+      val wh = tmp.toString
+      spark.sql("DROP TABLE IF EXISTS graft_bkt_l")
+      spark.sql("DROP TABLE IF EXISTS graft_bkt_o")
+      Tables.load(spark, dir, "lineitem").select("l_orderkey", "l_quantity")
+        .write.option("path", s"$wh/l").bucketBy(8, "l_orderkey")
+        .sortBy("l_orderkey").saveAsTable("graft_bkt_l")
+      Tables.load(spark, dir, "orders").select("o_orderkey", "o_totalprice")
+        .write.option("path", s"$wh/o").bucketBy(8, "o_orderkey")
+        .sortBy("o_orderkey").saveAsTable("graft_bkt_o")
+      // Disable broadcast so the test proves bucket co-location, not a
+      // trivially exchange-free broadcast join.
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val joined = spark.table("graft_bkt_l")
+          .join(spark.table("graft_bkt_o"),
+            org.apache.spark.sql.functions.col("l_orderkey") ===
+              org.apache.spark.sql.functions.col("o_orderkey"))
+          .groupBy("l_orderkey").count()
+        joined.collect()
+        val plan = finalPlan(joined.queryExecution.executedPlan.toString)
+        assert(plan.contains("SortMergeJoin"), s"expected SMJ over buckets:\n$plan")
+        assert(!plan.contains("Exchange hashpartitioning"),
+          s"bucketed join must not shuffle:\n$plan")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q_window_running has NO single-partition window (distributed prefix sum)") {
@@ -509,28 +511,30 @@ class PlanAuditSpec extends AnyFunSuite {
     // The training-shard writer's partitionBy(shard) layout must pay off
     // on the read side: filtering one shard shows a partition filter and
     // touches a single partition directory, not the whole dataset.
-    val path = java.nio.file.Files.createTempDirectory("graft_shard_prune").toString
-    import spark.implicits._
-    val docs = (1 to 40).map(i => (i.toLong, "w x y z")).toDF("doc_id", "text")
-    graft.operators.Corpus.writeShards(docs, "doc_id", "text", path, tokensPerShard = 40L)
-    val rd = spark.read.parquet(s"$path/data")
-      .filter(org.apache.spark.sql.functions.col("shard") === 1L)
-    assert(rd.count() == 10)
-    val plan = rd.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("shard"),
-      s"expected a shard partition filter in:\n$plan")
-    def filesScanned(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numFiles").map(_.value)).sum
+    TempDirs.withTempDir("graft_shard_prune") { tmp =>
+      val path = tmp.toString
+      import spark.implicits._
+      val docs = (1 to 40).map(i => (i.toLong, "w x y z")).toDF("doc_id", "text")
+      graft.operators.Corpus.writeShards(docs, "doc_id", "text", path, tokensPerShard = 40L)
+      val rd = spark.read.parquet(s"$path/data")
+        .filter(org.apache.spark.sql.functions.col("shard") === 1L)
+      assert(rd.count() == 10)
+      val plan = rd.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("shard"),
+        s"expected a shard partition filter in:\n$plan")
+      def filesScanned(df: org.apache.spark.sql.DataFrame): Long = {
+        df.collect()
+        df.queryExecution.executedPlan.collectLeaves()
+          .flatMap(_.metrics.get("numFiles").map(_.value)).sum
+      }
+      val all = spark.read.parquet(s"$path/data")
+      assert(filesScanned(rd) < filesScanned(all),
+        "the pruned read must touch fewer files than the full read")
+      val allDirs = new java.io.File(s"$path/data").listFiles()
+        .count(f => f.getName.startsWith("shard="))
+      assert(allDirs == 4, s"expected 4 shard dirs, got $allDirs")
+      graft.operators.OpCaches.releaseAll(spark)
     }
-    val all = spark.read.parquet(s"$path/data")
-    assert(filesScanned(rd) < filesScanned(all),
-      "the pruned read must touch fewer files than the full read")
-    val allDirs = new java.io.File(s"$path/data").listFiles()
-      .count(f => f.getName.startsWith("shard="))
-    assert(allDirs == 4, s"expected 4 shard dirs, got $allDirs")
-    graft.operators.OpCaches.releaseAll(spark)
   }
 
   test("top-k order-by-limit compiles to TakeOrderedAndProject (no full sort)") {

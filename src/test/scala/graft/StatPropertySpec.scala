@@ -21,45 +21,42 @@ import org.apache.spark.sql.DataFrame
 class StatPropertySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  /** Fixture dir: overridden tables are written as tiny parquet, every
-    * other catalog table symlinks to the sf0.001 data so registerAll
-    * still resolves the full catalog.
+  /** Rows of entry `name` over a fixture dir: overridden tables are
+    * written as tiny parquet, every other catalog table symlinks to the
+    * sf0.001 data so registerAll still resolves the full catalog. The dir
+    * is deleted once the rows are collected.
     */
-  private def fixture(overrides: (String, DataFrame)*): String = {
-    val base = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("graft_statfix").toString
-    val over = overrides.toMap
-    Tables.all.foreach { t =>
-      if (over.contains(t))
-        over(t).coalesce(1).write.parquet(s"$dir/$t.parquet")
-      else
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(s"$dir/$t.parquet"),
-          java.nio.file.Paths.get(s"$base/$t.parquet"))
+  private def run(name: String, overrides: (String, DataFrame)*) =
+    TempDirs.withTempDir("graft_statfix") { path =>
+      val base = "/root/testdata/sf0.001"
+      val dir = path.toString
+      val over = overrides.toMap
+      Tables.all.foreach { t =>
+        if (over.contains(t))
+          over(t).coalesce(1).write.parquet(s"$dir/$t.parquet")
+        else
+          java.nio.file.Files.createSymbolicLink(
+            java.nio.file.Paths.get(s"$dir/$t.parquet"),
+            java.nio.file.Paths.get(s"$base/$t.parquet"))
+      }
+      Queries.queryMap(name)(spark, dir).collect()
     }
-    dir
-  }
-
-  private def run(name: String, dir: String) =
-    Queries.queryMap(name)(spark, dir).collect()
 
   test("spearman: concordant rankings give rho exactly 1, reversed exactly -1") {
     import spark.implicits._
     val lineitems = (1L to 8L).flatMap(k => (1L to k).map(i => (k, i)))
       .toDF("l_orderkey", "l_linenumber")
     // Concordant: order value grows with order width.
-    val up = fixture(
+    val r1 = run("q_spearman",
       "orders" -> (1L to 8L).map(k => (k, k * 10.0 + 0.25)).toDF("o_orderkey", "o_totalprice"),
       "lineitem" -> lineitems)
-    val r1 = run("q_spearman", up)
     assert(r1.length == 1)
     assert(r1(0).getAs[Long]("sum_d2") == 0L, "concordant ranks must have zero d2")
     assert(r1(0).getAs[Double]("rho") == 1.0)
     // Reversed: order value shrinks as order width grows.
-    val down = fixture(
+    val r2 = run("q_spearman",
       "orders" -> (1L to 8L).map(k => (k, (9 - k) * 10.0 + 0.25)).toDF("o_orderkey", "o_totalprice"),
       "lineitem" -> lineitems)
-    val r2 = run("q_spearman", down)
     // Σd² = n(n²−1)/3 for a full reversal of untied ranks.
     assert(r2(0).getAs[Long]("sum_d2") == 8L * 63L / 3L)
     assert(r2(0).getAs[Double]("rho") == -1.0)
@@ -71,7 +68,7 @@ class StatPropertySpec extends AnyFunSuite {
       ("A", 7L, 100.00), ("A", 7L, 250.50), ("A", 7L, 30.25),
       ("N", 1L, 10.00), ("N", 2L, 10.00))
       .toDF("l_returnflag", "l_suppkey", "l_extendedprice")
-    val out = run("q_hhi", fixture("lineitem" -> li))
+    val out = run("q_hhi", "lineitem" -> li)
       .map(r => r.getAs[String]("seg") -> r.getAs[Double]("hhi")).toMap
     assert(out("A") == 1.0, s"monopoly HHI must be exactly 1.0, got ${out("A")}")
     assert(out("N") == 0.5, "two equal firms halve the index exactly")
@@ -82,7 +79,7 @@ class StatPropertySpec extends AnyFunSuite {
     val events = (1 to 20).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 00:${i}%02d:00"),
         1L, "click", i * 1.5)).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val out = run("q_perm_entropy", fixture("events" -> events))
+    val out = run("q_perm_entropy", "events" -> events)
     assert(out.length == 1, "monotone series must collapse to one ordinal pattern")
     assert(out(0).getAs[Int]("pattern") == 7)
     assert(out(0).getAs[Long]("dl_u") == 0L, "n_p == N makes the lattice term exact 0")
@@ -98,7 +95,7 @@ class StatPropertySpec extends AnyFunSuite {
       p <- Seq(pair._1, pair._2)
     } yield (ok, p)).toDF("l_orderkey", "l_partkey")
     val parts = Seq(1L, 2L, 3L).map(p => (p, "same type")).toDF("p_partkey", "p_type")
-    val out = run("q_modularity", fixture("lineitem" -> li, "part" -> parts))
+    val out = run("q_modularity", "lineitem" -> li, "part" -> parts)
     assert(out.length == 1)
     assert(out(0).getAs[Long]("a_c") == out(0).getAs[Long]("d_c"),
       "every edge is internal in a one-community graph")
@@ -113,7 +110,7 @@ class StatPropertySpec extends AnyFunSuite {
       ok = leaf * 10 + rep
       p <- Seq(1L, leaf)
     } yield (ok, p)).toDF("l_orderkey", "l_partkey")
-    val out = run("q_assortativity", fixture("lineitem" -> li))
+    val out = run("q_assortativity", "lineitem" -> li)
     assert(out.length == 1)
     assert(out(0).getAs[Long]("n_edges") == 6L)
     assert(out(0).getAs[Double]("r_assort") == -1.0,

@@ -17,13 +17,14 @@ class StreamQueriesSpec extends AnyFunSuite {
       .getOrElse(fail(s"entry $name not registered")).run(spark, d)
 
   test("the file-sink sweep deletes only sink dirs whose JVM has exited") {
-    val root = java.nio.file.Files.createTempDirectory("graft-sink-sweep")
-    // Int.MaxValue is above Linux's largest pid_max (2^22): never alive.
-    val names = Seq(s"graft_stream_dedup-${Int.MaxValue}",
-      s"graft_stream_dedup-${ProcessHandle.current.pid}", "not-a-pid")
-    names.foreach(n => java.nio.file.Files.createDirectories(root.resolve(n).resolve("data")))
-    StreamQueries.sweepDeadSinks(root)
-    assert(names.map(n => java.nio.file.Files.exists(root.resolve(n))) == Seq(false, true, true))
+    TempDirs.withTempDir("graft-sink-sweep") { root =>
+      // Int.MaxValue is above Linux's largest pid_max (2^22): never alive.
+      val names = Seq(s"graft_stream_dedup-${Int.MaxValue}",
+        s"graft_stream_dedup-${ProcessHandle.current.pid}", "not-a-pid")
+      names.foreach(n => java.nio.file.Files.createDirectories(root.resolve(n).resolve("data")))
+      StreamQueries.sweepDeadSinks(root)
+      assert(names.map(n => java.nio.file.Files.exists(root.resolve(n))) == Seq(false, true, true))
+    }
   }
 
   test("q_stream_windowed equals the batch hourly aggregation") {

@@ -426,23 +426,25 @@ class TextDedupSpec extends AnyFunSuite {
       mk(11L, "a third corpus document with its own distinctive word stream there"), // near-dup of 3 (appended!)
       mk(12L, "nothing like anything stored in the index at all whatsoever today")
     ).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft_dedup_idx_spec").toString
-    TextDedup.buildDedupIndex(corpusA, "doc_id", "text", path)
-    TextDedup.appendDedupIndex(corpusB, "doc_id", "text", path)
-    val viaIndex = TextDedup.nearDupsAgainstIndex(batch, "doc_id", "text", path)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val recompute = TextDedup.minhashNearDupsAgainst(
-        corpusA.union(corpusB), batch, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(viaIndex == recompute, s"index path diverged: $viaIndex vs $recompute")
-    assert(viaIndex.map(p => (p._1, p._2)).contains((10L, 1L)),
-      "exact dup of a BUILT doc must surface")
-    assert(viaIndex.map(p => (p._1, p._2)).contains((11L, 3L)),
-      "near-dup of an APPENDED doc must surface")
-    assert(!viaIndex.exists(_._1 == 12L), "the fresh doc must not match")
-    // meta pins the build parameters for append/query.
-    val meta = spark.read.parquet(s"$path/meta").head()
-    assert((meta.getInt(0), meta.getInt(1), meta.getInt(2)) == ((64, 16, 3)))
+    TempDirs.withTempDir("graft_dedup_idx_spec") { tmp =>
+      val path = tmp.toString
+      TextDedup.buildDedupIndex(corpusA, "doc_id", "text", path)
+      TextDedup.appendDedupIndex(corpusB, "doc_id", "text", path)
+      val viaIndex = TextDedup.nearDupsAgainstIndex(batch, "doc_id", "text", path)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val recompute = TextDedup.minhashNearDupsAgainst(
+          corpusA.union(corpusB), batch, "doc_id", "text")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(viaIndex == recompute, s"index path diverged: $viaIndex vs $recompute")
+      assert(viaIndex.map(p => (p._1, p._2)).contains((10L, 1L)),
+        "exact dup of a BUILT doc must surface")
+      assert(viaIndex.map(p => (p._1, p._2)).contains((11L, 3L)),
+        "near-dup of an APPENDED doc must surface")
+      assert(!viaIndex.exists(_._1 == 12L), "the fresh doc must not match")
+      // meta pins the build parameters for append/query.
+      val meta = spark.read.parquet(s"$path/meta").head()
+      assert((meta.getInt(0), meta.getInt(1), meta.getInt(2)) == ((64, 16, 3)))
+    }
   }
 
   test("dedupChunksExact: first occurrence wins, docs rebuilt, full dups vanish") {

@@ -60,8 +60,8 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("writeZOrdered produces disjoint z-ranges with 2-D-clustered files") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_zwrite").toString
-    try {
+    TempDirs.withTempDir("graft_zwrite") { dir =>
+      val path = dir.toString
       val pts = (for (x <- 0 until 64; y <- 0 until 64)
         yield (x.toLong, y.toLong)).toDF("x", "y")
       graft.operators.Layout.writeZOrdered(pts, "x", "y", s"$path/d", numFiles = 16)
@@ -89,11 +89,6 @@ class ZOrderSpec extends AnyFunSuite {
         "files do not cluster x")
       assert(median(perFile.toIndexedSeq.map(_.getAs[Long]("yspan"))) <= 31,
         "files do not cluster y")
-    } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(): Unit
-      }
-      rm(new java.io.File(path))
     }
   }
 
