@@ -51,11 +51,14 @@ object Work {
   private object Listener extends SparkListener {
     override def onJobStart(j: SparkListenerJobStart): Unit = Option(open).foreach { s =>
       s.jobs.incrementAndGet()
-      // A broadcast build job carries the BroadcastExchange RDD scope
-      // (on Spark 4.1 its description property is not set).
-      val rddScope = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.rdd.scope"))).getOrElse("")
-      if (rddScope.contains("\"BroadcastExchange\""))
+      // A broadcast build job carries its exchange's job tag, "broadcast
+      // exchange (runId …)", with AQE on or off. (The RDD scope names the
+      // exchange only when AQE submits the build; without AQE it names
+      // whichever operator prepared the plan, and on Spark 4.1 the
+      // description property is not set.)
+      val tags = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.tags"))).getOrElse("")
+      if (tags.contains("broadcast exchange (runId "))
         j.stageIds.foreach(id => s.broadcastStages.add(id): Unit)
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =

@@ -184,9 +184,15 @@ object ScaleCampaignMain {
     try {
       // PRE_PROCESSING (untimed, the reference's own shape).
       val nTemplates = JobCorpus.warmCompassAt(spark, cs, m)
-      val (runsCold, tCold) = timed(JobCorpus.runCompassFull(spark, cs, m))
-      val (runsWarm, tWarm) = timed(JobCorpus.runCompassFull(spark, cs, m))
-      println(Records.write(compassRecord(m, nTemplates, runsCold, tCold, runsWarm, tWarm)))
+      val ((runsCold, tCold), cold) =
+        graft.Work.measure(spark)(timed(JobCorpus.runCompassFull(spark, cs, m)))
+      val ((runsWarm, tWarm), warm) =
+        graft.Work.measure(spark)(timed(JobCorpus.runCompassFull(spark, cs, m)))
+      // Per lap, cold first: the driver's heap high-water and the
+      // non-broadcast task results shipped to it.
+      println(Records.write(compassRecord(m, nTemplates, runsCold, tCold, runsWarm, tWarm) +
+        ("heap_peak_mb" -> Seq(cold.heapPeakBytes >> 20, warm.heapPeakBytes >> 20)) +
+        ("result_kb" -> Seq(cold.resultBytes >> 10, warm.resultBytes >> 10))))
     } finally cs.close()
   }
 

@@ -20,7 +20,8 @@ final case class CompassPlan(
     intermediateEstimates: Seq[Double],
     sketchCounts: Map[String, Long],
     sketchBuildMillis: Long = 0,
-    enumerateMillis: Long = 0) {
+    enumerateMillis: Long = 0,
+    keptRows: Map[String, Long] = Map.empty) {
 
   /** Human-readable trace mirroring the reference's stdout ("optimal
     * plan: ... intermediate join size estimation of: ...").
@@ -34,6 +35,8 @@ final case class CompassPlan(
     (s"COMPASS plan: ${order.mkString(" -> ")}" +:
       s"  surviving rows: ${order.map(t => s"$t=${sketchCounts.getOrElse(t, -1L)}").mkString(", ")}" +:
       s"  planning: sketch build ${sketchBuildMillis}ms, enumeration ${enumerateMillis}ms" +:
+      s"  served from kept rows: ${if (keptRows.isEmpty) "none" else
+        order.filter(keptRows.contains).map(t => s"$t=${keptRows(t)}").mkString(", ")}" +:
       steps).mkString("\n")
   }
 }
@@ -51,26 +54,31 @@ final case class CompassPlan(
   *  1. analyze the query → extract join graph + per-instance filters
   *     ([[JoinGraphExtractor]]);
   *  2. launch one small Spark job per instance ([[CompassSession.buildSketch]]):
-  *     the filtered scan's join keys stream into one sketch per partition,
-  *     and the partials tree-merge (linear add) — one job, no exchange, at
-  *     the partition counts a filtered instance has;
+  *     the filtered scan, projected to the attributes the plan needs,
+  *     returns its surviving rows (a partition over its share of
+  *     [[CompassSession.BroadcastRowLimit]] returns its sketch instead),
+  *     and the driver sketches them — one job, no exchange;
   *  3. enumerate join orders driver-locally over the sketch planes
   *     ([[Enumerator]] — microseconds);
   *  4. splice a reordered left-deep Inner-join tree into the analyzed plan
+  *     — an instance whose rows came back is a leaf over those rows, the
+  *     reference's push-down result kept as the hash-join build side —
   *     and hand it to vanilla Spark execution (Catalyst still does
   *     pushdown/pruning/codegen; AQE still handles skew).
   *
   * Scale note: at 100 TB the sketch jobs are the only extra cost — each is
-  * a projection-pruned scan producing a ~600 KB/column sketch, and the
-  * template cache ([[SketchTemplateCache]]) serves unfiltered tables
-  * without any scan at all. Joins the optimizer cannot improve (non-inner,
-  * no equi-edges, <3 tables) fall through untouched.
+  * a projection-pruned scan whose driver ingress is at most
+  * `BroadcastRowLimit` rows or one ~600 KB/column sketch per partition,
+  * and the template cache ([[SketchTemplateCache]]) serves unfiltered
+  * tables without any scan at all. Joins the optimizer cannot improve
+  * (non-inner, no equi-edges, <3 tables) fall through untouched.
   *
   * Sketch dimensions and size thresholds are fixed, as the reference
   * fixes them in one init file — see the constants on the companion.
   *
-  * Concurrency contract: optimize() caches no query data — the spliced
-  * plan reads the base tables like any query — so interleaved queries on
+  * Concurrency contract: optimize() keeps no query data beyond the frame
+  * it returns — the kept survivors live in that frame's plan, and a later
+  * optimize() or close() leaves it runnable — so interleaved queries on
   * one session share no mutable state except the sketch store, which is
   * safe for concurrent use and builds each key once. Each in-flight query
   * stream takes its own [[QueryScope]] (`newScope()`) only to read its own
@@ -107,10 +115,8 @@ final class CompassSession(
   @volatile var fpdEnabled: Boolean = true
 
   /** One in-flight query stream's handle: it holds that stream's own
-    * `lastPlan`. A scope pins nothing — the pre-pass caches no
-    * survivors (the main query's own scan used to fill that cache, and
-    * the scope's next optimize() dropped it unread, so it never saved a
-    * scan).
+    * `lastPlan`. A scope pins nothing — the survivors a pre-pass keeps
+    * belong to the one frame it returns, not to the scope.
     */
   final class QueryScope private[CompassSession] () {
     /** This scope's own last COMPASS plan — safe to read under
@@ -162,7 +168,7 @@ final class CompassSession(
     val analyzed = df.queryExecution.analyzed
     val (g, _) = JoinGraphExtractor.extract(analyzed)
       .getOrElse(sys.error("sketchGraph: not an optimizable join region"))
-    (g, buildSketches(g), enumeratorEdges(g))
+    (g, buildSketches(g, AttributeSet.empty, 0L).map(_._1), enumeratorEdges(g))
   }
 
   private def optimizeIn(scope: QueryScope, df: DataFrame): DataFrame = {
@@ -177,7 +183,13 @@ final class CompassSession(
           // Timing mirrors the reference's per-phase instrumentation
           // (FilterPushDownSketch.cpp:1564-1569, RelAlgExecutor.cpp:2628).
           val t0 = System.nanoTime()
-          val nodes = buildSketches(g)
+          // What each kept instance must carry: its join columns, and what
+          // the residual conjuncts and the plan around the region read.
+          val needed = CompassSession.readAround(g, rebuild) ++
+            AttributeSet(g.residual.flatMap(_.references))
+          val built = buildSketches(g, needed, BroadcastRowLimit)
+          val nodes = built.map(_._1)
+          val kept = built.flatMap { case (n, rows) => rows.map(n.id -> _) }.toMap
           val t1 = System.nanoTime()
           val en = new Enumerator(nodes, enumeratorEdges(g))
           val (order, _) = en.optimalOrder()
@@ -187,7 +199,7 @@ final class CompassSession(
           // lastPlan would advertise a COMPASS plan that never ran
           // (OptimizerQuality.compare trusts lastPlan to mean "took the
           // COMPASS path").
-          val spliced = Bridge.ofRows(spark, rebuild(rebuildRegion(g, order, nodes)))
+          val spliced = Bridge.ofRows(spark, rebuild(rebuildRegion(g, order, nodes, kept)))
           // Estimates here are introspection only — a failure (e.g. a
           // multi-way prefix with a fully disconnected member under the
           // fallback order) must not knock the query off the COMPASS path.
@@ -197,7 +209,10 @@ final class CompassSession(
               scala.util.Try(en.estimate(order.take(k + 1))).getOrElse(Double.NaN)),
             nodes.map(n => g.instances(n.id).name -> n.sketch.count).toMap,
             sketchBuildMillis = (t1 - t0) / 1000000,
-            enumerateMillis = (t2 - t1) / 1000000)
+            enumerateMillis = (t2 - t1) / 1000000,
+            // A kept instance's rows are exactly the ones its sketch counted.
+            keptRows = nodes.filter(n => kept.contains(n.id))
+              .map(n => g.instances(n.id).name -> n.sketch.count).toMap)
           scope.lastPlan = Some(published)
           spliced
         case _ => df
@@ -230,11 +245,11 @@ final class CompassSession(
   def warmTemplates(workload: Seq[DataFrame]): Int = {
     val templates = workload.flatMap { df =>
       JoinGraphExtractor.extract(df.queryExecution.analyzed).toSeq.flatMap { case (g, _) =>
-        resolve(g).filterNot(_.hasFilter).flatMap(i => i.templateKey.map(_ -> i))
+        resolve(g, AttributeSet.empty).filterNot(_.hasFilter).flatMap(i => i.templateKey.map(_ -> i))
       }
     }.distinctBy(_._1.file)
     CompassSession.awaitAll(templates.toIndexedSeq.map { case (k, i) =>
-      () => store.getOrBuild(k)(i.build()) }).size
+      () => store.getOrBuild(k)(i.build(0L).sketch) }).size
   }
 
   /** Column label: plain name — unique within a base-table instance, and
@@ -278,10 +293,12 @@ final class CompassSession(
   private def filteredPlan(g: ExtractedJoinGraph, i: Int): LogicalPlan =
     CompassSession.filteredPlan(g, i)
 
-  /** One instance's sketch inputs, resolved by [[resolve]]. */
+  /** One instance's sketch inputs, resolved by [[resolve]]. `keep` is the
+    * part of its output its kept survivors carry.
+    */
   private final class InstanceSketch(g: ExtractedJoinGraph, val idx: Int,
-      attrs: Seq[Attribute], colNames: Seq[String], seeds: Seq[ColumnSeeds],
-      classKeys: Seq[String]) {
+      val keep: Seq[Attribute], attrs: Seq[Attribute], colNames: Seq[String],
+      seeds: Seq[ColumnSeeds], classKeys: Seq[String]) {
     val hasFilter: Boolean = g.instanceFilters.get(idx).exists(_.nonEmpty)
 
     // Keys use the RESOLVED base relation (data location + mtime
@@ -308,15 +325,29 @@ final class CompassSession(
         colNames.mkString(","), classKeys.mkString(","),
         SketchRows.toString, SketchBuckets.toString).mkString("|")))
 
-    def build(): SketchGroup = CompassSession.buildSketch(
-      spark, filteredPlan(g, idx), attrs, SketchRows, SketchBuckets, colNames, seeds)
+    def build(rowLimit: Long): CompassSession.Built = CompassSession.buildSketch(
+      spark, filteredPlan(g, idx), keep, attrs, SketchRows, SketchBuckets, colNames, seeds,
+      rowLimit)
+
+    /** The kept survivors as a leaf ([[Bridge.rowsRelation]]), or an
+      * empty `LocalRelation`, which Catalyst prunes with its joins. Their
+      * join columns hold no NULL and say so: Catalyst then infers no
+      * `isnotnull` filter over the rows.
+      */
+    def relation(survivors: IndexedSeq[InternalRow]): LogicalPlan = {
+      val output = keep.map(a => if (attrs.contains(a)) a.withNullability(false) else a)
+      if (survivors.isEmpty) LocalRelation(output)
+      else Bridge.rowsRelation(spark, output, survivors, output.filterNot(_.nullable))
+    }
   }
 
-  /** Every instance's seeds, column labels, seed classes and data identity.
-    * The live pre-pass and [[warmTemplates]] both resolve here, so warm
-    * keys and live keys cannot drift. Sequential — SeedRegistry mutates.
+  /** Every instance's seeds, column labels, seed classes and data identity,
+    * and the output it keeps: its join columns plus whatever of `needed`
+    * it produces. The live pre-pass and [[warmTemplates]] both resolve
+    * here, so warm keys and live keys cannot drift. Sequential —
+    * SeedRegistry mutates.
     */
-  private def resolve(g: ExtractedJoinGraph): IndexedSeq[InstanceSketch] = {
+  private def resolve(g: ExtractedJoinGraph, needed: AttributeSet): IndexedSeq[InstanceSketch] = {
     val reg = new SeedRegistry(SketchRows)
     g.edges.foreach { case ((ia, a), (ib, b)) =>
       reg.addPredicate(seedKey(g, ia, a), seedKey(g, ib, b))
@@ -324,7 +355,8 @@ final class CompassSession(
     g.instances.map { inst =>
       val attrs = g.joinAttrs(inst.idx)
       val keys = attrs.map(seedKey(g, inst.idx, _))
-      new InstanceSketch(g, inst.idx, attrs, keys.map(_._2), keys.map(reg.seedsFor),
+      val keep = inst.plan.output.filter(a => needed.contains(a) || attrs.contains(a))
+      new InstanceSketch(g, inst.idx, keep, attrs, keys.map(_._2), keys.map(reg.seedsFor),
         keys.map(reg.classKey))
     }.toIndexedSeq
   }
@@ -334,15 +366,18 @@ final class CompassSession(
     * FilterPushDownSketch.cpp:871-891). Every sketch goes through the
     * session's [[SketchTemplateCache]]: unfiltered instances by template
     * (reference: findSketchTemplateAndCopy, FilterPushDownSketch.cpp:315-382),
-    * filtered ones by their canonical filtered plan.
+    * filtered ones by their canonical filtered plan. A build that ran —
+    * a store miss — under `rowLimit` also yields its survivors as a leaf
+    * of the instance's kept output; a hit carries none.
     *
     * The per-instance jobs are INDEPENDENT Spark jobs, so they launch
     * concurrently (the reference builds sequentially; on a cluster the
     * projection-pruned scans overlap across executors, and locally the
     * per-job scheduling overhead stops being × nInstances).
     */
-  private def buildSketches(g: ExtractedJoinGraph): IndexedSeq[GraphNode] = {
-    val jobs = resolve(g).map { i =>
+  private def buildSketches(g: ExtractedJoinGraph, needed: AttributeSet, rowLimit: Long)
+      : IndexedSeq[(GraphNode, Option[LogicalPlan])] = {
+    val jobs = resolve(g, needed).map { i =>
       // Tiny-table shortcut: if the store already knows this table
       // (template count == table cardinality) and it is below
       // PUSH_DOWN_MIN_TABLE_SIZE_SK, skip the filtered sketch job and use
@@ -351,28 +386,39 @@ final class CompassSession(
       val tiny =
         if (i.hasFilter) i.templateKey.flatMap(store.peek).filter(_.count < MinTableSize)
         else None
-      () => GraphNode(i.idx, tiny.getOrElse(
-        (if (i.hasFilter) i.filteredKey else i.templateKey) match {
-          case Some(k) => store.getOrBuild(k)(i.build())
-          case None => i.build()
-        }))
+      () => {
+        var kept: Option[LogicalPlan] = None
+        def build(): SketchGroup = {
+          val b = i.build(rowLimit)
+          kept = b.survivors.map(i.relation)
+          b.sketch
+        }
+        val sketch = tiny.getOrElse(
+          (if (i.hasFilter) i.filteredKey else i.templateKey) match {
+            case Some(k) => store.getOrBuild(k)(build())
+            case None => build()
+          })
+        (GraphNode(i.idx, sketch), kept)
+      }
     }
     CompassSession.awaitAll(jobs)
   }
 
   /** Left-deep Inner join tree in the enumerated order. Each appended
     * instance joins the prefix on ALL applicable equi-edges; residual
-    * conjuncts land in a top Filter; instances whose surviving count is
-    * small get a broadcast hint (sketch counts double as runtime stats —
-    * the Spark analogue of keeping the reference's materialized push-down
-    * result as the hash-table build side).
+    * conjuncts land in a top Filter. An instance whose survivors the
+    * pre-pass kept is a leaf over those rows — the reference's
+    * materialized push-down result (FilterPushDownSketch.cpp:1376-1577),
+    * not a second scan; the others re-read their filtered scan. Instances
+    * whose surviving count is small get a broadcast hint (sketch counts
+    * double as runtime stats), making them the hash-join build side.
     */
-  private def rebuildRegion(
-      g: ExtractedJoinGraph, order: Seq[Int], nodes: IndexedSeq[GraphNode]): LogicalPlan = {
+  private def rebuildRegion(g: ExtractedJoinGraph, order: Seq[Int],
+      nodes: IndexedSeq[GraphNode], kept: Map[Int, LogicalPlan]): LogicalPlan = {
     val countOf: Map[Int, Long] = nodes.map(n => n.id -> n.sketch.count).toMap
 
     def base(i: Int, withHint: Boolean): LogicalPlan = {
-      val p = filteredPlan(g, i)
+      val p = kept.getOrElse(i, filteredPlan(g, i))
       if (withHint && countOf.get(i).exists(c => c > 0 && c <= BroadcastRowLimit))
         ResolvedHint(p, HintInfo(strategy = Some(BROADCAST)))
       else p
@@ -420,57 +466,117 @@ object CompassSession {
     case _ => If(IsNull(a), Literal(null, LongType), new XxHash64(Seq(a)))
   }
 
+  /** A build's result: the sketch, and the survivors themselves (rows of
+    * the build's `keep`) when every partition fitted under its cap.
+    */
+  private[graft] final case class Built(sketch: SketchGroup,
+      survivors: Option[IndexedSeq[InternalRow]])
+
   /** Sketch `plan`'s rows over `attrs` in one Spark job (reference:
     * executeFilterAndEvaluate, FilterPushDownSketch.cpp:871-891, whose
     * per-block GPU sketches are reduced on the host,
-    * cuda_mapd_rt.cu:730-804). The keys are projected through [[keyExpr]]
-    * — Catalyst prunes the scan to the join columns — and each partition
-    * folds its rows into one group. The partials merge by `treeReduce`
-    * (`treeAggregate` with an empty `Option` zero, so no zero planes ride
-    * in the task) at depth 2: at a handful of partitions that is one job
-    * with no exchange; at many it adds an executor-side merge level, so
-    * the driver never holds thousands of ~600 KB partials. Bit-identical
-    * to the SQL `fagms_sketch` aggregate over the same keys
-    * (spec-pinned).
+    * cuda_mapd_rt.cu:730-804). The job runs `Project(keep, plan)` —
+    * Catalyst prunes the scan to `keep`, which must hold `attrs` — and
+    * each task returns its partition's rows with no NULL key (the rows
+    * the sketch counts; no other row can pass an inner equi-join on
+    * `attrs`), packed as Spark packs a collect, while they number at
+    * most ⌈`rowLimit` / partitions⌉. A larger partition folds its rows
+    * into a sketch in place and returns that instead, so driver ingress
+    * stays within `rowLimit` rows plus one ~600 KB/column sketch per
+    * partition. Sketches merge as they arrive and rows are sketched
+    * after the job, both on the calling thread — never on the
+    * scheduler's event thread — so the driver holds the rows and one
+    * merged sketch, not every partial. Keys are [[keyExpr]] bound to
+    * `keep`'s ordinals. Counters are exact integer sums, so the group is
+    * bit-identical whichever side sketched each row, and to the SQL
+    * `fagms_sketch` aggregate over the same keys (spec-pinned).
     */
   private[graft] def buildSketch(
-      spark: SparkSession, plan: LogicalPlan, attrs: Seq[Attribute],
-      rows: Int, buckets: Int, colNames: Seq[String], seeds: Seq[ColumnSeeds]): SketchGroup = {
-    val keys = attrs.zipWithIndex.map { case (a, i) => Alias(keyExpr(a), s"k$i")() }
-    val rdd = Bridge.ofRows(spark, Project(keys, plan)).queryExecution.toRdd
-    val sketchPartition = new SketchPartition(rows, buckets, colNames.toArray, seeds.toArray)
+      spark: SparkSession, plan: LogicalPlan, keep: Seq[Attribute], attrs: Seq[Attribute],
+      rows: Int, buckets: Int, colNames: Seq[String], seeds: Seq[ColumnSeeds],
+      rowLimit: Long): Built = {
+    val rdd = Bridge.ofRows(spark, Project(keep, plan)).queryExecution.toRdd
+    val parts = rdd.getNumPartitions
+    val task = new SurvivorPartition(
+      if (parts == 0) 0L else (rowLimit + parts - 1) / parts, rows, buckets,
+      colNames.toArray, seeds.toArray,
+      attrs.map(a => BindReferences.bindReference(keyExpr(a), keep)).toArray)
+    val group = task.emptyGroup()
+    val survivors = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var allFit = true
     // A filter Catalyst folds to an empty relation leaves no partitions.
-    if (rdd.getNumPartitions == 0) sketchPartition.emptyGroup()
-    else rdd.mapPartitions(sketchPartition).treeReduce(MergeSketches, 2)
+    if (parts > 0) {
+      val arrived = new java.util.concurrent.LinkedBlockingQueue[Partial]()
+      val job = spark.sparkContext.submitJob(rdd, task, 0 until parts,
+        (_: Int, p: Partial) => arrived.put(p), ())
+      try {
+        var left = parts
+        while (left > 0) {
+          val p = arrived.poll(20, java.util.concurrent.TimeUnit.MILLISECONDS)
+          if (p != null) {
+            if (p.rows != null) survivors ++= Bridge.unpackRows(p.rows, keep.size)
+            else { group.merge(p.sketch); allFit = false }
+            left -= 1
+          } else if (job.isCompleted) job.value.get.get // rethrows a failed job
+        }
+      } catch { case e: Throwable => job.cancel(); throw e }
+    }
+    task.sketchAll(group, survivors.iterator)
+    Built(group,
+      if (allFit) Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(survivors.toArray))
+      else None)
   }
 
-  /** One partition's projected key rows → one group. A row with a NULL
-    * key never joins, so it is skipped and not counted — the SQL
+  /** One partition's answer: its rows ([[Bridge.packRows]]), or (over
+    * the cap) its sketch.
+    */
+  private final class Partial(val rows: Array[Byte], val sketch: SketchGroup)
+      extends Serializable
+
+  /** One partition's `keep` rows → a [[Partial]]. A row with a NULL key
+    * never joins, so it is neither kept nor counted — the SQL
     * `fagms_sketch` aggregate's rule. A named class, not a lambda, so
     * Spark's closure cleaner has nothing to re-inspect per build.
     */
-  private final class SketchPartition(
-      rows: Int, buckets: Int, names: Array[String], seeds: Array[ColumnSeeds])
-      extends (Iterator[InternalRow] => Iterator[SketchGroup]) with Serializable {
+  private final class SurvivorPartition(cap: Long, rows: Int, buckets: Int,
+      names: Array[String], seeds: Array[ColumnSeeds], keys: Array[Expression])
+      extends (Iterator[InternalRow] => Partial) with Serializable {
     def emptyGroup(): SketchGroup = new SketchGroup(rows, buckets, names, seeds)
 
-    def apply(it: Iterator[InternalRow]): Iterator[SketchGroup] = {
-      val g = emptyGroup()
-      val folded = new Array[Int](names.length)
-      it.foreach { row =>
-        var i = 0
-        while (i < folded.length && !row.isNullAt(i)) {
-          folded(i) = Xi.fold64(row.getLong(i)); i += 1
-        }
-        if (i == folded.length) g.update(folded)
+    /** `row`'s folded keys into `out`; false if a key is NULL. */
+    def fold(row: InternalRow, out: Array[Int]): Boolean = {
+      var i = 0
+      while (i < keys.length) {
+        val k = keys(i).eval(row)
+        if (k == null) return false
+        out(i) = Xi.fold64(k.asInstanceOf[Long]); i += 1
       }
-      Iterator.single(g)
+      true
     }
-  }
 
-  private object MergeSketches
-      extends ((SketchGroup, SketchGroup) => SketchGroup) with Serializable {
-    def apply(a: SketchGroup, b: SketchGroup): SketchGroup = { a.merge(b); a }
+    def sketchAll(g: SketchGroup, it: Iterator[InternalRow]): Unit = {
+      val folded = new Array[Int](keys.length)
+      it.foreach(row => if (fold(row, folded)) g.update(folded))
+    }
+
+    def apply(it: Iterator[InternalRow]): Partial = {
+      val folded = new Array[Int](keys.length)
+      val buffered = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      var g: SketchGroup = null
+      it.foreach { row =>
+        if (fold(row, folded)) {
+          if (g != null) g.update(folded)
+          else if (buffered.size < cap) buffered += row.copy()
+          else {
+            g = emptyGroup()
+            sketchAll(g, buffered.iterator)
+            g.update(folded)
+          }
+        }
+      }
+      if (g == null) new Partial(Bridge.packRows(buffered.iterator), null)
+      else new Partial(null, g)
+    }
   }
 
   /** The left-deep splice core, shared by rebuildRegion and
@@ -512,6 +618,31 @@ object CompassSession {
       case Some(fs) => Filter(fs.reduce(And), g.instances(i).plan)
       case None => g.instances(i).plan
     }
+
+  /** The region output the plan around the region reads, given the
+    * extractor's `rebuild`: walking down from the root (whose output is
+    * read by the caller), each operator adds what its expressions
+    * reference — subquery outer references included — and passes on what
+    * is read of its output. An operator outside the known pass-through set
+    * (DISTINCT, EXPAND, ...) may read whole rows, so it passes on its
+    * child's entire output.
+    */
+  private[planner] def readAround(
+      g: ExtractedJoinGraph, rebuild: LogicalPlan => LogicalPlan): AttributeSet = {
+    val hole = LocalRelation(g.instances.flatMap(_.plan.output))
+    def walk(p: LogicalPlan, read: AttributeSet): Option[AttributeSet] =
+      if (p eq hole) Some(read)
+      else p.children.iterator.flatMap { c =>
+        val passed = p match {
+          case _: Project | _: Aggregate | _: Filter | _: Sort | _: GlobalLimit |
+              _: LocalLimit | _: Join | _: SubqueryAlias | _: Window => read
+          case _ => c.outputSet
+        }
+        walk(c, p.references ++ passed.filter(c.outputSet.contains))
+      }.nextOption()
+    val around = rebuild(hole)
+    walk(around, around.outputSet).getOrElse(hole.outputSet)
+  }
 
   // Shared pool for concurrent sketch jobs. Spark job submission is
   // thread-safe; 8 in-flight jobs is plenty (a query rarely has more

@@ -29,6 +29,11 @@ class CompassSessionSpec extends AnyFunSuite {
     (df, work.jobs)
   }
 
+  /** Leaves of `df`'s spliced plan that serve kept survivors. */
+  private def keptLeaves(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.LogicalRDD] =
+    df.queryExecution.analyzed.collect { case r: org.apache.spark.sql.execution.LogicalRDD => r }
+
   private def cacheFiles(dir: java.nio.file.Path, prefix: String): Seq[java.nio.file.Path] = {
     val s = java.nio.file.Files.list(dir)
     try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
@@ -179,12 +184,15 @@ class CompassSessionSpec extends AnyFunSuite {
   test("filtered-sketch memo: repeated (table, filter-set) builds once per session") {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
-    val (_, firstJobs) = optimizeCountingJobs(cs, fiveWay)
+    val (first, firstJobs) = optimizeCountingJobs(cs, fiveWay)
     assert(firstJobs >= 1, "the first query must build its sketches")
+    assert(keptLeaves(first).nonEmpty, "the builds' survivors must be spliced")
     val (again, secondJobs) = optimizeCountingJobs(cs, fiveWay)
     assert(secondJobs == 0,
       s"identical (table, filter-set) must be served from the memo, not rebuilt ($secondJobs jobs)")
     assert(cs.lastPlan.isDefined)
+    // A memo hit carries no rows: every instance is spliced as its scan.
+    assert(cs.lastPlan.get.keptRows.isEmpty && keptLeaves(again).isEmpty)
     // Memo-served sketches still yield a correct (vanilla-identical) result.
     val vanilla = spark.sql(fiveWay).collect().map(_.toSeq)
     assert(again.collect().map(_.toSeq).toSeq == vanilla.toSeq)
@@ -202,6 +210,7 @@ class CompassSessionSpec extends AnyFunSuite {
       val r1 = df1.collect().map(_.toSeq)
       val plan1 = cs1.lastPlan.get
       assert(coldJobs >= 1, "cold session must build the filtered sketch")
+      assert(plan1.keptRows.contains("region"), "the cold build's survivors must be spliced")
       assert(cacheFiles(cacheDir, "filtered-").nonEmpty, "the filtered sketch must spill to disk")
       // Session 2: NEW CompassSession (memory memo empty — the r12 cold-start
       // cost) over the SAME cache dir: every sketch must come from disk, no
@@ -213,6 +222,8 @@ class CompassSessionSpec extends AnyFunSuite {
       val r2 = df2.collect().map(_.toSeq)
       val plan2 = cs2.lastPlan.get
       assert(warmJobs == 0, s"warm disk tier must serve every sketch (ran $warmJobs jobs)")
+      assert(plan2.keptRows.isEmpty && keptLeaves(df2).isEmpty,
+        "a disk hit carries no rows: every instance is spliced as its scan")
       assert(plan2.order == plan1.order, "disk-served sketches must reproduce the plan")
       assert(plan2.sketchCounts == plan1.sketchCounts)
       assert(r2.toSeq == r1.toSeq)
@@ -386,6 +397,10 @@ class CompassSessionSpec extends AnyFunSuite {
     val s = cs.lastPlan.get.explainString
     assert(s.contains("COMPASS plan:") && s.contains("surviving rows:"))
     assert(s.contains("region=1"))
+    // A fresh session builds every sketch, so each instance is served
+    // from the rows its build kept, region's one row among them.
+    val kept = s.linesIterator.find(_.startsWith("  served from kept rows: ")).get
+    assert(kept.contains("region=1"), kept)
   }
 
   test("scalar-subquery filters survive the pipeline (optimized or fallback)") {
@@ -445,16 +460,38 @@ class CompassSessionSpec extends AnyFunSuite {
     val out = cs.sql(q)
     assert(cs.lastPlan.isDefined, "the query should take the COMPASS path")
     assert(out.head().getLong(0) == spark.sql(q).head().getLong(0))
-    // The pre-pass persists no survivors: the selective orders instance is
-    // read from its scan, not from an in-memory relation.
+    // The pre-pass persists nothing: the selective orders instance is
+    // served from the rows its own sketch job returned, a leaf of the
+    // spliced plan, never from a cached (InMemoryRelation) relation.
     assert(out.queryExecution.optimizedPlan.find(
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]).isEmpty,
       "the spliced plan must not read a cached push-down relation")
+    val orders = cs.lastPlan.get.keptRows.get("orders")
+    assert(orders.exists(_ > 0), "orders must be served from its kept rows")
+    assert(keptLeaves(out).exists(_.rdd.count() == orders.get))
     // A different second query, then close(): the first frame still runs.
     val q2 = q.replace("400000", "450000")
     assert(cs.sql(q2).head().getLong(0) == spark.sql(q2).head().getLong(0))
     cs.close()
     assert(out.head().getLong(0) == spark.sql(q).head().getLong(0))
+  }
+
+  test("zero survivors splice an empty relation, and the count is plain Spark's") {
+    Tables.registerAll(spark, dir)
+    val cs = new CompassSession(spark)
+    val q =
+      """SELECT count(*) AS n FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE o_totalprice < 0""".stripMargin
+    val out = cs.sql(q)
+    assert(cs.lastPlan.get.keptRows.get("orders").contains(0L))
+    assert(out.queryExecution.analyzed.exists {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r.data.isEmpty
+      case _ => false
+    }, "zero survivors must be an empty LocalRelation")
+    assert(out.head().getLong(0) == spark.sql(q).head().getLong(0))
+    assert(out.head().getLong(0) == 0L)
   }
 
   test("interleaved scopes keep their own lastPlan and correct results") {

@@ -1,5 +1,7 @@
 package graft
 
+import graft.job.JobCorpus
+import graft.planner.CompassSession
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,14 +43,22 @@ class DriverIngressGateSpec extends AnyFunSuite {
     val nation = Tables.load(spark, "/root/testdata/sf0.01", "nation")
     val joined = Tables.load(spark, "/root/testdata/sf0.01", "customer")
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-    val (_, kept) = Work.measure(spark)(materialize(joined))
-    val (rows, collected) = Work.measure(spark)(joined.collect().length)
-    info(s"materialized: broadcast ${kept.broadcastBytes} B, results ${kept.resultBytes} B; " +
-      s"collect of $rows rows: results ${collected.resultBytes} B")
-    assert(rows > 0)
-    assert(kept.broadcastBytes > 0, "the broadcast build was not counted as broadcast")
-    assert(kept.resultBytes < collected.resultBytes,
-      "materializing on the executors shipped as much as collecting the rows")
+    // With AQE off too: the JOB entries run on such a session, and their
+    // broadcast builds once counted as results (~80 MB per q_job_compass
+    // lap). A frame plans once, so each setting gets its own.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      val frame = joined.select("*")
+      val (_, kept) = Work.measure(spark)(materialize(frame))
+      val (rows, collected) = Work.measure(spark)(frame.collect().length)
+      info(s"AQE $on, materialized: broadcast ${kept.broadcastBytes} B, results " +
+        s"${kept.resultBytes} B; collect of $rows rows: results ${collected.resultBytes} B")
+      assert(rows > 0)
+      assert(kept.broadcastBytes > 0, s"the broadcast build was not counted as broadcast (AQE $on)")
+      assert(kept.resultBytes < collected.resultBytes,
+        "materializing on the executors shipped as much as collecting the rows")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("collect-site driver ingress grows sublinearly with the corpus") {
@@ -88,5 +98,42 @@ class DriverIngressGateSpec extends AnyFunSuite {
           "over the 48 MB budget (≈ threshold × a handful of rounds); " +
           "an iterative loop is broadcasting a relation that grows with the corpus")
     }
+  }
+
+  /** Ratchet pins for the COMPASS case below, at the values measured when
+    * the sketch jobs began returning packed rows instead of sketch planes
+    * (4 cores: 476 jobs, 13,108 KB; the builder that shipped planes
+    * measured 494 jobs, 160,315 KB). Jobs are exact; the byte pin leaves
+    * 9% for task-metric noise. A count that falls lowers its pin;
+    * raising one is a gate change with a measured reason.
+    */
+  private val CompassSubsetJobs = 476
+  private val CompassSubsetResultBytes = 14L << 20
+
+  test("COMPASS on the JOB subset: per-query jobs and driver ingress under their pins") {
+    JobCorpus.ensureData(spark)
+    JobCorpus.registerViews(spark)
+    // A memory-only store: every sketch is built, whatever the disk tier holds.
+    val cs = new CompassSession(spark)
+    val byName = JobCorpus.queries.toMap
+    val per = JobCorpus.compassSubset.map { name =>
+      val (took, work) = Work.measure(spark) {
+        val df = cs.sql(byName(name))
+        df.head()
+        cs.lastPlan.isDefined
+      }
+      assert(took, s"JOB $name did not take the COMPASS path")
+      name -> work
+    }
+    cs.close()
+    val jobs = per.map(_._2.jobs).sum
+    val results = per.map(_._2.resultBytes).sum
+    val (maxName, maxWork) = per.maxBy(_._2.resultBytes)
+    info(s"${per.size} queries: $jobs jobs, ${results >> 10} KB non-broadcast results " +
+      s"(most: $maxName ${maxWork.resultBytes >> 10} KB), " +
+      s"${per.map(_._2.broadcastBytes).sum >> 10} KB broadcast")
+    assert(jobs <= CompassSubsetJobs, s"$jobs jobs over the pin of $CompassSubsetJobs")
+    assert(results <= CompassSubsetResultBytes,
+      s"${results >> 10} KB of task results over the pin of ${CompassSubsetResultBytes >> 10} KB")
   }
 }

@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * COMPASS's own builder ([[CompassSession.buildSketch]]) must produce
   * exactly what this aggregate produces over the same keys, in one job
-  * with no shuffle.
+  * with no shuffle — whether its tasks ship their rows (sketched on the
+  * driver) or, over their row cap, their own sketches.
   */
 class FagmsSketchAggSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -113,17 +114,19 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     assert(math.abs(est - trueSize) / trueSize < 0.15, s"est $est vs true $trueSize")
   }
 
-  /** The COMPASS builder's group and the `fagms_sketch` aggregate's over
-    * every column of `df`, keys projected through the same `keyExpr`.
+  /** The COMPASS builder's result under `rowLimit` and the `fagms_sketch`
+    * aggregate's group over every column of `df`, keys projected through
+    * the same `keyExpr`.
     */
-  private def bothBuilds(df: DataFrame): (SketchGroup, SketchGroup) = {
+  private def bothBuilds(df: DataFrame, rowLimit: Long): (CompassSession.Built, SketchGroup) = {
     val rows = 11; val buckets = 101
     val plan = df.queryExecution.analyzed
     val attrs = plan.output
     val names = attrs.map(_.name)
     val reg = new SeedRegistry(rows)
     val seeds = names.map(n => reg.seedsFor(("t", n)))
-    val built = CompassSession.buildSketch(spark, plan, attrs, rows, buckets, names, seeds)
+    val built = CompassSession.buildSketch(
+      spark, plan, attrs, attrs, rows, buckets, names, seeds, rowLimit)
     val keys = attrs.map(a => Bridge.column(CompassSession.keyExpr(a)))
     val aggregated = SketchGroup.deserialize(
       df.agg(fagms_sketch(rows, buckets, names, seeds, keys: _*)).head().getAs[Array[Byte]](0))
@@ -139,6 +142,23 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     }
   }
 
+  /** Both builder paths over `df`: every task ships its rows (the row
+    * limit covers the data), and every task with a row to count ships its
+    * sketch (limit 0). Each must equal the aggregate; only the first keeps
+    * rows — exactly the ones it counted, those with no NULL key.
+    */
+  private def assertBothPaths(df: DataFrame): SketchGroup = {
+    val (viaRows, aggregated) = bothBuilds(df, CompassSession.BroadcastRowLimit)
+    assert(viaRows.survivors.map(_.size.toLong).contains(viaRows.sketch.count),
+      "under the limit the builder must return every row it counted")
+    assertSameGroup(viaRows.sketch, aggregated)
+    val (viaSketches, _) = bothBuilds(df, 0L)
+    assert(viaSketches.survivors.isEmpty,
+      "over the cap a task ships its sketch, so no rows come back")
+    assertSameGroup(viaSketches.sketch, aggregated)
+    viaRows.sketch
+  }
+
   test("COMPASS builder equals fagms_sketch: Int/Long keys with NULLs, 1 and 13 partitions") {
     import spark.implicits._
     val data = (0 until 3000).map { i =>
@@ -147,9 +167,25 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     Seq(1, 13).foreach { parts =>
       val df = data.toDF("ik", "lk").repartition(parts)
       assert(df.rdd.getNumPartitions == parts)
-      val (built, aggregated) = bothBuilds(df)
+      val built = assertBothPaths(df)
       assert(built.count == data.count(_._2.isDefined), "a NULL-key row must be skipped")
-      assertSameGroup(built, aggregated)
+    }
+  }
+
+  test("COMPASS builder over its row cap at 13 partitions: sketches, not rows, bit-identical") {
+    import spark.implicits._
+    val data = (0 until 3000).map(i => (i % 97, (i % 400).toLong * 1000003L))
+    // Hash-partitioned, so partitions differ in size: at a per-task cap of
+    // the median size some tasks fit and some do not.
+    val df = data.toDF("ik", "lk").repartition(13, col("ik"))
+    val sizes = df.rdd.glom().map(_.length).collect().sorted
+    assert(sizes.length == 13 && sizes.head > 0 && sizes.head < sizes.last)
+    Seq(sizes(6).toLong * 13, 13L).foreach { limit =>
+      val (built, aggregated) = bothBuilds(df, limit)
+      assert(built.survivors.isEmpty,
+        s"a task over its cap (limit $limit) must leave the instance on its scan")
+      assert(built.sketch.count == data.size)
+      assertSameGroup(built.sketch, aggregated)
     }
   }
 
@@ -161,9 +197,8 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     }
     // keyExpr hashes these types but keeps a NULL key NULL, so both paths
     // skip such a row, as they do for integral keys.
-    val (built, aggregated) = bothBuilds(data.toDF("dk", "sk").repartition(13))
+    val built = assertBothPaths(data.toDF("dk", "sk").repartition(13))
     assert(built.count == data.count(_._2 != null), "a NULL-key row must be skipped")
-    assertSameGroup(built, aggregated)
   }
 
   test("COMPASS builder on zero survivors: count 0, all-zero planes") {
@@ -172,14 +207,18 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     // A real filter that keeps nothing, and one Catalyst folds to an empty
     // relation (an RDD with no partitions).
     Seq(df.filter(col("lk") < 0), df.filter(lit(false))).foreach { empty =>
-      val (built, aggregated) = bothBuilds(empty)
-      assert(built.count == 0L)
-      assert(built.planes.forall(_.forall(_ == 0.0)))
-      assertSameGroup(built, aggregated)
+      Seq(0L, CompassSession.BroadcastRowLimit).foreach { limit =>
+        val (built, aggregated) = bothBuilds(empty, limit)
+        assert(built.survivors.contains(Seq.empty), "zero survivors are an empty row set")
+        assert(built.sketch.count == 0L)
+        assert(built.sketch.planes.forall(_.forall(_ == 0.0)))
+        assertSameGroup(built.sketch, aggregated)
+      }
     }
   }
 
   test("COMPASS builder runs one job with no shuffle write at one partition") {
+    // Both paths: the task ships its rows, or (limit 0) its sketch.
     // A file scan: one partition, but not SinglePartition-partitioned, so
     // an aggregate over it would plan an exchange (spark.range(.., 1)
     // would not).
@@ -189,11 +228,17 @@ class FagmsSketchAggSpec extends AnyFunSuite {
     val survivors = instance.count()
     val plan = instance.queryExecution.analyzed
     val seeds = Seq(new SeedRegistry(73).seedsFor(("orders", "o_orderkey")))
-    val (g, work) = Work.measure(spark)(CompassSession.buildSketch(
-      spark, plan, plan.output, 73, 1021, Seq("o_orderkey"), seeds))
-    assert(g.count == survivors && survivors > 0)
-    assert(work.jobs == 1, s"expected one sketch job, saw ${work.jobs}")
-    assert(work.shuffleWriteBytes == 0L,
-      s"sketch build wrote ${work.shuffleWriteBytes} shuffle bytes")
+    Seq(CompassSession.BroadcastRowLimit, 0L).foreach { limit =>
+      val (b, work) = Work.measure(spark)(CompassSession.buildSketch(
+        spark, plan, plan.output, plan.output, 73, 1021, Seq("o_orderkey"), seeds, limit))
+      assert(b.sketch.count == survivors && survivors > 0)
+      assert(b.survivors.map(_.size.toLong) == (if (limit > 0) Some(survivors) else None))
+      assert(work.jobs == 1, s"expected one sketch job, saw ${work.jobs}")
+      assert(work.shuffleWriteBytes == 0L,
+        s"sketch build wrote ${work.shuffleWriteBytes} shuffle bytes")
+      // The rows are the driver ingress when they fit: far less than one
+      // 73 × 1021 plane of doubles (~596 KB).
+      if (limit > 0) assert(work.resultBytes < 100000L, s"${work.resultBytes} result bytes")
+    }
   }
 }

@@ -127,14 +127,37 @@ class PlanAuditSpec extends AnyFunSuite {
       s"bloom probe fell out of codegen:\n$plan")
   }
 
+  /** `q` through `cs` twice. The first call builds every sketch, and the
+    * instances its jobs kept rows for are spliced as those rows, their
+    * filters already applied. The second is served from the session's
+    * store, carries no rows and scans every instance with its filters:
+    * the plan whose pushdown these audits read, whatever the store held
+    * before.
+    */
+  private def scannedSplice(cs: CompassSession, q: String): org.apache.spark.sql.DataFrame = {
+    cs.sql(q)
+    val df = cs.sql(q)
+    assert(cs.lastPlan.exists(_.keptRows.isEmpty), "a store hit must carry no rows")
+    df
+  }
+
   test("COMPASS-rebuilt plan keeps broadcasts and pushdown") {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark)
-    val df = cs.sql(
+    val q =
       """SELECT count(*) AS n FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |WHERE o_totalprice > 400000""".stripMargin)
+        |WHERE o_totalprice > 400000""".stripMargin
+    // Built fresh, orders is served from its sketch job's rows: exactly
+    // the rows its filter keeps.
+    val kept = cs.sql(q)
+    kept.collect()
+    assert(cs.lastPlan.get.keptRows.get("orders").contains(
+      spark.sql("SELECT count(*) FROM orders WHERE o_totalprice > 400000").head().getLong(0)))
+    assert(kept.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+      s"sketch-count broadcast hints must survive splicing:\n${kept.queryExecution.executedPlan}")
+    val df = scannedSplice(cs, q)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThan(o_totalprice,400000"),
@@ -147,7 +170,7 @@ class PlanAuditSpec extends AnyFunSuite {
     Tables.registerAll(spark, dir)
     val cs = new CompassSession(spark,
       templateCache = Some(graft.planner.SketchTemplateCache.default()))
-    val df = cs.sql(graft.planner.OptimizerQuality.job17Text)
+    val df = scannedSplice(cs, graft.planner.OptimizerQuality.job17Text)
     df.collect()
     val plan = finalPlan(df.queryExecution.executedPlan.toString)
     // Per-instance filters must reach the parquet scans even through the
@@ -174,7 +197,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val cs = new CompassSession(spark,
       templateCache = Some(graft.planner.SketchTemplateCache.default()))
     try {
-      val df = cs.sql(graft.job.JobCorpus.queries.toMap.apply("1a"))
+      val df = scannedSplice(cs, graft.job.JobCorpus.queries.toMap.apply("1a"))
       assert(cs.lastPlan.isDefined, "1a must take the COMPASS path")
       df.collect()
       val plan = finalPlan(df.queryExecution.executedPlan.toString)
