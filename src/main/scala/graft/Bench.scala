@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.VectorMap
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every query entry at SPARK_GRAFT_SF_DIR and prints
@@ -154,8 +155,8 @@ object Bench {
     // Per-ENTRY (sketch, enumerate, exec) triples for the COMPASS-path JOB
     // entries, from each entry's timed COLD lap (and, under
     // "<entry>#warm_last", its last warm lap). Every lap records into its
-    // own Telemetry scope, so a triple always belongs to the lap it is
-    // filed under.
+    // own Work scope, so a triple always belongs to the lap it is filed
+    // under.
     val jobPlanning = scala.collection.mutable.LinkedHashMap
       .empty[String, Seq[graft.job.JobCorpus.CompassRun]]
     val jobQuality = scala.collection.mutable.LinkedHashMap
@@ -179,41 +180,12 @@ object Bench {
         val xs = lat.values.toSeq.sorted
         Some((xs(xs.size / 2), xs((xs.size * 9) / 10 min (xs.size - 1)), xs.last, xs.size))
       }
-    // Per-lap GC + JIT attribution (r16 verdict #4: the quiesced record's
-    // q_job_corpus warm lap ran SLOWER than cold with nothing to
-    // attribute it to). Two MXBean reads per lap: cumulative
-    // stop-the-world collection time and cumulative JIT compilation time
-    // — their per-lap deltas separate "the lap's code was slower" from
-    // "the JVM charged this lap for accumulated garbage / fresh
-    // compilation".
-    def gcJitNow(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val gc = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-      val jit = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
-        .filter(_.isCompilationTimeMonitoringSupported)
-        .map(_.getTotalCompilationTime).getOrElse(0L)
-      (gc, jit)
-    }
     // entry -> per-lap [wall_ms, gc_ms, jit_ms] of its completed laps,
-    // cold first.
+    // cold first: GC and JIT attribute a warm lap that ran slower than
+    // cold (r16 verdict #4).
     val lapTelemetry = scala.collection.mutable
       .LinkedHashMap.empty[String, Vector[(Long, Long, Long)]]
-    // One timed lap of an entry: its wall seconds (or the error), its
-    // [wall_ms, gc_ms, jit_ms], and what the entry recorded into the
-    // lap's Telemetry scope (also when it failed part-way).
-    case class Lap(time: Either[String, Double],
-        gcJit: (Long, Long, Long), rec: Telemetry.Record)
-    def lap(e: Queries.Entry): Lap = {
-      val (gc0, jit0) = gcJitNow()
-      val t0 = System.nanoTime()
-      val (out, rec) = Telemetry.capture(materialize(e.run(spark, sfDir)))
-      val ns = System.nanoTime() - t0
-      val (gc1, jit1) = gcJitNow()
-      Lap(out.toEither.map(_ => ns / 1e9).left.map(ex =>
-          Option(ex.getMessage).getOrElse(ex.getClass.getName).take(120)),
-        (ns / 1000000, gc1 - gc0, jit1 - jit0), rec)
-    }
+    def wallGcJit(c: Work.Counts) = (c.wallNs / 1000000, c.gcMs, c.jitMs)
     // entry -> (task-result bytes shipped to the driver, heap
     // high-water bytes) over the COLD lap — the driver-memory audit
     // channel (r19 verdict #2). Full record only.
@@ -224,13 +196,13 @@ object Bench {
       // accumulated garbage is not charged to whichever entry GC happens
       // to interrupt (r3 showed ~1.5x uniform drift on join entries).
       System.gc()
-      // The lap's wall clock runs inside the scope, so neither listener
-      // bus drain is timed.
-      val (cold, work) = Work.measure(spark)(lap(e))
-      timings(e.name) = cold.time
-      if (cold.time.isRight) lapTelemetry(e.name) = Vector(cold.gcJit)
+      // Every lap is one Work scope; the Try keeps a failed lap's records.
+      val (cold, work) = Work.measure(spark)(Try(materialize(e.run(spark, sfDir))))
+      timings(e.name) = cold.toEither.map(_ => work.wallNs / 1e9).left.map(ex =>
+        Option(ex.getMessage).getOrElse(ex.getClass.getName).take(120))
+      if (cold.isSuccess) lapTelemetry(e.name) = Vector(wallGcJit(work))
       driverPeaks(e.name) = (work.resultBytes, work.heapPeakBytes)
-      val rec = cold.rec
+      val rec = work.records
       if (rec.compassRuns.nonEmpty) jobPlanning(e.name) = rec.compassRuns
       if (rec.qualityReports.nonEmpty) jobQuality(e.name) = rec.qualityReports
       latencyStats(rec.corpusLatencies).foreach(jobLatency(e.name) = _)
@@ -258,7 +230,7 @@ object Bench {
       // per query. Operator persists were released, so this measures
       // recomputation, not cache reads; only generated-code and JIT state
       // carries over. Cold stays the primary (round-comparable) metric.
-      if (cold.time.isRight) {
+      if (cold.isSuccess) {
         // The checkpoint-heavy trio measured 3x lap-over-lap swings on
         // identical code (r9 warm_spread) — GC/page-cache jitter on
         // eager-checkpoint entries. 5 laps instead of 3 so their median
@@ -276,11 +248,12 @@ object Bench {
           // Between-lap GC for the jittery trio: an eager
           // checkpoint mid-lap is where a pending GC lands otherwise.
           if (checkpointHeavy(e.name)) System.gc()
-          try lap(e) finally graft.operators.OpCaches.releaseAll(spark)
-        }.takeWhile(_.time.isRight).toVector
-        lapTelemetry(e.name) ++= warm.map(_.gcJit)
+          try Work.measure(spark)(Try(materialize(e.run(spark, sfDir))))
+          finally graft.operators.OpCaches.releaseAll(spark)
+        }.takeWhile(_._1.isSuccess).map(_._2).toVector
+        lapTelemetry(e.name) ++= warm.map(wallGcJit)
         if (warm.nonEmpty) {
-          val sortedLaps = warm.flatMap(_.time.toOption).sorted
+          val sortedLaps = warm.map(_.wallNs / 1e9).sorted
           warmTimings(e.name) = sortedLaps(sortedLaps.size / 2)
           if (sortedLaps.size >= 2)
             warmSpread(e.name) = (sortedLaps.head,
@@ -289,7 +262,7 @@ object Bench {
           // a warm lap's triples with the round's planning record; keeping
           // BOTH labeled makes a warm>cold anomaly decomposable from the
           // bench file alone.
-          val last = warm.last.rec
+          val last = warm.last.records
           if (last.compassRuns.nonEmpty)
             jobPlanning(e.name + "#warm_last") = last.compassRuns
           if (last.qualityReports.nonEmpty)

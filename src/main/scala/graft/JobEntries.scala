@@ -38,7 +38,7 @@ object JobEntries {
     // would mismatch loudly, never silently.
     dfq("q_job_corpus", JobCorpus.duckOracleSql) { (s, dir) =>
       val (counts, latencies) = JobCorpus.runAll(s, dir)
-      Telemetry.record(_.copy(corpusLatencies = latencies))
+      Work.record(_.copy(corpusLatencies = latencies))
       counts
     },
 
@@ -52,7 +52,7 @@ object JobEntries {
     dfq("q_job_compass", JobCorpus.duckOracleSqlFor(JobCorpus.queries.map(_._1))) {
       (s, _) =>
         val runs = JobCorpus.runCompassFull(s, compassFor(s))
-        Telemetry.record(_.copy(compassRuns = runs))
+        Work.record(_.copy(compassRuns = runs))
         import s.implicits._
         runs.map(r => r.name -> r.count).toDF("q", "n").orderBy("q")
     },
@@ -79,7 +79,7 @@ object JobEntries {
       val reports = JobCorpus.qualitySubset.map { name =>
         graft.planner.OptimizerQuality.compare(s, cs, name, byName(name))
       }
-      Telemetry.record(_.copy(qualityReports = reports))
+      Work.record(_.copy(qualityReports = reports))
       import s.implicits._
       val perQuery = reports.map(r => (r.family,
         if (r.compassSum <= 2L * r.naiveSum + 100) 1L else 0L,

@@ -106,6 +106,10 @@ object Queries {
         "FROM lineitem a JOIN lineitem b " +
         "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey").persist())
     pairs.createOrReplaceTempView("graft_tri_pairs")
+    // A scoped flip on `s`, not a child session: OpCaches tracks persists
+    // and checkpoints per session, so pairs and anchors built on a child
+    // would escape `OpCaches.releaseAll(s)` (and the child would not see
+    // `s`'s temp views).
     val prevPreferSmj = s.conf.getOption("spark.sql.join.preferSortMergeJoin")
     val (anchors, wedgePlan) = try {
       s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
@@ -370,20 +374,14 @@ object Queries {
       // 64 tiny files can pack into < 4 read partitions and coalesce(4)
       // would emit fewer files than the pinned oracle count (r13 advice).
       // openCost = maxPartitionBytes = 8 MiB makes every tiny file its
-      // own split regardless of core count. The compact write below is
-      // an eager action, so restoring the confs afterwards cannot
-      // retroactively change its partitioning.
-      val fileConfs = Seq("spark.sql.files.openCostInBytes",
-        "spark.sql.files.maxPartitionBytes")
-      val saved = fileConfs.map(k => k -> s.conf.getOption(k))
-      try {
-        fileConfs.foreach(k => s.conf.set(k, (8L << 20).toString))
-        s.read.parquet(s"$tmp/frag").coalesce(4)
-          .write.mode("overwrite").parquet(s"$tmp/compact")
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+      // own split regardless of core count; a child session carries the
+      // two settings, so the entry's own session never changes.
+      val oneFilePerSplit = graft.engine.LocalSession.child(s, "one-file-per-split") { c =>
+        c.conf.set("spark.sql.files.openCostInBytes", 8L << 20)
+        c.conf.set("spark.sql.files.maxPartitionBytes", 8L << 20)
       }
+      oneFilePerSplit.read.parquet(s"$tmp/frag").coalesce(4)
+        .write.mode("overwrite").parquet(s"$tmp/compact")
       val after = dataFiles(s"$tmp/compact")
       s.read.parquet(s"$tmp/compact")
         .agg(count(lit(1)).as("n"), sum(length(col("text"))).cast("long").as("chars"),

@@ -150,9 +150,8 @@ object StreamQueries {
     * batch footer read (file sources require a user-supplied schema).
     */
   private def fileStream(s: SparkSession, dir: String, table: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$table.parquet"
-    val schema = s.read.parquet(path).schema
+    val schema = Tables.readRaw(s, dir, table).schema
     // The file SOURCE requires a directory. Driver tables are single
     // FILES, so stream the parent dir with a glob pinned to the one
     // file; a table that is a real directory streams directly.
@@ -189,7 +188,7 @@ object StreamQueries {
 
   /** Drain a started streaming query, recording its per-batch
     * `triggerExecution` durations and its [[StateFootprint]] under `key`
-    * into the open [[Telemetry]] scope, and always stop it. Bench emits
+    * into the open [[Work]] scope, and always stop it. Bench emits
     * count/median/max of the durations, so a contended driver number is
     * decomposable into "every batch slowed" vs "one batch stalled" from
     * the bench file alone (r12: streaming entries ran ~2x under driver
@@ -222,7 +221,7 @@ object StreamQueries {
         stateBytes = progresses.lastOption
           .map(_.stateOperators.map(_.memoryUsedBytes).sum).getOrElse(0L),
         inputRows = progresses.map(_.numInputRows).sum)
-      Telemetry.record(r => r.copy(
+      Work.record(r => r.copy(
         batchDurations = r.batchDurations + (key -> durs),
         stateFootprints = r.stateFootprints + (key -> foot)))
     } finally q.stop()

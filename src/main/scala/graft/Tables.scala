@@ -24,22 +24,30 @@ object Tables {
   val broadcastable: Set[String] = Set("region", "nation")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // events.ts has shipped in two on-disk layouts across test-data
-    // generations: TIMESTAMP(NANOS) (which Spark's vectorized reader
-    // rejects — read as raw int64 nanos and convert) and a true
-    // TIMESTAMP(MICROS) (read natively, surfaced as NTZ under Spark's
-    // default inferTimestampNTZ). Branch on the LOADED schema so either
-    // layout normalizes to µs-precision TimestampType — the same values
-    // DuckDB sees, under the UTC session timezone every entrypoint sets.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readRaw(spark, sfDir, name)
     if (name == "events") normalizeEvents(df) else df
   }
 
+  /** One driver table as stored, before [[normalizeEvents]]; the batch
+    * loader and the streaming file source ([[StreamQueries]]) both read
+    * through it. events.ts has shipped in two on-disk layouts across
+    * test-data generations: TIMESTAMP(NANOS) (which Spark's vectorized
+    * reader rejects, so it is read as raw int64 nanos) and a true
+    * TIMESTAMP(MICROS) (read natively, surfaced as NTZ under Spark's
+    * default inferTimestampNTZ). This is the one place graft sets
+    * `nanosAsLong`; it stays set on `spark`, so a stream planned from
+    * this schema reads the files the same way.
+    */
+  def readRaw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$sfDir/$name.parquet")
+  }
+
   /** Normalize whatever on-disk `ts` layout this events frame carries to
-    * µs-precision TimestampType. Shared by the batch loader and the
-    * streaming file source ([[StreamQueries]]) so the two paths cannot
-    * drift.
+    * µs-precision TimestampType — the same values DuckDB sees, under the
+    * UTC session timezone every entrypoint sets. Shared by the batch
+    * loader and the streaming file source ([[StreamQueries]]) so the two
+    * paths cannot drift.
     */
   def normalizeEvents(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {

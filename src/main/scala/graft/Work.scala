@@ -1,26 +1,47 @@
 package graft
 
 import java.lang.management.{ManagementFactory, MemoryType}
-import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference, LongAdder}
+import graft.StreamQueries.StateFootprint
+import graft.job.JobCorpus.CompassRun
+import graft.planner.OptimizerQuality
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** The Spark work one piece of driver code causes, counted by the one
-  * listener graft installs. [[measure]] drains the listener bus, opens a
-  * scope, runs the body, drains again and closes the scope, so every
-  * event of the body's jobs lands in it and nothing from before or after
-  * does.
+/** What one lap of driver code did: the Spark work it caused, counted by
+  * the one listener graft installs, its wall, GC and JIT time, and what
+  * the code it ran recorded through [[record]]. [[measure]] drains the
+  * listener bus, opens a scope, runs and times the body, drains again and
+  * closes the scope, so every event of the body's jobs lands in it and
+  * nothing from before or after does; neither drain is timed.
   *
-  * Every event delivered while a scope is open counts toward it, whatever
-  * thread submitted the job: COMPASS builds its sketches on a pool whose
-  * threads do not inherit the caller's job group, and those jobs count
-  * too. The flip side is that scopes are for sequential use: two scopes
-  * open at once would each see the other's work, so a second one fails.
+  * Every event delivered and every record made while a scope is open
+  * counts toward it, whatever thread made it: COMPASS builds its sketches
+  * on a pool whose threads do not inherit the caller's job group, and the
+  * JOB runners submit their queries on one, and both count too. The flip
+  * side is that scopes are for sequential use: two scopes open at once
+  * would each see the other's work, so a second one fails.
   */
 object Work {
+
+  /** What the code in a scope recorded; each field has one producer. A
+    * record made outside any scope is dropped, so callers that never
+    * measure (Verify, most specs) pay nothing.
+    */
+  final case class Record(
+      // q_job_compass: per-query [sketch, enumerate, exec] ms.
+      compassRuns: Seq[CompassRun] = Nil,
+      // q_job_corpus: per-query wall-clock ms.
+      corpusLatencies: Map[String, Long] = Map.empty,
+      // q_job_quality: per-family (plan, compass-spine, naive-spine) ms.
+      qualityReports: Seq[OptimizerQuality.Report] = Nil,
+      // Stream drains, keyed per started stream: per-micro-batch
+      // `triggerExecution` ms and the final state-store footprint.
+      batchDurations: Map[String, Seq[Long]] = Map.empty,
+      stateFootprints: Map[String, StateFootprint] = Map.empty)
 
   /** What one scope counted.
     *
@@ -31,11 +52,16 @@ object Work {
     * `heapPeakBytes` is the JVM heap high-water over the scope, summed
     * over the per-pool peaks reset when it opened. In local mode the
     * executors share the driver's heap, so it is coarse, but it is the
-    * number that runs out.
+    * number that runs out. `wallNs`, `gcMs` and `jitMs` are the body's
+    * wall clock and the JVM's stop-the-world collection and JIT
+    * compilation time over it, which separate "the lap's code was
+    * slower" from "the JVM charged this lap for accumulated garbage or
+    * fresh compilation".
     */
   final case class Counts(jobs: Int, stages: Int, tasks: Int, maxStageTasks: Int,
       shuffleWriteRecords: Long, shuffleWriteBytes: Long,
-      resultBytes: Long, broadcastBytes: Long, heapPeakBytes: Long)
+      resultBytes: Long, broadcastBytes: Long, heapPeakBytes: Long,
+      wallNs: Long, gcMs: Long, jitMs: Long, records: Record)
 
   private final class Scope {
     val jobs, stages, tasks, maxStageTasks = new AtomicInteger
@@ -43,6 +69,7 @@ object Work {
     // Stages of broadcast-exchange build jobs: their task results are the
     // broadcast relation itself.
     val broadcastStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new AtomicReference(Record())
   }
 
   @volatile private var open: Scope = _
@@ -77,14 +104,29 @@ object Work {
     }
   }
 
+  /** Add to the open scope, from any thread; a no-op outside one. */
+  def record(update: Record => Record): Unit =
+    Option(open).foreach(_.records.updateAndGet(update(_)): Unit)
+
   private def heapPools = {
     import scala.jdk.CollectionConverters._
     ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(p => p.isValid && p.getType == MemoryType.HEAP)
   }
 
-  /** Run `body` in a fresh scope; returns its result and what its jobs
-    * did. A body that throws closes the scope and rethrows.
+  /** Cumulative (GC, JIT) milliseconds of this JVM. */
+  private def gcJitMs(): (Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    val gc = ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+    val jit = Option(ManagementFactory.getCompilationMXBean)
+      .filter(_.isCompilationTimeMonitoringSupported)
+      .fold(0L)(_.getTotalCompilationTime)
+    (gc, jit)
+  }
+
+  /** Run `body` in a fresh scope; returns its result and what it did. A
+    * body that throws closes the scope and rethrows, so a caller that
+    * wants a failed body's records wraps it in a `Try`.
     */
   def measure[T](spark: SparkSession)(body: => T): (T, Counts) = {
     val sc = spark.sparkContext
@@ -99,12 +141,16 @@ object Work {
       open
     }
     try {
+      val (gc0, jit0) = gcJitMs()
+      val t0 = System.nanoTime()
       val out = body
+      val wallNs = System.nanoTime() - t0
+      val (gc1, jit1) = gcJitMs()
       Bridge.drainListenerBus(sc)
       val heapPeak = heapPools.map(p => Option(p.getPeakUsage).fold(0L)(_.getUsed)).sum
       (out, Counts(s.jobs.get, s.stages.get, s.tasks.get, s.maxStageTasks.get,
         s.shuffleRecords.sum, s.shuffleBytes.sum, s.resultBytes.sum,
-        s.broadcastBytes.sum, heapPeak))
+        s.broadcastBytes.sum, heapPeak, wallNs, gc1 - gc0, jit1 - jit0, s.records.get))
     } finally open = null
   }
 }

@@ -41,8 +41,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  val SketchRows = 73
-  val SketchBuckets = 1021
+  import graft.planner.CompassSession.{SketchBuckets, SketchRows}
 
   /** Deterministic per-(class, position) seeds — equal classes → equal
     * seeds, the SQL-level analogue of SeedRegistry classes.

@@ -49,12 +49,6 @@ object ScaleCampaignMain {
     } finally spark.stop()
   }
 
-  private def timed[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   /** One corpus lap with a PER-QUERY job-group cap: the x100 campaign's
     * first uncapped run sat 25+ minutes inside ONE broadcast-probe task
     * (a vanilla-join-order intermediate explosion — at data scale a bad
@@ -131,13 +125,13 @@ object ScaleCampaignMain {
     * `runAll` (and hence the bench entry) takes, and the OTHER profile is
     * lapped as the counterfactual, so the record shows the gate picking
     * the measured winner on its own routing, each side of the ×20
-    * boundary. The laps run in this order: one untimed warm-up (the 33
+    * boundary. The laps run in this order: one unmeasured warm-up (the 33
     * compass-subset queries through plain Spark on the x1 trim child), so
     * neither cold lap alone pays the JVM's JIT warm-up; then the routed
     * cold lap, the other cold lap, the routed warm lap and the other warm
     * lap. Counts must agree on every query that completed in any two
     * laps; a timeout is a latency fact, not a correctness pass.
-    * `counts_equal_on` is the number completed in all four timed laps.
+    * `counts_equal_on` is the number completed in all four measured laps.
     */
   private def profiles(spark: SparkSession, m: Int): Unit = {
     val routedTrim = JobCorpus.useInteractiveProfile(m)
@@ -182,15 +176,14 @@ object ScaleCampaignMain {
     val cs = new CompassSession(prod,
       templateCache = Some(SketchTemplateCache.default()))
     try {
-      // PRE_PROCESSING (untimed, the reference's own shape).
+      // PRE_PROCESSING (not measured, the reference's own shape).
       val nTemplates = JobCorpus.warmCompassAt(spark, cs, m)
-      val ((runsCold, tCold), cold) =
-        graft.Work.measure(spark)(timed(JobCorpus.runCompassFull(spark, cs, m)))
-      val ((runsWarm, tWarm), warm) =
-        graft.Work.measure(spark)(timed(JobCorpus.runCompassFull(spark, cs, m)))
+      val (runsCold, cold) = graft.Work.measure(spark)(JobCorpus.runCompassFull(spark, cs, m))
+      val (runsWarm, warm) = graft.Work.measure(spark)(JobCorpus.runCompassFull(spark, cs, m))
       // Per lap, cold first: the driver's heap high-water and the
       // non-broadcast task results shipped to it.
-      println(Records.write(compassRecord(m, nTemplates, runsCold, tCold, runsWarm, tWarm) +
+      println(Records.write(compassRecord(m, nTemplates,
+          runsCold, cold.wallNs / 1e9, runsWarm, warm.wallNs / 1e9) +
         ("heap_peak_mb" -> Seq(cold.heapPeakBytes >> 20, warm.heapPeakBytes >> 20)) +
         ("result_kb" -> Seq(cold.resultBytes >> 10, warm.resultBytes >> 10))))
     } finally cs.close()

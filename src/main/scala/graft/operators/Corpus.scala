@@ -83,35 +83,6 @@ object Corpus {
         (coalesce(col("_ov"), lit(0L)) > 0).cast("long").as("contaminated"))
   }
 
-  /** Held-out n-gram novelty — the corpus-level memorization readout
-    * (complement of [[decontaminate]]'s per-doc flag): the fraction of
-    * the test split's DISTINCT word n-grams never seen in the train
-    * split. `isTestCol` is the caller's 0/1 split column (typically a
-    * deterministic hash coin so both engines draw the same split).
-    *
-    * Scale: two hash-aggregated distinct-gram relations and one
-    * anti-join on the gram key — no pairwise work anywhere; the three
-    * scalar counts combine via broadcast-singleton cross joins and the
-    * novelty rate is ONE IEEE division over exact BIGINTs.
-    */
-  def ngramNovelty(docs: DataFrame, textCol: String, isTestCol: String,
-      n: Int = 3): DataFrame = {
-    require(n > 0, s"n must be positive, got $n")
-    val sh = docs
-      .select(col(isTestCol).cast("long").as("_t"), words(textCol).as("_w"))
-      .select(col("_t"), explode(gramStrings(col("_w"), n)).as("_g"))
-    val train = sh.filter(col("_t") === 0L).select("_g").distinct()
-    val test = sh.filter(col("_t") === 1L).select("_g").distinct()
-    val novel = test.join(train, Seq("_g"), "left_anti")
-    val nTrain = train.agg(count(lit(1)).cast("long").as("n_train"))
-    val nTest = test.agg(count(lit(1)).cast("long").as("n_test"))
-    val nNovel = novel.agg(count(lit(1)).cast("long").as("n_novel"))
-    nTrain.crossJoin(nTest).crossJoin(nNovel)
-      .select(col("n_train"), col("n_test"), col("n_novel"),
-        (col("n_novel").cast("double") / col("n_test").cast("double"))
-          .as("novelty"))
-  }
-
   /** Concat-then-chunk sequence packing (the GPT-style pretraining
     * batcher): documents ordered by `idCol` are conceptually concatenated
     * and cut into `capacity`-token context windows; each document gets

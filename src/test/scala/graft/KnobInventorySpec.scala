@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * "Environment knobs" table, and the table lists nothing else: a knob
   * added, renamed or removed in code without its row (default and
   * reason) fails here. Spark work is counted in one place, [[Work]]: a
-  * second listener in the sources fails here too.
+  * second listener in the sources fails here too. Every session setting
+  * `src/main` makes is pinned by file and key, so a new one is a
+  * reviewed change.
   */
 class KnobInventorySpec extends AnyFunSuite {
   private def read(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
@@ -38,6 +40,10 @@ class KnobInventorySpec extends AnyFunSuite {
     sources(root).flatMap(f => listenerDef.findAllIn(read(f))
       .map(_ => Paths.get(root).relativize(f).toString))
 
+  /** Every `conf.set` call, and the literal key of those that have one. */
+  private val confSetCall = """\bconf\.set\(""".r
+  private val confSetLiteral = """\bconf\.set\(\s*"([^"]+)"""".r
+
   private def readmeKnobs: Set[String] = {
     val text = read(Paths.get("README.md"))
     val start = text.indexOf("### Environment knobs")
@@ -59,5 +65,27 @@ class KnobInventorySpec extends AnyFunSuite {
   test("src/main defines one SparkListener, graft.Work's, and src/test none") {
     assert(listeners("src/main") == List("scala/graft/Work.scala"))
     assert(listeners("src/test").isEmpty)
+  }
+
+  test("src/main sets exactly the pinned session settings, each by a literal key") {
+    val sites = sources("src/main").flatMap { f =>
+      val text = read(f)
+      val file = Paths.get("src/main").relativize(f).toString
+      assert(confSetCall.findAllIn(text).size == confSetLiteral.findAllIn(text).size,
+        s"$file sets a session setting whose key is not a string literal")
+      confSetLiteral.findAllMatchIn(text).map(m => file -> m.group(1))
+    }.toSet
+    assert(sites == Set(
+      "scala/graft/Tables.scala" -> "spark.sql.legacy.parquet.nanosAsLong",
+      "scala/graft/StreamQueries.scala" -> "spark.sql.shuffle.partitions",
+      "scala/graft/Queries.scala" -> "spark.sql.files.openCostInBytes",
+      "scala/graft/Queries.scala" -> "spark.sql.files.maxPartitionBytes",
+      "scala/graft/Queries.scala" -> "spark.sql.join.preferSortMergeJoin",
+      "scala/graft/job/JobCorpus.scala" -> "spark.sql.adaptive.enabled",
+      "scala/graft/job/JobCorpus.scala" -> "spark.sql.codegen.wholeStage",
+      "scala/graft/job/JobCorpus.scala" -> "spark.sql.constraintPropagation.enabled",
+      "scala/graft/job/JobCorpus.scala" -> "spark.sql.join.preferSortMergeJoin",
+      "scala/graft/planner/CompassSession.scala" -> "spark.sql.cbo.joinReorder.enabled",
+      "scala/graft/planner/CompassSession.scala" -> "spark.sql.cbo.starSchemaDetection"))
   }
 }

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Measured-membership gate for the streaming partition dial (r19
   * verdict #2): `HeavyStateEntries` must not be a hand-maintained name
   * set. Every `q_stream_*` entry is RUN here and its final state-store
-  * footprint captured in a `Telemetry` scope, as recorded by the same
+  * footprint read from its `Work` scope, as recorded by the same
   * drain harness the bench uses; an entry whose state rows
   * scale linearly with input rows (ratio ≥ LinearStateRatio — the
   * dedup-shaped class the ×1000 dial measurement was about) must appear
@@ -21,9 +21,8 @@ class StreamStateClassSpec extends AnyFunSuite {
 
   private def footprints(dir: String): Map[String, (Long, Long)] =
     StreamQueries.entries.map { e =>
-      val (out, rec) = Telemetry.capture(e.run(spark, dir).collect())
-      out.get
-      val fs = rec.stateFootprints.values
+      val (_, c) = Work.measure(spark)(e.run(spark, dir).collect())
+      val fs = c.records.stateFootprints.values
       e.name -> (fs.map(_.stateRows).sum, fs.map(_.inputRows).sum)
     }.toMap
 
