@@ -72,6 +72,12 @@ object Bench {
     // without a driver-side collect.
     def materialize(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
+    // Operator-internal persists and COMPASS's kept survivors only serve
+    // their own lap: released after each one, so no lap reads another's.
+    def release(): Unit = {
+      graft.operators.OpCaches.releaseAll(spark)
+      CompassQueries.releaseKeptRows()
+    }
     // Untimed warm-up lap over cheap representative shapes: absorbs JIT,
     // codegen-compiler and parquet-reader class loading so the first timed
     // entries are not charged for JVM warm-up (a long-lived cluster is warm).
@@ -85,7 +91,7 @@ object Bench {
       s"warm-up names not in the entry set: ${warmup -- Queries.all.map(_.name).toSet}")
     Queries.all.filter(e => warmup(e.name)).foreach { e =>
       try materialize(e.run(spark, sfDir)) catch { case NonFatal(_) => () }
-      graft.operators.OpCaches.releaseAll(spark)
+      release()
     }
     // Optional name filter (local iteration: `runMain graft.Bench q_a q_b`);
     // the driver passes no args and gets the full run. Unknown names fail
@@ -109,7 +115,7 @@ object Bench {
     if (selected.exists(_.name == "q_ann_ivf_indexed"))
       Queries.all.filter(_.name == "q_ann_ivf_indexed").foreach { e =>
         try materialize(e.run(spark, sfDir)) catch { case NonFatal(_) => () }
-        graft.operators.OpCaches.releaseAll(spark)
+        release()
       }
     // Synthetic-IMDb build for the JOB corpus entries is likewise a
     // one-time offline cost (idempotent on-disk dataset, usually already
@@ -191,6 +197,13 @@ object Bench {
     // channel (r19 verdict #2). Full record only.
     val driverPeaks = scala.collection.mutable
       .LinkedHashMap.empty[String, (Long, Long)]
+    // entry -> every COMPASS fallback its laps recorded, cold first.
+    val compassFallbacks = scala.collection.mutable
+      .LinkedHashMap.empty[String, Seq[graft.planner.CompassSession.Fallback]]
+    def fellBack(name: String, c: Work.Counts): Unit =
+      if (c.records.compassFallbacks.nonEmpty)
+        compassFallbacks(name) = compassFallbacks.getOrElse(name, Nil) ++
+          c.records.compassFallbacks
     selected.foreach { e =>
       // Settle the heap between entries so a 100+-query session's
       // accumulated garbage is not charged to whichever entry GC happens
@@ -202,6 +215,7 @@ object Bench {
         Option(ex.getMessage).getOrElse(ex.getClass.getName).take(120))
       if (cold.isSuccess) lapTelemetry(e.name) = Vector(wallGcJit(work))
       driverPeaks(e.name) = (work.resultBytes, work.heapPeakBytes)
+      fellBack(e.name, work)
       val rec = work.records
       if (rec.compassRuns.nonEmpty) jobPlanning(e.name) = rec.compassRuns
       if (rec.qualityReports.nonEmpty) jobQuality(e.name) = rec.qualityReports
@@ -220,9 +234,7 @@ object Bench {
       val durs = rec.batchDurations.values.flatten.toSeq.sorted
       if (durs.nonEmpty)
         streamBatches(e.name) = (durs.size, durs(durs.size / 2), durs.last)
-      // Operator-internal persists only serve their own query's action;
-      // release them so the 70+-query run doesn't accumulate cache.
-      graft.operators.OpCaches.releaseAll(spark)
+      release()
       // Second, WARM lap of the same entry: the cold number above charges
       // each plan its one-time Janino/JIT compilation (1-2 s for the
       // complex pipelines — measured: minhash runs 3.1 s cold, 1.25 s
@@ -249,9 +261,10 @@ object Bench {
           // checkpoint mid-lap is where a pending GC lands otherwise.
           if (checkpointHeavy(e.name)) System.gc()
           try Work.measure(spark)(Try(materialize(e.run(spark, sfDir))))
-          finally graft.operators.OpCaches.releaseAll(spark)
+          finally release()
         }.takeWhile(_._1.isSuccess).map(_._2).toVector
         lapTelemetry(e.name) ++= warm.map(wallGcJit)
+        warm.foreach(fellBack(e.name, _))
         if (warm.nonEmpty) {
           val sortedLaps = warm.map(_.wallNs / 1e9).sorted
           warmTimings(e.name) = sortedLaps(sortedLaps.size / 2)
@@ -272,7 +285,7 @@ object Bench {
     }
     val record = Record(sfDir, fullOut.toString, timings, warmTimings,
       warmSpread, lapTelemetry, driverPeaks, jobPlanning, jobQuality,
-      jobLatency, jobFamilyLatency, streamBatches)
+      jobLatency, jobFamilyLatency, streamBatches, compassFallbacks)
     Option(fullOut.toAbsolutePath.getParent)
       .foreach(p => java.nio.file.Files.createDirectories(p): Unit)
     java.nio.file.Files.write(fullOut, (Records.write(record.full) + "\n")
@@ -299,7 +312,8 @@ object Bench {
       jobQuality: collection.Map[String, Seq[graft.planner.OptimizerQuality.Report]],
       jobLatency: collection.Map[String, (Long, Long, Long, Int)],
       jobFamilyLatency: collection.Map[String, Map[String, (Int, Long, Long)]],
-      streamBatches: collection.Map[String, (Int, Long, Long)]) {
+      streamBatches: collection.Map[String, (Int, Long, Long)],
+      compassFallbacks: collection.Map[String, Seq[graft.planner.CompassSession.Fallback]]) {
     private def total = queries.values.collect { case Right(t) => t }.sum
     private def errors = queries.values.count(_.isLeft)
     private def entries[V](m: Iterable[(String, V)])(f: V => Any) =
@@ -347,6 +361,9 @@ object Bench {
         .sortBy { case (f, _) => f.toIntOption.getOrElse(Int.MaxValue) }.to(VectorMap)),
       // Per-streaming-entry [n_batches, median_ms, max_ms].
       "stream_batches" -> streamBatches,
+      // Per entry, each COMPASS query that fell back to its vanilla plan,
+      // as [exception class, reason]; empty on a clean run.
+      "compass_fallbacks" -> entries(compassFallbacks)(_.map(f => Seq(f.exception, f.reason))),
       "errors" -> errors, "sf" -> sf)
 
     /** The bench line is parsed from the LAST 2000 chars of output, and

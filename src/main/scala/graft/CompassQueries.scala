@@ -30,6 +30,14 @@ object CompassQueries {
       new CompassSession(s, templateCache = Some(SketchTemplateCache.default())))
   }
 
+  /** Forget every memo session's kept survivors, keeping its sketches:
+    * Bench and Verify call this wherever they release operator caches,
+    * so a lap reads only rows it built itself.
+    */
+  def releaseKeptRows(): Unit = sessions.synchronized {
+    sessions.values.foreach(_.releaseKeptRows())
+  }
+
   /** PRE_PROCESSING for harnesses (reference: `PRE_PROCESSING`,
     * Catalog/COMPASS_init_variables.txt:6 — build every unfiltered
     * (table × join-col-set) template BEFORE the workload): warm the shared

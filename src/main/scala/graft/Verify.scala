@@ -27,21 +27,27 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // Surface the failure in the round record: r10 showed that an
-        // entry that writes nothing is indistinguishable from one never
-        // declared (111 entries silently vanished). A sibling marker file
-        // makes every broken entry a visible err row downstream.
-        try Files.writeString(Paths.get(s"$outDir/${name}._error.txt"),
-          Option(e.getMessage).getOrElse(e.getClass.getName))
-        catch { case _: Throwable => () }
+      // One Work scope per entry, so its COMPASS fallbacks are reported.
+      val (_, work) = Work.measure(spark) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          // Surface the failure in the round record: r10 showed that an
+          // entry that writes nothing is indistinguishable from one never
+          // declared (111 entries silently vanished). A sibling marker file
+          // makes every broken entry a visible err row downstream.
+          try Files.writeString(Paths.get(s"$outDir/${name}._error.txt"),
+            Option(e.getMessage).getOrElse(e.getClass.getName))
+          catch { case _: Throwable => () }
+        }
       }
-      // Bound memory across the run: operator-internal persists are only
-      // useful within one query's action.
+      work.records.compassFallbacks.foreach(f => System.err.println(
+        s"[compass] $name fell back to its vanilla plan: ${f.exception}: ${f.reason}"))
+      // Bound memory across the run: operator-internal persists and
+      // COMPASS's kept survivors are only useful within one entry.
       graft.operators.OpCaches.releaseAll(spark)
+      CompassQueries.releaseKeptRows()
     }
     // Partial-soundness oracles (ANN / signature entries) re-derive the
     // checkable columns of the SPARK RESULT: the SQL reads this run's

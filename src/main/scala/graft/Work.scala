@@ -4,7 +4,7 @@ import java.lang.management.{ManagementFactory, MemoryType}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference, LongAdder}
 import graft.StreamQueries.StateFootprint
 import graft.job.JobCorpus.CompassRun
-import graft.planner.OptimizerQuality
+import graft.planner.{CompassSession, OptimizerQuality}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
@@ -41,7 +41,9 @@ object Work {
       // Stream drains, keyed per started stream: per-micro-batch
       // `triggerExecution` ms and the final state-store footprint.
       batchDurations: Map[String, Seq[Long]] = Map.empty,
-      stateFootprints: Map[String, StateFootprint] = Map.empty)
+      stateFootprints: Map[String, StateFootprint] = Map.empty,
+      // CompassSession: each query that fell back to its vanilla plan.
+      compassFallbacks: Seq[CompassSession.Fallback] = Nil)
 
   /** What one scope counted.
     *
@@ -49,6 +51,7 @@ object Work {
     * shipped to the driver. Broadcast-exchange builds (bounded per build
     * by `autoBroadcastJoinThreshold`) go to `broadcastBytes`; everything
     * else, the collect-shaped ingress, goes to `resultBytes`.
+    * `broadcastJobs` counts the broadcast-exchange build jobs.
     * `heapPeakBytes` is the JVM heap high-water over the scope, summed
     * over the per-pool peaks reset when it opened. In local mode the
     * executors share the driver's heap, so it is coarse, but it is the
@@ -58,13 +61,14 @@ object Work {
     * slower" from "the JVM charged this lap for accumulated garbage or
     * fresh compilation".
     */
-  final case class Counts(jobs: Int, stages: Int, tasks: Int, maxStageTasks: Int,
+  final case class Counts(jobs: Int, broadcastJobs: Int, stages: Int, tasks: Int,
+      maxStageTasks: Int,
       shuffleWriteRecords: Long, shuffleWriteBytes: Long,
       resultBytes: Long, broadcastBytes: Long, heapPeakBytes: Long,
       wallNs: Long, gcMs: Long, jitMs: Long, records: Record)
 
   private final class Scope {
-    val jobs, stages, tasks, maxStageTasks = new AtomicInteger
+    val jobs, broadcastJobs, stages, tasks, maxStageTasks = new AtomicInteger
     val shuffleRecords, shuffleBytes, resultBytes, broadcastBytes = new LongAdder
     // Stages of broadcast-exchange build jobs: their task results are the
     // broadcast relation itself.
@@ -85,8 +89,10 @@ object Work {
       // description property is not set.)
       val tags = Option(j.properties)
         .flatMap(p => Option(p.getProperty("spark.job.tags"))).getOrElse("")
-      if (tags.contains("broadcast exchange (runId "))
+      if (tags.contains("broadcast exchange (runId ")) {
+        s.broadcastJobs.incrementAndGet()
         j.stageIds.foreach(id => s.broadcastStages.add(id): Unit)
+      }
     }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       Option(open).foreach { s =>
@@ -148,7 +154,8 @@ object Work {
       val (gc1, jit1) = gcJitMs()
       Bridge.drainListenerBus(sc)
       val heapPeak = heapPools.map(p => Option(p.getPeakUsage).fold(0L)(_.getUsed)).sum
-      (out, Counts(s.jobs.get, s.stages.get, s.tasks.get, s.maxStageTasks.get,
+      (out, Counts(s.jobs.get, s.broadcastJobs.get, s.stages.get, s.tasks.get,
+        s.maxStageTasks.get,
         s.shuffleRecords.sum, s.shuffleBytes.sum, s.resultBytes.sum,
         s.broadcastBytes.sum, heapPeak, wallNs, gc1 - gc0, jit1 - jit0, s.records.get))
     } finally open = null

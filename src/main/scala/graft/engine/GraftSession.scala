@@ -416,12 +416,16 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
     graft.streaming.EventStream.currentCdcState(spark, stateDir)
 
   /** Release every cache this session pinned: the pipeline operators'
-    * internals (COMPASS persists nothing). A DataFrame backed only by
-    * released persists recomputes if re-run; one backed by a released
+    * internals and COMPASS's kept survivors (COMPASS persists nothing; a
+    * frame it returned keeps the rows it reads). A DataFrame backed only
+    * by released persists recomputes if re-run; one backed by a released
     * local checkpoint is invalid and fails when read (see
     * [[graft.operators.OpCaches]]).
     */
-  def releaseCaches(): Unit = graft.operators.OpCaches.releaseAll(spark)
+  def releaseCaches(): Unit = {
+    graft.operators.OpCaches.releaseAll(spark)
+    compass.releaseKeptRows()
+  }
 
   def close(): Unit = releaseCaches()
 }

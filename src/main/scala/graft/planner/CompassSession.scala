@@ -1,5 +1,6 @@
 package graft.planner
 
+import graft.Work
 import graft.enumerate.{Enumerator, GraphNode}
 import graft.plans.{ExtractedJoinGraph, JoinGraphExtractor, TableInstance}
 import graft.sketch.{ColumnSeeds, SeedRegistry, SketchGroup, Xi}
@@ -21,10 +22,12 @@ final case class CompassPlan(
     sketchCounts: Map[String, Long],
     sketchBuildMillis: Long = 0,
     enumerateMillis: Long = 0,
-    keptRows: Map[String, Long] = Map.empty) {
+    keptRows: Map[String, Long] = Map.empty,
+    reusedRows: Set[String] = Set.empty) {
 
   /** Human-readable trace mirroring the reference's stdout ("optimal
-    * plan: ... intermediate join size estimation of: ...").
+    * plan: ... intermediate join size estimation of: ..."). Kept rows an
+    * earlier query of the run built are marked "(reused)".
     */
   def explainString: String = {
     val steps = order.indices.drop(1).dropRight(1).map { k =>
@@ -36,7 +39,8 @@ final case class CompassPlan(
       s"  surviving rows: ${order.map(t => s"$t=${sketchCounts.getOrElse(t, -1L)}").mkString(", ")}" +:
       s"  planning: sketch build ${sketchBuildMillis}ms, enumeration ${enumerateMillis}ms" +:
       s"  served from kept rows: ${if (keptRows.isEmpty) "none" else
-        order.filter(keptRows.contains).map(t => s"$t=${keptRows(t)}").mkString(", ")}" +:
+        order.filter(keptRows.contains).map(t =>
+          s"$t=${keptRows(t)}${if (reusedRows(t)) " (reused)" else ""}").mkString(", ")}" +:
       steps).mkString("\n")
   }
 }
@@ -57,14 +61,19 @@ final case class CompassPlan(
   *     the filtered scan, projected to the attributes the plan needs,
   *     returns its surviving rows (a partition over its share of
   *     [[CompassSession.BroadcastRowLimit]] returns its sketch instead),
-  *     and the driver sketches them — one job, no exchange;
+  *     and the driver sketches them — one job, no exchange. A filtered
+  *     instance's survivors are also kept for the rest of the run: a
+  *     later query whose instance the sketch store serves reuses them
+  *     instead of scanning again;
   *  3. enumerate join orders driver-locally over the sketch planes
   *     ([[Enumerator]] — microseconds);
   *  4. splice a reordered left-deep Inner-join tree into the analyzed plan
-  *     — an instance whose rows came back is a leaf over those rows, the
-  *     reference's push-down result kept as the hash-join build side —
-  *     and hand it to vanilla Spark execution (Catalyst still does
-  *     pushdown/pruning/codegen; AQE still handles skew).
+  *     — an instance whose rows came back, or were kept by an earlier
+  *     query, is a [[KeptRows]] leaf over those rows, the reference's
+  *     push-down result kept as the hash-join build side; a broadcast of
+  *     it runs no Spark job ([[KeptRowsStrategy]]) — and hand it to
+  *     vanilla Spark execution (Catalyst still does pushdown/pruning/
+  *     codegen; AQE still handles skew).
   *
   * Scale note: at 100 TB the sketch jobs are the only extra cost — each is
   * a projection-pruned scan whose driver ingress is at most
@@ -76,20 +85,29 @@ final case class CompassPlan(
   * Sketch dimensions and size thresholds are fixed, as the reference
   * fixes them in one init file — see the constants on the companion.
   *
-  * Concurrency contract: optimize() keeps no query data beyond the frame
-  * it returns — the kept survivors live in that frame's plan, and a later
-  * optimize() or close() leaves it runnable — so interleaved queries on
-  * one session share no mutable state except the sketch store, which is
-  * safe for concurrent use and builds each key once. Each in-flight query
+  * Concurrency contract: interleaved queries on one session share two
+  * mutable stores, both safe for concurrent use: the sketch store, which
+  * builds each key once, and the kept survivors, which the session holds
+  * until [[releaseKeptRows]] or [[close]] (within `spark.driver.maxResultSize`
+  * bytes in all). A frame keeps the rows its plan reads, so a release or a
+  * later optimize() leaves it runnable. Each in-flight query
   * stream takes its own [[QueryScope]] (`newScope()`) only to read its own
   * `lastPlan`; the session's own optimize()/sql() and `lastPlan` use a
   * default scope (the one-query-at-a-time convenience surface). The sketch
   * jobs inside a single optimize() are themselves parallel.
   */
-final class CompassSession(
+final class CompassSession private[graft] (
     val spark: SparkSession,
-    templateCache: Option[SketchTemplateCache] = None) {
+    templateCache: Option[SketchTemplateCache],
+    keptBound: Long) {
   import CompassSession.{BroadcastRowLimit, MinTableSize, SketchBuckets, SketchRows}
+
+  /** Kept survivors are bounded by the driver-ingress bound Spark already
+    * enforces, `spark.driver.maxResultSize` (0: unbounded).
+    */
+  def this(spark: SparkSession, templateCache: Option[SketchTemplateCache] = None) =
+    this(spark, templateCache, spark.sparkContext.getConf
+      .getSizeAsBytes("spark.driver.maxResultSize", "1g"))
 
   // Config contract: Catalyst must not re-reorder the spliced spine.
   // Two logical rules could override the enumerator's choice —
@@ -105,18 +123,40 @@ final class CompassSession(
   // shape.
   spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
   spark.conf.set("spark.sql.cbo.starSchemaDetection", "false")
+  // A kept-rows leaf plans only through this strategy.
+  KeptRowsStrategy.setup(spark)
 
   /** Every sketch this session reuses: the caller's store, or a
     * memory-only one (same lookup, no disk I/O).
     */
   private val store = templateCache.getOrElse(SketchTemplateCache.inMemory())
 
+  /** Filtered instances' kept survivors, keyed by [[InstanceSketch.keptKey]],
+    * and their total `UnsafeRow` bytes: a set is admitted only while the
+    * total stays within `keptBound`.
+    */
+  private val keptMemo = scala.collection.mutable.HashMap.empty[String, KeptRowSet]
+  private var keptBytes = 0L
+
+  private def admit(key: String, rows: KeptRowSet): Unit = keptMemo.synchronized {
+    if (!keptMemo.contains(key) && (keptBound <= 0 || keptBytes + rows.bytes <= keptBound)) {
+      keptMemo(key) = rows
+      keptBytes += rows.bytes
+    }
+  }
+
+  private def keptRowsFor(key: String): Option[KeptRowSet] =
+    keptMemo.synchronized(keptMemo.get(key))
+
+  /** Forget the kept survivors; frames already returned keep theirs. */
+  def releaseKeptRows(): Unit = keptMemo.synchronized { keptMemo.clear(); keptBytes = 0L }
+
   /** `\fpd`-style toggle (reference: mapd-core/SQLFrontend/mapdql.cpp:1313). */
   @volatile var fpdEnabled: Boolean = true
 
   /** One in-flight query stream's handle: it holds that stream's own
-    * `lastPlan`. A scope pins nothing — the survivors a pre-pass keeps
-    * belong to the one frame it returns, not to the scope.
+    * `lastPlan`. A scope pins nothing — kept survivors belong to the
+    * session and to the frames that read them, not to the scope.
     */
   final class QueryScope private[CompassSession] () {
     /** This scope's own last COMPASS plan — safe to read under
@@ -145,8 +185,10 @@ final class CompassSession(
     */
   def lastPlan: Option[CompassPlan] = defaultScope.lastPlan
 
-  /** Drop the store's memory memo; its disk tier stays warm. */
-  def close(): Unit = store.release()
+  /** Drop the kept survivors and the store's memory memo; its disk tier
+    * stays warm.
+    */
+  def close(): Unit = { releaseKeptRows(); store.release() }
 
   def sql(text: String): DataFrame = optimize(spark.sql(text))
 
@@ -189,7 +231,8 @@ final class CompassSession(
             AttributeSet(g.residual.flatMap(_.references))
           val built = buildSketches(g, needed, BroadcastRowLimit)
           val nodes = built.map(_._1)
-          val kept = built.flatMap { case (n, rows) => rows.map(n.id -> _) }.toMap
+          val kept = built.flatMap { case (n, k) => k.map(n.id -> _.leaf) }.toMap
+          val reused = built.collect { case (n, Some(k)) if k.reused => n.id }.toSet
           val t1 = System.nanoTime()
           val en = new Enumerator(nodes, enumeratorEdges(g))
           val (order, _) = en.optimalOrder()
@@ -212,7 +255,8 @@ final class CompassSession(
             enumerateMillis = (t2 - t1) / 1000000,
             // A kept instance's rows are exactly the ones its sketch counted.
             keptRows = nodes.filter(n => kept.contains(n.id))
-              .map(n => g.instances(n.id).name -> n.sketch.count).toMap)
+              .map(n => g.instances(n.id).name -> n.sketch.count).toMap,
+            reusedRows = reused.map(g.instances(_).name))
           scope.lastPlan = Some(published)
           spliced
         case _ => df
@@ -222,8 +266,11 @@ final class CompassSession(
       // extraction, sketch jobs, or splicing falls back to the vanilla
       // plan (the reference likewise guards the push-down pass and
       // reverts on failure, FilterPushDownSketch.cpp:273-284).
+      // The fallback is recorded into the open Work scope (none: dropped).
       case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[compass] falling back to vanilla plan: ${e.getMessage}")
+        val reason = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+        Work.record(r => r.copy(compassFallbacks =
+          r.compassFallbacks :+ CompassSession.Fallback(e.getClass.getName, reason.take(200))))
         df
     }
   }
@@ -319,25 +366,32 @@ final class CompassSession(
       * the same relation keys identically from any query; a conservative
       * mismatch just rebuilds (never serves a wrong sketch).
       */
-    def filteredKey: Option[SketchTemplateCache.Key] = dataId.map(id =>
+    lazy val filteredKey: Option[SketchTemplateCache.Key] = dataId.map(id =>
       SketchTemplateCache.filteredKey(Seq(id,
         filteredPlan(g, idx).canonicalized.toString,
         colNames.mkString(","), classKeys.mkString(","),
         SketchRows.toString, SketchBuckets.toString).mkString("|")))
 
+    /** This filtered instance's kept survivors: its sketch's key and the
+      * ordered names and types of `keep`, the layout of the rows. The
+      * key's join columns are the ones whose NULLs the rows dropped.
+      */
+    def keptKey: Option[String] = filteredKey.map(k => (k.file +: keep.map(a =>
+      s"${a.name}:${a.dataType.catalogString}")).mkString("|"))
+
     def build(rowLimit: Long): CompassSession.Built = CompassSession.buildSketch(
       spark, filteredPlan(g, idx), keep, attrs, SketchRows, SketchBuckets, colNames, seeds,
       rowLimit)
 
-    /** The kept survivors as a leaf ([[Bridge.rowsRelation]]), or an
-      * empty `LocalRelation`, which Catalyst prunes with its joins. Their
-      * join columns hold no NULL and say so: Catalyst then infers no
+    /** The kept survivors as a [[KeptRows]] leaf, or an empty
+      * `LocalRelation`, which Catalyst prunes with its joins. Their join
+      * columns hold no NULL and say so: Catalyst then infers no
       * `isnotnull` filter over the rows.
       */
-    def relation(survivors: IndexedSeq[InternalRow]): LogicalPlan = {
+    def relation(survivors: KeptRowSet): LogicalPlan = {
       val output = keep.map(a => if (attrs.contains(a)) a.withNullability(false) else a)
-      if (survivors.isEmpty) LocalRelation(output)
-      else Bridge.rowsRelation(spark, output, survivors, output.filterNot(_.nullable))
+      if (survivors.rows.isEmpty) LocalRelation(output)
+      else KeptRows(output, survivors)
     }
   }
 
@@ -368,7 +422,10 @@ final class CompassSession(
     * (reference: findSketchTemplateAndCopy, FilterPushDownSketch.cpp:315-382),
     * filtered ones by their canonical filtered plan. A build that ran —
     * a store miss — under `rowLimit` also yields its survivors as a leaf
-    * of the instance's kept output; a hit carries none.
+    * of the instance's kept output, and a filtered instance's are kept
+    * for the run. A store hit on a filtered instance reuses the rows an
+    * earlier build kept, if the session still holds them; any other hit,
+    * the tiny-table shortcut and an over-cap build carry none.
     *
     * The per-instance jobs are INDEPENDENT Spark jobs, so they launch
     * concurrently (the reference builds sequentially; on a cluster the
@@ -376,7 +433,7 @@ final class CompassSession(
     * per-job scheduling overhead stops being × nInstances).
     */
   private def buildSketches(g: ExtractedJoinGraph, needed: AttributeSet, rowLimit: Long)
-      : IndexedSeq[(GraphNode, Option[LogicalPlan])] = {
+      : IndexedSeq[(GraphNode, Option[CompassSession.Kept])] = {
     val jobs = resolve(g, needed).map { i =>
       // Tiny-table shortcut: if the store already knows this table
       // (template count == table cardinality) and it is below
@@ -386,11 +443,15 @@ final class CompassSession(
       val tiny =
         if (i.hasFilter) i.templateKey.flatMap(store.peek).filter(_.count < MinTableSize)
         else None
+      val keptKey = if (i.hasFilter && tiny.isEmpty) i.keptKey else None
       () => {
-        var kept: Option[LogicalPlan] = None
+        var built: Option[KeptRowSet] = None
         def build(): SketchGroup = {
           val b = i.build(rowLimit)
-          kept = b.survivors.map(i.relation)
+          built = b.survivors.map(new KeptRowSet(_))
+          // Before the store publishes the sketch, so a concurrent
+          // request for the same key finds the rows too.
+          for (k <- keptKey; rows <- built) admit(k, rows)
           b.sketch
         }
         val sketch = tiny.getOrElse(
@@ -398,6 +459,9 @@ final class CompassSession(
             case Some(k) => store.getOrBuild(k)(build())
             case None => build()
           })
+        val kept = built.map(rows => CompassSession.Kept(i.relation(rows), reused = false))
+          .orElse(keptKey.flatMap(keptRowsFor)
+            .map(rows => CompassSession.Kept(i.relation(rows), reused = true)))
         (GraphNode(i.idx, sketch), kept)
       }
     }
@@ -465,6 +529,16 @@ object CompassSession {
     case IntegerType | ShortType | ByteType => Cast(a, LongType)
     case _ => If(IsNull(a), Literal(null, LongType), new XxHash64(Seq(a)))
   }
+
+  /** An instance's leaf over kept survivors; `reused` if an earlier
+    * query's build kept them.
+    */
+  private final case class Kept(leaf: LogicalPlan, reused: Boolean)
+
+  /** A fallback to the vanilla plan: the exception's class and the first
+    * line of its message.
+    */
+  final case class Fallback(exception: String, reason: String)
 
   /** A build's result: the sketch, and the survivors themselves (rows of
     * the build's `keep`) when every partition fitted under its cap.

@@ -1,10 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExpressionSet, IsNotNull, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -12,6 +10,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * behind `private[sql]` (org.apache.spark.sql.classic.*). This bridge lives
   * in the org.apache.spark.sql namespace to expose exactly those
   * conversions to graft's planner — no Spark internals are modified.
+  * The COMPASS splice's leaf over kept rows needs no hidden API, so it is
+  * not here: it is [[graft.planner.KeptRows]], planned by its own strategy.
   */
 object Bridge {
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
@@ -21,27 +21,6 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** A leaf over rows already on the driver (the COMPASS splice's kept
-    * survivors). Not a `LocalRelation`: that holds its rows as a
-    * constructor argument, and Catalyst's generic tree walks
-    * (`mapExpressions`, `expressions`) visit every constructor argument,
-    * so each rule that maps a plan's expressions walks and copies the row
-    * list — optimizing the 25-query job-compass set with ~7k kept rows per
-    * query took ~1.6 s against ~0.2 s with one row per leaf. An RDD is
-    * opaque to those walks. Its statistics (row count × estimated row
-    * size) and `notNull` stand in for what Catalyst would derive from a
-    * `LocalRelation`: the size, and that the listed columns hold no NULL
-    * (so no `isnotnull` filter is inferred).
-    */
-  def rowsRelation(spark: SparkSession, output: Seq[Attribute], rows: IndexedSeq[InternalRow],
-      notNull: Seq[Attribute]): LogicalPlan = {
-    val sc = spark.sparkContext
-    val rdd = sc.parallelize(rows, math.max(1, math.min(rows.size, sc.defaultParallelism)))
-    LogicalRDD(output, rdd)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      Some(Statistics(EstimationUtils.getSizePerRow(output) * rows.size, Some(BigInt(rows.size)))),
-      Some(ExpressionSet(notNull.map(IsNotNull))))
-  }
 
   /** Rows packed the way Spark ships a collect to the driver
     * (`SparkPlan.getByteArrayRdd`, whose codec lookup is `private[spark]`):

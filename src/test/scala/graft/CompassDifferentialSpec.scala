@@ -123,8 +123,8 @@ class CompassDifferentialSpec extends AnyFunSuite {
       try {
         val cs = new CompassSession(spark)
         val rnd = new Random(20261020L)
-        var (took, skipped, kept) = (0, 0, 0)
-        (0 until Queries).foreach { q =>
+        var (took, skipped, kept, reused) = (0, 0, 0, 0)
+        val (_, work) = Work.measure(spark)((0 until Queries).foreach { q =>
           val text = query(rnd)
           val (plain, viaCompass, eligible, path) = bounded(s"random-join-$q") {
             val eligible = JoinGraphExtractor.extract(spark.sql(text).queryExecution.analyzed)
@@ -137,8 +137,11 @@ class CompassDifferentialSpec extends AnyFunSuite {
           assert(path.isDefined || !eligible, s"query $q fell back to the vanilla plan: $text")
           if (path.isDefined) took += 1 else skipped += 1
           if (path.exists(_.keptRows.nonEmpty)) kept += 1
-        }
-        info(s"$took queries took the COMPASS path ($kept with kept rows), $skipped had no region")
+          if (path.exists(_.reusedRows.nonEmpty)) reused += 1
+        })
+        assert(work.records.compassFallbacks.isEmpty, work.records.compassFallbacks)
+        info(s"$took queries took the COMPASS path ($kept with kept rows, $reused reusing " +
+          s"an earlier query's), $skipped had no region")
         assert(took >= Queries / 2, s"only $took of $Queries queries took the COMPASS path")
         assert(kept >= 1, "no query spliced the survivors its sketch job kept")
         cs.close()

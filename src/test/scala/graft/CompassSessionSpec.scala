@@ -1,6 +1,6 @@
 package graft
 
-import graft.planner.{CompassSession, SketchTemplateCache}
+import graft.planner.{CompassSession, KeptRows, SketchTemplateCache}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end COMPASS pipeline: extraction → sketch jobs → enumeration →
@@ -30,9 +30,8 @@ class CompassSessionSpec extends AnyFunSuite {
   }
 
   /** Leaves of `df`'s spliced plan that serve kept survivors. */
-  private def keptLeaves(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.sql.execution.LogicalRDD] =
-    df.queryExecution.analyzed.collect { case r: org.apache.spark.sql.execution.LogicalRDD => r }
+  private def keptLeaves(df: org.apache.spark.sql.DataFrame): Seq[KeptRows] =
+    df.queryExecution.analyzed.collect { case r: KeptRows => r }
 
   private def cacheFiles(dir: java.nio.file.Path, prefix: String): Seq[java.nio.file.Path] = {
     val s = java.nio.file.Files.list(dir)
@@ -191,8 +190,12 @@ class CompassSessionSpec extends AnyFunSuite {
     assert(secondJobs == 0,
       s"identical (table, filter-set) must be served from the memo, not rebuilt ($secondJobs jobs)")
     assert(cs.lastPlan.isDefined)
-    // A memo hit carries no rows: every instance is spliced as its scan.
-    assert(cs.lastPlan.get.keptRows.isEmpty && keptLeaves(again).isEmpty)
+    // A memo hit on the filtered region reuses the rows the first build
+    // kept; the unfiltered instances are template hits and scan.
+    assert(cs.lastPlan.get.keptRows == Map("region" -> 1L))
+    assert(cs.lastPlan.get.reusedRows == Set("region"))
+    assert(keptLeaves(again).size == 1 &&
+      keptLeaves(first).exists(_.rowSet eq keptLeaves(again).head.rowSet))
     // Memo-served sketches still yield a correct (vanilla-identical) result.
     val vanilla = spark.sql(fiveWay).collect().map(_.toSeq)
     assert(again.collect().map(_.toSeq).toSeq == vanilla.toSeq)
@@ -468,7 +471,7 @@ class CompassSessionSpec extends AnyFunSuite {
       "the spliced plan must not read a cached push-down relation")
     val orders = cs.lastPlan.get.keptRows.get("orders")
     assert(orders.exists(_ > 0), "orders must be served from its kept rows")
-    assert(keptLeaves(out).exists(_.rdd.count() == orders.get))
+    assert(keptLeaves(out).exists(_.rowSet.rows.size == orders.get))
     // A different second query, then close(): the first frame still runs.
     val q2 = q.replace("400000", "450000")
     assert(cs.sql(q2).head().getLong(0) == spark.sql(q2).head().getLong(0))
@@ -559,9 +562,12 @@ class CompassSessionSpec extends AnyFunSuite {
     val c = Tables.load(spark, dir, "customer")
     val df = l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("o_custkey") === col("c_custkey"))
-    val out = cs.optimize(df) // sketch job throws inside the UDF → fallback
+    // sketch job throws inside the UDF → fallback
+    val (out, work) = Work.measure(spark)(cs.optimize(df))
     assert(cs.lastPlan.isEmpty, "failed sketch build must fall back to vanilla")
     assert(out eq df, "fallback must return the input frame")
+    assert(work.records.compassFallbacks.map(_.exception) ==
+      Seq("org.apache.spark.SparkException"), work.records.compassFallbacks)
     cs.close()
   }
 
@@ -645,5 +651,112 @@ class CompassSessionSpec extends AnyFunSuite {
     cs.sql(fiveWay).collect()
     val ests = cs.lastPlan.get.intermediateEstimates
     assert(ests.nonEmpty && ests.forall(_ >= 0))
+  }
+
+  test("kept build sides reach their hash joins without a broadcast job") {
+    Tables.registerAll(spark, dir)
+    val cs = new CompassSession(spark)
+    try {
+      // A fresh session builds every instance, so every one is kept.
+      val df = cs.sql(fiveWay)
+      val plan = cs.lastPlan.get
+      assert(plan.order.tail.forall(plan.keptRows.contains), plan.explainString)
+      val (rows, work) = Work.measure(spark)(df.collect())
+      assert(rows.map(_.toSeq).toSeq == spark.sql(fiveWay).collect().map(_.toSeq).toSeq)
+      val executed = df.queryExecution.executedPlan.toString
+      assert(executed.contains("BroadcastExchange") && executed.contains("KeptRows"), executed)
+      assert(work.broadcastJobs == 0 && work.broadcastBytes == 0,
+        s"${work.broadcastJobs} broadcast jobs, ${work.broadcastBytes} B:\n$executed")
+    } finally cs.close()
+  }
+
+  test("a later query reuses a filtered instance's kept rows until they are released") {
+    Tables.registerAll(spark, dir)
+    val cs = new CompassSession(spark)
+    // The same five instances and filters; only what the plan reads differs.
+    val counted = fiveWay.replace("SELECT n_name, count(*) AS n", "SELECT count(*) AS n")
+      .replace("GROUP BY n_name ORDER BY n_name", "")
+    def regionLeaf(df: org.apache.spark.sql.DataFrame): Option[KeptRows] =
+      keptLeaves(df).find(_.output.map(_.name) == Seq("r_regionkey"))
+    try {
+      val (first, _) = optimizeCountingJobs(cs, fiveWay)
+      val built = regionLeaf(first).get
+      assert(cs.lastPlan.get.reusedRows.isEmpty)
+      val (second, jobs) = optimizeCountingJobs(cs, counted)
+      assert(jobs == 0, s"a store-served query ran $jobs sketch jobs")
+      assert(cs.lastPlan.get.reusedRows == Set("region"))
+      assert(regionLeaf(second).exists(_.rowSet eq built.rowSet),
+        "the reused leaf must read the first build's rows")
+      assert(cs.lastPlan.get.explainString.contains("region=1 (reused)"))
+      val vanilla = spark.sql(counted).head().getLong(0)
+      assert(second.head().getLong(0) == vanilla)
+      // Released: the store still serves the sketch, and region is scanned.
+      cs.releaseKeptRows()
+      val (third, thirdJobs) = optimizeCountingJobs(cs, counted)
+      assert(thirdJobs == 0 && regionLeaf(third).isEmpty && cs.lastPlan.get.keptRows.isEmpty)
+      assert(third.head().getLong(0) == vanilla)
+      // Closed: the sketch is gone too, so region is built and kept afresh.
+      cs.close()
+      val (fourth, fourthJobs) = optimizeCountingJobs(cs, counted)
+      assert(fourthJobs >= 1 && cs.lastPlan.get.reusedRows.isEmpty)
+      assert(regionLeaf(fourth).exists(l => !(l.rowSet eq built.rowSet)))
+      assert(fourth.head().getLong(0) == vanilla)
+      // The released rows still serve the frames that read them.
+      assert(second.head().getLong(0) == vanilla)
+    } finally cs.close()
+  }
+
+  test("a self-join over two differently filtered instances keeps two row sets apart") {
+    Tables.registerAll(spark, dir)
+    val cs = new CompassSession(spark)
+    // Both orders instances keep (o_orderkey, o_custkey): same layout,
+    // different rows. A plan that took one for the other would reuse one
+    // broadcast for both sides.
+    val q =
+      """SELECT o1.o_orderkey AS a, o2.o_orderkey AS b FROM orders o1
+        |JOIN customer c ON o1.o_custkey = c.c_custkey
+        |JOIN orders o2 ON o2.o_custkey = c.c_custkey
+        |WHERE o1.o_totalprice > 300000 AND o2.o_totalprice < 50000""".stripMargin
+    def multiset(rows: Array[org.apache.spark.sql.Row]) =
+      rows.toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    try {
+      val vanilla = multiset(spark.sql(q).collect())
+      assert(vanilla.nonEmpty)
+      Seq("built", "reused").foreach { pass =>
+        val df = cs.sql(q)
+        val orders = keptLeaves(df).filter(_.output.map(_.name) == Seq("o_orderkey", "o_custkey"))
+        assert(orders.size == 2 && !(orders(0).rowSet eq orders(1).rowSet), s"$pass: $orders")
+        assert(multiset(df.collect()) == vanilla, s"$pass rows differ")
+      }
+      assert(cs.lastPlan.get.reusedRows == Set("o1", "o2"))
+    } finally cs.close()
+  }
+
+  test("kept rows over the session's bound are not kept, and results stay plain Spark's") {
+    Tables.registerAll(spark, dir)
+    val q =
+      """SELECT count(*) AS n FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE o_totalprice > 300000 AND c_acctbal > 9000""".stripMargin
+    val vanilla = spark.sql(q).head().getLong(0)
+    // The two filtered instances' row-set sizes, from an unbounded session.
+    val free = new CompassSession(spark)
+    val bytes = try {
+      val df = free.sql(q)
+      Seq("orders" -> "o_orderkey", "customer" -> "c_custkey").map { case (t, c) =>
+        t -> keptLeaves(df).find(_.output.exists(_.name == c)).get.rowSet.bytes
+      }
+    } finally free.close()
+    val (small, large) = (bytes.minBy(_._2), bytes.maxBy(_._2))
+    assert(small._1 != large._1)
+    // A bound that admits the smaller set alone, whichever build lands first.
+    val cs = new CompassSession(spark, None, small._2)
+    try {
+      assert(cs.sql(q).head().getLong(0) == vanilla)
+      val again = cs.sql(q)
+      assert(cs.lastPlan.get.reusedRows == Set(small._1), cs.lastPlan.get.explainString)
+      assert(again.head().getLong(0) == vanilla)
+    } finally cs.close()
   }
 }

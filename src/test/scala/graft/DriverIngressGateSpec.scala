@@ -100,14 +100,18 @@ class DriverIngressGateSpec extends AnyFunSuite {
     }
   }
 
-  /** Ratchet pins for the COMPASS case below, at the values measured when
-    * the sketch jobs began returning packed rows instead of sketch planes
-    * (4 cores: 476 jobs, 13,108 KB; the builder that shipped planes
-    * measured 494 jobs, 160,315 KB). Jobs are exact; the byte pin leaves
-    * 9% for task-metric noise. A count that falls lowers its pin;
-    * raising one is a gate change with a measured reason.
+  /** Ratchet pins for the COMPASS case below. The byte pin is the value
+    * measured when the sketch jobs began returning packed rows instead of
+    * sketch planes (4 cores: 13,108 KB; the builder that shipped planes
+    * measured 494 jobs, 160,315 KB), and leaves 9% for task-metric noise.
+    * The job pin is the count measured once kept survivors reached the
+    * hash join without a job and served the whole session: a broadcast
+    * of kept rows runs no job, so `broadcastBytes` fell too (476 → 284
+    * jobs and 20,629 → 6,038 KB broadcast; the 50 broadcast jobs left
+    * each build a scanned instance). Jobs are exact. A count that falls lowers its pin; raising one is a gate
+    * change with a measured reason.
     */
-  private val CompassSubsetJobs = 476
+  private val CompassSubsetJobs = 284
   private val CompassSubsetResultBytes = 14L << 20
 
   test("COMPASS on the JOB subset: per-query jobs and driver ingress under their pins") {
@@ -123,6 +127,7 @@ class DriverIngressGateSpec extends AnyFunSuite {
         cs.lastPlan.isDefined
       }
       assert(took, s"JOB $name did not take the COMPASS path")
+      assert(work.records.compassFallbacks.isEmpty, s"JOB $name: ${work.records.compassFallbacks}")
       name -> work
     }
     cs.close()
@@ -131,7 +136,8 @@ class DriverIngressGateSpec extends AnyFunSuite {
     val (maxName, maxWork) = per.maxBy(_._2.resultBytes)
     info(s"${per.size} queries: $jobs jobs, ${results >> 10} KB non-broadcast results " +
       s"(most: $maxName ${maxWork.resultBytes >> 10} KB), " +
-      s"${per.map(_._2.broadcastBytes).sum >> 10} KB broadcast")
+      s"${per.map(_._2.broadcastBytes).sum >> 10} KB broadcast in " +
+      s"${per.map(_._2.broadcastJobs).sum} broadcast jobs")
     assert(jobs <= CompassSubsetJobs, s"$jobs jobs over the pin of $CompassSubsetJobs")
     assert(results <= CompassSubsetResultBytes,
       s"${results >> 10} KB of task results over the pin of ${CompassSubsetResultBytes >> 10} KB")

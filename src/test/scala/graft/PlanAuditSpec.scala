@@ -129,13 +129,14 @@ class PlanAuditSpec extends AnyFunSuite {
 
   /** `q` through `cs` twice. The first call builds every sketch, and the
     * instances its jobs kept rows for are spliced as those rows, their
-    * filters already applied. The second is served from the session's
-    * store, carries no rows and scans every instance with its filters:
-    * the plan whose pushdown these audits read, whatever the store held
-    * before.
+    * filters already applied. Once the session has released those rows,
+    * the second is served from the session's store, carries no rows and
+    * scans every instance with its filters: the plan whose pushdown these
+    * audits read, whatever the store held before.
     */
   private def scannedSplice(cs: CompassSession, q: String): org.apache.spark.sql.DataFrame = {
     cs.sql(q)
+    cs.releaseKeptRows()
     val df = cs.sql(q)
     assert(cs.lastPlan.exists(_.keptRows.isEmpty), "a store hit must carry no rows")
     df

@@ -3,7 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.job.JobCorpus.CompassRun
 import graft.job.ScaleCampaignMain
-import graft.planner.OptimizerQuality
+import graft.planner.{CompassSession, OptimizerQuality}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
@@ -50,7 +50,9 @@ class RecordsSpec extends AnyFunSuite {
       jobFamilyLatency = VectorMap("q_job_corpus" ->
         Map("10" -> ((3, 1088L, 1209L)), "2" -> ((4, 1422L, 1515L)))),
       streamBatches = (1 to 16).map(i => f"q_stream_entry_$i%02d" -> ((1, 4079L, 4079L)))
-        .to(VectorMap))
+        .to(VectorMap),
+      compassFallbacks = VectorMap("q_job_compass" ->
+        Seq(CompassSession.Fallback("java.lang.IllegalStateException", "boom"))))
   }
 
   test("a 337-entry record with 5 long failures keeps the compact line in the 2000-char window") {
@@ -89,7 +91,7 @@ class RecordsSpec extends AnyFunSuite {
     assert(keys(f) == Seq("metric", "value", "unit", "queries", "warm_total", "warm",
       "warm_spread", "lap_wall_gc_jit_ms", "driver_ingress_kb_heap_peak_mb",
       "job_planning", "job_quality_plan_compass_naive_ms", "job_corpus_latency",
-      "job_corpus_family_n_med_max_ms", "stream_batches", "errors", "sf"))
+      "job_corpus_family_n_med_max_ms", "stream_batches", "compass_fallbacks", "errors", "sf"))
     assert(keys(f.get("job_planning").get("q_job_compass")) ==
       Seq("sketch_ms", "enumerate_ms", "exec_ms", "per_query_sketch_enum_exec_ms"))
     assert(keys(f.get("job_corpus_latency").get("q_job_corpus")) ==
@@ -104,6 +106,8 @@ class RecordsSpec extends AnyFunSuite {
     val compact = Records.write(r.compact)
     assert(full.contains("\"q1_agg\":1.234,") && full.contains("[10.123,11.111,99.999]"))
     assert(full.contains("\"driver_ingress_kb_heap_peak_mb\":{\"q1_agg\":[120563,941]"))
+    assert(full.contains(
+      "\"compass_fallbacks\":{\"q_job_compass\":[[\"java.lang.IllegalStateException\",\"boom\"]]}"))
     assert(compact.contains("\"q1_agg\":1.234,") && compact.contains("[10.12,11.11,100.00]"))
     assert(compact.contains("\"warm_total\":366.66,"))
   }
