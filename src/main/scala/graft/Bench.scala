@@ -148,144 +148,47 @@ object Bench {
       // first timed cold lap.
       try StreamQueries.warmMachinery(spark, sfDir)
       catch { case NonFatal(_) => () }
-    val timings = scala.collection.mutable.LinkedHashMap.empty[String, Either[String, Double]]
-    val warmTimings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // Per-entry warm spread [min, median, max] — single-shot times on
-    // sub-second queries in a shared sandbox swing 2-4x run-over-run
-    // (r7→r8 measured 2.5-4.5x on BYTE-IDENTICAL code), so one sample
-    // cannot support a 2x regression gate. Headline entries take 3 warm
-    // laps and report the median as the comparable number plus the
-    // spread so a real regression is distinguishable from noise; an
-    // entry with one warm lap has no spread and records none.
-    val warmSpread = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
-    // Per-ENTRY (sketch, enumerate, exec) triples for the COMPASS-path JOB
-    // entries, from each entry's timed COLD lap (and, under
-    // "<entry>#warm_last", its last warm lap). Every lap records into its
-    // own Work scope, so a triple always belongs to the lap it is filed
-    // under.
-    val jobPlanning = scala.collection.mutable.LinkedHashMap
-      .empty[String, Seq[graft.job.JobCorpus.CompassRun]]
-    val jobQuality = scala.collection.mutable.LinkedHashMap
-      .empty[String, Seq[graft.planner.OptimizerQuality.Report]]
-    // Per-query corpus latencies (cold lap): the corpus TOTAL multiplies
-    // ambient host load through the concurrent submission (r10-r12: 5-9x
-    // driver-vs-quiesced on exactly this entry), while the per-query
-    // median is the contention-robust number — both are recorded so the
-    // official line is diagnosable without a quiesced replica.
-    val jobLatency = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long, Int)]()
-    // entry -> family -> (n_queries, median ms, max ms); COLD lap only.
-    val jobFamilyLatency = scala.collection.mutable
-      .LinkedHashMap[String, Map[String, (Int, Long, Long)]]()
-    // Per-streaming-entry micro-batch telemetry (n_batches, median ms,
-    // max ms) from the COLD lap: r12's streaming entries doubled under
-    // driver contention with no way to tell a uniform slowdown from one
-    // stalled batch; this is the streaming analogue of job_planning.
-    val streamBatches = scala.collection.mutable.LinkedHashMap[String, (Int, Long, Long)]()
-    def latencyStats(lat: Map[String, Long]): Option[(Long, Long, Long, Int)] =
-      if (lat.isEmpty) None else {
-        val xs = lat.values.toSeq.sorted
-        Some((xs(xs.size / 2), xs((xs.size * 9) / 10 min (xs.size - 1)), xs.last, xs.size))
-      }
-    // entry -> per-lap [wall_ms, gc_ms, jit_ms] of its completed laps,
-    // cold first: GC and JIT attribute a warm lap that ran slower than
-    // cold (r16 verdict #4).
-    val lapTelemetry = scala.collection.mutable
-      .LinkedHashMap.empty[String, Vector[(Long, Long, Long)]]
-    def wallGcJit(c: Work.Counts) = (c.wallNs / 1000000, c.gcMs, c.jitMs)
-    // entry -> (task-result bytes shipped to the driver, heap
-    // high-water bytes) over the COLD lap — the driver-memory audit
-    // channel (r19 verdict #2). Full record only.
-    val driverPeaks = scala.collection.mutable
-      .LinkedHashMap.empty[String, (Long, Long)]
-    // entry -> every COMPASS fallback its laps recorded, cold first.
-    val compassFallbacks = scala.collection.mutable
-      .LinkedHashMap.empty[String, Seq[graft.planner.CompassSession.Fallback]]
-    def fellBack(name: String, c: Work.Counts): Unit =
-      if (c.records.compassFallbacks.nonEmpty)
-        compassFallbacks(name) = compassFallbacks.getOrElse(name, Nil) ++
-          c.records.compassFallbacks
+    // Every lap is one Work scope; the Try keeps a failed lap's records.
+    def lap(e: Queries.Entry): Lap = {
+      val (t, work) = Work.measure(spark)(Try(materialize(e.run(spark, sfDir))))
+      Lap(work, t.failed.toOption.map(ex =>
+        Option(ex.getMessage).getOrElse(ex.getClass.getName).take(120)))
+    }
+    val laps = scala.collection.mutable.LinkedHashMap.empty[String, Laps]
     selected.foreach { e =>
       // Settle the heap between entries so a 100+-query session's
       // accumulated garbage is not charged to whichever entry GC happens
       // to interrupt (r3 showed ~1.5x uniform drift on join entries).
       System.gc()
-      // Every lap is one Work scope; the Try keeps a failed lap's records.
-      val (cold, work) = Work.measure(spark)(Try(materialize(e.run(spark, sfDir))))
-      timings(e.name) = cold.toEither.map(_ => work.wallNs / 1e9).left.map(ex =>
-        Option(ex.getMessage).getOrElse(ex.getClass.getName).take(120))
-      if (cold.isSuccess) lapTelemetry(e.name) = Vector(wallGcJit(work))
-      driverPeaks(e.name) = (work.resultBytes, work.heapPeakBytes)
-      fellBack(e.name, work)
-      val rec = work.records
-      if (rec.compassRuns.nonEmpty) jobPlanning(e.name) = rec.compassRuns
-      if (rec.qualityReports.nonEmpty) jobQuality(e.name) = rec.qualityReports
-      latencyStats(rec.corpusLatencies).foreach(jobLatency(e.name) = _)
-      // Per-FAMILY attribution (full record only): the corpus summary
-      // hides WHICH families carry the tail; grouping the 113 per-query
-      // latencies by their family number (digits prefix of "28a") makes
-      // the deep-chain cost directly readable round-over-round.
-      if (rec.corpusLatencies.nonEmpty)
-        jobFamilyLatency(e.name) = rec.corpusLatencies
-          .groupBy { case (q, _) => q.takeWhile(_.isDigit) }
-          .map { case (fam, qs) =>
-            val xs = qs.values.toSeq.sorted
-            fam -> ((xs.size, xs(xs.size / 2), xs.last))
-          }
-      val durs = rec.batchDurations.values.flatten.toSeq.sorted
-      if (durs.nonEmpty)
-        streamBatches(e.name) = (durs.size, durs(durs.size / 2), durs.last)
+      val cold = lap(e)
       release()
-      // Second, WARM lap of the same entry: the cold number above charges
-      // each plan its one-time Janino/JIT compilation (1-2 s for the
-      // complex pipelines — measured: minhash runs 3.1 s cold, 1.25 s
-      // warm), which a long-lived cluster pays once per plan shape, not
-      // per query. Operator persists were released, so this measures
+      // WARM laps of the same entry: the cold lap charges each plan its
+      // one-time Janino/JIT compilation (1-2 s for the complex pipelines
+      // — measured: minhash runs 3.1 s cold, 1.25 s warm), which a
+      // long-lived cluster pays once per plan shape, not per query.
+      // Operator persists were released, so a warm lap measures
       // recomputation, not cache reads; only generated-code and JIT state
       // carries over. Cold stays the primary (round-comparable) metric.
-      if (cold.isSuccess) {
-        // The checkpoint-heavy trio measured 3x lap-over-lap swings on
-        // identical code (r9 warm_spread) — GC/page-cache jitter on
-        // eager-checkpoint entries. 5 laps instead of 3 so their median
-        // resolves a 2x regression gate through that noise.
-        val checkpointHeavy = Set("q_dedup_minhash", "q_ann_neardup", "q_dedup_components")
-        // Median-of-3 exists to resolve sub-second noise; the 40s+
-        // sf-scaled corpus entry's relative spread is small (measured
-        // 1.16x) and 3 laps of it would dominate the whole bench wall.
-        val longRunning = Set("q_job_corpus")
-        val nLaps = if (checkpointHeavy(e.name)) 5
-          else if (longRunning(e.name)) 1
-          else if (Headline.contains(e.name)) 3 else 1
-        // Lazy: the first failed lap ends the entry's warm laps.
-        val warm = Iterator.fill(nLaps) {
-          // Between-lap GC for the jittery trio: an eager
-          // checkpoint mid-lap is where a pending GC lands otherwise.
-          if (checkpointHeavy(e.name)) System.gc()
-          try Work.measure(spark)(Try(materialize(e.run(spark, sfDir))))
-          finally release()
-        }.takeWhile(_._1.isSuccess).map(_._2).toVector
-        lapTelemetry(e.name) ++= warm.map(wallGcJit)
-        warm.foreach(fellBack(e.name, _))
-        if (warm.nonEmpty) {
-          val sortedLaps = warm.map(_.wallNs / 1e9).sorted
-          warmTimings(e.name) = sortedLaps(sortedLaps.size / 2)
-          if (sortedLaps.size >= 2)
-            warmSpread(e.name) = (sortedLaps.head,
-              sortedLaps(sortedLaps.size / 2), sortedLaps.last)
-          // Warm-lap telemetry under its own key: the r11 record conflated
-          // a warm lap's triples with the round's planning record; keeping
-          // BOTH labeled makes a warm>cold anomaly decomposable from the
-          // bench file alone.
-          val last = warm.last.records
-          if (last.compassRuns.nonEmpty)
-            jobPlanning(e.name + "#warm_last") = last.compassRuns
-          if (last.qualityReports.nonEmpty)
-            jobQuality(e.name + "#warm_last") = last.qualityReports
-        }
+      // Single-shot times on sub-second queries in a shared sandbox swing
+      // 2-4x run-over-run (r7→r8 measured 2.5-4.5x on BYTE-IDENTICAL
+      // code), so headline entries take 3 warm laps and the record keeps
+      // their median and spread. The checkpoint-heavy trio measured 3x
+      // lap-over-lap swings on identical code (r9 warm_spread): 5 laps so
+      // their median resolves a 2x regression gate through that noise.
+      // The 40s+ sf-scaled corpus entry's relative spread is small
+      // (measured 1.16x) and 3 laps of it would dominate the bench wall.
+      val checkpointHeavy = Set("q_dedup_minhash", "q_ann_neardup", "q_dedup_components")
+      val nLaps = if (checkpointHeavy(e.name)) 5
+        else if (e.name == "q_job_corpus") 1
+        else if (Headline.contains(e.name)) 3 else 1
+      laps(e.name) = Laps.after(cold, nLaps) {
+        // Between-lap GC for the jittery trio: an eager checkpoint
+        // mid-lap is where a pending GC lands otherwise.
+        if (checkpointHeavy(e.name)) System.gc()
+        try lap(e) finally release()
       }
     }
-    val record = Record(sfDir, fullOut.toString, timings, warmTimings,
-      warmSpread, lapTelemetry, driverPeaks, jobPlanning, jobQuality,
-      jobLatency, jobFamilyLatency, streamBatches, compassFallbacks)
+    val record = Record(sfDir, fullOut.toString, laps)
     Option(fullOut.toAbsolutePath.getParent)
       .foreach(p => java.nio.file.Files.createDirectories(p): Unit)
     java.nio.file.Files.write(fullOut, (Records.write(record.full) + "\n")
@@ -299,27 +202,63 @@ object Bench {
     */
   private val CompactErrorChars = 24
 
-  /** What one run measured, each map in run order. [[full]] is the record
-    * the file keeps; [[compact]] is the stdout line, a projection of it.
+  /** One measured lap: what its scope counted and, when it failed, the
+    * failure text (its first 120 chars).
+    */
+  final case class Lap(work: Work.Counts, error: Option[String])
+
+  /** An entry's laps: the cold one, then its warm laps up to the first
+    * that failed.
+    */
+  final case class Laps(cold: Lap, warm: Vector[Work.Counts])
+
+  object Laps {
+    /** `cold`, then up to `n` runs of `lap`, ending at the first failure,
+      * whose counts are dropped. A failed cold lap gets no warm laps.
+      */
+    def after(cold: Lap, n: Int)(lap: => Lap): Laps = Laps(cold,
+      if (cold.error.nonEmpty) Vector.empty
+      else Iterator.fill(n)(lap).takeWhile(_.error.isEmpty).map(_.work).toVector)
+  }
+
+  /** What one run measured: every entry's laps, in run order. [[full]] is
+    * the record the file keeps and [[compact]] is the stdout line; every
+    * block of both is a projection of the laps.
     */
   final case class Record(sf: String, fullOut: String,
-      queries: collection.Map[String, Either[String, Double]],
-      warm: collection.Map[String, Double],
-      warmSpread: collection.Map[String, (Double, Double, Double)],
-      lapWallGcJitMs: collection.Map[String, Vector[(Long, Long, Long)]],
-      driverPeaks: collection.Map[String, (Long, Long)],
-      jobPlanning: collection.Map[String, Seq[graft.job.JobCorpus.CompassRun]],
-      jobQuality: collection.Map[String, Seq[graft.planner.OptimizerQuality.Report]],
-      jobLatency: collection.Map[String, (Long, Long, Long, Int)],
-      jobFamilyLatency: collection.Map[String, Map[String, (Int, Long, Long)]],
-      streamBatches: collection.Map[String, (Int, Long, Long)],
-      compassFallbacks: collection.Map[String, Seq[graft.planner.CompassSession.Fallback]]) {
+      laps: collection.Map[String, Laps]) {
+    private def entries[V, W](m: Iterable[(String, V)])(f: V => W) =
+      m.iterator.map { case (k, v) => k -> f(v) }.to(VectorMap)
+    private def wallS(c: Work.Counts) = c.wallNs / 1e9
+    private val queries = entries(laps)(l => l.cold.error.toLeft(wallS(l.cold.work)))
     private def total = queries.values.collect { case Right(t) => t }.sum
     private def errors = queries.values.count(_.isLeft)
-    private def entries[V](m: Iterable[(String, V)])(f: V => Any) =
-      m.iterator.map { case (k, v) => k -> f(v) }.to(VectorMap)
     private def seconds(t: Either[String, Double], errorChars: Int): Any =
       t.fold("error: " + _.take(errorChars), Records.round(_, 3))
+    // Each entry's warm-lap seconds, sorted: the median is its warm time,
+    // and [min, median, max] its spread when it has two laps or more.
+    private val warmLaps = entries(laps.view.filter(_._2.warm.nonEmpty))(_.warm.map(wallS).sorted)
+    private val warm = entries(warmLaps)(xs => xs(xs.size / 2))
+    private val warmSpread = entries(warmLaps.filter(_._2.size >= 2))(xs =>
+      (xs.head, xs(xs.size / 2), xs.last))
+    // What each lap recorded: the cold lap's under the entry's name, the
+    // last warm lap's under "<entry>#warm_last", so a warm>cold anomaly
+    // is decomposable from the bench file alone.
+    private val coldRecords = entries(laps)(_.cold.work.records)
+    private val lapRecords = laps.iterator.flatMap { case (k, l) =>
+      (k -> l.cold.work.records) +: l.warm.lastOption.map(w => s"$k#warm_last" -> w.records).toSeq
+    }.toSeq
+    private val jobPlanning = entries(lapRecords)(_.compassRuns).filter(_._2.nonEmpty)
+    private val jobQuality = entries(lapRecords)(_.qualityReports).filter(_._2.nonEmpty)
+    // Per-query corpus latencies (cold lap): the corpus TOTAL multiplies
+    // ambient host load through the concurrent submission (r10-r12: 5-9x
+    // driver-vs-quiesced on exactly this entry), while the per-query
+    // median is the contention-robust number.
+    private val corpusLatencies = entries(coldRecords)(_.corpusLatencies).filter(_._2.nonEmpty)
+    // Per streaming entry, its cold lap's micro-batch [n_batches,
+    // median_ms, max_ms]: tells a uniform slowdown from one stalled batch.
+    private val streamBatches = entries(coldRecords)(_.batchDurations.values.flatten.toVector.sorted)
+      .filter(_._2.nonEmpty).map { case (k, ds) => k -> ((ds.size, ds(ds.size / 2), ds.last)) }
     // Planning-overhead split for the COMPASS-path JOB subset: the
     // per-query (sketch, enumerate, exec) ms the reference prints per
     // query, keyed by the ENTRY whose timed lap produced them. Totals go
@@ -328,8 +267,10 @@ object Bench {
       VectorMap("sketch_ms" -> runs.map(_.sketchMs).sum,
         "enumerate_ms" -> runs.map(_.enumerateMs).sum,
         "exec_ms" -> runs.map(_.execMs).sum)
-    private def corpusLatency = entries(jobLatency) { case (med, p90, mx, n) =>
-      VectorMap("median_ms" -> med, "p90_ms" -> p90, "max_ms" -> mx, "n" -> n)
+    private def corpusLatency = entries(corpusLatencies) { lat =>
+      val xs = lat.values.toVector.sorted
+      VectorMap("median_ms" -> xs(xs.size / 2), "p90_ms" -> xs((xs.size * 9) / 10 min (xs.size - 1)),
+        "max_ms" -> xs.last, "n" -> xs.size)
     }
 
     def full: VectorMap[String, Any] = VectorMap(
@@ -339,12 +280,14 @@ object Bench {
       "warm" -> entries(warm)(Records.round(_, 3)),
       "warm_spread" -> entries(warmSpread) { case (mn, md, mx) =>
         Seq(mn, md, mx).map(Records.round(_, 3)) },
-      // Per-lap [wall_ms, gc_ms, jit_ms], cold lap first: the warm>cold
-      // attribution channel (r16 verdict #4).
-      "lap_wall_gc_jit_ms" -> lapWallGcJitMs,
-      // Cold-lap [task-result KB shipped to the driver, heap high-water MB].
-      "driver_ingress_kb_heap_peak_mb" -> entries(driverPeaks) { case (rb, hp) =>
-        (rb >> 10, hp >> 20) },
+      // Per completed lap [wall_ms, gc_ms, jit_ms], cold first: GC and JIT
+      // attribute a warm lap that ran slower than cold (r16 verdict #4).
+      "lap_wall_gc_jit_ms" -> entries(laps.view.filter(_._2.cold.error.isEmpty))(l =>
+        (l.cold.work +: l.warm).map(c => (c.wallNs / 1000000, c.gcMs, c.jitMs))),
+      // Cold-lap [task-result KB shipped to the driver, heap high-water
+      // MB]: the driver-memory audit channel (r19 verdict #2).
+      "driver_ingress_kb_heap_peak_mb" -> entries(laps)(l =>
+        (l.cold.work.resultBytes >> 10, l.cold.work.heapPeakBytes >> 20)),
       "job_planning" -> entries(jobPlanning)(runs => planningTotals(runs) +
         ("per_query_sketch_enum_exec_ms" -> entries(runs.map(r => r.name -> r))(r =>
           (r.sketchMs, r.enumerateMs, r.execMs)))),
@@ -355,15 +298,23 @@ object Bench {
         entries(reports.map(r => r.family -> r))(r =>
           (r.planMs, r.compassExecMs, r.naiveExecMs))),
       "job_corpus_latency" -> corpusLatency,
-      // Per-family [n, median_ms, max_ms], families sorted numerically so
-      // the record diffs cleanly round-over-round.
-      "job_corpus_family_n_med_max_ms" -> entries(jobFamilyLatency)(_.toSeq
-        .sortBy { case (f, _) => f.toIntOption.getOrElse(Int.MaxValue) }.to(VectorMap)),
-      // Per-streaming-entry [n_batches, median_ms, max_ms].
+      // Per family (the digits prefix of "28a"), [n, median_ms, max_ms]
+      // of the cold lap's latencies: which families carry the tail.
+      // Families sorted numerically so the record diffs cleanly.
+      "job_corpus_family_n_med_max_ms" -> entries(corpusLatencies)(_
+        .groupBy { case (q, _) => q.takeWhile(_.isDigit) }.toSeq
+        .sortBy { case (f, _) => f.toIntOption.getOrElse(Int.MaxValue) }
+        .map { case (f, qs) =>
+          val xs = qs.values.toVector.sorted
+          f -> ((xs.size, xs(xs.size / 2), xs.last))
+        }.to(VectorMap)),
       "stream_batches" -> streamBatches,
-      // Per entry, each COMPASS query that fell back to its vanilla plan,
-      // as [exception class, reason]; empty on a clean run.
-      "compass_fallbacks" -> entries(compassFallbacks)(_.map(f => Seq(f.exception, f.reason))),
+      // Per entry, each COMPASS query that fell back to its vanilla plan
+      // in any of its laps, cold first, as [exception class, reason];
+      // empty on a clean run.
+      "compass_fallbacks" -> entries(laps)(l => (l.cold.work +: l.warm)
+        .flatMap(_.records.compassFallbacks).map(f => Seq(f.exception, f.reason)))
+        .filter(_._2.nonEmpty),
       "errors" -> errors, "sf" -> sf)
 
     /** The bench line is parsed from the LAST 2000 chars of output, and

@@ -173,10 +173,7 @@ object StreamQueries {
     * gates membership on these numbers.
     */
   final case class StateFootprint(stateRows: Long, stateBytes: Long,
-      inputRows: Long) {
-    def linearState: Boolean =
-      inputRows > 0 && stateRows.toDouble / inputRows >= LinearStateRatio
-  }
+      inputRows: Long)
 
   /** Boundary between linear-state (one state row per input event —
     * dedup-shaped; measured ratio 1.0 for q_stream_dedup) and

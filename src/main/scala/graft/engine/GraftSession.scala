@@ -123,12 +123,6 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
   def chunkedDocuments(chunkTokens: Int = 64, overlap: Int = 16): DataFrame =
     TextAnalysis.chunk(table("documents"), "doc_id", "text", chunkTokens, overlap)
 
-  /** Streaming MinHash near-dup dedup over a (doc_id, ts, text) stream —
-    * see [[graft.streaming.EventStream.dedupNearStream]].
-    */
-  def dedupDocStream(docs: DataFrame): DataFrame =
-    graft.streaming.EventStream.dedupNearStream(docs, "doc_id", "text")
-
   /** Backward as-of join (point-in-time lookup) — see [[Temporal.asofJoin]]. */
   def asofJoin(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
       carry: Seq[String]): DataFrame =
@@ -172,27 +166,6 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
   def trainSplit(splits: Seq[(String, Double)] =
       Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)): DataFrame =
     graft.operators.Corpus.splitAssign(table("documents"), "doc_id", splits)
-
-  /** Per-document top-k TF-IDF keywords — see
-    * [[TextAnalysis.withTfIdfTopK]].
-    */
-  def tfIdfKeywords(k: Int = 3): DataFrame =
-    TextAnalysis.withTfIdfTopK(table("documents"), "doc_id", "text", k)
-
-  /** Which documents of `batch` near-duplicate something already in
-    * `documents`? The incremental-ingestion check — see
-    * [[TextDedup.minhashNearDupsAgainst]].
-    */
-  def dedupAgainstCorpus(batch: DataFrame,
-      threshold: Double = 0.8): DataFrame =
-    TextDedup.minhashNearDupsAgainst(table("documents"), batch,
-      "doc_id", "text", threshold)
-
-  /** Stateless streaming curation gate (PII scrub + quality filter) —
-    * see [[graft.streaming.EventStream.curateStream]].
-    */
-  def curateDocStream(docs: DataFrame, minQuality: Double = 0.3): DataFrame =
-    graft.streaming.EventStream.curateStream(docs, "text", minQuality)
 
   /** Learn a BPE merge table on `documents` — see
     * [[graft.operators.Corpus.bpeMerges]]; feed the collected
@@ -320,18 +293,13 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
 
   /** Persisted dedup-index lifecycle over `documents` — see
     * [[graft.operators.TextDedup.buildDedupIndex]] /
-    * [[graft.operators.TextDedup.appendDedupIndex]] /
-    * [[graft.operators.TextDedup.nearDupsAgainstIndex]].
+    * [[graft.operators.TextDedup.appendDedupIndex]].
     */
   def buildDedupIndex(path: String): Unit =
     TextDedup.buildDedupIndex(table("documents"), "doc_id", "text", path)
 
   def appendDedupIndex(newDocs: DataFrame, path: String): Unit =
     TextDedup.appendDedupIndex(newDocs, "doc_id", "text", path)
-
-  def dedupAgainstIndex(batch: DataFrame, path: String,
-      threshold: Double = 0.8): DataFrame =
-    TextDedup.nearDupsAgainstIndex(batch, "doc_id", "text", path, threshold)
 
   /** Streaming chunk-survivor stream — see
     * [[graft.streaming.EventStream.dedupChunkStream]].
@@ -405,15 +373,11 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
     graft.operators.Components.kCore(edges, srcCol, dstCol, k, rounds)
 
   /** Streaming CDC apply into a versioned latest-state parquet table —
-    * see [[graft.streaming.EventStream.applyCdcStream]] /
-    * [[graft.streaming.EventStream.currentCdcState]].
+    * see [[graft.streaming.EventStream.applyCdcStream]].
     */
   def applyCdcStream(changes: DataFrame, keyCol: String,
                      orderCols: Seq[String], stateDir: String) =
     graft.streaming.EventStream.applyCdcStream(changes, keyCol, orderCols, stateDir)
-
-  def cdcState(stateDir: String): Option[DataFrame] =
-    graft.streaming.EventStream.currentCdcState(spark, stateDir)
 
   /** Release every cache this session pinned: the pipeline operators'
     * internals and COMPASS's kept survivors (COMPASS persists nothing; a

@@ -178,34 +178,41 @@ object ScaleCampaignMain {
     try {
       // PRE_PROCESSING (not measured, the reference's own shape).
       val nTemplates = JobCorpus.warmCompassAt(spark, cs, m)
-      val (runsCold, cold) = graft.Work.measure(spark)(JobCorpus.runCompassFull(spark, cs, m))
-      val (runsWarm, warm) = graft.Work.measure(spark)(JobCorpus.runCompassFull(spark, cs, m))
-      // Per lap, cold first: the driver's heap high-water and the
-      // non-broadcast task results shipped to it.
-      println(Records.write(compassRecord(m, nTemplates,
-          runsCold, cold.wallNs / 1e9, runsWarm, warm.wallNs / 1e9) +
-        ("heap_peak_mb" -> Seq(cold.heapPeakBytes >> 20, warm.heapPeakBytes >> 20)) +
-        ("result_kb" -> Seq(cold.resultBytes >> 10, warm.resultBytes >> 10))))
+      // Each lap records its runs, as the q_job_compass entry does.
+      def lap() = graft.Work.measure(spark) {
+        val runs = JobCorpus.runCompassFull(spark, cs, m)
+        graft.Work.record(_.copy(compassRuns = runs))
+      }._2
+      val cold = lap()
+      println(Records.write(compassRecord(m, nTemplates, cold, lap())))
     } finally cs.close()
   }
 
   private[graft] def compassRecord(m: Int, nTemplates: Int,
-      runsCold: Seq[JobCorpus.CompassRun], tCold: Double,
-      runsWarm: Seq[JobCorpus.CompassRun], tWarm: Double): VectorMap[String, Any] = {
-    def split(rs: Seq[JobCorpus.CompassRun]) = VectorMap("sketch" -> rs.map(_.sketchMs).sum,
-      "enumerate" -> rs.map(_.enumerateMs).sum, "exec" -> rs.map(_.execMs).sum)
+      cold: graft.Work.Counts, warm: graft.Work.Counts): VectorMap[String, Any] = {
+    def split(c: graft.Work.Counts) = {
+      val rs = c.records.compassRuns
+      VectorMap("sketch" -> rs.map(_.sketchMs).sum,
+        "enumerate" -> rs.map(_.enumerateMs).sum, "exec" -> rs.map(_.execMs).sum)
+    }
     def planningFraction(ms: VectorMap[String, Long]) = Records.round(
       (ms("sketch") + ms("enumerate")).toDouble / math.max(1, ms.values.sum), 3)
-    val (cold, warm) = (split(runsCold), split(runsWarm))
+    val (coldMs, warmMs) = (split(cold), split(warm))
+    val runsCold = cold.records.compassRuns
     val counts = runsCold.map(r => r.name -> r.count).toMap
     VectorMap("facet" -> "compass", "m" -> m, "queries" -> counts.size,
       "templates" -> nTemplates,
-      "compass_cold_s" -> Records.round(tCold, 1), "compass_warm_s" -> Records.round(tWarm, 1),
-      "cold_ms" -> cold, "warm_ms" -> warm,
-      "planning_fraction_cold" -> planningFraction(cold),
-      "planning_fraction_warm" -> planningFraction(warm),
+      "compass_cold_s" -> Records.round(cold.wallNs / 1e9, 1),
+      "compass_warm_s" -> Records.round(warm.wallNs / 1e9, 1),
+      "cold_ms" -> coldMs, "warm_ms" -> warmMs,
+      "planning_fraction_cold" -> planningFraction(coldMs),
+      "planning_fraction_warm" -> planningFraction(warmMs),
       "exec_top5_ms" -> runsCold.sortBy(-_.execMs).take(5).map(r => r.name -> r.execMs).to(VectorMap),
-      "counts" -> counts.toSeq.sorted.to(VectorMap))
+      "counts" -> counts.toSeq.sorted.to(VectorMap),
+      // Per lap, cold first: the driver's heap high-water and the
+      // non-broadcast task results shipped to it.
+      "heap_peak_mb" -> Seq(cold.heapPeakBytes >> 20, warm.heapPeakBytes >> 20),
+      "result_kb" -> Seq(cold.resultBytes >> 10, warm.resultBytes >> 10))
   }
 
   /** r21 verdict #7 — adjudicate the ×100 cap-outs at plan level: ONE

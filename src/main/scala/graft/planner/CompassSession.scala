@@ -2,7 +2,7 @@ package graft.planner
 
 import graft.Work
 import graft.enumerate.{Enumerator, GraphNode}
-import graft.plans.{ExtractedJoinGraph, JoinGraphExtractor, TableInstance}
+import graft.plans.{ExtractedJoinGraph, JoinGraphExtractor}
 import graft.sketch.{ColumnSeeds, SeedRegistry, SketchGroup, Xi}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._

@@ -2,9 +2,6 @@ package graft.planner
 
 import graft.enumerate.Enumerator
 import graft.plans.{ExtractedJoinGraph, JoinGraphExtractor}
-import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.SparkSession
 
@@ -255,11 +252,6 @@ object OptimizerQuality {
       casCostOfHyb: Double = Double.NaN) {
     def agree: Boolean = refOrder == casOrder
     def cascadeWinsOrTies: Boolean = casSum <= refSum
-    def hybridEqCascade: Boolean = hybOrder == casOrder
-    /** Cascade's own model prefers the reference-chosen order — the
-      * disagreement is a search-path artifact, not a ranking error.
-      */
-    def searchArtifact: Boolean = !agree && casCostOfRef < casCostOfCas
   }
 
   /** Measure one query under all three estimator modes: ONE sketch set

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.plans.{Cross, InnerLike}
+import org.apache.spark.sql.catalyst.plans.InnerLike
 
 import scala.collection.mutable
 

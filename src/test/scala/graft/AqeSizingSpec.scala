@@ -2,7 +2,7 @@ package graft
 
 import graft.engine.LocalSession
 import graft.operators.{Components, Corpus, Prefix}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Task-count pin for the operators that materialize an intermediate

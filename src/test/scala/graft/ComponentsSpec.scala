@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Components
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class ComponentsSpec extends AnyFunSuite {

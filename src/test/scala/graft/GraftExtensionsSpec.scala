@@ -67,7 +67,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("SQL text-hash functions match the DataFrame kernels exactly") {
-    import spark.implicits._
     graft.functions.GraftExtensions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("doc_id", "text").limit(50)

@@ -1,8 +1,7 @@
 package graft
 
-import graft.functions.{MGSummary, MisraGriesAgg}
+import graft.functions.MGSummary
 import graft.operators.HeavyHitters
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class HeavyHittersSpec extends AnyFunSuite {

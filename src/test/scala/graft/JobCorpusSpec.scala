@@ -16,7 +16,7 @@ class JobCorpusSpec extends AnyFunSuite {
     JobCorpus.ensureData(spark)
     JobCorpus.registerViews(spark)
     assert(JobCorpus.queries.size == 113)
-    JobCorpus.queries.foreach { case (name, text) =>
+    JobCorpus.queries.foreach { case (_, text) =>
       // Analysis resolves every table/column against the generated
       // schema — a generator column drift fails here, cheaply.
       spark.sql(text).queryExecution.assertAnalyzed()

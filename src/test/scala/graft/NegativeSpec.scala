@@ -163,7 +163,6 @@ class NegativeSpec extends AnyFunSuite {
   }
 
   test("encodeJpeg validates quality; size-mismatched raster NULLs through") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val raster = Seq((1L, 4, 4, Seq.fill(16)(0x336699)))
       .toDF("id", "w", "h", "pixels")

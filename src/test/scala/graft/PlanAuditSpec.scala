@@ -225,7 +225,6 @@ class PlanAuditSpec extends AnyFunSuite {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      import spark.implicits._
       val left = spark.range(0, 200000)
         .select((when(pmod(col("id"), lit(100)) < 85, lit(7L))
           .otherwise(pmod(col("id"), lit(5000)))).as("k"),

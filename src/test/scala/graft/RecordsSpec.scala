@@ -20,39 +20,53 @@ class RecordsSpec extends AnyFunSuite {
 
   private val message120 = ("stage failed: " + "x" * 200).take(120)
 
+  /** A completed lap's counts: `seconds` of wall time, 123456789 result
+    * bytes, a 987654321-byte heap peak and what it recorded.
+    */
+  private def counts(seconds: Double, records: Work.Record) =
+    Work.Counts(0, 0, 0, 0, 0, 0L, 0L, 123456789L, 0L, 987654321L,
+      math.round(seconds * 1e9), 123L, 1234L, records)
+  private def ok(seconds: Double, records: Work.Record = Work.Record()) =
+    Bench.Lap(counts(seconds, records), None)
+
   /** A 337-entry run shaped like the r22 record (its headline timings,
     * JOB planning totals and streaming batches) plus the worst case the
     * compact line admits: 5 failures outside the headline with 120-char
     * messages, 5 slow non-headline entries, three JOB planning blocks
-    * (one of them `#warm_last`) and 16 streaming entries.
+    * (one of them `#warm_last`) and 16 streaming entries. Headline
+    * entries take three warm laps of 10.123, 99.999 and 11.111 s, except
+    * q_job_corpus, whose one warm lap takes 9.877 s; q_job_compass takes
+    * one of 1.234 s.
     */
   private def wideRecord(message: String = message120): Bench.Record = {
-    val names = Bench.Headline ++ (Bench.Headline.size until 337)
-      .map(i => f"q_synthetic_entry_$i%03d")
+    val names = Bench.Headline ++ Seq("q_job_compass", "q_job_quality") ++
+      (1 to 16).map(i => f"q_stream_entry_$i%02d") ++
+      (Bench.Headline.size + 18 until 337).map(i => f"q_synthetic_entry_$i%03d")
     val failed = names.takeRight(5).toSet
     val slow = names.takeRight(10).take(5).toSet
-    val queries = names.map(n => n -> (
-      if (failed(n)) Left(message)
-      else Right(if (slow(n)) 9.346 else if (n == "q_job_corpus") 47.452 else 1.234))
-    ).to(VectorMap)
     val runs = (1 to 33).map(i => CompassRun(s"${i}a", 1000L, 43, 49, 802))
-    Bench.Record("/srv/graft/testdata/sf0.1", "target/bench_full.json",
-      queries = queries,
-      warm = Bench.Headline.map(_ -> 11.111).to(VectorMap),
-      warmSpread = Bench.Headline.map(_ -> ((10.123, 11.111, 99.999))).to(VectorMap),
-      lapWallGcJitMs = names.map(_ -> Vector((12345L, 123L, 1234L), (11111L, 99L, 555L))).to(VectorMap),
-      driverPeaks = names.map(_ -> ((123456789L, 987654321L))).to(VectorMap),
-      jobPlanning = VectorMap("q_job_compass" -> runs,
-        "q_job_compass#warm_last" -> runs, "q_job_quality" -> runs),
-      jobQuality = VectorMap("q_job_quality" ->
-        Seq(OptimizerQuality.Report("1a", 10, 20, 13, 225, 146))),
-      jobLatency = VectorMap("q_job_corpus" -> ((1108L, 2837L, 5333L, 113))),
-      jobFamilyLatency = VectorMap("q_job_corpus" ->
-        Map("10" -> ((3, 1088L, 1209L)), "2" -> ((4, 1422L, 1515L)))),
-      streamBatches = (1 to 16).map(i => f"q_stream_entry_$i%02d" -> ((1, 4079L, 4079L)))
-        .to(VectorMap),
-      compassFallbacks = VectorMap("q_job_compass" ->
-        Seq(CompassSession.Fallback("java.lang.IllegalStateException", "boom"))))
+    val latencies = Map("2a" -> 1422L, "2b" -> 1515L, "2c" -> 1108L, "2d" -> 1300L,
+      "10a" -> 1088L, "10b" -> 1209L, "10c" -> 1050L)
+    def recorded(name: String) = name match {
+      case "q_job_compass" => Work.Record(compassRuns = runs, compassFallbacks =
+        Seq(CompassSession.Fallback("java.lang.IllegalStateException", "boom")))
+      case "q_job_quality" => Work.Record(compassRuns = runs,
+        qualityReports = Seq(OptimizerQuality.Report("1a", 10, 20, 13, 225, 146)))
+      case "q_job_corpus" => Work.Record(corpusLatencies = latencies)
+      case s if s.startsWith("q_stream_entry") => Work.Record(batchDurations = Map(s -> Seq(4079L)))
+      case _ => Work.Record()
+    }
+    Bench.Record("/srv/graft/testdata/sf0.1", "target/bench_full.json", names.map { n =>
+      val seconds = if (slow(n)) 9.346 else if (n == "q_job_corpus") 47.452 else 1.234
+      val warm = n match {
+        case "q_job_corpus" => Vector(counts(9.877, Work.Record()))
+        case "q_job_compass" => Vector(counts(1.234, Work.Record(compassRuns = runs)))
+        case _ if Bench.Headline.contains(n) =>
+          Vector(10.123, 99.999, 11.111).map(counts(_, Work.Record()))
+        case _ => Vector.empty
+      }
+      n -> Bench.Laps(Bench.Lap(counts(seconds, recorded(n)), Option.when(failed(n))(message)), warm)
+    }.to(VectorMap))
   }
 
   test("a 337-entry record with 5 long failures keeps the compact line in the 2000-char window") {
@@ -77,10 +91,10 @@ class RecordsSpec extends AnyFunSuite {
 
   test("the compact line shows the 5 slowest non-headline entries when a headline entry is slower") {
     val slowest = (1 to 6).map(i => f"q_synthetic_slow_$i" -> (20.0 - i))
-    val queries = (Bench.Headline.map(_ -> Right(1.0)) ++
-      slowest.map { case (k, t) => k -> Right(t) } :+ ("q_synthetic_fast" -> Right(0.5)))
-      .to(VectorMap).updated("q_job_corpus", Right(47.452))
-    val r = wideRecord().copy(queries = queries)
+    val laps = (Bench.Headline.map(_ -> 1.0) ++ slowest :+ ("q_synthetic_fast" -> 0.5))
+      .to(VectorMap).updated("q_job_corpus", 47.452)
+      .map { case (k, t) => k -> Bench.Laps(ok(t), Vector.empty) }
+    val r = wideRecord().copy(laps = laps)
     val shown = keys(parse(Records.write(r.compact)).get("queries"))
     assert(shown.drop(Bench.Headline.size) == slowest.take(5).map(_._1))
   }
@@ -110,6 +124,31 @@ class RecordsSpec extends AnyFunSuite {
       "\"compass_fallbacks\":{\"q_job_compass\":[[\"java.lang.IllegalStateException\",\"boom\"]]}"))
     assert(compact.contains("\"q1_agg\":1.234,") && compact.contains("[10.12,11.11,100.00]"))
     assert(compact.contains("\"warm_total\":366.66,"))
+  }
+
+  test("a failed cold lap keeps its error, ingress and fallbacks; a failed warm lap ends the warm laps") {
+    val fallback = CompassSession.Fallback("org.apache.spark.SparkException", "sketch job failed")
+    val fellBack = Work.Record(compassFallbacks = Seq(fallback))
+    var warmLaps = 0
+    val coldFailed = Bench.Laps.after(Bench.Lap(counts(2.0, fellBack), Some("boom")), 3) {
+      warmLaps += 1; ok(1.0)
+    }
+    assert(warmLaps == 0 && coldFailed.warm.isEmpty)
+    // The second warm lap fails: its counts (and fallback) are dropped and
+    // the third never runs.
+    val outcomes = Iterator(ok(1.5), Bench.Lap(counts(9.0, fellBack), Some("lost")), ok(1.0))
+    val warmFailed = Bench.Laps.after(ok(2.0), 3)(outcomes.next())
+    assert(warmFailed.warm.map(_.wallNs) == Vector(1500000000L) && outcomes.hasNext)
+    val clean = Bench.Laps.after(ok(2.0), 2)(ok(1.0))
+    val f = parse(Records.write(Bench.Record("sf", "out",
+      VectorMap("q_a" -> coldFailed, "q_b" -> warmFailed, "q_c" -> clean)).full))
+    assert(f.get("queries").get("q_a").asText == "error: boom" && f.get("errors").asInt == 1)
+    assert(keys(f.get("driver_ingress_kb_heap_peak_mb")) == Seq("q_a", "q_b", "q_c"))
+    assert(keys(f.get("compass_fallbacks")) == Seq("q_a"))
+    assert(keys(f.get("lap_wall_gc_jit_ms")) == Seq("q_b", "q_c"))
+    assert(f.get("lap_wall_gc_jit_ms").get("q_b").size == 2)
+    assert(keys(f.get("warm")) == Seq("q_b", "q_c") && f.get("warm").get("q_b").asDouble == 1.5)
+    assert(keys(f.get("warm_spread")) == Seq("q_c"))
   }
 
   test("a failure message reads back exactly from the full line") {
@@ -147,9 +186,11 @@ class RecordsSpec extends AnyFunSuite {
       assert(capouts.get("wall_s").asDouble == 1.3)
       assert(capouts.get("timeout_plans").get("17e").get("smj").asInt == 2)
       val runs = Seq(CompassRun("1a", 5, 10, 20, 70), CompassRun("10b", 7, 5, 5, 190))
-      val compass = parse(Records.write(
-        ScaleCampaignMain.compassRecord(1, 21, runs, 2.45, runs, 1.5)))
+      val compass = parse(Records.write(ScaleCampaignMain.compassRecord(1, 21,
+        counts(2.45, Work.Record(compassRuns = runs)), counts(1.5, Work.Record(compassRuns = runs)))))
       assert(compass.get("compass_cold_s").asDouble == 2.5)
+      assert(keys(compass).takeRight(2) == Seq("heap_peak_mb", "result_kb"))
+      assert(compass.get("heap_peak_mb").get(1).asLong == 941L)
       assert(compass.get("planning_fraction_cold").asDouble == 0.133)
       assert(keys(compass.get("counts")) == Seq("10b", "1a"))
     } finally java.util.Locale.setDefault(saved)

@@ -269,7 +269,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("semDedup: deterministic across partitionings, singletons kept") {
-    import spark.implicits._
     val corpus = clusteredCorpus()
     def run(parts: Int) = Similarity.semDedup(corpus.repartition(parts),
         "vec_id", "embedding", threshold = 0.99999, nCentroids = 8)

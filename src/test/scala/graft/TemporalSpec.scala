@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Temporal
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.Timestamp
