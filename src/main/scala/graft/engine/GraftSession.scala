@@ -372,13 +372,6 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
             k: Int, rounds: Int = 16): DataFrame =
     graft.operators.Components.kCore(edges, srcCol, dstCol, k, rounds)
 
-  /** Streaming CDC apply into a versioned latest-state parquet table —
-    * see [[graft.streaming.EventStream.applyCdcStream]].
-    */
-  def applyCdcStream(changes: DataFrame, keyCol: String,
-                     orderCols: Seq[String], stateDir: String) =
-    graft.streaming.EventStream.applyCdcStream(changes, keyCol, orderCols, stateDir)
-
   /** Release every cache this session pinned: the pipeline operators'
     * internals and COMPASS's kept survivors (COMPASS persists nothing; a
     * frame it returned keeps the rows it reads). A DataFrame backed only

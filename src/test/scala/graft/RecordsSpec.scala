@@ -45,8 +45,12 @@ class RecordsSpec extends AnyFunSuite {
     val failed = names.takeRight(5).toSet
     val slow = names.takeRight(10).take(5).toSet
     val runs = (1 to 33).map(i => CompassRun(s"${i}a", 1000L, 43, 49, 802))
-    val latencies = Map("2a" -> 1422L, "2b" -> 1515L, "2c" -> 1108L, "2d" -> 1300L,
-      "10a" -> 1088L, "10b" -> 1209L, "10c" -> 1050L)
+    // The 113-query JOB corpus over families 2 and 10, with a median of
+    // 1108, p90 2837 and max 5333 ms: as wide on the line as a real run.
+    val latencies = (0 until 113).map { i =>
+      val ms = if (i == 112) 5333L else if (i >= 101) 2837L else if (i >= 56) 1108L else 1000L + i
+      s"${if (i % 2 == 0) 2 else 10}q$i" -> ms
+    }.toMap
     def recorded(name: String) = name match {
       case "q_job_compass" => Work.Record(compassRuns = runs, compassFallbacks =
         Seq(CompassSession.Fallback("java.lang.IllegalStateException", "boom")))
@@ -83,6 +87,7 @@ class RecordsSpec extends AnyFunSuite {
     // not headline.
     assert(c.get("queries").size == 43)
     assert(c.get("job_planning").size == 3 && c.get("stream_batches_noisiest").size == 3)
+    assert(c.get("job_corpus_latency").get("q_job_corpus").get("n").asInt == 113)
     // The compact line cuts the failure text; the full record keeps all 120 chars.
     val failed = "q_synthetic_entry_336"
     assert(f.get("queries").get(failed).asText == "error: " + message120)
